@@ -97,6 +97,9 @@ def pytest_runtest_logreport(report):
         "longrepr": (
             str(report.longrepr) if report.longrepr is not None else None
         ),
+        # set on xfail (skipped) and xpass (passed) reports; without it
+        # the parent would count them as plain skips and passes
+        "wasxfail": getattr(report, "wasxfail", None),
     }
     with open(path, "a") as fh:
         fh.write(json.dumps(rec) + "\n")
@@ -148,6 +151,8 @@ def _relay(session, item, rec, fallback_msg):
         start=0.0,
         stop=duration,
     )
+    if rec is not None and rec.get("wasxfail") is not None:
+        rep.wasxfail = rec["wasxfail"]
     item.ihook.pytest_runtest_logreport(report=rep)
 
 

@@ -248,6 +248,20 @@ def test_bpe_int_kernel_matches_string_kernel():
         assert len(toks) == len(seg) and sum(cids[t] for t in toks) == sum(seg)
 
 
+def test_bpe_ids_for_rejects_duplicate_merge_output():
+    """A merge whose output is already a vocab string must raise, not
+    hand the later token a colliding id (that corrupts idsum silently)."""
+    import pytest
+
+    from uts_spark.functions.bpe_pretrained import ids_for
+
+    assert ids_for((("a", "b"),), ("a", "b")) == {"a": 1, "b": 2, "ab": 3}
+    with pytest.raises(ValueError, match="'ab'"):
+        ids_for((("a", "b"), ("a", "b")), ("a", "b"))
+    with pytest.raises(ValueError, match="'ab'"):
+        ids_for((("a", "b"),), ("a", "b", "ab"))
+
+
 def test_bpe_pretrained_table_shape():
     """>=1024 merges, unique vocab strings, creator-before-consumer
     (every merge's components are base chars or outputs of EARLIER

@@ -333,6 +333,9 @@ def test_cc_union_find_matches_jump_and_multi_level(spark, monkeypatch):
         [(rng.randrange(200), rng.randrange(200)) for _ in range(300)],
         [(i, i + 1) for i in range(60)],  # worst-case chain
         [(5, 5), (7, 8)],  # self-loop + isolated edge
+        # NULL-endpoint edges join nothing: no path may label their
+        # other end or emit a NULL node
+        [(1, 2), (3, None), (None, 4), (None, None), (2, 5)],
     ]
     for edges in graphs:
         df = spark.createDataFrame(edges, "src long, dst long")

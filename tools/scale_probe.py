@@ -16,7 +16,8 @@ Derivation (build mode) — honest scaling, no result reuse:
     disjoint (letters dominate the corpus), so pair/cluster work grows
     ~linearly in N instead of quadratically — the realistic shape of a
     bigger crawl.
-  - events: N copies, event_id/ingest_id offset per copy, same
+  - events: N copies, event_id and ingest_id each offset per copy by
+    its own span, same
     event_type/value/ts marginals (groups get Nx deeper — exactly the
     axis the grouped-median/window lanes must survive).
   - lineitem/orders: N copies, l_orderkey/o_orderkey offset so joins
@@ -47,7 +48,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SCALED = {
     "documents": ("doc_id",),
-    "events": ("event_id",),
+    "events": ("event_id", "ingest_id"),
     "lineitem": ("l_orderkey",),
     "orders": ("o_orderkey",),
 }
@@ -74,11 +75,15 @@ def build(sf_dir: str, out: str, mult: int) -> None:
             os.symlink(src, dst)
             continue
         raw = spark.read.parquet(src)
-        key = SCALED[name][0]
-        span = raw.agg(F.max(key)).collect()[0][0] + 1
+        # every id key is offset by its OWN span (max + 1), so no two
+        # copies share a key value in any of them
+        keys = [k for k in SCALED[name] if k in raw.columns]
+        spans = raw.agg(*[F.max(k) + 1 for k in keys]).collect()[0]
         copies = []
         for i in range(mult):
-            c = raw.withColumn(key, F.col(key) + F.lit(i * span))
+            c = raw.withColumns(
+                {k: F.col(k) + F.lit(i * span) for k, span in zip(keys, spans)}
+            )
             if name == "documents":
                 rot = _AZ[i % 26:] + _AZ[: i % 26]
                 c = c.withColumn(
@@ -88,10 +93,6 @@ def build(sf_dir: str, out: str, mult: int) -> None:
                     "url",
                     F.concat(F.lit(f"c{i}-"), F.col("url")),
                 ) if "url" in raw.columns else c
-            if name == "events" and "ingest_id" in raw.columns:
-                c = c.withColumn(
-                    "ingest_id", F.col("ingest_id") + F.lit(i * span)
-                )
             copies.append(c)
         allc = copies[0]
         for c in copies[1:]:

@@ -242,9 +242,15 @@ _ID_BITS = 11  # packed-key shift: vocab ids must stay < 2^11
 
 def ids_for(merges: tuple, base: tuple) -> dict[str, int]:
     """The standard 1-based vocab-id construction shared by every
-    table here: base symbols first, merge outputs in rank order."""
+    table here: base symbols first, merge outputs in rank order.
+    A merge output already in the vocab would alias two ids (the
+    unique-vocab invariant, module docstring), so it raises."""
     ids = {s: i + 1 for i, s in enumerate(base)}
     for x, y in merges:
+        if x + y in ids:
+            raise ValueError(
+                f"merge {x!r} + {y!r} outputs {x + y!r}, already in the vocab"
+            )
         ids[x + y] = len(ids) + 1
     return ids
 

@@ -95,8 +95,6 @@ def _uf_partition(batches):
         for x, y in zip(
             batch.column(0).to_pylist(), batch.column(1).to_pylist()
         ):
-            if x is None or y is None:
-                continue
             if x not in parent:
                 parent[x] = x
             if y not in parent:
@@ -127,7 +125,7 @@ def _uf_components(edges: DataFrame, src: str, dst: str, n_edges: int,
     """Connected components by iterated local-union-find contraction
     (module docstring). One lazy plan: level sizes derive from
     ``n_edges``, so there is no per-round action; each level is one
-    hash exchange of at most one row per node + one Arrow pass."""
+    hash exchange of one row per (block, node) + one Arrow pass."""
     t = edges.schema[src].dataType.simpleString()
     cur = edges.select(F.col(src).alias("node"), F.col(dst).alias("root"))
     p = max(1, min(n_edges // _UF_EDGES_PER_TASK + 1, width))
@@ -138,7 +136,8 @@ def _uf_components(edges: DataFrame, src: str, dst: str, n_edges: int,
         # works — correctness needs only that the LAST level is one
         # task); never a constant key (plan-audit: a constant hash key
         # is a single partition wearing a disguise — this one is
-        # data-keyed and size-bounded by design, one row per node)
+        # data-keyed and size-bounded by design, one row per
+        # (block, node))
         cur = cur.repartition(p, "node").mapInArrow(
             _uf_partition, f"node {t}, root {t}"
         )
@@ -180,6 +179,10 @@ def connected_components(
     union-find needs neither a convergence guard nor deduped edges)."""
     assert algorithm in ("auto", "uf", "jump")
     spark = edges.sparkSession
+    # an edge with a NULL endpoint joins nothing: drop it once, before
+    # the algorithm choice, so every path labels the same graph (pointer
+    # jumping would otherwise label its other end and emit a NULL node)
+    edges = edges.dropna(subset=[src, dst])
     # materialize the (possibly expensive, e.g. LSH-generated) edge list
     # once — the count below is an action over it, and the jump path's
     # symmetrizing union reads it twice
@@ -225,8 +228,7 @@ def connected_components(
 
 
 def _cc_rounds(
-    sym: DataFrame, max_rounds: int, hops: int = 1,
-    width: int | None = None,
+    sym: DataFrame, max_rounds: int, width: int | None = None,
 ) -> DataFrame:
     """``width`` sizes every round's shuffles to the graph via
     EXPLICIT repartitions on the plan (the session conf is never
@@ -245,52 +247,46 @@ def _cc_rounds(
     )
     ctype = labels.schema["component"].dataType
     for _rnd in range(max_rounds):
-        # `hops` propagate+jump steps run LAZILY inside one checkpointed
-        # round. hops=2 halves the driver round trips (materialize +
-        # convergence count) at the price of doubling the join work per
-        # checkpoint; measured A/B on the sf0.1 near-dup graph (5k
-        # nodes / 227k edges): hops=1 min 2.06 s vs hops=2 min 2.50 s —
-        # the extra fused joins cost more than the saved round trips,
-        # and at cluster scale joins dominate even harder, so 1 is the
-        # default. The pre-round label rides along in `old` (exactly
-        # one non-null per node survives each groupBy) so convergence
-        # is still a filter over the checkpoint.
+        # one propagate+jump step per checkpointed round (two fused
+        # steps cost more joins than the round trip they save: A/B on
+        # the sf0.1 near-dup graph, 5k nodes / 227k edges, 2.06 s vs
+        # 2.50 s). The pre-round label rides along in `old` (exactly
+        # one non-null per node survives the groupBy) so convergence
+        # is a filter over the checkpoint.
         cur = labels.withColumn("old", F.col("component"))
-        for _hop in range(hops):
-            # neighbor labels flow along edges; own row carries `old`
-            # cur co-partitions with the checkpointed sym on the join
-            # key, so the join adds no exchange beyond cur's own
-            msgs = sym.join(
-                _w(cur.select(F.col("node").alias("b"), "component"), "b"),
-                "b",
-            ).select(
-                F.col("a").alias("node"),
-                "component",
-                F.lit(None).cast(ctype).alias("old"),
+        # neighbor labels flow along edges; own row carries `old`
+        # cur co-partitions with the checkpointed sym on the join
+        # key, so the join adds no exchange beyond cur's own
+        msgs = sym.join(
+            _w(cur.select(F.col("node").alias("b"), "component"), "b"),
+            "b",
+        ).select(
+            F.col("a").alias("node"),
+            "component",
+            F.lit(None).cast(ctype).alias("old"),
+        )
+        agg = (
+            _w(msgs.union(cur.select("node", "component", "old")), "node")
+            .groupBy("node")
+            .agg(
+                F.min("component").alias("component"),
+                F.max("old").alias("old"),
             )
-            agg = (
-                _w(msgs.union(cur.select("node", "component", "old")),
-                   "node")
-                .groupBy("node")
-                .agg(
-                    F.min("component").alias("component"),
-                    F.max("old").alias("old"),
-                )
-            )
-            # pointer jump: follow one parent link (component is itself
-            # a node; take ITS freshly-computed label) — doubles the hop
-            # distance covered per step → O(log diameter) convergence
-            parent = agg.select(
-                F.col("node").alias("component"),
-                F.col("component").alias("pcomp"),
-            )
-            cur = agg.join(parent, "component", "left").select(
-                "node",
-                F.least(
-                    F.coalesce("pcomp", "component"), F.col("component")
-                ).alias("component"),
-                "old",
-            )
+        )
+        # pointer jump: follow one parent link (component is itself a
+        # node; take ITS freshly-computed label) — doubles the hop
+        # distance covered per step → O(log diameter) convergence
+        parent = agg.select(
+            F.col("node").alias("component"),
+            F.col("component").alias("pcomp"),
+        )
+        cur = agg.join(parent, "component", "left").select(
+            "node",
+            F.least(
+                F.coalesce("pcomp", "component"), F.col("component")
+            ).alias("component"),
+            "old",
+        )
         new_labels = cur.localCheckpoint(eager=True)
         changed = (
             new_labels.filter(F.col("component") != F.col("old"))

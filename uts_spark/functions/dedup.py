@@ -39,20 +39,6 @@ def exact_canonical(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
-    """(id, shingle) STRING inverted index over distinct word n-grams +
-    per-doc set size ``n_shingles`` (debug/inspection surface; the dedup
-    pipelines run on the hashed arrays below)."""
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism, id_col)
-    base = spread.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(word_ngrams(tokens(F.col(text_col)), n)).alias("__sh"),
-    )
-    return base.select(
-        "id", F.size("__sh").alias("n_shingles"), F.explode("__sh").alias("shingle")
-    )
-
-
 def _rotl64(c: Column, r: int) -> Column:
     """64-bit rotate-left as shift/or (shifts drop overflow bits — no ANSI
     overflow path)."""

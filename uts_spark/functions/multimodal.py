@@ -1,5 +1,5 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` columns with
-typed metadata, processed via Arrow-batched ``mapInPandas``.
+typed metadata.
 
 Since round 4 three codec lanes are REAL: PNG (pure-stdlib codec,
 functions/png.py — decode/resize/re-encode), baseline JPEG (pure-numpy
@@ -12,24 +12,35 @@ with a precise NotImplementedError;
 pipeline-shape queries use (features derived from the bytes themselves,
 so results are reproducible anywhere).
 
-At 100 TB: binaries live in parquet/object storage; ``mapInPandas``
-processes them partition-streamed in Arrow batches (no driver transfer,
-bounded memory per batch via spark.sql.execution.arrow.maxRecordsPerBatch);
-metadata-only queries never touch the blob column thanks to parquet column
-pruning.
+Kernel contract: every codec operator is a per-row kernel run by the
+one batch driver :func:`_map_rows`. A kernel takes one input row —
+``doc_id`` plus a blob (``bytes``) or a text, or only the id for the
+``attach_synth_*`` encoders — and returns a list of output tuples in
+the order of the operator's DDL schema constant, so 1→N fan-out is just
+a longer list. The driver owns everything else: the Arrow batch loop of
+a single ``mapInPandas``, the ``bytes()`` conversion and the output
+frame. A fused ``synth_*`` operator is kernel composition,
+``stats(i, encode(i))``, inside that one pass, so encoded blobs never
+cross the JVM boundary. At 100 TB the binaries live in parquet/object
+storage and the pass streams them partition by partition (no driver
+transfer, memory bounded per batch by
+spark.sql.execution.arrow.maxRecordsPerBatch); metadata-only queries
+never touch the blob column thanks to parquet column pruning.
 """
 
 from __future__ import annotations
 
+import gzip
 import hashlib
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
+import io
+import math
+import re
+import wave
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-if TYPE_CHECKING:
-    import pandas as pd
+from pyspark.sql.types import BinaryType
 
 FEATURE_DIM = 8
 
@@ -37,6 +48,8 @@ DECODE_SCHEMA = (
     "doc_id long, byte_len long, width long, height long, channels long, "
     f"feature array<double>"
 )
+
+BLOB_SCHEMA = "doc_id long, media binary"
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -50,6 +63,29 @@ def _spread(df: DataFrame) -> DataFrame:
     round-robin; the round trip is far cheaper than idling the
     cluster."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def _map_rows(df: DataFrame, kernel, schema: str) -> DataFrame:
+    """Run ``kernel`` over every row of ``df`` in one ``mapInPandas``
+    (module docstring: the kernel contract). Output column names come
+    from ``schema``, a flat DDL list of ``name type`` fields."""
+    names = [field.split()[0] for field in schema.split(",")]
+    blobs = [isinstance(f.dataType, BinaryType) for f in df.schema.fields]
+
+    def gen(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            cols = [
+                [bytes(v) for v in pdf[c]] if blob else pdf[c].tolist()
+                for c, blob in zip(pdf.columns, blobs)
+            ]
+            yield pd.DataFrame(
+                [out for row in zip(*cols) for out in kernel(*row)],
+                columns=names,
+            )
+
+    return df.mapInPandas(gen, schema)
 
 
 def attach_blob(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -115,26 +151,13 @@ def _fake_features(payload: bytes) -> tuple[int, int, int, list[float]]:
 
 
 def fake_decode_features(df: DataFrame, blob_col: str = "media") -> DataFrame:
-    """mapInPandas decode pipeline: Arrow-batched, partition-streamed.
-    One output row per input row with decoded metadata + feature vector."""
+    """Decode pipeline shape: one output row per input row with decoded
+    metadata + feature vector."""
 
-    def decode_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def kernel(doc_id, blob):
+        return [(doc_id, len(blob), *_fake_features(blob))]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                blob = bytes(payload)
-                width, height, channels, feature = _fake_features(blob)
-                rows.append(
-                    (int(doc_id), len(blob), width, height, channels, feature)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "byte_len", "width", "height", "channels", "feature"],
-            )
-
-    return df.select("doc_id", blob_col).mapInPandas(decode_batches, DECODE_SCHEMA)
+    return _map_rows(df.select("doc_id", blob_col), kernel, DECODE_SCHEMA)
 
 
 RESIZE_SCHEMA = (
@@ -146,37 +169,21 @@ RESIZE_SCHEMA = (
 def resize_images(
     df: DataFrame, target_w: int, target_h: int, blob_col: str = "media"
 ) -> DataFrame:
-    """Resize pipeline shape: decode → scale → re-encode, Arrow-batched.
+    """Resize pipeline shape: decode → scale → re-encode.
     The pixel work is STUBBED (no codecs in this container): source dims
     come from the deterministic fake decode and the output byte count is
     the exact post-resize buffer size ``target_w*target_h*channels`` —
-    so schema, batch iteration and cost model are real, only the codec
-    call is fake. Swap ``_fake_features`` for a PIL/libvips call to go
-    live."""
+    so schema and cost model are real, only the codec call is fake.
+    Swap ``_fake_features`` for a PIL/libvips call to go live."""
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def kernel(doc_id, blob):
+        w, h, c, _ = _fake_features(blob)
+        return [(
+            doc_id, w, h, target_w, target_h,
+            target_w / w, target_h / h, target_w * target_h * c,
+        )]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                blob = bytes(payload)
-                w, h, c, _ = _fake_features(blob)
-                rows.append(
-                    (
-                        int(doc_id), w, h, target_w, target_h,
-                        target_w / w, target_h / h, target_w * target_h * c,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "target_w", "target_h",
-                    "scale_x", "scale_y", "resized_bytes",
-                ],
-            )
-
-    return df.select("doc_id", blob_col).mapInPandas(gen, RESIZE_SCHEMA)
+    return _map_rows(df.select("doc_id", blob_col), kernel, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx long, frame_ms long, feature array<double>"
@@ -192,30 +199,20 @@ def sample_frames(
     (the 1→N explode that distinguishes video from image pipelines), each
     with a frame timestamp and per-frame feature vector. Frame decode is
     STUBBED deterministically (md5 over blob+frame_idx); the Spark-side
-    contract — mapInPandas fan-out, fixed schema, bounded Arrow batches —
-    is the real thing. At 100 TB the fan-out multiplies rows, not bytes:
-    only features leave the executor, frames are never materialized as
-    columns."""
+    contract — fan-out, fixed schema — is the real thing. At 100 TB the
+    fan-out multiplies rows, not bytes: only features leave the
+    executor, frames are never materialized as columns."""
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def kernel(doc_id, blob):
+        # printable per-frame salt (not a raw control byte) so a SQL
+        # oracle can replay md5(blob || '#f' || i)
+        return [
+            (doc_id, i, i * frame_interval_ms,
+             _fake_features(blob + f"#f{i}".encode())[3])
+            for i in range(n_frames)
+        ]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                blob = bytes(payload)
-                for i in range(n_frames):
-                    # printable per-frame salt (not a raw control byte) so
-                    # a SQL oracle can replay md5(blob || '#f' || i)
-                    _, _, _, feature = _fake_features(
-                        blob + f"#f{i}".encode()
-                    )
-                    rows.append((int(doc_id), i, i * frame_interval_ms, feature))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "frame_ms", "feature"]
-            )
-
-    return df.select("doc_id", blob_col).mapInPandas(gen, FRAME_SCHEMA)
+    return _map_rows(df.select("doc_id", blob_col), kernel, FRAME_SCHEMA)
 
 
 HIST_SCHEMA = "doc_id long, bin long, n long, share double"
@@ -241,24 +238,15 @@ def byte_histogram(
         )
     shift = 256 // bins
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def kernel(doc_id, blob):
+        cnt = np.bincount(np.frombuffer(blob, np.uint8) // shift, minlength=bins)
+        tot = float(len(blob))
+        return [
+            (doc_id, int(b), int(cnt[b]), cnt[b] / tot)
+            for b in np.nonzero(cnt)[0]
+        ]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                blob = bytes(payload)
-                if not blob:
-                    continue
-                arr = np.frombuffer(blob, np.uint8) // shift
-                cnt = np.bincount(arr, minlength=bins)
-                tot = float(len(blob))
-                for b in np.nonzero(cnt)[0]:
-                    rows.append((int(doc_id), int(b), int(cnt[b]), cnt[b] / tot))
-            yield pd.DataFrame(rows, columns=["doc_id", "bin", "n", "share"])
-
-    return df.select("doc_id", blob_col).mapInPandas(gen, HIST_SCHEMA)
+    return _map_rows(df.select("doc_id", blob_col), kernel, HIST_SCHEMA)
 
 
 AUDIO_SCHEMA = (
@@ -276,39 +264,25 @@ def audio_energy_windows(
     silence flag — the 1→N fan-out + per-window reduction every audio
     pipeline (VAD, loudness normalization, silence trimming) starts
     with. Real decode is STUBBED like the image path (samples = raw
-    bytes); the windowing, Arrow batching, and fan-out contract are the
-    production shape.
+    bytes); the windowing and fan-out contract are the production
+    shape.
 
     Because the fake samples are the blob bytes themselves, this
     operator is ORACLE-EXACT (integer energies, IEEE sqrt) — the one
     multimodal pipeline the DuckDB gate can hash-verify end-to-end
     rather than rows-only."""
-    import math
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def kernel(doc_id, blob):
+        rows = []
+        for widx in range(len(blob) // window):
+            energy = sum(b * b for b in blob[widx * window : (widx + 1) * window])
+            rows.append((
+                doc_id, widx, energy, math.sqrt(energy / float(window)),
+                energy < silence_energy,
+            ))
+        return rows
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                blob = bytes(payload)
-                for widx in range(len(blob) // window):
-                    frame = blob[widx * window : (widx + 1) * window]
-                    energy = sum(b * b for b in frame)
-                    rows.append(
-                        (
-                            int(doc_id),
-                            widx,
-                            energy,
-                            math.sqrt(energy / float(window)),
-                            energy < silence_energy,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "widx", "energy", "rms", "is_silent"]
-            )
-
-    return df.select("doc_id", blob_col).mapInPandas(gen, AUDIO_SCHEMA)
+    return _map_rows(df.select("doc_id", blob_col), kernel, AUDIO_SCHEMA)
 
 
 PNG_STATS_SCHEMA = (
@@ -317,64 +291,35 @@ PNG_STATS_SCHEMA = (
 )
 
 
-def _synth_png_gen(id_col: str):
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+def _synth_png(doc_id: int) -> bytes:
+    from uts_spark.functions.png import synth_png
 
-        from uts_spark.functions.png import synth_png
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "media": [synth_png(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return gen
+    return synth_png(doc_id)
 
 
 def attach_synth_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a REAL PNG blob per row (functions/png.synth_png: pixels
     are a closed form in the id, rows encoded with varying filters) —
     the image-corpus stand-in whose decoded statistics an external SQL
-    oracle can recompute arithmetically. Arrow-batched mapInPandas, one
-    encode per row, executor-side only."""
-    return _spread(df.select(id_col)).mapInPandas(
-        _synth_png_gen(id_col), "doc_id long, media binary"
+    oracle can recompute arithmetically. One encode per row,
+    executor-side only."""
+    return _map_rows(
+        _spread(df.select(id_col)), lambda i: [(i, _synth_png(i))], BLOB_SCHEMA
     )
 
 
-def _png_stats_gen(blob_col: str):
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+def _png_stats(doc_id, blob):
+    from uts_spark.functions.png import decode_png
 
-        from uts_spark.functions.png import decode_png
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                px = decode_png(bytes(payload)).astype(np.int64)
-                h, w, ch = px.shape
-                sums = px.sum(axis=(0, 1))
-                rows.append(
-                    (
-                        int(doc_id), w, h, ch, w * h,
-                        int(sums[0]),
-                        int(sums[1]) if ch > 1 else 0,
-                        int(sums[2]) if ch > 2 else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "channels", "n_pixels",
-                    "sum_r", "sum_g", "sum_b",
-                ],
-            )
-
-    return gen
+    px = decode_png(blob).astype(np.int64)
+    h, w, ch = px.shape
+    sums = px.sum(axis=(0, 1))
+    return [(
+        doc_id, w, h, ch, w * h,
+        int(sums[0]),
+        int(sums[1]) if ch > 1 else 0,
+        int(sums[2]) if ch > 2 else 0,
+    )]
 
 
 def png_decode_stats(df: DataFrame, blob_col: str = "media") -> DataFrame:
@@ -383,32 +328,13 @@ def png_decode_stats(df: DataFrame, blob_col: str = "media") -> DataFrame:
     of fake_decode_features for the one format the container can always
     handle. Integer sums keep the oracle comparison exact; derived means
     are one double division computed identically in SQL."""
-    return df.select("doc_id", blob_col).mapInPandas(
-        _png_stats_gen(blob_col), PNG_STATS_SCHEMA
-    )
-
-
-def _fused_synth(df: DataFrame, id_col: str, enc_gen, stats_gen, schema: str):
-    """Synth-encode and decode-stats in ONE mapInPandas (optimization
-    r12, VERDICT r11 #9 / guide §4.1): the attach->stats pairs below
-    used to be two chained ArrowEvalPython stages, which pays a full
-    JVM round trip of the BLOB column (Arrow-serialize every encoded
-    media byte out of Python, deserialize it back into the next Python
-    worker) plus a second worker pool. Composing the two generators
-    keeps the blobs inside one Python worker; only the stat rows cross
-    the boundary. Row-identical by construction: the same two
-    transformers run in the same order on the same batches."""
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        return stats_gen(enc_gen(batches))
-
-    return _spread(df.select(id_col)).mapInPandas(gen, schema)
+    return _map_rows(df.select("doc_id", blob_col), _png_stats, PNG_STATS_SCHEMA)
 
 
 def synth_png_decode_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """attach_synth_png >> png_decode_stats, fused into one Python pass."""
-    return _fused_synth(
-        df, id_col, _synth_png_gen(id_col), _png_stats_gen("media"),
+    return _map_rows(
+        _spread(df.select(id_col)), lambda i: _png_stats(i, _synth_png(i)),
         PNG_STATS_SCHEMA,
     )
 
@@ -419,36 +345,17 @@ PNG_RESIZE_SCHEMA = (
 )
 
 
-def _png_resize_gen(target_w: int, target_h: int, blob_col: str):
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+def _png_resize(doc_id, blob, target_w: int, target_h: int):
+    from uts_spark.functions.png import decode_png, encode_png, resize_nearest
 
-        from uts_spark.functions.png import decode_png, encode_png, resize_nearest
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                px = decode_png(bytes(payload))
-                h, w = px.shape[:2]
-                small = resize_nearest(px, target_w, target_h)
-                blob2 = encode_png(small)
-                sums = small.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    (
-                        int(doc_id), w, h, target_w, target_h,
-                        int(sums[0]), int(sums[1]), int(sums[2]), len(blob2),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "src_w", "src_h", "target_w", "target_h",
-                    "sum_r", "sum_g", "sum_b", "resized_len",
-                ],
-            )
-
-    return gen
+    px = decode_png(blob)
+    h, w = px.shape[:2]
+    small = resize_nearest(px, target_w, target_h)
+    sums = small.astype(np.int64).sum(axis=(0, 1))
+    return [(
+        doc_id, w, h, target_w, target_h,
+        int(sums[0]), int(sums[1]), int(sums[2]), len(encode_png(small)),
+    )]
 
 
 def png_resize_stats(
@@ -462,8 +369,9 @@ def png_resize_stats(
     generative formula through the same integer index map) plus the
     re-encoded byte length (decode-side only; not oracle-compared —
     compressed size is a zlib implementation detail)."""
-    return df.select("doc_id", blob_col).mapInPandas(
-        _png_resize_gen(target_w, target_h, blob_col), PNG_RESIZE_SCHEMA
+    return _map_rows(
+        df.select("doc_id", blob_col),
+        lambda i, b: _png_resize(i, b, target_w, target_h), PNG_RESIZE_SCHEMA,
     )
 
 
@@ -471,9 +379,10 @@ def synth_png_resize_stats(
     df: DataFrame, target_w: int, target_h: int, id_col: str = "doc_id"
 ) -> DataFrame:
     """attach_synth_png >> png_resize_stats, fused into one Python pass."""
-    return _fused_synth(
-        df, id_col, _synth_png_gen(id_col),
-        _png_resize_gen(target_w, target_h, "media"), PNG_RESIZE_SCHEMA,
+    return _map_rows(
+        _spread(df.select(id_col)),
+        lambda i: _png_resize(i, _synth_png(i), target_w, target_h),
+        PNG_RESIZE_SCHEMA,
     )
 
 
@@ -494,11 +403,6 @@ WAV_ENERGY_SCHEMA = (
 def synth_wav(doc_id: int) -> bytes:
     """Mono 16-bit PCM WAV whose samples are a closed form in doc_id:
     s(i) = ((i*a + c0) % 2001) - 1000, n = 4000 + (doc_id*13) % 2000."""
-    import io
-    import wave
-
-    import numpy as np
-
     n = 4000 + (doc_id * 13) % 2000
     a = 1 + doc_id % 9
     c0 = doc_id % 777
@@ -513,62 +417,35 @@ def synth_wav(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-def _synth_wav_gen(id_col: str):
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "media": [synth_wav(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return gen
-
-
 def attach_synth_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a real RIFF/WAVE blob per row (Arrow-batched, executor-side)."""
-    return _spread(df.select(id_col)).mapInPandas(
-        _synth_wav_gen(id_col), "doc_id long, media binary"
+    """Attach a real RIFF/WAVE blob per row (executor-side)."""
+    return _map_rows(
+        _spread(df.select(id_col)), lambda i: [(i, synth_wav(i))], BLOB_SCHEMA
     )
 
 
-def _wav_energy_gen(blob_col: str):
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import io
-        import math
-        import wave
+def _decode_wav(blob: bytes) -> tuple[int, int, np.ndarray]:
+    """(framerate, n_samples, int64 PCM) of a mono 16-bit WAV blob."""
+    with wave.open(io.BytesIO(blob), "rb") as w:
+        assert w.getnchannels() == 1 and w.getsampwidth() == 2
+        n = w.getnframes()
+        return (
+            w.getframerate(), n,
+            np.frombuffer(w.readframes(n), "<i2").astype(np.int64),
+        )
 
-        import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    assert w.getnchannels() == 1 and w.getsampwidth() == 2
-                    framerate = w.getframerate()
-                    n = w.getnframes()
-                    pcm = np.frombuffer(w.readframes(n), "<i2").astype(np.int64)
-                for widx in range(n // WAV_WINDOW):
-                    frame = pcm[widx * WAV_WINDOW : (widx + 1) * WAV_WINDOW]
-                    energy = int((frame * frame).sum())
-                    rows.append(
-                        (
-                            int(doc_id), widx, n, framerate, energy,
-                            math.sqrt(energy / float(WAV_WINDOW)),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "widx", "n_samples", "framerate", "energy", "rms",
-                ],
-            )
-
-    return gen
+def _wav_energy(doc_id, blob):
+    framerate, n, pcm = _decode_wav(blob)
+    rows = []
+    for widx in range(n // WAV_WINDOW):
+        frame = pcm[widx * WAV_WINDOW : (widx + 1) * WAV_WINDOW]
+        energy = int((frame * frame).sum())
+        rows.append((
+            doc_id, widx, n, framerate, energy,
+            math.sqrt(energy / float(WAV_WINDOW)),
+        ))
+    return rows
 
 
 def wav_energy_windows(df: DataFrame, blob_col: str = "media") -> DataFrame:
@@ -578,15 +455,15 @@ def wav_energy_windows(df: DataFrame, blob_col: str = "media") -> DataFrame:
     (Σ sample²) and IEEE RMS per frame — the honest upgrade of
     audio_energy_windows' bytes-as-samples stand-in. Trailing partial
     windows are dropped (the fixed-frame VAD convention)."""
-    return df.select("doc_id", blob_col).mapInPandas(
-        _wav_energy_gen(blob_col), WAV_ENERGY_SCHEMA
+    return _map_rows(
+        df.select("doc_id", blob_col), _wav_energy, WAV_ENERGY_SCHEMA
     )
 
 
 def synth_wav_energy_windows(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """attach_synth_wav >> wav_energy_windows, fused into one Python pass."""
-    return _fused_synth(
-        df, id_col, _synth_wav_gen(id_col), _wav_energy_gen("media"),
+    return _map_rows(
+        _spread(df.select(id_col)), lambda i: _wav_energy(i, synth_wav(i)),
         WAV_ENERGY_SCHEMA,
     )
 
@@ -597,41 +474,18 @@ WAV_FEATURES_SCHEMA = (
 )
 
 
-def _wav_clip_gen(blob_col: str):
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import io
-        import wave
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    assert w.getnchannels() == 1 and w.getsampwidth() == 2
-                    framerate = w.getframerate()
-                    n = w.getnframes()
-                    pcm = np.frombuffer(w.readframes(n), "<i2").astype(np.int64)
-                nn = np.abs(pcm)
-                rows.append((
-                    int(doc_id),
-                    n,
-                    n / float(framerate),
-                    int(nn.max()) if n else 0,
-                    int(nn.sum()),
-                    int(((pcm[1:] >= 0) != (pcm[:-1] >= 0)).sum()) if n > 1 else 0,
-                    int(np.abs(np.diff(pcm)).sum()) if n > 1 else 0,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_samples", "duration_sec", "peak",
-                    "sum_abs", "zero_crossings", "total_variation",
-                ],
-            )
-
-    return gen
+def _wav_clip(doc_id, blob):
+    framerate, n, pcm = _decode_wav(blob)
+    nn = np.abs(pcm)
+    return [(
+        doc_id,
+        n,
+        n / float(framerate),
+        int(nn.max()) if n else 0,
+        int(nn.sum()),
+        int(((pcm[1:] >= 0) != (pcm[:-1] >= 0)).sum()) if n > 1 else 0,
+        int(np.abs(np.diff(pcm)).sum()) if n > 1 else 0,
+    )]
 
 
 def wav_clip_features(df: DataFrame, blob_col: str = "media") -> DataFrame:
@@ -641,15 +495,15 @@ def wav_clip_features(df: DataFrame, blob_col: str = "media") -> DataFrame:
     variation Σ|s_i − s_{i−1}| — the standard cheap VAD/quality
     signals. All integers, so the oracle replays them bit-for-bit from
     the closed-form waveform."""
-    return df.select("doc_id", blob_col).mapInPandas(
-        _wav_clip_gen(blob_col), WAV_FEATURES_SCHEMA
+    return _map_rows(
+        df.select("doc_id", blob_col), _wav_clip, WAV_FEATURES_SCHEMA
     )
 
 
 def synth_wav_clip_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """attach_synth_wav >> wav_clip_features, fused into one Python pass."""
-    return _fused_synth(
-        df, id_col, _synth_wav_gen(id_col), _wav_clip_gen("media"),
+    return _map_rows(
+        _spread(df.select(id_col)), lambda i: _wav_clip(i, synth_wav(i)),
         WAV_FEATURES_SCHEMA,
     )
 
@@ -660,28 +514,11 @@ GZIP_TEXT_SCHEMA = (
 )
 
 
-def _gzip_text_gen(text_col: str):
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import gzip
-        import io
-
-        import pandas as pd
-
-        def gz(text: str) -> bytes:
-            buf = io.BytesIO()
-            with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as f:
-                f.write(text.encode("utf-8"))
-            return buf.getvalue()
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "media": [gz(t) for t in pdf[text_col]],
-                }
-            )
-
-    return gen
+def _gzip(text: str) -> bytes:
+    buf = io.BytesIO()
+    with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as f:
+        f.write(text.encode("utf-8"))
+    return buf.getvalue()
 
 
 def attach_gzip_text(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -690,73 +527,43 @@ def attach_gzip_text(df: DataFrame, text_col: str = "text") -> DataFrame:
     deterministic): the compressed-corpus ingestion shape (WARC/WET
     dumps, .jsonl.gz shards) where the engine receives OPAQUE compressed
     blobs, not text columns."""
-    return _spread(df.select("doc_id", text_col)).mapInPandas(
-        _gzip_text_gen(text_col), "doc_id long, media binary"
+    return _map_rows(
+        _spread(df.select("doc_id", text_col)),
+        lambda i, text: [(i, _gzip(text))], BLOB_SCHEMA,
     )
 
 
-def _gzip_stats_gen(blob_col: str):
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import gzip
-        import hashlib
-        import io
-        import re
+# ASCII \S+ to mirror the oracle's RE2 semantics exactly: Python
+# str.split() breaks on UNICODE whitespace (NBSP etc.) while RE2's \s is
+# ASCII-only — agreement must not depend on the corpus never containing
+# a unicode space
+_TOKEN = re.compile(rb"\S+")
 
-        import pandas as pd
 
-        # ASCII \S+ to mirror the oracle's RE2 semantics exactly:
-        # Python str.split() breaks on UNICODE whitespace (NBSP etc.)
-        # while RE2's \s is ASCII-only — agreement must not depend on
-        # the corpus never containing a unicode space
-        tok = re.compile(rb"\S+")
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                blob = bytes(payload)
-                with gzip.GzipFile(fileobj=io.BytesIO(blob), mode="rb") as f:
-                    raw = f.read()
-                text = raw.decode("utf-8")
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(blob),
-                        len(text),
-                        len(tok.findall(raw)),
-                        hashlib.md5(raw).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "compressed_len", "n_chars", "n_tokens",
-                    "content_md5",
-                ],
-            )
-
-    return gen
+def _gzip_stats(doc_id, blob):
+    raw = gzip.decompress(blob)
+    return [(
+        doc_id, len(blob), len(raw.decode("utf-8")),
+        len(_TOKEN.findall(raw)), hashlib.md5(raw).hexdigest(),
+    )]
 
 
 def gzip_text_stats(df: DataFrame, blob_col: str = "media") -> DataFrame:
     """REAL decompression lane: gunzip each blob (stdlib zlib) and emit
     plaintext statistics — length, whitespace token count, and the md5
     of the recovered bytes, so the oracle (which reads the ORIGINAL text
-    column) proves the round trip bit-for-bit. Decode is
-    partition-streamed Arrow batches like the PNG/WAV lanes; compressed
-    bytes never leave the executor."""
-    return df.select("doc_id", blob_col).mapInPandas(
-        _gzip_stats_gen(blob_col), GZIP_TEXT_SCHEMA
+    column) proves the round trip bit-for-bit. Compressed bytes never
+    leave the executor."""
+    return _map_rows(
+        df.select("doc_id", blob_col), _gzip_stats, GZIP_TEXT_SCHEMA
     )
 
 
 def synth_gzip_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """attach_gzip_text >> gzip_text_stats, fused into one Python pass."""
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        return _gzip_stats_gen("media")(_gzip_text_gen(text_col)(batches))
-
-    return _spread(df.select("doc_id", text_col)).mapInPandas(
-        gen, GZIP_TEXT_SCHEMA
+    return _map_rows(
+        _spread(df.select("doc_id", text_col)),
+        lambda i, text: _gzip_stats(i, _gzip(text)), GZIP_TEXT_SCHEMA,
     )
 
 
@@ -766,61 +573,31 @@ JPEG_STATS_SCHEMA = (
 )
 
 
-def _synth_jpeg_gen(id_col: str):
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+def _synth_jpeg(doc_id: int) -> bytes:
+    from uts_spark.functions.jpeg import synth_jpeg
 
-        from uts_spark.functions.jpeg import synth_jpeg
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "media": [synth_jpeg(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return gen
+    return synth_jpeg(doc_id)
 
 
 def attach_synth_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a REAL JPEG blob per row (functions/jpeg.synth_jpeg:
     DC-only grayscale, quantized DC a closed form in the id — the one
     construction where a LOSSY codec still decodes to closed-form
-    pixels). Arrow-batched mapInPandas, executor-side only."""
-    return _spread(df.select(id_col)).mapInPandas(
-        _synth_jpeg_gen(id_col), "doc_id long, media binary"
+    pixels). Executor-side only."""
+    return _map_rows(
+        _spread(df.select(id_col)), lambda i: [(i, _synth_jpeg(i))], BLOB_SCHEMA
     )
 
 
-def _jpeg_stats_gen(blob_col: str):
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+def _jpeg_stats(doc_id, blob):
+    from uts_spark.functions.jpeg import decode_jpeg
 
-        from uts_spark.functions.jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                px = decode_jpeg(bytes(payload)).astype(np.int64)
-                h, w = px.shape
-                rows.append(
-                    (
-                        int(doc_id), w, h, w * h,
-                        int(px.sum()), int((px * px).sum()),
-                        int(px.min()), int(px.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "sum_px", "sum_sq", "min_px", "max_px",
-                ],
-            )
-
-    return gen
+    px = decode_jpeg(blob).astype(np.int64)
+    h, w = px.shape
+    return [(
+        doc_id, w, h, w * h,
+        int(px.sum()), int((px * px).sum()), int(px.min()), int(px.max()),
+    )]
 
 
 def jpeg_decode_stats(df: DataFrame, blob_col: str = "media") -> DataFrame:
@@ -828,15 +605,15 @@ def jpeg_decode_stats(df: DataFrame, blob_col: str = "media") -> DataFrame:
     DC prediction, dequantize, IDCT, level shift) per blob via the
     pure-numpy codec, emitting integer pixel statistics an external SQL
     oracle can recompute from the generative formula."""
-    return df.select("doc_id", blob_col).mapInPandas(
-        _jpeg_stats_gen(blob_col), JPEG_STATS_SCHEMA
+    return _map_rows(
+        df.select("doc_id", blob_col), _jpeg_stats, JPEG_STATS_SCHEMA
     )
 
 
 def synth_jpeg_decode_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """attach_synth_jpeg >> jpeg_decode_stats, fused into one Python pass."""
-    return _fused_synth(
-        df, id_col, _synth_jpeg_gen(id_col), _jpeg_stats_gen("media"),
+    return _map_rows(
+        _spread(df.select(id_col)), lambda i: _jpeg_stats(i, _synth_jpeg(i)),
         JPEG_STATS_SCHEMA,
     )
 
@@ -847,36 +624,18 @@ JPEG_RESIZE_SCHEMA = (
 )
 
 
-def _jpeg_resize_gen(target_w: int, target_h: int, blob_col: str):
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+def _jpeg_resize(doc_id, blob, target_w: int, target_h: int):
+    from uts_spark.functions.jpeg import decode_jpeg
 
-        from uts_spark.functions.jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[blob_col]):
-                px = decode_jpeg(bytes(payload))
-                h, w = px.shape[:2]
-                ys = (np.arange(target_h) * h) // target_h
-                xs = (np.arange(target_w) * w) // target_w
-                small = px[np.ix_(ys, xs)].astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id), w, h, target_w, target_h,
-                        int(small.sum()), int(small.min()), int(small.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "src_w", "src_h", "target_w", "target_h",
-                    "sum_px", "min_px", "max_px",
-                ],
-            )
-
-    return gen
+    px = decode_jpeg(blob)
+    h, w = px.shape[:2]
+    ys = (np.arange(target_h) * h) // target_h
+    xs = (np.arange(target_w) * w) // target_w
+    small = px[np.ix_(ys, xs)].astype(np.int64)
+    return [(
+        doc_id, w, h, target_w, target_h,
+        int(small.sum()), int(small.min()), int(small.max()),
+    )]
 
 
 def jpeg_resize_stats(
@@ -886,8 +645,9 @@ def jpeg_resize_stats(
     neighbor resample via the integer index map src = (dst·src)//tgt →
     integer stats of the resized grayscale pixels (the oracle replays
     the index map on the generative block formula)."""
-    return df.select("doc_id", blob_col).mapInPandas(
-        _jpeg_resize_gen(target_w, target_h, blob_col), JPEG_RESIZE_SCHEMA
+    return _map_rows(
+        df.select("doc_id", blob_col),
+        lambda i, b: _jpeg_resize(i, b, target_w, target_h), JPEG_RESIZE_SCHEMA,
     )
 
 
@@ -895,7 +655,8 @@ def synth_jpeg_resize_stats(
     df: DataFrame, target_w: int, target_h: int, id_col: str = "doc_id"
 ) -> DataFrame:
     """attach_synth_jpeg >> jpeg_resize_stats, fused into one Python pass."""
-    return _fused_synth(
-        df, id_col, _synth_jpeg_gen(id_col),
-        _jpeg_resize_gen(target_w, target_h, "media"), JPEG_RESIZE_SCHEMA,
+    return _map_rows(
+        _spread(df.select(id_col)),
+        lambda i: _jpeg_resize(i, _synth_jpeg(i), target_w, target_h),
+        JPEG_RESIZE_SCHEMA,
     )

@@ -338,30 +338,6 @@ def hyperplane(h: int, dim: int) -> list[float]:
     return out
 
 
-def lsh_buckets(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    planes: int = 12,
-    table_id: int = 0,
-) -> Column:
-    """Bucket id = sign bits of ``planes`` hyperplane projections
-    (single-table Column form; ``lsh_bucket_table`` is the multi-table
-    fast path)."""
-    bucket = F.lit(0).cast("long")
-    for h in range(planes):
-        w = F.array(*[F.lit(c) for c in hyperplane(table_id * 1000 + h, dim)])
-        proj = F.aggregate(
-            F.zip_with(F.col(vec_col), w, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.shiftleft(
-            F.when(proj > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")), h
-        )
-    return bucket
-
-
 def lsh_bucket_table(
     df: DataFrame,
     dim: int,

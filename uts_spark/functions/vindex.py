@@ -104,18 +104,6 @@ _SORT = ("band", "grp", "bucket")
 # per-family row construction and quantizer handling.
 
 
-def _id_stats(spark, ddir: str, id_col: str = "id") -> list[int]:
-    """(min_id, max_id) of a delta directory — recorded on the
-    manifest so erasure can PRUNE: a dir whose id range admits none
-    of the deleted ids is carried into the new version untouched
-    (the file-stats pruning real table formats do; here at dir
-    granularity because dirs are this format's file unit)."""
-    row = _read_pq(spark, ddir).agg(
-        F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
-    ).first()
-    return [int(row["lo"]), int(row["hi"])]
-
-
 def _count_and_stats(spark, ddir: str, id_col: str = "id") -> tuple[int, list[int]]:
     """(row count, [min_id, max_id]) of a delta dir — parquet footers
     first (no Spark job at all; optimization r11 — integer id columns

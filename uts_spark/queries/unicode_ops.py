@@ -265,16 +265,6 @@ _UCORPUS_DUCK = f"""
 """
 
 
-def _ulabel_spark():
-    en_sub = (
-        F.when(F.col("doc_id") % 4 == 1, F.lit("ru"))
-        .when(F.col("doc_id") % 4 == 2, F.lit("el"))
-        .when(F.col("doc_id") % 4 == 3, F.lit("ja"))
-        .otherwise(F.lit("en"))
-    )
-    return F.when(F.col("lang") == "en", en_sub).otherwise(F.col("lang"))
-
-
 def _ucorpus(docs):
     """(doc_id, ulabel, utext) — the derived multilingual corpus.
     Both projections are single selectExpr strings (optimization r11:
