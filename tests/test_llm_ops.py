@@ -304,59 +304,81 @@ def test_cluster_assignment_keeps_min_and_singletons(spark):
 def test_connected_components_max_rounds_guard(spark):
     import pytest as _pytest
 
-    from uts_spark.functions.clustering import connected_components
+    from uts_spark.functions.clustering import _jump_components
 
-    # a 12-node path needs ~11 rounds; guard at 2 must raise, not loop.
-    # algorithm="jump" pins the pointer-jump path — the default local
-    # union-find contraction (optimization r12) has a fixed level
-    # schedule and needs no convergence guard.
+    # a 13-node path needs more than 2 pointer-jump rounds; the guard
+    # at 2 must raise, not loop. The local union-find contraction has a
+    # fixed level schedule and needs no convergence guard.
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12, 0, -1)], "src long, dst long"
     )
     with _pytest.raises(RuntimeError, match="converge"):
-        connected_components(edges, max_rounds=2, algorithm="jump")
+        _jump_components(edges, "src", "dst", 12, 4, max_rounds=2)
+
+
+def _reference_components(edges):
+    """Pure-Python union-find: the set of (node, min node id of its
+    component) over every edge without a NULL endpoint."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a is None or b is None:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:  # union by min: every root is its set's minimum
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
 
 
 def test_cc_union_find_matches_jump_and_multi_level(spark, monkeypatch):
-    """Optimization r12: the default local-union-find contraction must
-    label-match the pointer-jump path — on a random graph, on the
-    worst-case chain, and with the level machinery FORCED multi-level
-    (edges-per-task shrunk so level 0 fans out and the fan-in levels
-    actually run)."""
+    """Every connected_components path must label-match a pure-Python
+    union-find: the one-task local union-find, the same contraction
+    FORCED multi-level (edges-per-task shrunk so level 0 fans out and
+    the fan-in levels actually run), and pointer jumping (forced by a
+    zero union-find size cap) — on random graphs, worst-case chains, a
+    self-loop and NULL endpoints."""
     import random
 
     from uts_spark.functions import clustering
     from uts_spark.functions.clustering import connected_components
 
-    rng = random.Random(7)
+    rng, rng300 = random.Random(7), random.Random(11)
     graphs = [
         [(rng.randrange(200), rng.randrange(200)) for _ in range(300)],
-        [(i, i + 1) for i in range(60)],  # worst-case chain
+        [(rng300.randrange(300), rng300.randrange(300)) for _ in range(250)],
+        [(i, i + 1) for i in range(60)],  # worst-case chains
+        [(i, i + 1) for i in range(120)],
         [(5, 5), (7, 8)],  # self-loop + isolated edge
         # NULL-endpoint edges join nothing: no path may label their
         # other end or emit a NULL node
         [(1, 2), (3, None), (None, 4), (None, None), (2, 5)],
     ]
+    paths = {
+        "one-task uf": {},
+        "multi-level uf": {"_UF_EDGES_PER_TASK": 40, "_UF_FAN_IN": 4},
+        "jump": {"_UF_MAX_EDGES": 0},
+    }
     for edges in graphs:
         df = spark.createDataFrame(edges, "src long, dst long")
-        jump = {
-            (r.node, r.component)
-            for r in connected_components(df, algorithm="jump").collect()
-        }
-        uf = {
-            (r.node, r.component)
-            for r in connected_components(df, algorithm="uf").collect()
-        }
-        assert uf == jump and uf
-        # force a multi-level contraction (level 0 at ~8 blocks + fan-in)
-        monkeypatch.setattr(clustering, "_UF_EDGES_PER_TASK", 40)
-        monkeypatch.setattr(clustering, "_UF_FAN_IN", 4)
-        multi = {
-            (r.node, r.component)
-            for r in connected_components(df, algorithm="uf").collect()
-        }
-        monkeypatch.undo()
-        assert multi == jump
+        want = _reference_components(edges)
+        assert want
+        for path, consts in paths.items():
+            for name, value in consts.items():
+                monkeypatch.setattr(clustering, name, value)
+            got = {
+                (r.node, r.component)
+                for r in connected_components(df).collect()
+            }
+            monkeypatch.undo()
+            assert got == want, path
 
 
 def test_contamination_counts_shared_distinct_shingles(spark):
@@ -3720,7 +3742,7 @@ def test_cc_never_mutates_session_conf(spark):
             + [(i, i + 2) for i in range(0, 4000, 4)],
             "src long, dst long",
         )
-        comp = connected_components(edges, dedupe_edges=False)
+        comp = connected_components(edges)
         assert comp.count() > 0
     finally:
         stop.set()

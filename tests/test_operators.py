@@ -166,11 +166,15 @@ def test_pagerank_uniform_on_symmetric_cycle(spark):
     edges = spark.createDataFrame(
         [(0, 1, 5), (1, 2, 5), (2, 0, 5)], "src long, dst long, w long"
     )
-    nodes = spark.createDataFrame([(i,) for i in range(3)], "node long")
-    out = pagerank_weighted(nodes, edges, iterations=3).collect()
-    # symmetric single-out-edge cycle: mass stays uniform at 1/n
-    prs = [r["pr"] for r in out]
-    assert all(abs(p - 1 / 3) < 1e-6 for p in prs), prs
+    # a repeated node row must not change n: [0, 1, 2, 2] is still a
+    # 3-node graph
+    for ids in ([0, 1, 2], [0, 1, 2, 2]):
+        nodes = spark.createDataFrame([(i,) for i in ids], "node long")
+        out = pagerank_weighted(nodes, edges, iterations=3).collect()
+        # symmetric single-out-edge cycle: mass stays uniform at 1/n
+        prs = [r["pr"] for r in out]
+        assert len(prs) == 3, prs
+        assert all(abs(p - 1 / 3) < 1e-6 for p in prs), prs
 
 
 def test_pagerank_sink_attracts_mass(spark):

@@ -456,7 +456,7 @@ def test_connected_components_match_union_find(spark, data):
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r.node: r.component
-        for r in connected_components(df, max_rounds=12).collect()
+        for r in connected_components(df).collect()
     }
     exp = _uf_components(n_nodes, edges)
     # spark output only covers nodes that appear in edges

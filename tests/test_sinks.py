@@ -4204,7 +4204,8 @@ def test_maintain_agg_view_updates_and_refusals(spark, tmp_path):
     images from a rewrite range (merge_upsert, key=) apply as
     pre-subtract/post-add; float sum columns refused at seed; config
     mismatch refused; non-view destination refused; negative count
-    (foreign history) refused."""
+    (foreign history) refused; long overflow refused in both ANSI
+    modes."""
     import pytest as _pytest
 
     import uts_spark.sources.versioned as V
@@ -4274,6 +4275,41 @@ def test_maintain_agg_view_updates_and_refusals(spark, tmp_path):
     # a plain table is not a view
     with _pytest.raises(ValueError, match="not an aggregate view"):
         V.maintain_agg_view(spark, ps, ps, ("grp",), ("val",))
+
+    # a sum or sum of squares past a long is refused and commits
+    # nothing, on seed and on tick, with ANSI off (plain long arithmetic
+    # wraps silently) as with ANSI on (it raises ArithmeticException)
+    ansi_key = "spark.sql.ansi.enabled"
+    ansi = spark.conf.get(ansi_key)
+    schema = "id long, grp long, val long"
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(ansi_key, mode)
+            po, pov = str(tmp_path / f"o{mode}"), str(tmp_path / f"ov{mode}")
+            big = 4_000_000_000  # square > 2^63
+            V.write_snapshot(
+                spark.createDataFrame([(1, 0, big), (2, 0, big)], schema), po
+            )
+            with _pytest.raises(ValueError, match="overflows a long"):
+                V.maintain_agg_view(
+                    spark, po, pov, ("grp",), sumsq_cols=("val",)
+                )
+            assert V.list_versions(pov) == []
+            half = 1 << 62  # one fits, two sum to 2^63
+            V.write_snapshot(
+                spark.createDataFrame([(1, 0, half)], schema), po
+            )
+            V.maintain_agg_view(spark, po, pov, ("grp",), ("val",))
+            V.append_snapshot(
+                spark.createDataFrame([(2, 0, half)], schema), po
+            )
+            with _pytest.raises(ValueError, match="overflows a long"):
+                V.maintain_agg_view(spark, po, pov, ("grp",), ("val",))
+            assert len(V.list_versions(pov)) == 1
+            kept = V.read_version(spark, pov).collect()
+            assert [r.sum_val for r in kept] == [half]
+    finally:
+        spark.conf.set(ansi_key, ansi)
 
 
 def test_replicate_skips_content_preserving_ranges(spark, tmp_path):

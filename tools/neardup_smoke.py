@@ -33,111 +33,6 @@ VAR_POS = (13, 26, 39)  # member-specific word slots inside dup families
 VOCAB = 50_000
 
 
-def _shuffle_write_bytes(spark) -> int:
-    """Total shuffle-write bytes so far, via the UI REST API (the only
-    public surface exposing stage shuffle metrics to PySpark)."""
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete", timeout=10
-        ) as r:
-            stages = json.loads(r.read())
-        return sum(st.get("shuffleWriteBytes", 0) for st in stages)
-    except Exception:
-        return -1
-
-
-def _build_verified(spark, n_docs):
-    """The shared front of the pipeline: synthetic corpus -> verified
-    near-dup pair list (cached) + doc ids."""
-    from pyspark.sql import functions as F
-
-    from uts_spark.functions.dedup import (
-        doc_shingle_arrays,
-        minhash_band_candidates,
-        minhash_signatures,
-        pair_jaccard,
-    )
-
-    fam = F.expr(f"id div {FAMILY}")
-    member = F.pmod(F.col("id"), F.lit(FAMILY))
-    is_dup = F.pmod(fam, F.lit(DUP_FAMILY_MOD)) == 0
-
-    def word(j: int):
-        if j in VAR_POS:
-            dup_key = F.xxhash64(fam, F.lit(j), member)
-        else:
-            dup_key = F.xxhash64(fam, F.lit(j))
-        uniq_key = F.xxhash64(F.col("id"), F.lit(j + 1_000_000))
-        key = F.when(is_dup, dup_key).otherwise(uniq_key)
-        return F.concat(F.lit("w"), F.pmod(key, F.lit(VOCAB)).cast("string"))
-
-    docs = spark.range(n_docs).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(" ", *[word(j) for j in range(WORDS)]).alias("text"),
-    )
-    arrays = doc_shingle_arrays(docs, "text", "doc_id", n=3).cache()
-    sig = minhash_signatures(docs, "text", "doc_id", n=3, k=32, arrays=arrays)
-    cand = minhash_band_candidates(sig, k=32, bands=8)
-    verified = (
-        pair_jaccard(cand, arrays)
-        .filter(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
-    )
-    return docs, verified
-
-
-def cc_ab() -> None:
-    """VERDICT r4 #6: A/B the two CC implementations (min-label +
-    pointer jumping vs alternating large/small-star) on the near-dup
-    verdict at 250k and 500k docs, recording rounds, wall seconds and
-    shuffle-write bytes per variant. Run:
-    python3 tools/neardup_smoke.py --cc-ab [docs ...]"""
-    from pyspark.sql import functions as F
-
-    from uts_spark.functions import clustering as cl
-    from uts_spark.session import get_spark
-
-    sizes = [int(a) for a in sys.argv[2:]] or [250_000, 500_000]
-    # UI on: the REST stage API is the shuffle-bytes source
-    spark = get_spark("cc-ab", extra_conf={"spark.ui.enabled": "true"})
-    spark.sparkContext.setLogLevel("ERROR")
-    out = []
-    for n_docs in sizes:
-        docs, verified = _build_verified(spark, n_docs)
-        n_edges = verified.count()
-        row = {"docs": n_docs, "edges": n_edges, "loadavg": os.getloadavg()[0]}
-        results = {}
-        for name, fn in (
-            ("jump", cl.connected_components),
-            ("star", cl.connected_components_star),
-        ):
-            best = None
-            for _pass in range(2):  # warm pass wins (codegen amortizes)
-                b0 = _shuffle_write_bytes(spark)
-                t0 = time.time()
-                labels = fn(verified, src="id_a", dst="id_b")
-                n_nodes = labels.count()
-                dt = round(time.time() - t0, 2)
-                sb = _shuffle_write_bytes(spark) - b0
-                if best is None or dt < best["sec"]:
-                    best = {"sec": dt, "shuffle_mb": round(sb / 1e6, 1)}
-            rounds_key = "jump_rounds" if name == "jump" else "star_rounds"
-            best["rounds"] = cl.LAST_CC_INFO.get(rounds_key)
-            row[name] = best
-            results[name] = {
-                (r["node"], r["component"]) for r in labels.collect()
-            }
-        row["labels_agree"] = results["jump"] == results["star"]
-        out.append(row)
-        print(json.dumps(row))
-    spark.stop()
-
-
 def _synth_docs(spark, n_docs):
     """The shared planted-family corpus (module docstring)."""
     from pyspark.sql import functions as F
@@ -577,9 +472,6 @@ def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--index-compact":
         index_compact_ab()
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "--cc-ab":
-        cc_ab()
-        return
     if len(sys.argv) > 1 and sys.argv[1] == "--index-probe":
         index_probe_ab()
         return
@@ -636,9 +528,7 @@ def main() -> None:
     verified = verified.select("id_a", "id_b").cache()
     n_ver = timed("exact_jaccard_verify", verified.count)
 
-    labeled = cluster_assignment(
-        docs.select("doc_id"), verified, "doc_id", dedupe_edges=False
-    )
+    labeled = cluster_assignment(docs.select("doc_id"), verified, "doc_id")
     n_drop = timed(
         "connected_components_verdict",
         labeled.filter(~F.col("keep")).count,

@@ -7,12 +7,12 @@ has no graph ops at all (`uts.ts` nowhere iterates); this is a
 north-star training-pipeline operator (the dedup stage of every large
 corpus build ends with exactly this clustering step).
 
-Algorithms (optimization r12 — VERDICT r11 #2):
+:func:`connected_components` picks one of two shapes from its input:
 
-- **Local union-find contraction** (default for graphs whose star
-  forest fits one task): edges hash-partition into blocks, each block
-  runs an exact union-find (Arrow-batched, executor-side) and emits
-  one ``(node, root)`` star edge per node with root = the block-local
+- **Local union-find contraction** (graphs whose star forest fits one
+  task): edges hash-partition into blocks, each block runs an exact
+  union-find (Arrow-batched, executor-side) and emits one
+  ``(node, root)`` star edge per node with root = the block-local
   component minimum; levels repeat with a shrinking partition count
   until one task holds every star edge and resolves the exact global
   minima. Contraction preserves connectivity (an edge (u, v) becomes
@@ -22,17 +22,18 @@ Algorithms (optimization r12 — VERDICT r11 #2):
   count, so the WHOLE computation is one lazy plan — zero driver
   round trips, zero convergence actions, zero checkpoints (the
   pointer-jump loop paid ~10 Spark jobs per round).
-- **Min-label propagation + pointer jumping** (fallback for graphs
-  too large for the final one-task merge, and for callers that pin
-  ``algorithm="jump"``): each round every node takes the min label
-  over itself and its neighbors, then chases one parent link
-  (``label ← label[label]``) — O(log diameter) rounds. Measured on
+- **Min-label propagation + pointer jumping** (graphs too large for
+  the final one-task merge, and mixed-type endpoints): each round
+  every node takes the min label over itself and its neighbors, then
+  chases one parent link (``label ← label[label]``) — O(log diameter)
+  rounds. Measured on
   the sf0.1 near-dup graph (5k nodes / 227k directed edges,
   diameter ≈ 7): 4 rounds vs 7 for plain propagation, same labels.
   A ``max_rounds`` guard fails loudly on pathological graphs instead
-  of looping forever.
+  of looping forever. Min-propagation is idempotent under duplicate
+  messages, so duplicate edges need no dedup shuffle.
 
-Scale notes (100 TB story):
+Scale notes for the jump rounds (100 TB story):
 - per round: one shuffle join (edges ⋈ labels on dst — the edge list
   is pre-partitioned on dst once and reused every round), one groupBy
   on node, and one self-join on the label column (tiny: one row per
@@ -129,9 +130,7 @@ def _uf_components(edges: DataFrame, src: str, dst: str, n_edges: int,
     t = edges.schema[src].dataType.simpleString()
     cur = edges.select(F.col(src).alias("node"), F.col(dst).alias("root"))
     p = max(1, min(n_edges // _UF_EDGES_PER_TASK + 1, width))
-    levels = 0
     while True:
-        levels += 1
         # hash partition on the edge source (any deterministic spread
         # works — correctness needs only that the LAST level is one
         # task); never a constant key (plan-audit: a constant hash key
@@ -144,109 +143,35 @@ def _uf_components(edges: DataFrame, src: str, dst: str, n_edges: int,
         if p == 1:
             break
         p = max(1, p // _UF_FAN_IN)
-    LAST_CC_INFO["uf_levels"] = levels
     return cur.select("node", F.col("root").alias("component"))
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 20,
-    dedupe_edges: bool = True,
-    edges_materialized: bool = False,
-    algorithm: str = "auto",
-) -> DataFrame:
-    """Label each node of the undirected graph with the smallest node id
-    reachable from it (the canonical component id).
-
-    ``edges`` is one row per undirected edge; isolated nodes may simply
-    be absent (callers union them back with label = own id). Returns
-    ``(node, component)``. Pass ``dedupe_edges=False`` when the caller
-    guarantees unique (src, dst) pairs (every LSH pair generator here
-    does): min-propagation is idempotent under duplicate messages, so
-    the dedup shuffle is pure overhead then. Pass
-    ``edges_materialized=True`` when the pair frame is ALREADY an
-    eagerly-materialized checkpoint (simhash_band_pairs and the
-    checkpoint=True minhash path return exactly that) — re-running the
-    materialization job on it buys nothing (optimization r11).
-
-    ``algorithm``: ``"auto"`` (default) contracts via local union-find
-    while the graph is small enough for the final one-task merge and
-    falls back to pointer jumping beyond ``_UF_MAX_EDGES`` edges;
-    ``"uf"`` / ``"jump"`` pin a path (the guard test and the A/B tools
-    pin ``"jump"``; ``max_rounds``/``dedupe_edges`` only apply there —
-    union-find needs neither a convergence guard nor deduped edges)."""
-    assert algorithm in ("auto", "uf", "jump")
-    spark = edges.sparkSession
-    # an edge with a NULL endpoint joins nothing: drop it once, before
-    # the algorithm choice, so every path labels the same graph (pointer
-    # jumping would otherwise label its other end and emit a NULL node)
-    edges = edges.dropna(subset=[src, dst])
-    # materialize the (possibly expensive, e.g. LSH-generated) edge list
-    # once — the count below is an action over it, and the jump path's
-    # symmetrizing union reads it twice
-    if not edges_materialized:
-        edges = edges.localCheckpoint(eager=True)
-
-    # size the per-level shuffles to the GRAPH, not the input corpus:
-    # a near-dup edge list is orders of magnitude smaller than the
-    # documents it came from. Width is applied with EXPLICIT per-plan
-    # repartitions, never by mutating spark.sql.shuffle.partitions
-    # (VERDICT r10 quality note: the old conf-set/restore narrowed a
-    # session-global knob for the whole build — a concurrent query on
-    # the same session silently ran at the narrowed width; pinned in
-    # tests/test_mining.py). AQE partition coalescing handles the
-    # remaining conf-width exchanges at runtime.
-    try:
-        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except ValueError:  # e.g. "auto" on some managed runtimes
-        width = spark.sparkContext.defaultParallelism
-    n_pairs = edges.count()
-    if (
-        algorithm != "jump"
-        and (algorithm == "uf" or n_pairs <= _UF_MAX_EDGES)
-        # UF compares endpoint ids in Python — both sides must share a
-        # type (always true here; mixed-type edges fall back to jump,
-        # whose Spark-side min() resolves a common type)
-        and edges.schema[src].dataType == edges.schema[dst].dataType
-    ):
-        return _uf_components(edges, src, dst, n_pairs, width)
-
+def _jump_components(edges: DataFrame, src: str, dst: str, n_edges: int,
+                     width: int, max_rounds: int = 20) -> DataFrame:
+    """Connected components by min-label propagation + pointer jumping
+    (module docstring); raises after ``max_rounds`` rounds without
+    convergence. Every round's shuffles are sized to the graph by
+    EXPLICIT repartitions on the plan (the session conf is never
+    touched): the msgs join's cur side co-partitions with the
+    checkpointed ``sym`` (both HashPartitioning(b, p) — no extra
+    exchange), and the union-aggregate exchanges once at ``p`` on
+    node."""
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
-    if dedupe_edges:
-        sym = sym.distinct()
-    n_edges = 2 * n_pairs
-    p = max(1, min(n_edges // 200_000 + 1, width))
+    p = max(1, min(2 * n_edges // 200_000 + 1, width))
     sym = (
         sym.repartition(p, F.col("b"))  # join key of the msgs join
         .localCheckpoint(eager=True)
     )
-    return _cc_rounds(sym, max_rounds, width=p)
-
-
-def _cc_rounds(
-    sym: DataFrame, max_rounds: int, width: int | None = None,
-) -> DataFrame:
-    """``width`` sizes every round's shuffles to the graph via
-    EXPLICIT repartitions on the plan (the session conf is never
-    touched): the msgs join's cur side co-partitions with the
-    checkpointed ``sym`` (both HashPartitioning(b, width) — no extra
-    exchange), and the union-aggregate exchanges once at ``width`` on
-    node. None = follow the session conf (standalone callers)."""
-    def _w(df: DataFrame, *cols: str) -> DataFrame:
-        return df.repartition(width, *map(F.col, cols)) if width else df
-
     labels = (
-        _w(sym, "a").groupBy(F.col("a").alias("node"))
+        sym.repartition(p, "a").groupBy(F.col("a").alias("node"))
         .agg(F.min("b").alias("component"))
         .withColumn("component", F.least("component", "node"))
         .localCheckpoint(eager=True)
     )
     ctype = labels.schema["component"].dataType
-    for _rnd in range(max_rounds):
+    for _ in range(max_rounds):
         # one propagate+jump step per checkpointed round (two fused
         # steps cost more joins than the round trip they save: A/B on
         # the sf0.1 near-dup graph, 5k nodes / 227k edges, 2.06 s vs
@@ -258,7 +183,8 @@ def _cc_rounds(
         # cur co-partitions with the checkpointed sym on the join
         # key, so the join adds no exchange beyond cur's own
         msgs = sym.join(
-            _w(cur.select(F.col("node").alias("b"), "component"), "b"),
+            cur.select(F.col("node").alias("b"), "component")
+            .repartition(p, "b"),
             "b",
         ).select(
             F.col("a").alias("node"),
@@ -266,7 +192,8 @@ def _cc_rounds(
             F.lit(None).cast(ctype).alias("old"),
         )
         agg = (
-            _w(msgs.union(cur.select("node", "component", "old")), "node")
+            msgs.union(cur.select("node", "component", "old"))
+            .repartition(p, "node")
             .groupBy("node")
             .agg(
                 F.min("component").alias("component"),
@@ -295,12 +222,67 @@ def _cc_rounds(
         )
         labels = new_labels.drop("old")
         if changed == 0:
-            LAST_CC_INFO["jump_rounds"] = _rnd + 1
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_rounds} rounds "
         "(graph diameter exceeds the guard — raise max_rounds)"
     )
+
+
+def connected_components(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    edges_materialized: bool = False,
+) -> DataFrame:
+    """Label each node of the undirected graph with the smallest node id
+    reachable from it (the canonical component id).
+
+    ``edges`` is one row per undirected edge; duplicates are harmless
+    and isolated nodes may simply be absent (callers union them back
+    with label = own id). Returns ``(node, component)``. Pass
+    ``edges_materialized=True`` when the pair frame is ALREADY an
+    eagerly-materialized checkpoint (simhash_band_pairs and the
+    checkpoint=True minhash path return exactly that) — re-running the
+    materialization job on it buys nothing (optimization r11).
+
+    Contracts via local union-find while the graph is small enough for
+    the final one-task merge, and falls back to pointer jumping beyond
+    ``_UF_MAX_EDGES`` edges (module docstring)."""
+    spark = edges.sparkSession
+    # an edge with a NULL endpoint joins nothing: drop it once, before
+    # the algorithm choice, so every path labels the same graph (pointer
+    # jumping would otherwise label its other end and emit a NULL node)
+    edges = edges.dropna(subset=[src, dst])
+    # materialize the (possibly expensive, e.g. LSH-generated) edge list
+    # once — the count below is an action over it, and the jump path's
+    # symmetrizing union reads it twice
+    if not edges_materialized:
+        edges = edges.localCheckpoint(eager=True)
+
+    # size the per-level shuffles to the GRAPH, not the input corpus:
+    # a near-dup edge list is orders of magnitude smaller than the
+    # documents it came from. Width is applied with EXPLICIT per-plan
+    # repartitions, never by mutating spark.sql.shuffle.partitions
+    # (VERDICT r10 quality note: the old conf-set/restore narrowed a
+    # session-global knob for the whole build — a concurrent query on
+    # the same session silently ran at the narrowed width; pinned in
+    # tests/test_mining.py). AQE partition coalescing handles the
+    # remaining conf-width exchanges at runtime.
+    try:
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:  # e.g. "auto" on some managed runtimes
+        width = spark.sparkContext.defaultParallelism
+    n_edges = edges.count()
+    if (
+        n_edges <= _UF_MAX_EDGES
+        # UF compares endpoint ids in Python — both sides must share a
+        # type (always true here; mixed-type edges fall back to jump,
+        # whose Spark-side min() resolves a common type)
+        and edges.schema[src].dataType == edges.schema[dst].dataType
+    ):
+        return _uf_components(edges, src, dst, n_edges, width)
+    return _jump_components(edges, src, dst, n_edges, width)
 
 
 def cluster_assignment(
@@ -309,15 +291,13 @@ def cluster_assignment(
     id_col: str,
     pair_a: str = "id_a",
     pair_b: str = "id_b",
-    dedupe_edges: bool = True,
     pairs_materialized: bool = False,
 ) -> DataFrame:
     """Full dedup verdict: every id from ``all_ids`` mapped to its
     near-dup cluster (singletons cluster with themselves) with the
     KEEP/DROP bit — keep exactly the minimum id of each cluster."""
     comp = connected_components(
-        pairs, src=pair_a, dst=pair_b, dedupe_edges=dedupe_edges,
-        edges_materialized=pairs_materialized,
+        pairs, src=pair_a, dst=pair_b, edges_materialized=pairs_materialized,
     )
     return (
         all_ids.select(F.col(id_col).alias("node"))
@@ -327,93 +307,6 @@ def cluster_assignment(
             F.coalesce("component", "node").alias("cluster_id"),
             (F.coalesce("component", "node") == F.col("node")).alias("keep"),
         )
-    )
-
-
-# round-count telemetry for the CC A/B (tools/neardup_smoke.py --cc-ab):
-# each implementation records how many rounds it ran on its last call
-LAST_CC_INFO: dict[str, int] = {}
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 30,
-) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") — the A/B challenger to :func:`connected_components`
-    (min-label + pointer jumping), per VERDICT r4 #6.
-
-    Per round: large-star points every neighbor v > u at
-    m = min(N(u) + {u}); small-star re-points every neighbor v <= u at
-    m. Both are one groupBy + one join over the current edge list; the
-    edge list SHRINKS toward a star forest (u -> component-min), so
-    late rounds shuffle less than early ones — the property the paper
-    trades against pointer jumping's constant-size label table. The
-    measured A/B (SCALE.md) decides which is the default inside
-    cluster_assignment.
-
-    Same contract as connected_components: returns (node, component),
-    isolated nodes absent.
-    """
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _mins(adj: DataFrame) -> DataFrame:
-        return (
-            adj.groupBy("a")
-            .agg(F.min("b").alias("mb"))
-            .select("a", F.least("mb", F.col("a")).alias("m"))
-        )
-
-    for rnd in range(1, max_rounds + 1):
-        # large-star over the full symmetric adjacency
-        adj = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        large = (
-            adj.join(_mins(adj), "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # small-star over edges oriented larger -> smaller
-        sadj = large.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        )
-        j = sadj.join(_mins(sadj), "a")  # (a, b, m)
-        small = (
-            j.select(F.col("b").alias("v"), F.col("m"))
-            .union(j.select(F.col("a").alias("v"), "m").distinct())
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .distinct()
-        )
-        new_e = small.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        ).localCheckpoint(eager=True)
-        changed = new_e.subtract(e).limit(1).count()
-        stable = changed == 0 and new_e.count() == e.count()
-        e = new_e
-        if stable:
-            LAST_CC_INFO["star_rounds"] = rnd
-            roots = e.select(F.col("b").alias("node")).distinct().select(
-                "node", F.col("node").alias("component")
-            )
-            return (
-                e.select(F.col("a").alias("node"), F.col("b").alias("component"))
-                .union(roots)
-                .groupBy("node")
-                .agg(F.min("component").alias("component"))
-            )
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_rounds} rounds"
     )
 
 
@@ -449,9 +342,11 @@ def pagerank_weighted(
     Catalyst sees every round (plan depth grows linearly; localCheckpoint
     per round once iterations exceed ~10).
     """
-    n = nodes.count()
-    tele = (_PR_ONE * (100 - damping_pct)) // (100 * n)
+    # n counts the DISTINCT base the rounds iterate over: a repeated
+    # node row must not dilute every node's teleport and start mass
     base = nodes.select(F.col(node_col).alias("node")).distinct()
+    n = base.count()
+    tele = (_PR_ONE * (100 - damping_pct)) // (100 * n)
     # checkpoint the prepared edge list ONCE: every round joins it, and
     # without materialization each round would replay the (potentially
     # fact-table-sized) edge build — and the round-k rank, whose lineage

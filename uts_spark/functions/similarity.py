@@ -366,8 +366,9 @@ def lsh_bucket_table(
       built planes×tables aggregate-HOF expressions each embedding a
       dim-wide literal array, ~9.5s of codegen for 5k vectors), one
       cross join, sign bits assembled by a groupBy over (id, table).
-      Kept for plan-level composition (marker-protocol partition
-      locate) and as the A/B control.
+      Kept as the reference shape that
+      ``test_lsh_bucket_table_np_equals_agg`` checks the default
+      against, and as the control of ``tools/lsh_bucket_ab.py``.
 
     ``keep_cols`` rides metadata columns through either pass for free.
     """

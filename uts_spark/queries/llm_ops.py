@@ -450,17 +450,13 @@ def dedup_cluster_cc(spark, sf_dir):
     """Transitive near-dup clustering: connected components over the
     SimHash pair graph (A~B, B~C ⇒ one cluster even without an A~C
     pair), every document labeled with its cluster's minimum doc_id and
-    a keep/drop verdict. Iterative min-label propagation — one shuffle
-    per round, rounds = graph diameter (near-dup graphs: 2-4) — vs the
-    oracle's recursive-CTE closure."""
+    a keep/drop verdict. Local union-find contraction — one lazy plan,
+    no convergence rounds — vs the oracle's recursive-CTE closure."""
     docs = table(spark, sf_dir, "documents")
     pairs = simhash_band_pairs(docs, "text", "doc_id", bands=4, max_hamming=6)
-    # band-pair output is already distinct (a < b canonical) — skip the
-    # edge-dedup shuffle inside the CC loop; it is also already an
-    # eager checkpoint, so skip the loop's own re-materialization
-    return cluster_assignment(
-        docs, pairs, "doc_id", dedupe_edges=False, pairs_materialized=True
-    )
+    # band-pair output is already an eager checkpoint, so skip the
+    # CC operator's own re-materialization
+    return cluster_assignment(docs, pairs, "doc_id", pairs_materialized=True)
 
 
 def _register_cluster_cc_star():
@@ -468,20 +464,25 @@ def _register_cluster_cc_star():
 
     @query("dedup_cluster_cc_star", ORACLES["dedup_cluster_cc"])
     def dedup_cluster_cc_star(spark, sf_dir):
-        """The large/small-star CC (Kiveris et al. 2014) on the SAME
-        SimHash pair graph and verdict contract as dedup_cluster_cc —
-        oracle-gated proof that the A/B challenger
-        (functions/clustering.connected_components_star, SCALE.md
-        round-5 A/B) is label-identical to the pointer-jumping default,
-        not just pytest-identical on toy graphs. Same recursive-CTE
-        oracle, same hash."""
-        from uts_spark.functions.clustering import connected_components_star
+        """The pointer-jump fallback of connected_components on the
+        SimHash pair graph and verdict contract of dedup_cluster_cc.
+        No driver scale factor reaches the fallback (it runs above the
+        union-find size cap), so this lane runs
+        functions/clustering._jump_components directly: oracle-gated
+        proof that it is label-identical to the default. Same
+        recursive-CTE oracle, same hash. The name is historical: this
+        lane once ran the large/small-star algorithm, deleted after it
+        lost its A/B (SCALE.md round 5)."""
+        from uts_spark.functions.clustering import _jump_components
 
         docs = table(spark, sf_dir, "documents")
         pairs = simhash_band_pairs(
             docs, "text", "doc_id", bands=4, max_hamming=6
         )
-        comp = connected_components_star(pairs, src="id_a", dst="id_b")
+        comp = _jump_components(
+            pairs, "id_a", "id_b", pairs.count(),
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+        )
         return (
             docs.select(F.col("doc_id").alias("node"))
             .join(comp, "node", "left")
@@ -2268,9 +2269,7 @@ def dedup_semantic_cluster(spark, sf_dir):
     into the CC loop's first checkpoint."""
     e = table(spark, sf_dir, "embeddings")
     pairs = cosine_pairs_blocked(e, threshold=0.4)
-    return cluster_assignment(
-        e.select("vec_id"), pairs, "vec_id", dedupe_edges=False
-    ).select(
+    return cluster_assignment(e.select("vec_id"), pairs, "vec_id").select(
         "vec_id", "cluster_id", "keep"
     )
 
@@ -4315,7 +4314,7 @@ def dedup_minhash_cluster_cc(spark, sf_dir):
         portable=True, checkpoint=True,
     ).select("id_a", "id_b")
     return cluster_assignment(
-        docs.select("doc_id"), pairs, "doc_id", dedupe_edges=False,
+        docs.select("doc_id"), pairs, "doc_id",
         pairs_materialized=True,  # checkpoint=True above — already eager
     ).select("doc_id", "cluster_id", "keep")
 

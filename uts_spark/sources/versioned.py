@@ -3782,7 +3782,8 @@ def _view_minmax_merge(
     and recompute ONLY those groups from the source. ``merged``
     arrives with the counts/sums already folded and the view's old
     extrema carried as ``__old_min_*`` / ``__old_max_*``; the output
-    replaces them with the maintained ``min_*`` / ``max_*`` columns.
+    replaces them with the maintained ``min_*`` / ``max_*`` columns;
+    the ``__overflow`` flag rides through.
     Cost: two group-sized aggregates of the feed, plus one source
     scan aggregating the regressed groups alone — skipped entirely
     (checked on the group-sized frame) when no extremum was hit."""
@@ -3867,7 +3868,9 @@ def _view_minmax_merge(
             if need
             else base,
         )
-    return m2.drop(*[c for c in m2.columns if c.startswith("__")])
+    return m2.drop(
+        *[c for c in m2.columns if c.startswith("__") and c != "__overflow"]
+    )
 
 
 def maintain_agg_view(
@@ -3931,14 +3934,17 @@ def maintain_agg_view(
     variance/stddev, so the full pushdown-aggregate family
     (COUNT/SUM/SUMSQ/MIN/MAX, hence AVG/VAR/STDDEV) maintains
     incrementally. Integer-typed like sums; the squares must fit a
-    long (caller scales first if values exceed ~3e9).
+    long (caller scales first if values exceed ~3e9). A maintained
+    sum or sum of squares that overflows a long is refused with
+    ``ValueError`` and nothing is committed, on seed and on tick,
+    whatever ``spark.sql.ansi.enabled`` says.
 
     ``up_to`` bounds a tick to source version <= ``up_to`` (default:
     current) — the catch-up lever :func:`replicate` has: a view far
     behind a hot table advances in bounded slices instead of one
     history-sized feed, each slice its own atomic commit."""
     from functools import reduce as _reduce
-    from operator import and_ as _and
+    from operator import and_ as _and, or_ as _or
 
     from pyspark.sql import functions as F
 
@@ -3976,18 +3982,32 @@ def maintain_agg_view(
 
     def _agg(df: DataFrame, sign=None) -> DataFrame:
         w = F.lit(1).cast("long") if sign is None else sign
+
+        def v(c: str):
+            return F.col(c).cast("long")
+
+        # try_* arithmetic yields NULL on a long overflow whatever
+        # spark.sql.ansi.enabled says (plain +/* wrap silently with ANSI
+        # off); a NULL term or sum over non-NULL input flags the group
+        terms = [
+            (f"sum_{c}", c, F.try_multiply(w, v(c))) for c in sum_cols
+        ] + [
+            (f"sumsq_{c}", c, F.try_multiply(F.try_multiply(w, v(c)), v(c)))
+            for c in sumsq_cols
+        ]
+        overflow = _reduce(
+            _or,
+            [
+                (F.count(t) < F.count(c))
+                | ((F.count(t) > 0) & F.try_sum(t).isNull())
+                for _, c, t in terms
+            ],
+            F.lit(False),
+        )
         return df.groupBy(*group_cols).agg(
             F.sum(w).alias("n_rows"),
-            *[
-                F.sum(w * F.col(c).cast("long")).alias(f"sum_{c}")
-                for c in sum_cols
-            ],
-            *[
-                F.sum(
-                    w * F.col(c).cast("long") * F.col(c).cast("long")
-                ).alias(f"sumsq_{c}")
-                for c in sumsq_cols
-            ],
+            *[F.try_sum(t).alias(name) for name, _, t in terms],
+            overflow.alias("__overflow"),
             # extrema only on the unsigned (seed / recompute) path —
             # the signed delta cannot express them (hybrid IVM below)
             *(
@@ -3998,23 +4018,43 @@ def maintain_agg_view(
             ),
         )
 
-    dst_versions = list_versions(dst_path)
-    if not dst_versions:
-        src_df = read_version(spark, src_path, src_v)
-        _check_int_types(src_df)
+    def _commit(view: DataFrame, operation: str, cursor: int | None,
+                view_src: str, view_key) -> int:
+        view = view.localCheckpoint(eager=True)  # group-sized
+        min_rows, overflow = view.agg(
+            F.min("n_rows"), F.max("__overflow")
+        ).first()
+        if overflow:
+            raise ValueError(
+                f"aggregate view {dst_path}: a maintained sum or sum of "
+                "squares overflows a long — scale the column down first"
+            )
+        if min_rows is not None and min_rows < 0:
+            raise ValueError(
+                f"aggregate view {dst_path}: a maintained count went "
+                f"NEGATIVE applying the feed {cursor}->{src_v} — the view "
+                "and the source history disagree; reseed the view"
+            )
         return write_snapshot(
-            _agg(src_df), dst_path, operation="view_seed",
+            view.filter(F.col("n_rows") > 0).drop("__overflow"), dst_path,
+            operation=operation,
             meta={
                 "view_cursor": src_v,
-                "view_src": src_path,
+                "view_src": view_src,
                 "view_group": list(group_cols),
                 "view_sums": list(sum_cols),
                 "view_mins": list(min_cols),
                 "view_maxs": list(max_cols),
                 "view_sumsqs": list(sumsq_cols),
-                **({"view_key": key} if key else {}),
+                **({"view_key": view_key} if view_key else {}),
             },
         )
+
+    dst_versions = list_versions(dst_path)
+    if not dst_versions:
+        src_df = read_version(spark, src_path, src_v)
+        _check_int_types(src_df)
+        return _commit(_agg(src_df), "view_seed", None, src_path, key)
     vm = dst_versions[-1]
     if "view_cursor" not in vm:
         raise ValueError(
@@ -4051,6 +4091,12 @@ def maintain_agg_view(
     cond = _reduce(
         _and, [mv[g].eqNullSafe(delta[g]) for g in group_cols]
     )
+    added = {
+        s: F.try_add(
+            F.coalesce(mv[s], F.lit(0)), F.coalesce(delta[s], F.lit(0))
+        )
+        for s in sums + sumsqs
+    }
     merged = mv.join(delta, cond, "full_outer").select(
         *[
             F.coalesce(mv[g], delta[g]).alias(g)
@@ -4060,13 +4106,12 @@ def maintain_agg_view(
             F.coalesce(mv["n_rows"], F.lit(0))
             + F.coalesce(delta["n_rows"], F.lit(0))
         ).alias("n_rows"),
-        *[
-            (
-                F.coalesce(mv[s], F.lit(0))
-                + F.coalesce(delta[s], F.lit(0))
-            ).alias(s)
-            for s in sums + sumsqs
-        ],
+        *[e.alias(s) for s, e in added.items()],
+        _reduce(
+            _or,
+            [e.isNull() for e in added.values()],
+            F.coalesce(delta["__overflow"], F.lit(False)),
+        ).alias("__overflow"),
         *([mv[x].alias(f"__old_{x}") for x in mins + maxs] if mm else []),
     )
     if mm:
@@ -4074,30 +4119,9 @@ def maintain_agg_view(
             spark, merged, feed, src_path, src_v,
             group_cols, min_cols, max_cols,
         )
-    merged = merged.localCheckpoint(eager=True)  # group-sized
-    if merged.filter(F.col("n_rows") < 0).limit(1).count():
-        raise ValueError(
-            f"aggregate view {dst_path}: a maintained count went "
-            "NEGATIVE applying the feed {cursor}->{src_v} — the view "
-            "and the source history disagree; reseed the view"
-        )
-    return write_snapshot(
-        merged.filter(F.col("n_rows") > 0), dst_path,
-        operation="view_advance",
-        meta={
-            "view_cursor": src_v,
-            "view_src": vm.get("view_src", src_path),
-            "view_group": list(group_cols),
-            "view_sums": list(sum_cols),
-            "view_mins": list(min_cols),
-            "view_maxs": list(max_cols),
-            "view_sumsqs": list(sumsq_cols),
-            **(
-                {"view_key": key or vm.get("view_key")}
-                if (key or vm.get("view_key"))
-                else {}
-            ),
-        },
+    return _commit(
+        merged, "view_advance", cursor, vm.get("view_src", src_path),
+        key or vm.get("view_key"),
     )
 
 
