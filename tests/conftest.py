@@ -156,10 +156,22 @@ def _relay(session, item, rec, fallback_msg):
     item.ihook.pytest_runtest_logreport(report=rep)
 
 
+# each shard's driver heap; a shard JVM needs about 1 GiB beyond it
+_SHARD_HEAP_GIB = 6
+
+
+def _default_shards() -> int:
+    """Shards that fit in physical memory: one per (heap + 1 GiB), at
+    most 4 (the host's core count the runner was tuned for), at least
+    1. Four 6 GiB heaps on a 15 GiB host got shards OOM-killed."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return max(1, min(4, mem // ((_SHARD_HEAP_GIB + 1) << 30)))
+
+
 def pytest_runtestloop(session):
     if os.environ.get(_SHARD_ENV) is not None:
         return None  # child process: run normally
-    n = int(os.environ.get("UTS_TEST_SHARDS", "4"))
+    n = int(os.environ.get("UTS_TEST_SHARDS", _default_shards()))
     cfg = session.config
     if (
         n <= 1
@@ -188,9 +200,9 @@ def pytest_runtestloop(session):
             env[_SHARD_ENV] = str(i)
             env[_RESULT_ENV] = os.path.join(tmp, f"res{i}.jsonl")
             env["UTS_SPARK_WAREHOUSE"] = os.path.join(tmp, f"wh{i}")
-            # four concurrent local[4] JVMs: cap each driver heap well
-            # below the parent default so shards coexist comfortably
-            env.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
+            # concurrent local[4] JVMs: cap each driver heap below the
+            # parent default so shards coexist (_default_shards)
+            env.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{_SHARD_HEAP_GIB}g")
             cmd = [sys.executable, "-m", "pytest", "-q", *files]
             maxfail = cfg.getoption("maxfail", 0)
             if maxfail:

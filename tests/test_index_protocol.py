@@ -1,8 +1,9 @@
 """Facade parity: uts_spark.functions.index_protocol must route every
-verb to the same kernels the per-family lanes use, so the SAME inputs
-through either protocol produce IDENTICAL probe results — the property
-that makes the measured default flip (marker -> snapshot, SCALE.md
-round 9c) a pure protocol choice, never a semantics change."""
+verb to the same kernels the per-family lanes use. Vector-family facade
+probes equal independent references (lsh_topk, ivf_topk_det with the
+build-time centroids, a fresh frozen-quantizer build), and the SAME
+inputs through either minhash protocol produce IDENTICAL probe results
+— protocol choice is never a semantics change."""
 
 import os
 import sys
@@ -43,47 +44,49 @@ def _rows(df):
 
 
 def test_default_protocol_is_snapshot():
-    # the measured default (tools/protocol_ab.py, SCALE.md round 9c):
-    # snapshot won or tied every maintenance lane and is the only
-    # protocol safe on object storage / under concurrent writers
+    # the measured default (SCALE.md round 9c): snapshot won or tied
+    # every maintenance lane and is the only protocol safe on object
+    # storage / under concurrent writers
     assert DEFAULT_PROTOCOL == "snapshot"
 
 
 def test_facade_lsh_probe_parity_across_protocols(spark, emb, tmp_path):
+    """The facade's LSH probe equals the recompute lsh_topk at the same
+    (planes, tables) config over the indexed corpus."""
+    from uts_spark.functions.similarity import lsh_topk
+
     dim = _dim(emb)
     anchors = emb.orderBy("vec_id").limit(3)
-    outs = {}
-    for proto in ("marker", "snapshot"):
-        path = str(tmp_path / f"lsh_{proto}")
-        index_build(emb, "lsh", path, protocol=proto, dim=dim)
-        outs[proto] = _rows(
-            index_probe(spark, path, anchors, protocol=proto, k=5)
-        )
-    assert outs["marker"] == outs["snapshot"]
-    assert len(outs["marker"]) > 0
+    path = str(tmp_path / "lsh")
+    index_build(emb, "lsh", path, dim=dim)
+    got = _rows(index_probe(spark, path, anchors, k=5))
+    want = _rows(lsh_topk(emb, anchors, dim, k=5, planes=8, tables=2))
+    assert got == want
+    assert len(got) > 0
 
 
 def test_facade_ivf_full_lifecycle_parity(spark, emb, tmp_path):
-    """build -> append -> delete -> compact -> probe, both protocols,
-    identical survivors (the retirement A/B's correctness side)."""
+    """build -> append -> delete -> compact -> probe through the facade
+    equals the recompute ivf_topk_det over the survivors with the
+    centroids frozen from the build corpus."""
+    from uts_spark.functions.similarity import ivf_topk_det
+
     base = emb.filter(F.col("vec_id") % 4 != 3)
     batch = emb.filter(F.col("vec_id") % 4 == 3)
     dele_ids = emb.filter(F.col("vec_id") % 10 == 0).select("vec_id")
-    dele_vecs = emb.filter(F.col("vec_id") % 10 == 0)
     anchors = emb.orderBy("vec_id").limit(3)
-    outs = {}
-    for proto in ("marker", "snapshot"):
-        path = str(tmp_path / f"ivf_{proto}")
-        index_build(base, "ivf", path, protocol=proto)
-        index_append(batch, path, protocol=proto)
-        deleted = dele_vecs if proto == "marker" else dele_ids
-        index_delete(spark, deleted, path, protocol=proto)
-        index_compact(spark, path, protocol=proto)
-        outs[proto] = _rows(
-            index_probe(spark, path, anchors, protocol=proto, k=5)
-        )
-    assert outs["marker"] == outs["snapshot"]
-    assert len(outs["marker"]) > 0
+    path = str(tmp_path / "ivf")
+    index_build(base, "ivf", path)
+    index_append(batch, path)
+    index_delete(spark, dele_ids, path)
+    index_compact(spark, path)
+    got = _rows(index_probe(spark, path, anchors, k=5))
+    want = _rows(ivf_topk_det(
+        emb.filter(F.col("vec_id") % 10 != 0), anchors,
+        k=5, n_cells=8, n_probe=3, centroid_src=base,
+    ))
+    assert got == want
+    assert len(got) > 0
 
 
 def test_facade_minhash_probe_parity(spark, docs, tmp_path):
@@ -106,37 +109,39 @@ def test_facade_minhash_probe_parity(spark, docs, tmp_path):
 
 
 def test_facade_ivfpq_build_append_probe_parity(spark, emb, tmp_path):
+    """build -> append -> probe through the facade equals a fresh
+    snapshot build over the final corpus with both quantizers frozen
+    from the build corpus."""
+    from uts_spark.functions.vindex import ivfpq_vindex_build, ivfpq_vindex_probe
+
     dim = _dim(emb)
     base = emb.filter(F.col("vec_id") % 5 != 4)
     batch = emb.filter(F.col("vec_id") % 5 == 4)
     anchors = emb.orderBy("vec_id").limit(3)
-    outs = {}
-    for proto in ("marker", "snapshot"):
-        path = str(tmp_path / f"pq_{proto}")
-        index_build(base, "ivfpq", path, protocol=proto, dim=dim)
-        index_append(batch, path, protocol=proto)
-        outs[proto] = _rows(
-            index_probe(spark, path, anchors, protocol=proto, k=5)
-        )
-    assert outs["marker"] == outs["snapshot"]
-    assert len(outs["marker"]) > 0
+    path = str(tmp_path / "pq")
+    index_build(base, "ivfpq", path, dim=dim)
+    index_append(batch, path)
+    got = _rows(index_probe(spark, path, anchors, k=5))
+    ref = str(tmp_path / "pq_ref")
+    ivfpq_vindex_build(emb, ref, dim, centroid_src=base)
+    want = _rows(ivfpq_vindex_probe(spark, ref, anchors, k=5))
+    assert got == want
+    assert len(got) > 0
 
 
 def test_facade_family_resolution_from_manifest(spark, emb, tmp_path):
-    """The facade stamps family+config at build on BOTH protocols, so
-    append/probe never re-state config (a silent mismatch is the
-    classic index-corruption mode the manifests exist to prevent)."""
+    """The facade records family+config at build, so append/probe never
+    re-state config (a silent mismatch is the classic index-corruption
+    mode the manifests exist to prevent)."""
+    from uts_spark.sources.versioned import list_versions
+
     dim = _dim(emb)
     path = str(tmp_path / "lsh_m")
-    index_build(emb, "lsh", path, protocol="marker", dim=dim, planes=4, tables=2)
-    from uts_spark.functions.dedup import index_manifest_read
-
-    m = index_manifest_read(path)
+    index_build(emb, "lsh", path, dim=dim, planes=4, tables=2)
+    m = list_versions(path)[-1]
     assert m["family"] == "lsh" and m["planes"] == 4
     # probe resolves planes=4 from the manifest — no kwargs needed
-    out = index_probe(
-        spark, path, emb.orderBy("vec_id").limit(2), protocol="marker", k=3
-    )
+    out = index_probe(spark, path, emb.orderBy("vec_id").limit(2), k=3)
     assert out.count() > 0
 
 
@@ -199,12 +204,14 @@ def test_facade_service_tick_lsh_and_marker_refusal(spark, emb, tmp_path):
     out = index_service_tick(spark, batch, p_snap, batch_id=0)
     assert out["monitor"] == "none" and out["family"] == "lsh"
 
-    p_marker = str(tmp_path / "lsh_marker")
-    index_build(base, "lsh", p_marker, protocol="marker", dim=dim)
-    with _pytest.raises(ValueError, match="no lsh service tick"):
-        index_service_tick(
-            spark, batch, p_marker, batch_id=0, protocol="marker"
-        )
+    # the vector families have no marker protocol: refused at build,
+    # naming the snapshot default
+    for family in ("lsh", "ivf", "ivfpq"):
+        with _pytest.raises(ValueError, match="no marker protocol.*'snapshot'"):
+            index_build(
+                base, family, str(tmp_path / f"{family}_marker"),
+                protocol="marker", dim=dim,
+            )
 
 
 def test_facade_erase_everywhere(spark, emb, docs, tmp_path):
@@ -248,35 +255,28 @@ def test_facade_erase_everywhere(spark, emb, docs, tmp_path):
 def test_facade_erase_everywhere_mixed_protocols_custom_id(
     spark, emb, docs, tmp_path
 ):
-    """VERDICT r9 #1: one facade call reaches BOTH protocols — a
-    snapshot IVF built with a CUSTOM id column (the audit resolves it
-    from the manifest, never a hardcoded 'vec_id'), a marker LSH and a
-    marker minhash (dispatched through the family delete verbs with
-    the deleted rows' content) — and the self-audit is PRUNED: the
-    snapshot entries probe only the rewritten dirs and fold rows_after
-    from manifest arithmetic."""
+    """VERDICT r9 #1: one facade call reaches BOTH protocols — snapshot
+    IVF and LSH indexes built with a CUSTOM id column (the audit
+    resolves it from each manifest, never a hardcoded 'vec_id') and a
+    marker minhash (dispatched through its delete verb with the deleted
+    rows' content) — and the self-audit is PRUNED: the snapshot
+    entries probe only the rewritten dirs and fold rows_after from
+    manifest arithmetic."""
     from uts_spark.functions.index_protocol import erase_everywhere
-    from uts_spark.functions.vindex import ivf_vindex_build
+    from uts_spark.functions.vindex import ivf_vindex_build, lsh_vindex_build
 
     dim = _dim(emb)
     emb_c = emb.withColumnRenamed("vec_id", "item_id")
     dele_ids = emb_c.filter(F.col("item_id") % 7 == 3).select("item_id")
-    dele_rows = emb_c.filter(F.col("item_id") % 7 == 3)
 
     p_ivf = str(tmp_path / "ivf_custom")
     ivf_vindex_build(emb_c, p_ivf, id_col="item_id", fingerprint="f0")
-
-    p_lshm = str(tmp_path / "lsh_marker")
-    index_build(
-        emb_c, "lsh", p_lshm, protocol="marker", dim=dim, id_col="item_id"
-    )
+    p_lsh = str(tmp_path / "lsh_custom")
+    lsh_vindex_build(emb_c, p_lsh, dim, id_col="item_id", fingerprint="f0")
 
     n = emb_c.count()
     n_del = dele_ids.count()
-    acct = erase_everywhere(
-        spark, dele_ids, [p_ivf, p_lshm], fingerprint="gdpr",
-        deleted_rows=dele_rows,
-    )
+    acct = erase_everywhere(spark, dele_ids, [p_ivf, p_lsh], fingerprint="gdpr")
     by_target = {a["target"]: a for a in acct}
     assert all(a["leaked"] == 0 for a in acct), acct
     snap = by_target[p_ivf]
@@ -285,9 +285,9 @@ def test_facade_erase_everywhere_mixed_protocols_custom_id(
     assert snap["rows_removed"] == n_del
     # pruned audit: the only auditable dir is the rewrite's kept delta
     assert snap["audited_dirs"] <= 1
-    mark = by_target[p_lshm]
-    assert mark["protocol"] == "marker"
-    assert mark["rows_removed"] > 0 and mark["version"] is None
+    lsh = by_target[p_lsh]
+    assert lsh["protocol"] == "snapshot" and lsh["family"] == "lsh"
+    assert lsh["rows_removed"] == 2 * n_del  # one row per (vector, table)
 
     # marker MINHASH route: text-content relocation, same facade call
     p_mh = str(tmp_path / "mh_marker")

@@ -783,16 +783,15 @@ def test_ivf_index_probe_matches_recompute(spark, sf_dir):
 
 def test_lsh_index_probe_empty_anchors_returns_empty(spark, sf_dir, tmp_path):
     """An empty anchor set must return an empty frame, not a
-    functools.reduce TypeError (ADVICE r5): the partition filter is
+    functools.reduce TypeError (ADVICE r5): the bucket filter is
     seeded with lit(False)."""
-    from uts_spark.functions.similarity import lsh_index_probe, lsh_index_write
+    from uts_spark.functions.vindex import lsh_vindex_build, lsh_vindex_probe
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50)
     path = str(tmp_path / "lsh_idx")
-    lsh_index_write(e, path, dim=64, planes=4, tables=2)
+    lsh_vindex_build(e, path, dim=64, planes=4, tables=2)
     empty = e.filter(F.col("vec_id") < 0)
-    out = lsh_index_probe(spark, path, empty, dim=64, k=5, planes=4, tables=2)
-    assert out.count() == 0
+    assert lsh_vindex_probe(spark, path, empty, k=5).count() == 0
 
 
 def test_pq_adc_rejects_non_divisible_dim(spark, sf_dir):
@@ -942,13 +941,13 @@ def test_ivf_append_equals_frozen_centroid_rebuild(spark, sf_dir, tmp_path):
     """Probe-after-append == probe of a FULL REBUILD that froze the
     same base centroids: appending never changes where a vector would
     have landed, it only skips re-sketching the base (VERDICT r6 #8).
-    Also pins that both probes read the persisted _centroids table
-    (emb_for_centroids=None)."""
-    from uts_spark.functions.similarity import (
-        ivf_index_append,
-        ivf_index_probe,
-        ivf_index_write,
+    Both probes resolve their centroids from the manifest sidecar."""
+    from uts_spark.functions.vindex import (
+        ivf_vindex_append,
+        ivf_vindex_build,
+        ivf_vindex_probe,
     )
+    from uts_spark.sources.versioned import read_version
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = e.filter(F.col("vec_id") % 10 != 7)
@@ -956,21 +955,21 @@ def test_ivf_append_equals_frozen_centroid_rebuild(spark, sf_dir, tmp_path):
     anchors = e.filter(F.col("vec_id") < 5)
 
     p_app = str(tmp_path / "app")
-    ivf_index_write(base, p_app, n_cells=8)
-    ivf_index_append(spark, batch, p_app)
+    ivf_vindex_build(base, p_app, n_cells=8)
+    ivf_vindex_append(batch, p_app)
 
     p_re = str(tmp_path / "re")
-    ivf_index_write(e, p_re, n_cells=8, centroid_src=base)
+    ivf_vindex_build(e, p_re, n_cells=8, centroid_src=base)
 
     key = lambda df: {  # noqa: E731
         (r["anchor_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
         for r in df.collect()
     }
-    got = key(ivf_index_probe(spark, p_app, anchors, None, k=10, n_probe=3))
-    want = key(ivf_index_probe(spark, p_re, anchors, None, k=10, n_probe=3))
+    got = key(ivf_vindex_probe(spark, p_app, anchors, k=10, n_probe=3))
+    want = key(ivf_vindex_probe(spark, p_re, anchors, k=10, n_probe=3))
     assert got == want and got
     # and the appended index actually contains the batch rows
-    idx = spark.read.parquet(p_app)
+    idx = read_version(spark, p_app)
     assert idx.count() == e.count()
     assert idx.filter(F.col("vec_id") % 10 == 7).count() == batch.count()
 
@@ -1037,21 +1036,19 @@ def test_lsh_append_equals_rebuild(spark, sf_dir, tmp_path):
     seed-derived, so the appended index's row multiset matches a fresh
     build over the grown corpus exactly."""
     import uts_spark.registry  # noqa: F401  (registry first: import trap)
-    from uts_spark.functions.similarity import (
-        lsh_index_append,
-        lsh_index_write,
-    )
+    from uts_spark.functions.vindex import lsh_vindex_append, lsh_vindex_build
     from uts_spark.queries.llm_ops import EMB_DIM
+    from uts_spark.sources.versioned import read_version
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = e.filter(F.col("vec_id") % 10 != 7)
     batch = e.filter(F.col("vec_id") % 10 == 7)
     p_app, p_re = str(tmp_path / "a"), str(tmp_path / "r")
-    lsh_index_write(base, p_app, dim=EMB_DIM, planes=8, tables=2)
-    lsh_index_append(batch, p_app, dim=EMB_DIM, planes=8, tables=2)
-    lsh_index_write(e, p_re, dim=EMB_DIM, planes=8, tables=2)
-    a = spark.read.parquet(p_app).drop("embedding")
-    r = spark.read.parquet(p_re).drop("embedding")
+    lsh_vindex_build(base, p_app, dim=EMB_DIM, planes=8, tables=2)
+    lsh_vindex_append(batch, p_app, dim=EMB_DIM, planes=8, tables=2)
+    lsh_vindex_build(e, p_re, dim=EMB_DIM, planes=8, tables=2)
+    a = read_version(spark, p_app).drop("embedding")
+    r = read_version(spark, p_re).drop("embedding")
     assert a.count() == r.count() and a.exceptAll(r).isEmpty()
 
 
@@ -1060,21 +1057,22 @@ def test_ivfpq_append_equals_frozen_quantizer_rebuild(spark, sf_dir, tmp_path):
     cells AND code arrays of appended vectors match what a rebuild
     (coarse centroids + PQ codebook both frozen from base) assigns."""
     import uts_spark.registry  # noqa: F401  (registry first: import trap)
-    from uts_spark.functions.similarity import (
-        ivfpq_index_append,
-        ivfpq_index_write,
+    from uts_spark.functions.vindex import (
+        ivfpq_vindex_append,
+        ivfpq_vindex_build,
     )
     from uts_spark.queries.llm_ops import EMB_DIM
+    from uts_spark.sources.versioned import read_version
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = e.filter(F.col("vec_id") % 10 != 7)
     batch = e.filter(F.col("vec_id") % 10 == 7)
     p_app, p_re = str(tmp_path / "a"), str(tmp_path / "r")
-    ivfpq_index_write(base, p_app, dim=EMB_DIM, n_cells=8)
-    ivfpq_index_append(spark, batch, p_app, dim=EMB_DIM)
-    ivfpq_index_write(e, p_re, dim=EMB_DIM, n_cells=8, centroid_src=base)
-    a = spark.read.parquet(p_app).select("vec_id", "cell", "codes")
-    r = spark.read.parquet(p_re).select("vec_id", "cell", "codes")
+    ivfpq_vindex_build(base, p_app, dim=EMB_DIM, n_cells=8)
+    ivfpq_vindex_append(batch, p_app)
+    ivfpq_vindex_build(e, p_re, dim=EMB_DIM, n_cells=8, centroid_src=base)
+    a = read_version(spark, p_app).select("vec_id", "cell", "codes")
+    r = read_version(spark, p_re).select("vec_id", "cell", "codes")
     assert a.count() == r.count() == e.count()
     assert a.exceptAll(r).isEmpty()
 
@@ -1332,9 +1330,9 @@ def test_vector_index_delete_probes_erase_physically_and_idempotent(
 ):
     """VERDICT r7 #1: the three vector-index erasure lanes must (a)
     return no deleted vector in any neighbor list, (b) be idempotent
-    on re-run (manifest chain), and (c) have PHYSICALLY removed the
-    erased ids from the persisted index — the GDPR point is the bytes,
-    not the query result."""
+    on re-run (manifest fingerprint chain), and (c) have PHYSICALLY
+    removed the erased ids from the current snapshot's index rows —
+    the GDPR point is the bytes, not the query result."""
     import uts_spark.registry as reg  # registry first: import trap
     from uts_spark.queries.llm_ops import (
         _IVF_APP_MOD,
@@ -1342,6 +1340,7 @@ def test_vector_index_delete_probes_erase_physically_and_idempotent(
         _emb_frame_fingerprint,
         ivf_index_path,
     )
+    from uts_spark.sources.versioned import read_version
 
     for name in (
         "similarity_ann_lsh_delete_probe",
@@ -1358,12 +1357,12 @@ def test_vector_index_delete_probes_erase_physically_and_idempotent(
         )
         assert again == rows, f"{name}: delete tick not idempotent"
 
-    # physical erasure, pinned on the IVF family: the index parquet
-    # holds zero rem-7 rows after the delete tick
+    # physical erasure, pinned on the IVF family: the current
+    # snapshot's dirs hold zero rem-7 rows after the delete tick
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     fp_full = _emb_frame_fingerprint(e)
     path = ivf_index_path(sf_dir, fp_full, n_cells=8) + "_ivfdel"
-    idx = spark.read.parquet(path)
+    idx = read_version(spark, path)
     left = idx.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM).count()
     assert left == 0, f"{left} erased rows physically survive in {path}"
     # and the erasure did not over-delete: every surviving vector is
@@ -1377,11 +1376,13 @@ def test_ivf_index_fit_monitors_drift_against_frozen_centroids(
     spark, tmp_path
 ):
     """VERDICT r7 #4: the service-side drift monitor. Build an IVF
-    index over the base corpus, then score an UNDRIFTED batch and a
-    DRIFTED batch (dyadic component shift) against the index's frozen
-    centroids via ivf_index_fit: the drifted batch must fit strictly
-    worse, and the measured 0.82-ratio policy must flag it exactly as
-    the registered monitor query does.
+    index over the base corpus, then append an UNDRIFTED batch and a
+    DRIFTED batch (dyadic component shift) with ``record_fit``: each
+    append commits its batch's fit ints against the frozen centroids
+    on its manifest. The drifted batch must fit strictly worse than
+    the undrifted one, and the measured 0.82-ratio policy against the
+    build's ``fit_ref`` must flag it exactly as the registered monitor
+    query does.
 
     Pinned at sf0.01 — the corpus the SCALE.md drift table and the
     0.82 threshold were measured on. (Fit under drift is a property of
@@ -1390,27 +1391,34 @@ def test_ivf_index_fit_monitors_drift_against_frozen_centroids(
     rises — which is correct monitor behavior: data that lands near an
     existing centroid is still well represented.)"""
     import uts_spark.registry  # noqa: F401  registry first: import trap
-    from uts_spark.functions.similarity import ivf_index_fit, ivf_index_write
+    from uts_spark.functions.vindex import ivf_vindex_append, ivf_vindex_build
     from uts_spark.queries.llm_ops import (
         _DRIFT_RECLUSTER_MILLI,
         _IVF_APP_MOD,
         _IVF_APP_REM,
         _drift_frames,
     )
+    from uts_spark.sources.versioned import list_versions
 
     sf01 = "/root/testdata/sf0.01"
     e = spark.read.parquet(f"{sf01}/embeddings.parquet")
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
     path = str(tmp_path / "ivf_fit_idx")
-    ivf_index_write(base, path, n_cells=8)
+    ivf_vindex_build(base, path, n_cells=8)
 
     batch_same = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
     _, corpus_drifted = _drift_frames(e, 0.5)
     batch_drifted = corpus_drifted.filter(F.col("vec_id") >= 1_000_000)
 
-    base_fit = ivf_index_fit(spark, base, path)
-    fit_same = ivf_index_fit(spark, batch_same, path)
-    fit_drifted = ivf_index_fit(spark, batch_drifted, path)
+    def mean_fit(batch):
+        ivf_vindex_append(batch, path, record_fit=True)
+        m = list_versions(path)[-1]
+        return m["fit_sum"] / m["fit_n"]
+
+    ref_sum, ref_n = list_versions(path)[-1]["fit_ref"]
+    base_fit = ref_sum / ref_n
+    fit_same = mean_fit(batch_same)
+    fit_drifted = mean_fit(batch_drifted)
 
     assert fit_drifted < fit_same, (fit_drifted, fit_same)
     thr = base_fit * _DRIFT_RECLUSTER_MILLI / 1000.0
@@ -1437,22 +1445,19 @@ def test_append_drift_eval_frozen_loses_recall_at_moderate_drift(spark):
 
 def test_ivf_index_recluster_restores_fresh_quantizer(spark, tmp_path):
     """The drift policy's corrective verb: build over base, append a
-    drifted batch (frozen centroids), then RECLUSTER — the rebuilt
+    drifted batch (frozen centroids), then RECLUSTER — the rewritten
     index must probe exactly like a fresh build over the full corpus
-    (fresh centroids), and the centroid sidecar must have been
-    re-derived (it may now include appended vectors)."""
+    (fresh centroids), with a new centroid sidecar and the drift
+    reference reset to the re-clustered corpus fit."""
     import uts_spark.registry  # noqa: F401  registry first: import trap
-    from uts_spark.functions.similarity import (
-        ivf_index_append,
-        ivf_index_probe,
-        ivf_index_recluster,
-        ivf_index_write,
+    from uts_spark.functions.vindex import (
+        ivf_vindex_append,
+        ivf_vindex_build,
+        ivf_vindex_probe,
+        ivf_vindex_recluster,
     )
-    from uts_spark.queries.llm_ops import (
-        _IVF_APP_MOD,
-        _IVF_APP_REM,
-        _drift_frames,
-    )
+    from uts_spark.queries.llm_ops import _drift_frames
+    from uts_spark.sources.versioned import list_versions
 
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     base, corpus = _drift_frames(e, 0.5)
@@ -1461,26 +1466,22 @@ def test_ivf_index_recluster_restores_fresh_quantizer(spark, tmp_path):
 
     # appended index (frozen base centroids), then recluster
     idx = str(tmp_path / "idx")
-    ivf_index_write(base, idx, n_cells=8)
-    ivf_index_append(spark, batch, idx)
-    fit_after = ivf_index_recluster(spark, corpus, idx, n_cells=8)
-    assert fit_after == fit_after  # a real number came back
+    ivf_vindex_build(base, idx, n_cells=8)
+    ivf_vindex_append(batch, idx)
+    before = list_versions(idx)[-1]
+    ivf_vindex_recluster(spark, idx)
+    after = list_versions(idx)[-1]
+    assert after["operation"] == "recluster"
+    assert after["centroids_dir"] != before["centroids_dir"]
+    assert after["fit_ref"][1] == corpus.count()
 
     # reference: fresh one-shot build over the same corpus
     ref = str(tmp_path / "ref")
-    ivf_index_write(corpus, ref, n_cells=8)
+    ivf_vindex_build(corpus, ref, n_cells=8)
 
-    got = sorted(
-        map(tuple, ivf_index_probe(spark, idx, anchors, None, k=10).collect())
-    )
-    want = sorted(
-        map(tuple, ivf_index_probe(spark, ref, anchors, None, k=10).collect())
-    )
+    got = sorted(map(tuple, ivf_vindex_probe(spark, idx, anchors).collect()))
+    want = sorted(map(tuple, ivf_vindex_probe(spark, ref, anchors).collect()))
     assert got == want, "recluster must equal a fresh full-corpus build"
-    import os
-
-    assert not os.path.exists(idx + "__recluster_tmp")
-    assert not os.path.exists(idx + "__old")
 
 
 def test_quality_model_refit_gate_is_deterministic_and_strict():
@@ -1600,137 +1601,117 @@ def test_index_version_pinned_reads_and_reset_semantics(spark, tmp_path):
 
 
 def test_ivf_append_idempotent_replay_converges(spark, tmp_path):
-    """The ANN sibling of the dedup exactly-once append (shared
-    staged-publish kernel): a replayed batch id converges to the same
-    physical index as a single plain append — no duplicated vectors,
-    batch-keyed file names."""
-    import glob
-    import os
-
-    from uts_spark.functions.similarity import (
-        ivf_index_append,
-        ivf_index_append_idempotent,
-        ivf_index_write,
-    )
+    """Exactly-once vector append: a replayed batch id converges to
+    the same index as a single plain append — the replay finds its
+    batch key on a committed manifest and commits nothing."""
+    from uts_spark.functions.vindex import ivf_vindex_append, ivf_vindex_build
+    from uts_spark.sources.versioned import list_versions, read_version
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     base = e.filter(F.col("vec_id") % 10 != 7)
     batch = e.filter(F.col("vec_id") % 10 == 7)
 
     p_plain, p_idem = str(tmp_path / "p"), str(tmp_path / "i")
-    ivf_index_write(base, p_plain, n_cells=8)
-    ivf_index_write(base, p_idem, n_cells=8)
-    ivf_index_append(spark, batch, p_plain)
-    ivf_index_append_idempotent(spark, batch, p_idem, 0)
-    ivf_index_append_idempotent(spark, batch, p_idem, 0)  # replay
+    ivf_vindex_build(base, p_plain, n_cells=8)
+    ivf_vindex_build(base, p_idem, n_cells=8)
+    ivf_vindex_append(batch, p_plain)
+    v = ivf_vindex_append(batch, p_idem, batch_id=0)
+    assert ivf_vindex_append(batch, p_idem, batch_id=0) == v  # replay
 
     cols = ["vec_id", "cell"]
-    a = sorted(map(tuple, spark.read.parquet(p_plain).select(*cols).collect()))
-    b = sorted(map(tuple, spark.read.parquet(p_idem).select(*cols).collect()))
+    a = sorted(map(tuple, read_version(spark, p_plain).select(*cols).collect()))
+    b = sorted(map(tuple, read_version(spark, p_idem).select(*cols).collect()))
     assert a == b, "replayed idempotent append diverged from plain append"
-    pub = glob.glob(os.path.join(p_idem, "cell=*", "b0-*.parquet"))
-    assert pub, "batch-keyed publish names missing"
-    assert not os.path.exists(os.path.join(p_idem, "_staging", "b0"))
+    ms = list_versions(p_idem)
+    assert [m["version"] for m in ms] == [0, 1]
+    assert ms[-1]["batch_key"].endswith("b0")
 
 
 def test_lsh_ivfpq_exactly_once_and_version_pins(spark, tmp_path):
-    """Round 8 completes the service matrix across all four persisted
-    families: LSH and IVF-PQ get the same batch-id-keyed exactly-once
-    append (replay converges to the plain append's rows) and — for
-    LSH — version-pinned probes (v0 hides the appended tick; a delete
-    resets the history so older pins raise)."""
-    import os
-
-    import pytest
+    """The service matrix across the persisted vector families: LSH
+    and IVF-PQ get the same batch-id-keyed exactly-once append (replay
+    converges to the plain append's rows) and — for LSH —
+    version-pinned probes (v0 hides the appended tick; a delete is a
+    new version, and pins before it still read their own rows until
+    vacuum)."""
     import uts_spark.registry  # noqa: F401  registry first: import trap
-    from uts_spark.functions.dedup import (
-        index_files_at,
-        index_history_versions,
-    )
-    from uts_spark.functions.similarity import (
-        ivfpq_index_append,
-        ivfpq_index_append_idempotent,
-        ivfpq_index_write,
-        lsh_index_append,
-        lsh_index_append_idempotent,
-        lsh_index_delete,
-        lsh_index_probe,
-        lsh_index_write,
+    from uts_spark.functions.vindex import (
+        ivfpq_vindex_append,
+        ivfpq_vindex_build,
+        lsh_vindex_append,
+        lsh_vindex_build,
+        lsh_vindex_delete,
+        lsh_vindex_probe,
     )
     from uts_spark.queries.llm_ops import EMB_DIM
+    from uts_spark.sources.versioned import list_versions, read_version
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     base = e.filter(F.col("vec_id") % 10 != 7)
     batch = e.filter(F.col("vec_id") % 10 == 7)
     anchors = e.filter(F.col("vec_id") < 3)
+    cfg = dict(dim=EMB_DIM, planes=4, tables=2)
+
+    def rows(path, cols):
+        return sorted(
+            map(tuple, read_version(spark, path).select(*cols).collect())
+        )
 
     # --- LSH: exactly-once + version pins ---
     lp, li = str(tmp_path / "lp"), str(tmp_path / "li")
-    lsh_index_write(base, lp, dim=EMB_DIM, planes=4, tables=2)
-    lsh_index_write(base, li, dim=EMB_DIM, planes=4, tables=2)
-    lsh_index_append(batch, lp, dim=EMB_DIM, planes=4, tables=2)
-    lsh_index_append_idempotent(batch, li, EMB_DIM, 0, planes=4, tables=2)
-    lsh_index_append_idempotent(batch, li, EMB_DIM, 0, planes=4, tables=2)
+    lsh_vindex_build(base, lp, **cfg)
+    lsh_vindex_build(base, li, **cfg)
+    lsh_vindex_append(batch, lp, **cfg)
+    lsh_vindex_append(batch, li, batch_id=0, **cfg)
+    lsh_vindex_append(batch, li, batch_id=0, **cfg)
     cols = ["vec_id", "table", "bucket"]
-    a = sorted(map(tuple, spark.read.parquet(lp).select(*cols).collect()))
-    b = sorted(map(tuple, spark.read.parquet(li).select(*cols).collect()))
-    assert a == b, "LSH replayed idempotent append diverged"
-    assert [r["version"] for r in index_history_versions(li)] == [0, 1]
+    assert rows(lp, cols) == rows(li, cols), "LSH replayed append diverged"
+    assert [m["version"] for m in list_versions(li)] == [0, 1]
 
     def lprobe(path, **kw):
         return sorted(
-            map(
-                tuple,
-                lsh_index_probe(
-                    spark, path, anchors, dim=EMB_DIM, k=5,
-                    planes=4, tables=2, **kw,
-                ).collect(),
-            )
+            map(tuple, lsh_vindex_probe(spark, path, anchors, k=5, **kw).collect())
         )
 
     ref = str(tmp_path / "lref")
-    lsh_index_write(base, ref, dim=EMB_DIM, planes=4, tables=2)
+    lsh_vindex_build(base, ref, **cfg)
     assert lprobe(li, version=0) == lprobe(ref), "v0 pin must hide the tick"
-    assert lprobe(li, version=1) == lprobe(li)
+    before_delete = lprobe(li)
+    assert lprobe(li, version=1) == before_delete
 
-    lsh_index_delete(spark, batch, li, dim=EMB_DIM, planes=4, tables=2)
-    assert index_history_versions(li)[-1]["reset"]
-    with pytest.raises(ValueError, match="predates the rewrite"):
-        index_files_at(li, 1)
+    lsh_vindex_delete(spark, batch.select("vec_id"), li)
+    assert list_versions(li)[-1]["operation"] == "delete"
+    assert lprobe(li) == lprobe(ref)
+    assert lprobe(li, version=1) == before_delete
 
     # --- IVF-PQ: exactly-once append replay converges ---
     pp, pi = str(tmp_path / "pp"), str(tmp_path / "pi")
-    ivfpq_index_write(base, pp, dim=EMB_DIM, n_cells=8)
-    ivfpq_index_write(base, pi, dim=EMB_DIM, n_cells=8)
-    ivfpq_index_append(spark, batch, pp, dim=EMB_DIM)
-    ivfpq_index_append_idempotent(spark, batch, pi, EMB_DIM, 0)
-    ivfpq_index_append_idempotent(spark, batch, pi, EMB_DIM, 0)
+    ivfpq_vindex_build(base, pp, dim=EMB_DIM, n_cells=8)
+    ivfpq_vindex_build(base, pi, dim=EMB_DIM, n_cells=8)
+    ivfpq_vindex_append(batch, pp)
+    ivfpq_vindex_append(batch, pi, batch_id=0)
+    ivfpq_vindex_append(batch, pi, batch_id=0)
     cols = ["vec_id", "cell", "codes"]
-    a = sorted(map(tuple, spark.read.parquet(pp).select(*cols).collect()))
-    b = sorted(map(tuple, spark.read.parquet(pi).select(*cols).collect()))
-    assert a == b, "IVF-PQ replayed idempotent append diverged"
-    assert [r["version"] for r in index_history_versions(pi)] == [0, 1]
-    assert not os.path.exists(os.path.join(pi, "_staging", "b0"))
+    assert rows(pp, cols) == rows(pi, cols), "IVF-PQ replayed append diverged"
+    assert [m["version"] for m in list_versions(pi)] == [0, 1]
 
 
 def test_ivfpq_recluster_refreshes_both_quantizers(spark, tmp_path):
     """The IVF-PQ corrective verb: after appending a drifted batch
-    against frozen quantizers, recluster rebuilds with fresh centroids
+    against frozen quantizers, recluster rewrites with fresh centroids
     AND a fresh codebook — probe equals a fresh one-shot build over
-    the grown corpus, and the post-rebuild corpus distortion (the new
-    monitor reference) is finite and below the drifted batch's
-    distortion against the OLD codebook."""
-    import os
-
+    the grown corpus, and the post-recluster corpus distortion (the new
+    monitor reference) is below the drifted batch's distortion against
+    the OLD codebook."""
     import uts_spark.registry  # noqa: F401  registry first: import trap
-    from uts_spark.functions.similarity import (
-        ivfpq_index_append,
-        ivfpq_index_distortion,
-        ivfpq_index_probe,
-        ivfpq_index_recluster,
-        ivfpq_index_write,
+    from uts_spark.functions.vindex import (
+        ivfpq_vindex_append,
+        ivfpq_vindex_build,
+        ivfpq_vindex_probe,
+        ivfpq_vindex_recluster,
     )
     from uts_spark.queries.llm_ops import EMB_DIM, _drift_frames
+    from uts_spark.sources.versioned import list_versions
 
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     base, corpus = _drift_frames(e, 0.5)
@@ -1738,22 +1719,23 @@ def test_ivfpq_recluster_refreshes_both_quantizers(spark, tmp_path):
     anchors = corpus.filter(F.col("vec_id") < 5)
 
     idx = str(tmp_path / "idx")
-    ivfpq_index_write(base, idx, dim=EMB_DIM, n_cells=8)
-    ivfpq_index_append(spark, batch, idx, dim=EMB_DIM)
-    drifted_dist = ivfpq_index_distortion(spark, batch, idx, dim=EMB_DIM)
+    ivfpq_vindex_build(base, idx, dim=EMB_DIM, n_cells=8)
+    ivfpq_vindex_append(batch, idx, record_dist=True)
+    before = list_versions(idx)[-1]
+    drifted_dist = before["dist_sum"] / before["dist_n"]
 
-    new_ref = ivfpq_index_recluster(spark, corpus, idx, dim=EMB_DIM)
-    assert new_ref == new_ref and new_ref < drifted_dist
+    ivfpq_vindex_recluster(spark, idx)
+    after = list_versions(idx)[-1]
+    assert after["centroids_dir"] != before["centroids_dir"]
+    assert after["codebook_dir"] != before["codebook_dir"]
+    new_sum, new_n = after["dist_ref"]
+    assert new_n == corpus.count() and new_sum / new_n < drifted_dist
 
     ref = str(tmp_path / "ref")
-    ivfpq_index_write(corpus, ref, dim=EMB_DIM, n_cells=8)
-    got = sorted(map(tuple, ivfpq_index_probe(
-        spark, idx, anchors, None, dim=EMB_DIM, k=10).collect()))
-    want = sorted(map(tuple, ivfpq_index_probe(
-        spark, ref, anchors, None, dim=EMB_DIM, k=10).collect()))
+    ivfpq_vindex_build(corpus, ref, dim=EMB_DIM, n_cells=8)
+    got = sorted(map(tuple, ivfpq_vindex_probe(spark, idx, anchors).collect()))
+    want = sorted(map(tuple, ivfpq_vindex_probe(spark, ref, anchors).collect()))
     assert got == want, "recluster must equal a fresh full-corpus build"
-    assert not os.path.exists(idx + "__recluster_tmp")
-    assert not os.path.exists(idx + "__old")
 
 
 def test_facility_location_gains_monotone_and_distinct(spark):
@@ -1925,21 +1907,18 @@ def test_batch_id_reuse_after_reset_is_epoch_keyed(spark, tmp_path):
 
 
 def test_ivf_recluster_carries_version_history(spark, tmp_path):
-    """ADVICE r8 (medium): re-cluster rebuilds the index from scratch,
-    but the version chain must CONTINUE — a reader holding a
-    pre-recluster pin (including version 0) gets the designed
-    'predates the rewrite' error instead of silently resolving onto
-    the rebuilt files, and the rebuild occupies max(version)+1."""
-    from uts_spark.functions.dedup import (
-        index_files_at,
-        index_history_versions,
+    """ADVICE r8 (medium): re-cluster must CONTINUE the version chain
+    — the recluster is the next version, and a reader holding a
+    pre-recluster pin (including version 0) still reads that version's
+    rows with that version's centroids instead of silently resolving
+    onto the rewritten index."""
+    from uts_spark.functions.vindex import (
+        ivf_vindex_append,
+        ivf_vindex_build,
+        ivf_vindex_probe,
+        ivf_vindex_recluster,
     )
-    from uts_spark.functions.similarity import (
-        ivf_index_append_idempotent,
-        ivf_index_probe,
-        ivf_index_recluster,
-        ivf_index_write,
-    )
+    from uts_spark.sources.versioned import list_versions
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     base = e.filter(F.col("vec_id") % 10 != 7)
@@ -1947,28 +1926,21 @@ def test_ivf_recluster_carries_version_history(spark, tmp_path):
     anchors = e.filter(F.col("vec_id") < 3)
 
     idx = str(tmp_path / "ivf")
-    ivf_index_write(base, idx, n_cells=8)
-    ivf_index_append_idempotent(spark, batch, idx, 0)
-    assert [r["version"] for r in index_history_versions(idx)] == [0, 1]
-
-    ivf_index_recluster(spark, e, idx, n_cells=8)
-    recs = index_history_versions(idx)
-    assert [r["version"] for r in recs] == [0, 1, 2]
-    assert recs[-1]["reset"] and recs[-1].get("recluster") is True
-    for v in (0, 1):
-        with pytest.raises(ValueError, match="predates the rewrite"):
-            index_files_at(idx, v)
+    ivf_vindex_build(base, idx, n_cells=8)
+    ivf_vindex_append(batch, idx, batch_id=0)
 
     def probe(**kw):
         return sorted(
-            map(
-                tuple,
-                ivf_index_probe(
-                    spark, idx, anchors, k=5, n_cells=8, **kw
-                ).collect(),
-            )
+            map(tuple, ivf_vindex_probe(spark, idx, anchors, k=5, **kw).collect())
         )
 
+    pins = {v: probe(version=v) for v in (0, 1)}
+    ivf_vindex_recluster(spark, idx)
+    ms = list_versions(idx)
+    assert [m["version"] for m in ms] == [0, 1, 2]
+    assert ms[-1]["operation"] == "recluster"
+    for v in (0, 1):
+        assert probe(version=v) == pins[v], f"pin {v} moved"
     assert probe(version=2) == probe(), "post-recluster pin must match"
 
 
@@ -2062,22 +2034,16 @@ def test_index_history_vacuum_bounds_sidecar(spark, tmp_path):
 
 def test_drift_control_loop_closed(spark, tmp_path):
     """VERDICT r8 #3: the ingest tick measures, records, and ACTS.
-    (a) an in-distribution batch records its fit ints on the history
-    line and does not recluster; (b) a drifted batch trips the 0.82
-    flag, the recluster runs, the history carries forward with a
-    reset (stale pins raise), and the fit reference refreshes to the
-    post-recluster corpus fit."""
-    from uts_spark.functions.dedup import (
-        index_files_at,
-        index_history_versions,
+    (a) an in-distribution batch commits its fit ints on its manifest
+    and does not recluster; (b) a drifted batch trips the 0.82 flag,
+    the recluster runs as the next version, and the fit reference
+    refreshes to the post-recluster corpus fit; (c) the loop keeps
+    serving against the refreshed quantizer."""
+    from uts_spark.functions.vindex import (
+        ivf_vindex_build,
+        ivf_vindex_ingest_tick,
     )
-    from uts_spark.functions.similarity import (
-        ivf_fit_ref_read,
-        ivf_fit_ref_write,
-        ivf_index_fit_ints,
-        ivf_index_ingest_tick,
-        ivf_index_write,
-    )
+    from uts_spark.sources.versioned import list_versions
 
     def dvec_rows(ids, center_of):
         rows = []
@@ -2097,40 +2063,37 @@ def test_drift_control_loop_closed(spark, tmp_path):
         "vec_id long, embedding array<double>",
     )
     idx = str(tmp_path / "ivf")
-    ivf_index_write(base, idx, n_cells=8, centroid_src=centers)
-    s, n = ivf_index_fit_ints(spark, base, idx)
-    ivf_fit_ref_write(idx, s, n)
+    ivf_vindex_build(base, idx, n_cells=8, centroid_src=centers)
+    s, n = list_versions(idx)[-1]["fit_ref"]
+    assert n == 100
 
     # (a) in-distribution batch: stat recorded, NO corrective action
     good = spark.createDataFrame(
         dvec_rows(range(1000, 1020), lambda i: i % 8),
         "vec_id long, embedding array<double>",
     )
-    out = ivf_index_ingest_tick(spark, good, idx, 0)
-    assert not out["reclustered"]
-    recs = index_history_versions(idx)
-    assert recs[-1]["batch_id"] == 0 and recs[-1]["fit_n"] == 20
-    assert not any(r.get("reset") for r in recs)
-    assert ivf_fit_ref_read(idx) == (s, n), "ref must not re-baseline"
+    out = ivf_vindex_ingest_tick(spark, good, idx, 0)
+    assert not out["reclustered"] and out["fit_n"] == 20
+    ms = list_versions(idx)
+    assert ms[-1]["fit_n"] == 20
+    assert not any(m["operation"] == "recluster" for m in ms)
+    assert ms[-1]["fit_ref"] == [s, n], "ref must not re-baseline"
 
     # (b) drifted batch (clusters orthogonal to every frozen center)
     bad = spark.createDataFrame(
         dvec_rows(range(2000, 2020), lambda i: 56 + i % 8),
         "vec_id long, embedding array<double>",
     )
-    out = ivf_index_ingest_tick(spark, bad, idx, 1)
+    out = ivf_vindex_ingest_tick(spark, bad, idx, 1)
     assert out["reclustered"]
-    recs = index_history_versions(idx)
-    assert recs[-1]["reset"] and recs[-1].get("recluster")
-    assert recs[-2]["batch_id"] == 1 and recs[-2]["fit_n"] == 20
+    ms = list_versions(idx)
+    assert ms[-1]["operation"] == "recluster"
+    assert ms[-2]["fit_n"] == 20
     # flag arithmetic: the drifted batch's recorded mean is far below
     # 0.82 x the reference mean
-    assert recs[-2]["fit_sum"] * n * 1000 < 820 * s * recs[-2]["fit_n"]
-    for v in (0, 1, 2):
-        with pytest.raises(ValueError, match="predates the rewrite"):
-            index_files_at(idx, v)
-    new_ref = ivf_fit_ref_read(idx)
-    assert new_ref is not None and new_ref != (s, n)
+    assert ms[-2]["fit_sum"] * n * 1000 < 820 * s * ms[-2]["fit_n"]
+    new_ref = ms[-1]["fit_ref"]
+    assert new_ref != [s, n]
     assert new_ref[1] == 140  # 100 base + 20 + 20 appended
 
     # (c) the loop keeps serving: a further in-distribution tick
@@ -2139,7 +2102,7 @@ def test_drift_control_loop_closed(spark, tmp_path):
         dvec_rows(range(3000, 3010), lambda i: i % 8),
         "vec_id long, embedding array<double>",
     )
-    out = ivf_index_ingest_tick(spark, more, idx, 2)
+    out = ivf_vindex_ingest_tick(spark, more, idx, 2)
     assert not out["reclustered"]
 
 
@@ -2775,11 +2738,10 @@ def test_vindex_migrate_marker_to_snapshot(spark, docs, emb, tmp_path):
     snapshot index in one commit, without rebuilding from the corpus.
     (a) minhash: config carried from the marker manifest, snapshot
     probe row-identical to the marker probe, and the migrated index
-    accepts snapshot verbs (append + pruned delete); (b) IVF: frozen
-    centroids become the manifest sidecar, probe parity holds, and
-    the migrated manifest carries a fit_ref so the drift tick works
-    from the first post-migration batch; (c) a source without its
-    config manifest fails loudly."""
+    accepts snapshot verbs (append + pruned delete); (b) a vector-family
+    source (the cell-partitioned layout of a marker IVF index) fails
+    loudly — those families have no marker protocol to migrate from;
+    (c) a source without its config manifest fails loudly."""
     import pytest as _pytest
 
     import uts_spark.functions.vindex as vx
@@ -2788,7 +2750,6 @@ def test_vindex_migrate_marker_to_snapshot(spark, docs, emb, tmp_path):
         minhash_index_probe,
         minhash_index_write,
     )
-    from uts_spark.functions.similarity import ivf_index_probe, ivf_index_write
     from uts_spark.sources.versioned import list_versions
 
     d = docs.select("doc_id", "text")
@@ -2823,22 +2784,13 @@ def test_vindex_migrate_marker_to_snapshot(spark, docs, emb, tmp_path):
     )
     assert removed > 0
 
-    # (b) IVF with the frozen quantizer
-    e_base = emb.filter(F.col("vec_id") % 10 != 7)
-    anchors = emb.filter(F.col("vec_id") < 5)
+    # (b) a cell-partitioned vector source refuses
     isrc = str(tmp_path / "marker_ivf")
-    ivf_index_write(e_base, isrc, n_cells=8)
-    idst = str(tmp_path / "snap_ivf")
-    vx.vindex_migrate(spark, isrc, idst, fingerprint="f0")
-    im = list_versions(idst)[-1]
-    assert im["family"] == "ivf" and im["fit_ref"][1] == e_base.count()
-    want_i = sorted(map(tuple, ivf_index_probe(
-        spark, isrc, anchors, None, k=10, n_probe=3,
-    ).collect()))
-    got_i = sorted(map(tuple, vx.ivf_vindex_probe(
-        spark, idst, anchors, k=10, n_probe=3,
-    ).collect()))
-    assert got_i == want_i and len(want_i) > 0
+    emb.withColumn("cell", F.col("vec_id") % 8).write.partitionBy(
+        "cell"
+    ).parquet(isrc)
+    with _pytest.raises(ValueError, match="not a marker minhash index"):
+        vx.vindex_migrate(spark, isrc, str(tmp_path / "snap_ivf"))
 
     # (c) missing config manifest fails loudly (minhash shape)
     import os

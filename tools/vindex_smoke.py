@@ -1,17 +1,16 @@
 #!/usr/bin/env python3
-"""Service-tick economics of the SNAPSHOT-COMMITTED index families at
-1M vectors (dim 64, JVM-side synthetic — no files, no Python in the
-data path), A/B'd against the marker-protocol family where the verb
-exists in both:
+"""Service-tick economics of the SNAPSHOT-COMMITTED IVF index at 1M
+vectors (dim 64, JVM-side synthetic — no files, no Python in the data
+path):
 
-- build wall (snapshot IVF vs marker IVF)
-- append tick (10k batch): snapshot fast-append vs marker staged append
+- build wall
+- append tick (10k batch): fast-append of one delta dir
 - exactly-once REPLAY of the same batch id (must be ~0: the skip
   happens before the data job)
 - erasure: a RANGED id slice (one delta dir's span — the id-ordered
   appends case) vs a SCATTERED slice (every dir's range admits ids) —
   the manifest dir-stats pruning claim, measured
-- probe wall at the current snapshot vs the marker index
+- probe wall at the current snapshot
 
 Run: python3 tools/vindex_smoke.py [rows] [batch]
 Prints one JSON line {"rows": N, "timings": {...}, "pruned": {...}}.
@@ -220,29 +219,20 @@ def main() -> None:
 
     work = tempfile.mkdtemp(prefix="uts_vindex_smoke_")
     snap = os.path.join(work, "snap")
-    mark = os.path.join(work, "mark")
     try:
-        from uts_spark.functions.similarity import (
-            ivf_index_append_idempotent,
-            ivf_index_probe,
-            ivf_index_write,
-        )
         from uts_spark.functions.vindex import (
             ivf_vindex_append,
+            ivf_vindex_build,
             ivf_vindex_delete,
             ivf_vindex_probe,
         )
-        from uts_spark.functions.vindex import ivf_vindex_build
         from uts_spark.sources.versioned import list_versions
 
         t("build_snapshot", lambda: ivf_vindex_build(
             base, snap, fingerprint="f0", n_cells=8))
-        t("build_marker", lambda: ivf_index_write(base, mark, n_cells=8))
 
         t("append_snapshot_10k", lambda: ivf_vindex_append(
             b_app, snap, fingerprint="f1", batch_id=0))
-        t("append_marker_10k", lambda: ivf_index_append_idempotent(
-            spark, b_app, mark, batch_id=0))
 
         t("append_snapshot_replay_skip", lambda: ivf_vindex_append(
             b_app, snap, fingerprint="f1", batch_id=0))
@@ -268,8 +258,6 @@ def main() -> None:
         anchors = base.filter(F.col("vec_id") < 5)
         t("probe_snapshot", lambda: ivf_vindex_probe(
             spark, snap, anchors, k=10, n_probe=3).count())
-        t("probe_marker", lambda: ivf_index_probe(
-            spark, mark, anchors, None, k=10, n_probe=3).count())
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -595,7 +595,7 @@ def simhash_band_pairs(
 # dedup doesn't recompute the corpus sketch per batch — it maintains a
 # band-bucket index at rest and probes it with each new crawl. This is
 # the MinHash sibling of the persisted LSH/IVF ANN indexes
-# (functions/similarity.py): same static-partition-filter probe, same
+# (functions/vindex.py): the same literal bucket-filter probe, the same
 # "persistence is physical, never semantic" contract (the probe's
 # oracle is the recompute formulation).
 
@@ -664,7 +664,7 @@ def _index_data_files(
     path: str, parts: tuple[str, ...] = ("band=*", "grp=*")
 ) -> list[str]:
     """All data-file relpaths currently in the index's partition grid
-    (``parts`` names the grid — the IVF family passes ("cell=*",))."""
+    (``parts`` names the grid — compact_partitioned passes its own)."""
     import glob
     import os
 
@@ -1143,9 +1143,9 @@ def minhash_index_delete(
     the deleted docs to find which (band, grp) partitions hold their
     rows, then hand (id, band, grp) to the shared partition-delete
     kernel (sources/sinks.delete_from_partitioned — left-anti id join,
-    dynamic partition overwrite, emptied-dir sweep; same kernel as the
-    LSH/IVF/IVF-PQ erasure verbs). Cost ∝ touched partitions (bounded
-    by deleted x bands), never the index; the deleted-id list stays a
+    dynamic partition overwrite, emptied-dir sweep). Cost ∝ touched
+    partitions (bounded by deleted x bands), never the index; the
+    deleted-id list stays a
     DataFrame end-to-end, so a domain-takedown-sized erasure batch
     never materializes on the driver (VERDICT r7 #2). Returns the
     number of index rows removed; the caller bumps the manifest
@@ -1197,7 +1197,7 @@ def minhash_index_probe(
     (batch-sized work only), push its distinct (band, grp) list into
     the narrow index scan as a static partition filter (bounded by
     batch x bands — the same driver-materialized-literal precedent as
-    lsh_index_probe), equi-join on the exact (band, bucket) for
+    similarity._lsh_index_probe), equi-join on the exact (band, bucket) for
     candidate pairs, then re-sketch ONLY the candidate old docs from
     ``old_docs`` (bounded by bucket collisions) for the estimated +
     exact Jaccard verify. Returns directional (id_new, id_old,
@@ -1322,7 +1322,7 @@ def minhash_index_probe(
 
 # --------------------------------------------------------------------------
 # Band-occupancy skew monitor + hot-bucket cap: the dedup ingest's drift
-# control loop (the MinHash sibling of similarity.ivf_index_ingest_tick).
+# control loop (the MinHash sibling of vindex.ivf_vindex_ingest_tick).
 # The band index has no quantizer to drift, but it has the analogous
 # failure: a boilerplate/template FLOOD (many near-identical documents)
 # collapses into a handful of mega-buckets, and every future probe's
@@ -1540,7 +1540,7 @@ def minhash_ingest_tick(
     n_grps: int = 16,
 ) -> dict:
     """One CLOSED-LOOP micro-batch of the dedup ingest service (the
-    MinHash sibling of similarity.ivf_index_ingest_tick — round-10
+    MinHash sibling of vindex.ivf_vindex_ingest_tick — round-10
     candidate #3). Per tick, under the caller's pending marker:
 
     1. MEASURE first: the batch's bucket-collision integers against

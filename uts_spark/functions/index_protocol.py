@@ -1,36 +1,32 @@
-"""The index-protocol FACADE: one verb surface over both commit
-protocols (ROADMAP round-10 #2 — the marker-family retirement plan).
+"""The index-protocol FACADE: one verb surface over the maintained
+index families (MinHash bands, LSH, IVF, IVF-PQ) and their commit
+protocols:
 
-Every maintained index family (MinHash bands, LSH, IVF, IVF-PQ) exists
-on two protocols:
-
-- ``"marker"`` — the pending-marker / rename-swap family
-  (dedup.minhash_index_*, similarity.{lsh,ivf,ivfpq}_index_*):
-  single-writer O_EXCL markers, os.replace publishes, a JSONL version
-  history sidecar. POSIX-local-FS primitives; the original service
-  protocol (rounds 6-8).
 - ``"snapshot"`` — the CAS-manifest family (functions/vindex.py):
   Iceberg-style fast-appends, copy-on-write rewrites, optimistic
   concurrency, quantizers as manifest sidecars. The object-storage-safe
-  protocol (round 9).
+  protocol (round 9) and the only one the vector families (LSH, IVF,
+  IVF-PQ) have.
+- ``"marker"`` — MinHash only: the pending-marker / rename-swap family
+  (dedup.minhash_index_*): single-writer O_EXCL markers, os.replace
+  publishes, a JSONL version history sidecar. POSIX-local-FS
+  primitives; the original service protocol (rounds 6-8). Asking for
+  it with a vector family raises ``ValueError``.
 
-``DEFAULT_PROTOCOL`` is **measured, not guessed**: tools/protocol_ab.py
-runs the full matched service suite (build -> append x3 -> warm probe ->
+``DEFAULT_PROTOCOL`` is **measured, not guessed** (SCALE.md round 9c):
+the full matched service suite (build -> append x3 -> warm probe ->
 scattered delete -> compact -> probe) for all four families on both
-protocols at 200k vectors / 100k docs. Measured (SCALE.md round 9c):
-snapshot wins the maintenance verbs at a 1.69x geomean — erasure
-1.7-4.2x (bare-id dir-stats-pruned copy-on-write vs re-sketch +
-partition rewrite), appends 1.1-3.4x (delta-dir + manifest commit vs
-partition-grid append), LSH across the board 1.5-3.6x — and probes sit
-at parity (1.15x geomean, inside warm-probe noise; same scan kernels,
-the manifest resolves dirs instead of a glob). The one structural
-marker win, the IVF-PQ build (0.70x), is the snapshot build paying for
-its drift monitor — the ``dist_ref`` distortion ints are an extra
-corpus-wide ADC pass the marker build simply doesn't have; feature
-cost, not protocol overhead. The marker verbs stay fully supported as
-the compatibility surface — pass ``protocol="marker"`` — but new
-services should not pick them: beyond the walls, only the snapshot
-protocol is safe under concurrent writers and on object storage.
+protocols at 200k vectors / 100k docs gave snapshot the maintenance
+verbs at a 1.69x geomean — erasure 1.7-4.2x (bare-id dir-stats-pruned
+copy-on-write vs re-sketch + partition rewrite), appends 1.1-3.4x
+(delta-dir + manifest commit vs partition-grid append), LSH across the
+board 1.5-3.6x — with probes at parity (1.15x geomean, inside
+warm-probe noise; same scan kernels). The one structural marker win,
+the IVF-PQ build (0.70x), was the snapshot build paying for its drift
+monitor (the ``dist_ref`` distortion ints), feature cost, not protocol
+overhead. Beyond the walls, only the snapshot protocol is safe under
+concurrent writers and on object storage, so the vector families'
+marker verbs were retired after that A/B.
 
 The facade is deliberately THIN: it owns protocol choice and family
 dispatch, never semantics — each route calls the same functions the
@@ -54,6 +50,11 @@ def _check(family: str, protocol: str | None) -> str:
     proto = protocol or DEFAULT_PROTOCOL
     if proto not in ("marker", "snapshot"):
         raise ValueError(f"unknown index protocol {proto!r} (expected 'marker' or 'snapshot')")
+    if proto == "marker" and family != "minhash":
+        raise ValueError(
+            f"the {family} index has no marker protocol (only minhash "
+            f"does); use the default protocol={DEFAULT_PROTOCOL!r}"
+        )
     return proto
 
 
@@ -73,7 +74,8 @@ def index_build(
     ivfpq config: dim (required), n_cells/m_sub/n_cent, id_col/vec_col.
 
     Returns the committed snapshot version (snapshot protocol) or None
-    (marker protocol writes version 0 into its history sidecar)."""
+    (the minhash marker protocol writes version 0 into its history
+    sidecar)."""
     proto = _check(family, protocol)
     if proto == "snapshot":
         from uts_spark.functions import vindex as vx
@@ -93,36 +95,18 @@ def index_build(
             df, path, config.pop("dim"), fingerprint=fingerprint, **config
         )
     from uts_spark.functions import dedup as dd
-    from uts_spark.functions import similarity as sim
 
-    if family == "minhash":
-        cfg = {k: config[k] for k in ("n", "k", "bands", "n_grps") if k in config}
-        dd.minhash_index_write(
-            df, config.pop("text_col"), config.pop("id_col"), path,
-            fingerprint=fingerprint or None, **config,
-        )
-        cfg = {"n": 3, "k": 32, "bands": 8, "n_grps": 16, **cfg}
-    elif family == "lsh":
-        dim = config.pop("dim")
-        sim.lsh_index_write(df, path, dim, **config)
-        cfg = {"dim": dim, "planes": config.get("planes", 8), "tables": config.get("tables", 2)}
-    elif family == "ivf":
-        sim.ivf_index_write(df, path, **config)
-        cfg = {"n_cells": config.get("n_cells", 8)}
-    else:
-        dim = config.pop("dim")
-        sim.ivfpq_index_write(df, path, dim, **config)
-        cfg = {
-            "dim": dim,
-            "n_cells": config.get("n_cells", 8),
-            "m_sub": config.get("m_sub", 8),
-            "n_cent": config.get("n_cent", 16),
-        }
-    # the per-family marker builds (except minhash) historically leave
-    # no config manifest — services stamp one via index_tick. The
-    # facade stamps it at build so every later facade verb resolves
-    # (family, config) from the index itself, same as the snapshot
-    # route does from its CAS manifest.
+    # stamp family + full config so every later facade verb resolves
+    # them from the index itself, as the snapshot route does from its
+    # CAS manifest
+    cfg = {
+        k: config.get(k, v)
+        for k, v in (("n", 3), ("k", 32), ("bands", 8), ("n_grps", 16))
+    }
+    dd.minhash_index_write(
+        df, config.pop("text_col"), config.pop("id_col"), path,
+        fingerprint=fingerprint or None, **config,
+    )
     dd.index_manifest_write(path, fingerprint, family=family, **cfg)
     return None
 
@@ -139,8 +123,8 @@ def index_append(
     """Fold a batch into an existing index. Family is read from the
     index's own manifest — an append cannot disagree with the index it
     extends. ``batch_id``/``stream_id`` opt into exactly-once commits
-    (snapshot protocol; the marker protocol's idempotent variants key
-    on (epoch, batch_id) via its history sidecar)."""
+    (snapshot protocol; the minhash marker protocol's idempotent
+    variant keys on (epoch, batch_id) via its history sidecar)."""
     family, cfg = _family_config(path, protocol)
     proto = _check(family, protocol)
     if proto == "snapshot":
@@ -169,46 +153,18 @@ def index_append(
             batch_id=batch_id, stream_id=stream_id, **config,
         )
     from uts_spark.functions import dedup as dd
-    from uts_spark.functions import similarity as sim
 
-    spark = batch.sparkSession
-    if family == "minhash":
-        if batch_id is not None:
-            dd.minhash_index_append_idempotent(
-                batch, config.pop("text_col"), config.pop("id_col"), path,
-                batch_id=batch_id,
-                n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
-            )
-        else:
-            dd.minhash_index_append(
-                batch, config.pop("text_col"), config.pop("id_col"), path,
-                n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
-            )
-    elif family == "lsh":
-        if batch_id is not None:
-            sim.lsh_index_append_idempotent(
-                batch, path, cfg["dim"], batch_id=batch_id,
-                planes=cfg["planes"], tables=cfg["tables"], **config,
-            )
-        else:
-            sim.lsh_index_append(
-                batch, path, cfg["dim"],
-                planes=cfg["planes"], tables=cfg["tables"], **config,
-            )
-    elif family == "ivf":
-        if batch_id is not None:
-            sim.ivf_index_append_idempotent(
-                spark, batch, path, batch_id=batch_id, **config
-            )
-        else:
-            sim.ivf_index_append(spark, batch, path, **config)
+    if batch_id is not None:
+        dd.minhash_index_append_idempotent(
+            batch, config.pop("text_col"), config.pop("id_col"), path,
+            batch_id=batch_id,
+            n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
+        )
     else:
-        if batch_id is not None:
-            sim.ivfpq_index_append_idempotent(
-                spark, batch, path, cfg["dim"], batch_id=batch_id, **config
-            )
-        else:
-            sim.ivfpq_index_append(spark, batch, path, cfg["dim"], **config)
+        dd.minhash_index_append(
+            batch, config.pop("text_col"), config.pop("id_col"), path,
+            n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
+        )
     return None
 
 
@@ -221,11 +177,10 @@ def index_delete(
     **config,
 ) -> int:
     """Erase ids from an index (the GDPR verb). The snapshot route
-    takes BARE ids (manifest dir-stats prune the rewrite); the marker
-    route needs the deleted rows' CONTENT (text/vectors) to re-derive
-    their partitions — pass the full rows and the id/text/vec columns
-    the family expects. Returns rows removed (marker) or the committed
-    version (snapshot)."""
+    takes BARE ids (manifest dir-stats prune the rewrite); the minhash
+    marker route needs the deleted rows' CONTENT (text) to re-derive
+    their partitions — pass the full rows and text_col/id_col. Returns
+    rows removed (marker) or the committed version (snapshot)."""
     family, cfg = _family_config(path, protocol)
     proto = _check(family, protocol)
     if proto == "snapshot":
@@ -233,21 +188,11 @@ def index_delete(
 
         return vx.vindex_delete_auto(spark, deleted, path, fingerprint=fingerprint)
     from uts_spark.functions import dedup as dd
-    from uts_spark.functions import similarity as sim
 
-    if family == "minhash":
-        return dd.minhash_index_delete(
-            spark, deleted, config.pop("text_col"), config.pop("id_col"), path,
-            n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
-        )
-    if family == "lsh":
-        return sim.lsh_index_delete(
-            spark, deleted, path, cfg["dim"],
-            planes=cfg["planes"], tables=cfg["tables"], **config,
-        )
-    if family == "ivf":
-        return sim.ivf_index_delete(spark, deleted, path, **config)
-    return sim.ivfpq_index_delete(spark, deleted, path, **config)
+    return dd.minhash_index_delete(
+        spark, deleted, config.pop("text_col"), config.pop("id_col"), path,
+        n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
+    )
 
 
 def index_probe(
@@ -261,8 +206,8 @@ def index_probe(
     """Probe an index. ``probe_input`` is the anchor frame (vector
     families) or the (new_docs, old_docs, text_col, id_col) tuple
     (minhash). ``version`` pins a snapshot (both protocols support
-    time travel; the marker protocol resolves it via its history
-    sidecar)."""
+    time travel; the minhash marker protocol resolves it via its
+    history sidecar)."""
     family, cfg = _family_config(path, protocol)
     proto = _check(family, protocol)
     if proto == "snapshot":
@@ -281,37 +226,19 @@ def index_probe(
             return vx.ivf_vindex_probe(spark, path, probe_input, version=version, **kwargs)
         return vx.ivfpq_vindex_probe(spark, path, probe_input, version=version, **kwargs)
     from uts_spark.functions import dedup as dd
-    from uts_spark.functions import similarity as sim
 
-    if family == "minhash":
-        new_docs, old_docs, text_col, id_col = probe_input
-        return dd.minhash_index_probe(
-            spark, path, new_docs, old_docs, text_col, id_col,
-            n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
-            version=version, **kwargs,
-        )
-    if family == "lsh":
-        return sim.lsh_index_probe(
-            spark, path, probe_input, cfg["dim"],
-            planes=cfg["planes"], tables=cfg["tables"],
-            version=version, **kwargs,
-        )
-    if family == "ivf":
-        return sim.ivf_index_probe(
-            spark, path, probe_input,
-            n_cells=cfg.get("n_cells", 8), version=version, **kwargs,
-        )
-    return sim.ivfpq_index_probe(
-        spark, path, probe_input, dim=cfg["dim"],
-        n_cells=cfg.get("n_cells", 8), m_sub=cfg.get("m_sub", 8),
-        n_cent=cfg.get("n_cent", 16), version=version, **kwargs,
+    new_docs, old_docs, text_col, id_col = probe_input
+    return dd.minhash_index_probe(
+        spark, path, new_docs, old_docs, text_col, id_col,
+        n=cfg["n"], k=cfg["k"], bands=cfg["bands"], n_grps=cfg["n_grps"],
+        version=version, **kwargs,
     )
 
 
 def index_compact(
     spark, path: str, protocol: str | None = None, fingerprint: str = ""
 ):
-    """Compact an index (snapshot: CAS rewrite commit; marker:
+    """Compact an index (snapshot: CAS rewrite commit; minhash marker:
     rename-swap with a RESET census line in the history sidecar)."""
     family, cfg = _family_config(path, protocol)
     proto = _check(family, protocol)
@@ -321,13 +248,7 @@ def index_compact(
         return vx.vindex_compact_auto(spark, path, fingerprint=fingerprint)
     from uts_spark.sources.sinks import compact_partitioned
 
-    part_cols = {
-        "minhash": ["band", "grp"],
-        "lsh": ["table", "bucket"],
-        "ivf": ["cell"],
-        "ivfpq": ["cell"],
-    }[family]
-    return compact_partitioned(spark, path, part_cols)
+    return compact_partitioned(spark, path, ["band", "grp"])
 
 
 def index_service_tick(
@@ -342,9 +263,8 @@ def index_service_tick(
 ) -> dict:
     """One SERVICE TICK through the facade: fold a micro-batch into the
     index exactly-once AND run the family's control loop — the verb a
-    streaming foreachBatch actually wants, protocol- and
-    family-agnostic (the CRUD facade above covers the verbs; this
-    covers the loops):
+    streaming foreachBatch actually wants, family-agnostic (the CRUD
+    facade above covers the verbs; this covers the loops):
 
     - ivf    -> drift tick (per-batch quantizer fit committed with the
                 data; recluster fired at the measured 0.82 flag);
@@ -394,37 +314,22 @@ def index_service_tick(
             out = {"version": ver, "monitor": "none"}
     else:
         from uts_spark.functions import dedup as dd
-        from uts_spark.functions import similarity as sim
 
-        if family == "ivf":
-            out = sim.ivf_index_ingest_tick(
-                spark, batch, path, batch_id,
-                n_cells=cfg.get("n_cells", 8), **config,
-            )
-        elif family == "minhash":
-            out = dd.minhash_ingest_tick(
-                spark, batch, config.pop("text_col"), config.pop("id_col"),
-                path, batch_id,
-                n=cfg["n"], k=cfg["k"], bands=cfg["bands"],
-                n_grps=cfg["n_grps"], **config,
-            )
-        else:
-            raise ValueError(
-                f"marker protocol has no {family} service tick — the "
-                "snapshot protocol carries the full monitor matrix "
-                "(and is the measured default); use "
-                "protocol='snapshot' or the plain append verbs"
-            )
+        out = dd.minhash_ingest_tick(
+            spark, batch, config.pop("text_col"), config.pop("id_col"),
+            path, batch_id,
+            n=cfg["n"], k=cfg["k"], bands=cfg["bands"],
+            n_grps=cfg["n_grps"], **config,
+        )
     return {**out, "family": family, "protocol": proto}
 
 
 def _family_config(path: str, protocol: str | None) -> tuple[str, dict]:
     """Resolve (family, config) from the index's own manifest so the
     caller never re-states what the index already knows. The snapshot
-    manifest records ``family`` explicitly; the marker manifest's
-    config keys identify it (n/k/bands -> minhash, planes/tables ->
-    lsh, m_sub -> ivfpq, else ivf — the same shape-inference
-    vindex_migrate uses)."""
+    manifest records ``family`` explicitly; a marker manifest is a
+    minhash one (its ``family`` stamp, or the n/k/bands config keys an
+    unstamped one carries)."""
     proto = protocol or DEFAULT_PROTOCOL
     if proto == "snapshot":
         from uts_spark.functions.vindex import _current_manifest
@@ -441,19 +346,9 @@ def _family_config(path: str, protocol: str | None) -> tuple[str, dict]:
         return cfg["family"], cfg
     if "bands" in cfg and "n" in cfg:
         return "minhash", cfg
-    if "m_sub" in cfg:
-        return "ivfpq", cfg
-    if "planes" in cfg and "tables" in cfg:
-        return "lsh", cfg
-    import os
-
-    if os.path.exists(os.path.join(path, "_centroids")):
-        if os.path.exists(os.path.join(path, "_codebook")):
-            return "ivfpq", {"dim": 64, **cfg}
-        return "ivf", cfg
     raise ValueError(
-        f"marker index at {path}: cannot infer family from manifest config "
-        f"keys {sorted(cfg)} — pass explicit config or use the family verbs"
+        f"marker index at {path}: no minhash config in its manifest "
+        f"(keys {sorted(cfg)}) — the marker protocol is minhash-only"
     )
 
 
@@ -475,50 +370,31 @@ def _detect_index_protocol(path: str) -> str:
     )
 
 
-def _marker_locate(spark, family, cfg, deleted_rows, text_col, id_col, vec_col, path):
-    """(located rows, partition cols, located id col) for a MARKER
-    index: re-derive ONLY the deleted rows' partitions with the same
-    kernels the family's delete verb uses — the audit then scans just
-    those partitions, never the index."""
+def _marker_locate(spark, cfg, deleted_rows, text_col, id_col):
+    """Located (id, band, grp) rows of the deleted docs in a MARKER
+    minhash index: re-derive ONLY their partitions with the same
+    kernels the delete verb uses — the audit then scans just those
+    partitions, never the index."""
     from pyspark.sql import functions as F
 
-    if family == "minhash":
-        from uts_spark.functions.dedup import (
-            _band_bucket_rows,
-            doc_shingle_arrays_portable,
-            minhash_signatures_portable,
-        )
-
-        k = cfg.get("k", 32)
-        arrays = doc_shingle_arrays_portable(
-            deleted_rows, text_col, id_col, cfg.get("n", 3)
-        )
-        sig = minhash_signatures_portable(arrays, k)
-        rows = _band_bucket_rows(sig, k, cfg.get("bands", 8)).select(
-            "id",
-            "band",
-            F.pmod(
-                F.xxhash64("bucket"), F.lit(cfg.get("n_grps", 16))
-            ).alias("grp"),
-        )
-        return rows, ["band", "grp"], "id"
-    if family == "lsh":
-        from uts_spark.functions.similarity import lsh_bucket_table
-
-        located = lsh_bucket_table(
-            deleted_rows, cfg["dim"], cfg.get("planes", 8),
-            cfg.get("tables", 2), id_col, vec_col,
-        ).select(id_col, "table", "bucket")
-        return located, ["table", "bucket"], id_col
-    import os
-
-    from uts_spark.functions.similarity import _ivf_assign
-
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
-    located = _ivf_assign(deleted_rows, cents, id_col, vec_col).select(
-        id_col, "cell"
+    from uts_spark.functions.dedup import (
+        _band_bucket_rows,
+        doc_shingle_arrays_portable,
+        minhash_signatures_portable,
     )
-    return located, ["cell"], id_col
+
+    k = cfg.get("k", 32)
+    arrays = doc_shingle_arrays_portable(
+        deleted_rows, text_col, id_col, cfg.get("n", 3)
+    )
+    sig = minhash_signatures_portable(arrays, k)
+    return _band_bucket_rows(sig, k, cfg.get("bands", 8)).select(
+        "id",
+        "band",
+        F.pmod(
+            F.xxhash64("bucket"), F.lit(cfg.get("n_grps", 16))
+        ).alias("grp"),
+    )
 
 
 def _touched_partition_filter(located, part_cols):
@@ -551,17 +427,16 @@ def erase_everywhere(
     fingerprint: str = "",
     deleted_rows=None,
     text_col: str = "text",
-    vec_col: str = "embedding",
     table_mode: str = "cow",
     index_mode: str = "cow",
 ) -> list[dict]:
     """FACADE-LEVEL GDPR: one call erases a takedown batch from every
     index — SNAPSHOT indexes (family dispatched off each manifest, all
     four routes through the pruned copy-on-write kernel) and MARKER
-    indexes (protocol detected per path; dispatched through the
-    family delete verbs, which need the deleted rows' CONTENT — pass
-    ``deleted_rows`` carrying id + text/vector columns, or the call
-    refuses loudly) — AND every versioned data table (``table_specs``
+    minhash indexes (protocol detected per path; dispatched through the
+    minhash delete verb, which needs the deleted rows' CONTENT — pass
+    ``deleted_rows`` carrying id + text columns, or the call refuses
+    loudly) — AND every versioned data table (``table_specs``
     = (path, key_col) pairs; dir-stats-pruned when the table opted in
     at write time). Then it AUDITS itself at the erasure's own pruned
     shape (VERDICT r9 #1 — the first audit full-scanned every target):
@@ -572,9 +447,10 @@ def erase_everywhere(
       unchanged bytes) — so the audit left-semi probes ONLY the
       rewritten dirs, and ``rows_after`` folds from the committed
       manifest's ``n_rows``, no scan;
-    - marker indexes: the deleted rows re-locate to their partitions
-      (same kernels as the delete verb) and the audit scans only the
-      touched partitions behind a flat partition filter.
+    - marker minhash indexes: the deleted rows re-locate to their
+      (band, grp) partitions (same kernels as the delete verb) and the
+      audit scans only the touched partitions behind a flat partition
+      filter.
 
     Returns one accounting dict per target: {target, kind, protocol,
     family|key, version, rows_after, rows_removed, leaked,
@@ -598,8 +474,8 @@ def erase_everywhere(
     scan. ``index_mode="mor"`` does the same for SNAPSHOT indexes
     (vindex_delete_mor — probes mask through read_version; audit =
     vindex_read_rows_for_ids at the committed version); marker
-    indexes have no vector machinery and always erase copy-on-write
-    regardless."""
+    minhash indexes have no vector machinery and always erase
+    copy-on-write regardless."""
     from uts_spark.functions.vindex import (
         _current_manifest,
         vindex_delete_auto,
@@ -668,33 +544,25 @@ def erase_everywhere(
         fam, cfg = _family_config(path, "marker")
         if deleted_rows is None:
             raise ValueError(
-                f"marker index at {path}: the marker delete verbs "
-                "re-derive partitions from the deleted rows' content - "
-                "pass deleted_rows= (id + text/vector columns); bare "
-                "ids only suffice for snapshot indexes and tables"
+                f"marker index at {path}: the marker delete verb "
+                "re-derives partitions from the deleted rows' content - "
+                "pass deleted_rows= (id + text columns); bare ids only "
+                "suffice for snapshot indexes and tables"
             )
         idc = deleted_ids.columns[0]
-        if fam == "minhash":
-            removed = index_delete(
-                spark, deleted_rows, path, protocol="marker",
-                fingerprint=fingerprint, text_col=text_col, id_col=idc,
-            )
-        else:
-            removed = index_delete(
-                spark, deleted_rows, path, protocol="marker",
-                fingerprint=fingerprint, id_col=idc, vec_col=vec_col,
-            )
-        located, part_cols, loc_id = _marker_locate(
-            spark, fam, cfg, deleted_rows, text_col, idc, vec_col, path
+        removed = index_delete(
+            spark, deleted_rows, path, protocol="marker",
+            fingerprint=fingerprint, text_col=text_col, id_col=idc,
         )
-        cond, n_touched = _touched_partition_filter(located, part_cols)
+        located = _marker_locate(spark, cfg, deleted_rows, text_col, idc)
+        cond, n_touched = _touched_partition_filter(located, ["band", "grp"])
         if cond is None:
             leaked = 0
         else:
             leaked = (
                 spark.read.parquet(path)
                 .filter(cond)
-                .join(located.select(loc_id).distinct(), loc_id, "left_semi")
+                .join(located.select("id").distinct(), "id", "left_semi")
                 .count()
             )
         out.append({

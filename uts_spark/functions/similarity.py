@@ -829,163 +829,13 @@ def postfilter_topk(ranked: DataFrame, keep: Column, k: int) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Persisted ANN index (VERDICT r4 #5): build the LSH bucket table ONCE
-# as a (table, bucket)-partitioned parquet index, then answer probe
-# queries by scanning ONLY the anchors' partitions — index reuse across
-# queries instead of recomputing hyperplane projections per query.
+# Probe kernels of the persisted vector indexes (functions/vindex.py
+# builds and maintains them; these answer queries over one resolved
+# snapshot): the anchors' bucket / cell list becomes a literal filter on
+# the index scan, then the candidates are exact-reranked.
 
-def lsh_index_write(
-    emb: DataFrame,
-    path: str,
-    dim: int,
-    planes: int = 8,
-    tables: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the LSH index: one bucket-table pass over the corpus,
-    written partitioned by (table, bucket) so a probe's scan prunes to
-    its collision partitions. 8 planes x 2 tables keeps the partition
-    count bounded (<= 2*256 directories) while holding recall on
-    diffuse embeddings (the 12x4 config collapses; see
-    similarity_lsh_recall_eval)."""
-    from uts_spark.sources.sinks import write_partitioned
-
-    idx = lsh_bucket_table(emb, dim, planes, tables, id_col, vec_col)
-    write_partitioned(
-        idx.select(id_col, vec_col, "table", "bucket"),
-        path,
-        ["table", "bucket"],
-        cluster=True,
-    )
-    from uts_spark.functions.dedup import _index_data_files, index_history_append
-
-    index_history_append(
-        path, 0, _index_data_files(path, ("table=*", "bucket=*"))
-    )
-
-
-def lsh_index_append(
-    emb_batch: DataFrame,
-    path: str,
-    dim: int,
-    planes: int = 8,
-    tables: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Fold new vectors into the persisted LSH index (the third index
-    family's maintenance verb, after the MinHash band and IVF appends):
-    the hyperplanes are SEED-derived (hyperplane(t*1000+h, dim)) and
-    therefore corpus-independent — unlike IVF there is no frozen state
-    to load; bucketing the batch at the same (dim, planes, tables)
-    config lands its rows in exactly the partitions a full rebuild
-    would. Batch-sized work + a partition-aligned parquet append; the
-    caller bumps its manifest fingerprint chain afterwards."""
-    from uts_spark.sources.sinks import write_partitioned
-
-    from uts_spark.functions.dedup import _check_index_config
-
-    # bucketing params are NOT embodied in the index data (unlike the
-    # IVF families' frozen quantizer tables) — a (dim, planes, tables)
-    # mismatch writes incompatible buckets silently; validate against
-    # the manifest when one exists
-    _check_index_config(path, dim=dim, planes=planes, tables=tables)
-    idx = lsh_bucket_table(emb_batch, dim, planes, tables, id_col, vec_col)
-    write_partitioned(
-        idx.select(id_col, vec_col, "table", "bucket"),
-        path,
-        ["table", "bucket"],
-        mode="append",
-        cluster=True,
-    )
-
-
-def lsh_index_append_idempotent(
-    emb_batch: DataFrame,
-    path: str,
-    dim: int,
-    batch_id: int,
-    planes: int = 8,
-    tables: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """EXACTLY-ONCE micro-batch append for the LSH index (shared
-    staged-publish kernel — see dedup.minhash_index_append_idempotent):
-    seed-derived bucketing, batch-id-keyed publish, replayed epochs
-    converge; the tick is recorded in the version history when one
-    exists."""
-    from uts_spark.functions.dedup import (
-        _check_index_config,
-        _index_history_record_batch,
-        index_epoch,
-    )
-    from uts_spark.sources.sinks import staged_idempotent_append
-
-    _check_index_config(path, dim=dim, planes=planes, tables=tables)
-    idx = lsh_bucket_table(emb_batch, dim, planes, tables, id_col, vec_col)
-    published = staged_idempotent_append(
-        idx.select(id_col, vec_col, "table", "bucket"),
-        path,
-        ["table", "bucket"],
-        batch_id,
-        epoch=index_epoch(path),
-    )
-    _index_history_record_batch(path, batch_id, published)
-
-
-def lsh_index_delete(
-    spark,
-    emb_deleted: DataFrame,
-    path: str,
-    dim: int,
-    planes: int = 8,
-    tables: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """ERASE vectors from the persisted LSH index (VERDICT r7 #1 —
-    erasure parity with the MinHash lane: without it the similarity
-    service retains deleted documents' vectors in its bucket rows
-    forever). The hyperplanes are seed-derived, so re-bucketing ONLY
-    the deleted vectors at the index's config reproduces exactly the
-    (table, bucket) partitions holding their rows; the shared kernel
-    (sources/sinks.delete_from_partitioned) rewrites those partitions
-    minus the deleted ids via a left-anti id join — batch-size-safe,
-    the id list never materializes on the driver. Cost ∝ touched
-    partitions (bounded by deleted x tables); returns rows removed.
-    The caller bumps the manifest fingerprint afterwards."""
-    from uts_spark.functions.dedup import _check_index_config
-    from uts_spark.sources.sinks import delete_from_partitioned
-
-    _check_index_config(path, dim=dim, planes=planes, tables=tables)
-    located = lsh_bucket_table(
-        emb_deleted, dim, planes, tables, id_col, vec_col
-    ).select(id_col, "table", "bucket")
-    removed = delete_from_partitioned(
-        spark, path, located, ["table", "bucket"], id_col
-    )
-    from uts_spark.functions.dedup import (
-        _index_data_files,
-        index_history_append,
-        index_history_versions,
-    )
-
-    recs = index_history_versions(path)
-    if recs:
-        index_history_append(
-            path,
-            max(r["version"] for r in recs) + 1,
-            _index_data_files(path, ("table=*", "bucket=*")),
-            reset=True,
-        )
-    return removed
-
-
-def lsh_index_probe(
-    spark,
-    path: str,
+def _lsh_index_probe(
+    scan: DataFrame,
     anchors: DataFrame,
     dim: int,
     k: int = 10,
@@ -993,28 +843,22 @@ def lsh_index_probe(
     tables: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    version: int | None = None,
-    scan: DataFrame | None = None,
     where: Column | None = None,
 ) -> DataFrame:
-    """Probe the persisted index: hash the anchors (tiny), push their
-    (table, bucket) list into the index scan as a STATIC partition
-    filter — the metastore-pruning pattern a warehouse uses for point
-    lookups — then exact-rerank the candidates. The anchor bucket list
-    is driver-materialized on purpose: it is bounded by
-    anchors x tables rows (the same bounded-broadcast-anchor precedent
-    as cosine_topk_blocked), and a literal filter guarantees
-    PartitionFilters-level pruning regardless of whether dynamic
-    partition pruning fires. Semantics are identical to
+    """LSH probe over ``scan`` (the snapshot's resolved index rows):
+    hash the anchors (tiny), push their (table, bucket) list into the
+    scan as a literal filter, then exact-rerank the candidates. The
+    anchor bucket list is driver-materialized on purpose: it is bounded
+    by anchors x tables rows (the same bounded-broadcast-anchor
+    precedent as cosine_topk_blocked), and a literal filter reaches the
+    parquet scan's pushed filters, so row-group stats of the
+    (table, bucket)-sorted index prune it. Semantics are identical to
     :func:`lsh_topk` at the same (planes, tables) — pinned by
-    tests/test_llm_ops.py. ``scan`` overrides the index read entirely
-    (the snapshot family resolves its manifest's immutable dir list and
-    passes it here — same kernel, snapshot-isolated source).
-    ``where`` PRE-FILTERS the index rows on metadata columns stored at
-    build time (``meta_cols`` on the snapshot family): the predicate
-    composes with the bucket condition so both push down to the
-    parquet scan — candidacy restricted to eligible vectors, never the
-    post-filter under-fill."""
+    tests/test_llm_ops.py. ``where`` PRE-FILTERS the index rows on
+    metadata columns stored at build time (``meta_cols``): the
+    predicate composes with the bucket condition so both push down to
+    the parquet scan — candidacy restricted to eligible vectors, never
+    the post-filter under-fill."""
     from functools import reduce
     from operator import or_
 
@@ -1026,18 +870,10 @@ def lsh_index_probe(
     )
     pdf = left.select("table", "bucket").distinct().toPandas()
     pairs = sorted((int(t), int(b)) for t, b in pdf.itertuples(index=False))
-    if scan is not None:
-        idx = scan
-    elif version is None:
-        idx = spark.read.parquet(path)
-    else:
-        from uts_spark.functions.dedup import index_scan_at
-
-        idx = index_scan_at(spark, path, version)
     # F.lit(False) initializer: an empty anchor set must yield an empty
     # result, not a reduce() TypeError (ADVICE r5). Catalyst's
     # BooleanSimplification folds the leading `false OR` away, so the
-    # static PartitionFilters pruning is unchanged for non-empty probes.
+    # pushed scan filter is unchanged for non-empty probes.
     cond = reduce(
         or_,
         [
@@ -1046,8 +882,7 @@ def lsh_index_probe(
         ],
         F.lit(False),
     )
-    if where is not None:
-        idx = idx.filter(where)
+    idx = scan if where is None else scan.filter(where)
     right = idx.filter(cond).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__vb"),
@@ -1226,75 +1061,6 @@ def _ivf_assign(
     )
 
 
-def ivf_index_write(
-    emb: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_src: DataFrame | None = None,
-) -> None:
-    """Persist the deterministic-IVF index: assign every corpus vector
-    to its argmax-cosine cell against the hash-seeded centroids (the
-    ivf_topk_det device) and write parquet PARTITIONED BY cell — the
-    inverted file on disk. Probes then scan only their n_probe cell
-    directories.
-
-    The centroid table is ALSO persisted, under ``path/_centroids``
-    (underscore-prefixed: invisible to the index's partition
-    discovery, like _SUCCESS): appends MUST assign new vectors against
-    the centroids frozen at build time — re-deriving them from a grown
-    corpus would silently re-cell the index (VERDICT r6 #8).
-    ``centroid_src`` lets a rebuild freeze centroids from a different
-    frame (e.g. the original base corpus) than the rows it indexes."""
-    from uts_spark.sources.sinks import write_partitioned
-
-    cents = _ivf_centroids(centroid_src or emb, n_cells, id_col, vec_col)
-    assigned = _ivf_assign(emb, cents, id_col, vec_col)
-    write_partitioned(assigned, path, ["cell"], cluster=True)
-    import os
-
-    cents.write.mode("overwrite").parquet(os.path.join(path, "_centroids"))
-    from uts_spark.functions.dedup import _index_data_files, index_history_append
-
-    index_history_append(path, 0, _index_data_files(path, ("cell=*",)))
-
-
-def ivf_index_append(
-    spark,
-    emb_batch: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Fold new vectors into the persisted IVF index WITHOUT a rebuild
-    (VERDICT r6 #8): assign the batch against the index's own FROZEN
-    centroids (path/_centroids) and parquet-append the rows into their
-    cell partitions. Cost is batch-sized (batch x n_cells scoring + a
-    cells-wide append); the caller bumps its manifest fingerprint chain
-    afterwards, exactly like dedup.minhash_index_append.
-
-    RE-CLUSTER POLICY (VERDICT r7 #4 — frozen centroids trade recall
-    under distribution drift, silently): run :func:`ivf_index_fit` on
-    each batch and compare against the build-time corpus fit. Measured
-    on the drift ladder (similarity_ann_append_drift_eval /
-    SCALE.md drift table): a batch at fit ratio >= ~0.85 of the build
-    fit costs ~0 recall; at ratio ~0.80 the appended index is already
-    -0.13 recall@10 vs a fresh rebuild. Re-cluster — ivf_index_write
-    over the full corpus with fresh centroids + a manifest bump — when
-    the ratio falls below 0.82 (the monitor query's flag) or when
-    cumulative appended volume exceeds the base build size."""
-    import os
-
-    from uts_spark.sources.sinks import write_partitioned
-
-    # no config to validate: the cell structure IS the frozen centroid
-    # table loaded here, so an append can't disagree with the index
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
-    assigned = _ivf_assign(emb_batch, cents, id_col, vec_col)
-    write_partitioned(assigned, path, ["cell"], mode="append", cluster=True)
-
-
 FIT_SCALE = 10**9  # snap grid for quantizer-fit stats (order-independent)
 
 
@@ -1332,382 +1098,17 @@ def ivf_fit_stat(
     )
 
 
-def ivf_index_fit_ints(
-    spark,
-    emb_batch: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[int, int]:
-    """The drift monitor's EXACT form: (sum of snapped per-vector
-    fits, vector count) against the index's frozen centroids — two
-    longs, so tick records and threshold comparisons are integer
-    arithmetic end-to-end (the closed control loop stores these on
-    the history line and flags via cross-multiplication, never a
-    float compare)."""
-    import os
-
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
-    row = (
-        ivf_fit_stat(emb_batch, cents, id_col, vec_col)
-        .agg(
-            F.sum("fit_n").alias("s"), F.count(F.lit(1)).alias("n")
-        )
-        .collect()[0]
-    )
-    return (int(row["s"]) if row["n"] else 0, int(row["n"]))
-
-
-def ivf_index_fit(
-    spark,
-    emb_batch: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> float:
-    """Service-side drift monitor: mean quantizer fit of a batch
-    against the index's FROZEN centroids (path/_centroids). Call on
-    each append batch and compare against the build-time corpus fit —
-    the measured re-cluster policy lives in ivf_index_append's
-    docstring. Returns a driver scalar (it IS a monitor stat: one
-    number per tick, never corpus-shaped)."""
-    s, n = ivf_index_fit_ints(spark, emb_batch, path, id_col, vec_col)
-    return (s / n) / FIT_SCALE if n else float("nan")
-
-
-_FIT_REF_NAME = "_FIT_REF.json"
-
-
-def ivf_fit_ref_write(path: str, fit_sum: int, fit_n: int) -> None:
-    """Persist the monitor's REFERENCE fit (the build-time corpus fit
-    as exact integers) beside the index — the denominator of the
-    re-cluster flag. Written at build and refreshed by the corrective
-    recluster; the drift policy is meaningless without a durable
-    reference (a restarted service must not re-baseline on whatever
-    drifted batch it sees first)."""
-    import json
-    import os
-
-    with open(os.path.join(path, _FIT_REF_NAME), "w") as fh:
-        json.dump({"fit_sum": int(fit_sum), "fit_n": int(fit_n)}, fh)
-
-
-def ivf_fit_ref_read(path: str) -> tuple[int, int] | None:
-    import json
-    import os
-
-    p = os.path.join(path, _FIT_REF_NAME)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        d = json.load(fh)
-    return int(d["fit_sum"]), int(d["fit_n"])
-
-
 RECLUSTER_MILLI = 820  # re-cluster below 0.82 x reference fit (measured r8)
 
 
-def ivf_index_ingest_tick(
-    spark,
-    emb_batch: DataFrame,
-    path: str,
-    batch_id: int,
-    recluster_milli: int = RECLUSTER_MILLI,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """One CLOSED-LOOP micro-batch of the vector ingest service
-    (VERDICT r8 #3 — round 8 shipped the monitor and the corrective
-    verb but never wired them into the ingest; the policy lived in
-    docstrings). Per tick, under the caller's pending marker:
-
-    1. MEASURE first: the batch's quantizer fit against the CURRENT
-       frozen centroids (exact integers; measuring after the append
-       would dilute the signal with the batch's own effect on nothing
-       — fit is centroid-relative, so order only matters for clarity);
-    2. APPEND exactly-once (epoch-keyed staged publish), recording
-       (fit_sum, fit_n) on the tick's history line — the stat is part
-       of the index's durable record, inspectable as time travel;
-    3. ACT when the measured flag fires — fit_sum * ref_n * 1000 <
-       recluster_milli * ref_sum * fit_n, all longs (the 0.82
-       threshold sits between the measured 0.85 plateau and 0.80
-       first-decay, SCALE.md round 8) — by re-clustering over the
-       index's OWN current contents (the index stores the vectors;
-       no external corpus handle needed), carrying the version
-       history forward with a reset line and refreshing the fit
-       reference to the post-recluster corpus fit.
-
-    Returns {"fit_sum", "fit_n", "reclustered"}. A missing fit
-    reference (index predates the loop) records the stat but never
-    flags — monitoring degrades gracefully, it does not guess.
-
-    KNOWN SEAM (epoch-keyed idempotency): a tick whose flag fires
-    reclusters, which bumps the index epoch — so if the STREAM crashes
-    after the recluster but before its checkpoint commits, the
-    replayed batch publishes under the NEW epoch and double-folds
-    (its rows are already inside the rebuilt index). The query-level
-    pending-marker tick guards this today (a torn stream rebuilds);
-    the snapshot family closes it structurally with STREAM-ID-keyed
-    commit keys that survive rewrites (vindex._batch_key /
-    ivf_vindex_ingest_tick) — one more reason index services should
-    sit on the manifest protocol."""
-    import os
-
-    fit_sum, fit_n = ivf_index_fit_ints(
-        spark, emb_batch, path, id_col, vec_col
-    )
-    from uts_spark.functions.dedup import (
-        _index_history_record_batch,
-        index_epoch,
-    )
-    from uts_spark.sources.sinks import staged_idempotent_append
-
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
-    assigned = _ivf_assign(emb_batch, cents, id_col, vec_col)
-    published = staged_idempotent_append(
-        assigned, path, ["cell"], batch_id, epoch=index_epoch(path)
-    )
-    _index_history_record_batch(
-        path, batch_id, published, fit_sum=fit_sum, fit_n=fit_n
-    )
-
-    ref = ivf_fit_ref_read(path)
-    flag = (
-        ref is not None
-        and fit_n > 0
-        and fit_sum * ref[1] * 1000 < recluster_milli * ref[0] * fit_n
-    )
-    if flag:
-        emb_full = spark.read.parquet(path).select(id_col, vec_col)
-        # the service must not hold a lazy plan over files the swap is
-        # about to replace
-        emb_full = emb_full.localCheckpoint(eager=True)
-        ivf_index_recluster(
-            spark, emb_full, path, n_cells=n_cells,
-            id_col=id_col, vec_col=vec_col,
-        )
-        new_sum, new_n = ivf_index_fit_ints(
-            spark, emb_full, path, id_col, vec_col
-        )
-        ivf_fit_ref_write(path, new_sum, new_n)
-    return {"fit_sum": fit_sum, "fit_n": fit_n, "reclustered": bool(flag)}
-
-
-def ivf_index_append_idempotent(
-    spark,
-    emb_batch: DataFrame,
-    path: str,
-    batch_id: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """EXACTLY-ONCE micro-batch vector append for the ANN streaming
-    ingest (the IVF sibling of dedup.minhash_index_append_idempotent):
-    assign the batch against the index's FROZEN centroids, then
-    publish through the shared staged-append kernel
-    (sinks.staged_idempotent_append) — a micro-batch replayed after a
-    mid-epoch crash sweeps its own torn publish and converges to the
-    identical physical index. Same batch-shaped cost as
-    ivf_index_append plus renames."""
-    import os
-
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
-    assigned = _ivf_assign(emb_batch, cents, id_col, vec_col)
-    from uts_spark.functions.dedup import (
-        _index_history_record_batch,
-        index_epoch,
-    )
-    from uts_spark.sources.sinks import staged_idempotent_append
-
-    published = staged_idempotent_append(
-        assigned, path, ["cell"], batch_id, epoch=index_epoch(path)
-    )
-    _index_history_record_batch(path, batch_id, published)
-
-
-def ivf_index_recluster(
-    spark,
-    emb_full: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> float:
-    """The RE-CLUSTER verb the drift policy triggers (see
-    ivf_index_append): rebuild the index over the full current corpus
-    with FRESH centroids derived from it — the corrective action when
-    ivf_index_fit reports an append batch below the 0.82 fit ratio or
-    appended volume has outgrown the base build. Never-a-mix at the
-    directory level via a tmp-build + two-rename swap — a reader that
-    OPENS the path sees whole old or whole new files, but there IS a
-    brief window between the two renames where the path does not
-    exist and an unlucky open fails with not-found (ADVICE r8: a
-    single-writer tick tolerates the retry; a multi-writer deployment
-    commits via a versioned manifest pointer instead,
-    sources/versioned.py); the caller bumps the manifest fingerprint
-    afterwards like any other tick. The prior VERSION HISTORY is
-    carried forward with a reset line at max(version)+1 (ADVICE r8):
-    a reader holding a pre-recluster pin — including version 0 —
-    raises the designed 'predates the rewrite' error instead of
-    silently resolving onto the rebuilt files. Returns the
-    post-recluster corpus fit (the new build-time reference for
-    the monitor). Cost is one full build — which is the point: the
-    monitor exists so this runs only when the measured recall decay
-    justifies it."""
-    import os
-    import shutil
-
-    tmp = path + "__recluster_tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    ivf_index_write(emb_full, tmp, n_cells=n_cells,
-                    id_col=id_col, vec_col=vec_col)
-    old = path + "__old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(path):
-        os.rename(path, old)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        # restore the old index if the swap's second rename failed
-        if not os.path.exists(path) and os.path.exists(old):
-            os.rename(old, path)
-        raise
-    _carry_history_over_rebuild(path, old, ("cell=*",))
-    shutil.rmtree(old, ignore_errors=True)
-    return ivf_index_fit(spark, emb_full, path,
-                         id_col=id_col, vec_col=vec_col)
-
-
-def _carry_history_over_rebuild(
-    path: str, old: str, parts: tuple[str, ...]
-) -> None:
-    """Continue an index's version-history CHAIN across a rebuild-swap
-    (ADVICE r8): the fresh build under ``path`` starts its own history
-    at version 0, so a reader holding a PRE-rebuild version-0 pin
-    would silently resolve to the NEW build's files — the opposite of
-    the delete/reset contract. When the superseded index (now at
-    ``old``) carried a history, replace the new build's sidecar with
-    prior records + one reset line at max(version)+1 holding the
-    rebuilt census: stale pins raise 'predates the rewrite', and the
-    rebuild occupies the next version like any other rewriting verb.
-
-    The pending MARKER (if the rebuild runs inside a service tick —
-    the drift control loop's mid-stream recluster) also carries over:
-    it marks the tick in progress, and leaving it behind in the
-    superseded directory would let index_tick's final marker removal
-    fail while readers trusted a half-finished tick."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        _PENDING_NAME,
-        _index_data_files,
-        _index_history_rewrite,
-        index_history_versions,
-    )
-
-    pend = os.path.join(old, _PENDING_NAME)
-    if os.path.exists(pend):
-        shutil.copy2(pend, os.path.join(path, _PENDING_NAME))
-    prior = index_history_versions(old)
-    if not prior:
-        return
-    prior.append(
-        {
-            "version": max(r["version"] for r in prior) + 1,
-            "reset": True,
-            "files": _index_data_files(path, parts),
-            "recluster": True,
-        }
-    )
-    _index_history_rewrite(path, prior)
-
-
-def ivf_index_delete(
-    spark,
-    emb_deleted: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """ERASE vectors from the persisted IVF index (VERDICT r7 #1):
-    assign ONLY the deleted vectors against the index's FROZEN
-    centroids (path/_centroids — the same quantizer state every append
-    used, so each deleted id re-locates to exactly the cell its rows
-    live in), then rewrite those cells minus the deleted ids via the
-    shared left-anti kernel. Cost ∝ touched cells (≤ n_cells), never
-    the corpus; the erased-id list stays distributed. Returns rows
-    removed; the caller bumps the manifest fingerprint afterwards."""
-    import os
-
-    from uts_spark.sources.sinks import delete_from_partitioned
-
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
-    located = _ivf_assign(emb_deleted, cents, id_col, vec_col).select(
-        id_col, "cell"
-    )
-    removed = delete_from_partitioned(spark, path, located, ["cell"], id_col)
-    from uts_spark.functions.dedup import (
-        _index_data_files,
-        index_history_append,
-        index_history_versions,
-    )
-
-    recs = index_history_versions(path)
-    if recs:
-        # erasure rewrites cells: older pins become unreadable (reset)
-        index_history_append(
-            path,
-            max(r["version"] for r in recs) + 1,
-            _index_data_files(path, ("cell=*",)),
-            reset=True,
-        )
-    return removed
-
-
-def ivf_index_probe(
-    spark,
-    path: str,
-    anchors: DataFrame,
-    emb_for_centroids: DataFrame | None = None,
-    k: int = 10,
-    n_cells: int = 8,
-    n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    version: int | None = None,
-    scan: DataFrame | None = None,
-    cents: DataFrame | None = None,
-    where: Column | None = None,
-) -> DataFrame:
-    """Probe the persisted IVF index: each anchor ranks the (tiny,
-    recomputed from the same hash seed) centroid table, its n_probe
-    best cells become a STATIC partition filter on the index scan, and
-    candidates rerank exactly. Identical results to ivf_topk_det at the
-    same config (pinned in tests); the anchors' cell list is
-    driver-materialized like the LSH probe — bounded by
-    anchors x n_probe. ``emb_for_centroids=None`` loads the centroids
-    FROZEN at build time from ``path/_centroids`` — the only correct
-    source once the index has been appended to (a grown corpus
-    re-derives different centroids and silently probes wrong cells).
-    ``scan``/``cents`` override the index read and centroid source (the
-    snapshot family passes its manifest-resolved dirs and the manifest's
-    quantizer sidecar — same kernel, snapshot-isolated sources).
-    ``where`` PRE-FILTERS the index rows on metadata columns stored at
-    build time (``meta_cols``): the predicate composes with the cell
-    ``isin`` so both push down to the parquet scan — filtered ANN at
-    the index layer, with candidacy restricted to eligible vectors
-    (plan pinned in tests: PushedFilters carries the predicate)."""
-    if cents is None:
-        if emb_for_centroids is None:
-            import os
-
-            cents = spark.read.parquet(os.path.join(path, "_centroids"))
-        else:
-            cents = _ivf_centroids(emb_for_centroids, n_cells, id_col, vec_col)
+def _ivf_probe_cells(
+    anchors: DataFrame, cents: DataFrame, n_probe: int,
+    id_col: str, vec_col: str,
+) -> tuple[DataFrame, list[int]]:
+    """(anchor_id, __va, cell) rows of each anchor's ``n_probe`` best
+    cells against the frozen centroid table, plus their distinct cell
+    list — driver-materialized on purpose (bounded by anchors x
+    n_probe), so it reaches the index scan as a literal filter."""
     wc = Window.partitionBy(id_col).orderBy(F.desc("__sim"), F.asc("cent_id"))
     probes = (
         anchors.select(id_col, vec_col)
@@ -1722,16 +1123,31 @@ def ivf_index_probe(
         )
     )
     pdf = probes.select("cell").distinct().toPandas()
-    cells = sorted(int(c) for (c,) in pdf.itertuples(index=False))
-    if scan is None:
-        if version is None:
-            scan = spark.read.parquet(path)
-        else:
-            # version-pinned read (same device as the minhash probe):
-            # the scan sees exactly the file census the history recorded
-            from uts_spark.functions.dedup import index_scan_at
+    return probes, sorted(int(c) for (c,) in pdf.itertuples(index=False))
 
-            scan = index_scan_at(spark, path, version)
+
+def _ivf_index_probe(
+    scan: DataFrame,
+    cents: DataFrame,
+    anchors: DataFrame,
+    k: int = 10,
+    n_probe: int = 3,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    where: Column | None = None,
+) -> DataFrame:
+    """IVF probe over ``scan`` (the snapshot's resolved index rows) with
+    ``cents`` (the centroid table frozen for that snapshot): each
+    anchor's n_probe best cells become a literal ``cell`` filter on the
+    scan, and candidates rerank exactly. Identical results to
+    ivf_topk_det at the same config with the centroids frozen from the
+    build corpus (pinned in tests). ``where`` PRE-FILTERS the index rows
+    on metadata columns stored at build time (``meta_cols``): the
+    predicate composes with the cell ``isin`` so both push down to the
+    parquet scan — filtered ANN at the index layer, with candidacy
+    restricted to eligible vectors (plan pinned in tests: PushedFilters
+    carries the predicate)."""
+    probes, cells = _ivf_probe_cells(anchors, cents, n_probe, id_col, vec_col)
     if where is not None:
         scan = scan.filter(where)
     idx = scan.filter(F.col("cell").isin(cells)).select(
@@ -1755,7 +1171,7 @@ def ivf_index_probe(
 # recipe (Jegou et al. 2011, FAISS IVFPQ): coarse IVF cells prune the
 # corpus to n_probe partitions, PQ/ADC scores the survivors from
 # compact codes, and an exact re-rank of the top candidates restores
-# metric fidelity. Both halves already exist (ivf_index_probe,
+# metric fidelity. Both halves already exist (_ivf_index_probe,
 # pq_adc_topk); this composes them without ever scanning the full
 # index.
 
@@ -1835,79 +1251,6 @@ def ivfpq_distortion_stat(
     )
 
 
-def ivfpq_index_distortion(
-    spark,
-    emb_batch: DataFrame,
-    path: str,
-    dim: int,
-    m_sub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> float:
-    """Service-side PQ drift monitor: mean quantization distortion of
-    a batch against the index's FROZEN codebook (path/_codebook).
-    Companion to ivf_index_fit — run both per append tick; re-encode /
-    re-train (rebuild with a fresh codebook) when the batch's
-    distortion materially exceeds the build-time corpus distortion
-    (calibrated threshold in similarity_ann_ivfpq_drift_monitor)."""
-    import os
-
-    cexp = spark.read.parquet(os.path.join(path, "_codebook"))
-    row = (
-        ivfpq_distortion_stat(emb_batch, cexp, dim, m_sub, id_col, vec_col)
-        .agg(F.sum("dist_n").alias("s"), F.count(F.lit(1)).alias("n"))
-        .collect()[0]
-    )
-    return (row["s"] / row["n"]) / SCALE if row["n"] else float("nan")
-
-
-def ivfpq_index_write(
-    emb: DataFrame,
-    path: str,
-    dim: int,
-    n_cells: int = 8,
-    m_sub: int = 8,
-    n_cent: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_src: DataFrame | None = None,
-) -> None:
-    """Persist the COMPOSED IVF-PQ index: every corpus vector stored
-    with its coarse cell (ivf_index_write's hash-seeded assignment) AND
-    its PQ code array, parquet-partitioned by cell. Codes are computed
-    ONCE here, at build time — the first probe implementation encoded
-    the pruned scan per query and the encode dominated its wall
-    (measured 12.2 s vs 4.0 s plain-IVF at 200k vectors; SCALE.md
-    "Round 6: ANN probe A/B"). 8 int codes/vector is the at-rest cost
-    that buys ADC scoring without touching raw vectors."""
-    from uts_spark.sources.sinks import write_partitioned
-
-    if dim % m_sub != 0:
-        raise ValueError(
-            f"ivfpq_index_write: dim ({dim}) must be divisible by m_sub ({m_sub})"
-        )
-    src = centroid_src if centroid_src is not None else emb
-    cents = _ivf_centroids(src, n_cells, id_col, vec_col)
-    assigned = _ivf_assign(emb, cents, id_col, vec_col)
-    cexp = _pq_codebook_exp(src, dim, m_sub, n_cent, id_col, vec_col)
-    codes = _ivfpq_codes(emb, cexp, dim, m_sub, id_col, vec_col)
-    rows = assigned.join(codes, assigned[id_col] == codes["__vid"]).select(
-        id_col, vec_col, "codes", "cell"
-    )
-    write_partitioned(rows, path, ["cell"], cluster=True)
-    # freeze BOTH quantizers next to the data (underscore dirs — skipped
-    # by the index's partition discovery): appends must assign against
-    # the coarse centroids AND encode against the PQ codebook of build
-    # time, or codes stop being comparable across the index
-    import os
-
-    cents.write.mode("overwrite").parquet(os.path.join(path, "_centroids"))
-    cexp.write.mode("overwrite").parquet(os.path.join(path, "_codebook"))
-    from uts_spark.functions.dedup import _index_data_files, index_history_append
-
-    index_history_append(path, 0, _index_data_files(path, ("cell=*",)))
-
-
 def _ivfpq_codes(
     emb: DataFrame, cexp: DataFrame, dim: int, m_sub: int,
     id_col: str, vec_col: str,
@@ -1941,202 +1284,28 @@ def _ivfpq_codes(
     )
 
 
-def ivfpq_index_append(
-    spark,
-    emb_batch: DataFrame,
-    path: str,
-    dim: int,
-    m_sub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Fold new vectors into the persisted IVF-PQ index: assign against
-    the FROZEN coarse centroids and encode against the FROZEN PQ
-    codebook (both persisted at build under the index), then
-    parquet-append into the cell partitions. Batch-sized; completes
-    maintenance across all four persisted index families (MinHash
-    bands, LSH buckets, IVF cells, IVF-PQ cells+codes).
-
-    Drift exposure is DOUBLE here — frozen centroids mis-cell drifted
-    batches AND the frozen codebook quantizes them badly, so ADC
-    scores degrade on top of cell pruning. Monitor BOTH per tick:
-    ivf_index_fit against _centroids (re-cluster below the measured
-    0.82 fit ratio) and ivfpq_index_distortion against _codebook
-    (re-encode above the measured 1.3x distortion ratio — the louder
-    signal: measured 0.999/1.65/16.6 over the drift ladder vs the
-    cosine fit's 0.85/0.80/0.64, because distortion grows with the
-    squared shift while top-1 cosine saturates; SCALE.md round-8
-    distortion table). Rebuild also when appended volume exceeds the
-    base build."""
-    import os
-
-    from uts_spark.sources.sinks import write_partitioned
-
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
-    cexp = spark.read.parquet(os.path.join(path, "_codebook"))
-    # the subspace geometry is NOT embodied in the loaded tables'
-    # shapes alone — validate (dim, m_sub) against the frozen codebook
-    # so a mismatched append fails loudly instead of writing codes that
-    # ADC-score against the wrong entries
-    srow = cexp.select(
-        F.max("m").alias("mx"), F.size(F.first("csub")).alias("d")
-    ).first()
-    if (srow["mx"] + 1) != m_sub or srow["d"] * m_sub != dim:
-        raise ValueError(
-            f"ivfpq_index_append: index codebook has m_sub={srow['mx'] + 1}, "
-            f"d_sub={srow['d']} — append asked dim={dim}, m_sub={m_sub}"
-        )
-    assigned = _ivf_assign(emb_batch, cents, id_col, vec_col)
-    codes = _ivfpq_codes(emb_batch, cexp, dim, m_sub, id_col, vec_col)
-    rows = assigned.join(codes, assigned[id_col] == codes["__vid"]).select(
-        id_col, vec_col, "codes", "cell"
-    )
-    write_partitioned(rows, path, ["cell"], mode="append", cluster=True)
-
-
-def ivfpq_index_append_idempotent(
-    spark,
-    emb_batch: DataFrame,
-    path: str,
-    dim: int,
-    batch_id: int,
-    m_sub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """EXACTLY-ONCE micro-batch append for the IVF-PQ index: assign
-    against the FROZEN coarse centroids, encode against the FROZEN PQ
-    codebook (geometry validated like ivfpq_index_append), publish
-    through the shared staged kernel (batch-id-keyed names, replayed
-    epochs converge), record the tick in the version history.
-    Completes the exactly-once story across all four persisted
-    families."""
-    import os
-
-    from uts_spark.functions.dedup import (
-        _index_history_record_batch,
-        index_epoch,
-    )
-    from uts_spark.sources.sinks import staged_idempotent_append
-
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
-    cexp = spark.read.parquet(os.path.join(path, "_codebook"))
-    srow = cexp.select(
-        F.max("m").alias("mx"), F.size(F.first("csub")).alias("d")
-    ).first()
-    if (srow["mx"] + 1) != m_sub or srow["d"] * m_sub != dim:
-        raise ValueError(
-            f"ivfpq_index_append_idempotent: index codebook has "
-            f"m_sub={srow['mx'] + 1}, d_sub={srow['d']} — append asked "
-            f"dim={dim}, m_sub={m_sub}"
-        )
-    assigned = _ivf_assign(emb_batch, cents, id_col, vec_col)
-    codes = _ivfpq_codes(emb_batch, cexp, dim, m_sub, id_col, vec_col)
-    rows = assigned.join(codes, assigned[id_col] == codes["__vid"]).select(
-        id_col, vec_col, "codes", "cell"
-    )
-    published = staged_idempotent_append(
-        rows, path, ["cell"], batch_id, epoch=index_epoch(path)
-    )
-    _index_history_record_batch(path, batch_id, published)
-
-
-def ivfpq_index_recluster(
-    spark,
-    emb_full: DataFrame,
-    path: str,
-    dim: int,
-    n_cells: int = 8,
-    m_sub: int = 8,
-    n_cent: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> float:
-    """The IVF-PQ corrective verb — re-cluster AND re-encode: rebuild
-    with fresh coarse centroids and a fresh PQ codebook derived from
-    the current corpus (the action the distortion monitor's 1.3x flag
-    or the fit monitor's 0.82 flag triggers — whichever quantizer
-    drifted). Same tmp-build + two-rename swap as ivf_index_recluster
-    (whole-old-or-whole-new files, with the same brief no-path window
-    between renames — see that docstring); the prior version history
-    is carried forward with a reset line so pre-recluster pins raise
-    instead of silently resolving onto the rebuilt files (ADVICE r8).
-    Returns the post-rebuild corpus distortion
-    (the new build-time reference for ivfpq_index_distortion)."""
-    import os
-    import shutil
-
-    tmp = path + "__recluster_tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    ivfpq_index_write(
-        emb_full, tmp, dim=dim, n_cells=n_cells, m_sub=m_sub,
-        n_cent=n_cent, id_col=id_col, vec_col=vec_col,
-    )
-    old = path + "__old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(path):
-        os.rename(path, old)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        if not os.path.exists(path) and os.path.exists(old):
-            os.rename(old, path)
-        raise
-    _carry_history_over_rebuild(path, old, ("cell=*",))
-    shutil.rmtree(old, ignore_errors=True)
-    return ivfpq_index_distortion(
-        spark, emb_full, path, dim=dim, m_sub=m_sub,
-        id_col=id_col, vec_col=vec_col,
-    )
-
-
-def ivfpq_index_delete(
-    spark,
-    emb_deleted: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """ERASE vectors from the persisted IVF-PQ index (VERDICT r7 #1 —
-    the PQ codes are the most privacy-sensitive artifact here: a
-    deleted document's compressed embedding remains reconstructible
-    from its code array until this verb runs). Cell location is the
-    frozen-centroid assignment — identical to the IVF lane, because
-    the PQ codes ride in the SAME rows and are erased with them; the
-    codebook under path/_codebook describes subspace geometry only and
-    holds no per-document state, so it is untouched. Cost ∝ touched
-    cells; returns rows removed."""
-    return ivf_index_delete(spark, emb_deleted, path, id_col, vec_col)
-
-
-def ivfpq_index_probe(
-    spark,
-    path: str,
+def _ivfpq_index_probe(
+    scan: DataFrame,
+    cents: DataFrame,
+    cexp: DataFrame,
     anchors: DataFrame,
-    emb_for_centroids: DataFrame | None = None,
-    dim: int = 64,
+    dim: int,
     k: int = 10,
-    n_cells: int = 8,
     n_probe: int = 3,
     m_sub: int = 8,
-    n_cent: int = 16,
     rerank: int = 40,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    version: int | None = None,
-    scan: DataFrame | None = None,
-    cents: DataFrame | None = None,
-    cexp: DataFrame | None = None,
     where: Column | None = None,
 ) -> DataFrame:
-    """IVF-PQ with exact re-rank over the persisted COMPOSED index
-    (:func:`ivfpq_index_write`):
+    """IVF-PQ with exact re-rank over ``scan`` (the snapshot's resolved
+    rows of the COMPOSED index, each carrying its cell and PQ code
+    array) with ``cents``/``cexp`` (the coarse centroids and exploded
+    PQ codebook frozen for that snapshot):
 
-    1. each anchor ranks the (recomputed, hash-seeded) coarse centroids
-       and probes its ``n_probe`` best cells — a STATIC partition
-       filter on the index scan, identical pruning to ivf_index_probe;
+    1. each anchor ranks the coarse centroids and probes its
+       ``n_probe`` best cells — a literal ``cell`` filter on the scan,
+       identical pruning to _ivf_index_probe;
     2. survivors are ADC-scored from their STORED code arrays against
        the broadcast per-anchor lookup table (integer-snapped BIGINT
        sums — the pq_adc_topk kernel, bit-reproducible in SQL); no
@@ -2157,42 +1326,23 @@ def ivfpq_index_probe(
         raise ValueError(
             f"ivfpq_index_probe: dim ({dim}) must be divisible by m_sub ({m_sub})"
         )
+    # validate (dim, m_sub) against the codebook (ADVICE r7): probing
+    # with another dimensionality mis-slices the anchor subvectors
+    # (F.slice past array end returns SHORT arrays) and ADC-scores them
+    # against the wrong entries with no error — fail loudly instead
+    srow = cexp.select(
+        F.max("m").alias("mx"), F.size(F.first("csub")).alias("d")
+    ).first()
+    if (srow["mx"] + 1) != m_sub or srow["d"] * m_sub != dim:
+        raise ValueError(
+            f"ivfpq_index_probe: index codebook has "
+            f"m_sub={srow['mx'] + 1}, d_sub={srow['d']} — probe asked "
+            f"dim={dim}, m_sub={m_sub}"
+        )
     d_sub = dim // m_sub
 
-    # 1. coarse probes (same device as ivf_index_probe);
-    # emb_for_centroids=None loads the quantizers FROZEN at build —
-    # mandatory once the index has been appended to
-    import os as _os
-
-    if cents is None:
-        if emb_for_centroids is None:
-            cents = spark.read.parquet(_os.path.join(path, "_centroids"))
-        else:
-            cents = _ivf_centroids(emb_for_centroids, n_cells, id_col, vec_col)
-    wc = Window.partitionBy(id_col).orderBy(F.desc("__sim"), F.asc("cent_id"))
-    probes = (
-        anchors.select(id_col, vec_col)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("__sim", cosine_stable(vec_col, "__cv"))
-        .withColumn("__r", F.row_number().over(wc))
-        .filter(F.col("__r") <= n_probe)
-        .select(
-            F.col(id_col).alias("anchor_id"),
-            F.col(vec_col).alias("__va"),
-            F.col("cent_id").alias("cell"),
-        )
-    )
-    pdf = probes.select("cell").distinct().toPandas()
-    cells = sorted(int(c) for (c,) in pdf.itertuples(index=False))
-    if scan is None:
-        if version is None:
-            scan = spark.read.parquet(path)
-        else:
-            # version-pinned read (same device as the minhash probe):
-            # the scan sees exactly the file census the history recorded
-            from uts_spark.functions.dedup import index_scan_at
-
-            scan = index_scan_at(spark, path, version)
+    # 1. coarse probes (same device as _ivf_index_probe)
+    probes, cells = _ivf_probe_cells(anchors, cents, n_probe, id_col, vec_col)
     if where is not None:
         # metadata pre-filter (meta_cols stored at build): composes
         # with the cell isin so both push down to the parquet scan —
@@ -2213,39 +1363,6 @@ def ivfpq_index_probe(
     )
 
     # 2. broadcast per-anchor ADC LUTs against the STORED codes
-    if cexp is not None:
-        # explicit codebook (the snapshot family's manifest sidecar):
-        # validate geometry exactly like the frozen-load path below
-        srow = cexp.select(
-            F.max("m").alias("mx"), F.size(F.first("csub")).alias("d")
-        ).first()
-        if (srow["mx"] + 1) != m_sub or srow["d"] * m_sub != dim:
-            raise ValueError(
-                f"ivfpq_index_probe: index codebook has "
-                f"m_sub={srow['mx'] + 1}, d_sub={srow['d']} — probe asked "
-                f"dim={dim}, m_sub={m_sub}"
-            )
-    elif emb_for_centroids is None:
-        cexp = spark.read.parquet(_os.path.join(path, "_codebook"))
-        # validate (dim, m_sub) against the frozen codebook exactly as
-        # the append lane does (ADVICE r7): `dim` defaults to 64, and
-        # probing an index built at another dimensionality mis-slices
-        # the anchor subvectors (F.slice past array end returns SHORT
-        # arrays) and ADC-scores them against the wrong entries with
-        # no error — fail loudly instead
-        srow = cexp.select(
-            F.max("m").alias("mx"), F.size(F.first("csub")).alias("d")
-        ).first()
-        if (srow["mx"] + 1) != m_sub or srow["d"] * m_sub != dim:
-            raise ValueError(
-                f"ivfpq_index_probe: index codebook has "
-                f"m_sub={srow['mx'] + 1}, d_sub={srow['d']} — probe asked "
-                f"dim={dim}, m_sub={m_sub}"
-            )
-    else:
-        cexp = _pq_codebook_exp(
-            emb_for_centroids, dim, m_sub, n_cent, id_col, vec_col
-        )
     asubs = F.array(*[
         F.slice(F.col(vec_col), m * d_sub + 1, d_sub) for m in range(m_sub)
     ])

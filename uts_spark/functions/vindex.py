@@ -29,9 +29,8 @@ The four families and what each adds to the shared kernel:
   SIDECAR — an immutable parquet dir under ``path/quant/`` whose path
   rides on every manifest (``centroids_dir``). Time travel therefore
   pins the QUANTIZER too: a version written before a recluster reads
-  its own centroids, closing the marker family's seam where recluster
-  restarts history and stale pins silently resolve to the new build
-  (ADVICE r8, similarity.py:1253);
+  its own centroids — a recluster never restarts history, so a stale
+  pin cannot silently resolve to the new build (ADVICE r8);
 - **IVF-PQ cells+codes**: two sidecars (``centroids_dir`` +
   ``codebook_dir``); codes in the data rows are only comparable against
   the codebook of their version's manifest, which is exactly what the
@@ -48,8 +47,7 @@ tests/test_llm_ops.py::test_ivf_vindex_append_reencodes_after_recluster.
 
 Cost shapes (the 100 TB contract):
 
-- build: one corpus-sized sketch/assign + write — same as the marker
-  family;
+- build: one corpus-sized sketch/assign + write;
 - append: batch-sized delta dir + an O(1) manifest commit (the Iceberg
   fast-append) — the table is NEVER rewritten;
 - delete: PRUNED copy-on-write — per-dir (min_id, max_id) manifest
@@ -59,8 +57,9 @@ Cost shapes (the 100 TB contract):
 - compact / recluster: rewrite the union into one clustered dir — the
   operation is BY NATURE table-sized (recluster additionally writes a
   fresh quantizer sidecar);
-- probe: manifest-resolved read + the SAME candidate/verify kernels as
-  the marker families (``scan=``/``cents=``/``cexp=`` injection).
+- probe: manifest-resolved read fed to the family's candidate/verify
+  kernel (similarity._lsh_index_probe / _ivf_index_probe /
+  _ivfpq_index_probe, dedup.minhash_index_probe's ``scan=``).
   Pruning note: snapshot dirs are not directory-partitioned; rows are
   cluster-SORTED on write instead, so parquet row-group min/max stats
   prune the selective probe scan — the same file-stats pruning a
@@ -896,11 +895,10 @@ def lsh_vindex_delete(
     fingerprint: str = "",
     id_col: str = "vec_id",
 ) -> int:
-    """Erasure through the shared pruned kernel. Unlike the marker
-    family's delete (which re-buckets the deleted VECTORS to locate
-    their partitions), the snapshot kernel prunes on manifest id-range
-    stats directly — the caller passes bare ids, no embeddings needed,
-    which is exactly the shape a GDPR request arrives in."""
+    """Erasure through the shared pruned kernel: it prunes on manifest
+    id-range stats directly, so the caller passes bare ids — no
+    embeddings needed to re-bucket the deleted vectors, which is
+    exactly the shape a GDPR request arrives in."""
     pm = _current_manifest(path)
     if pm.get("family") != "lsh":
         raise ValueError(
@@ -945,14 +943,13 @@ def lsh_vindex_probe(
     with the index it scans. ``where`` pre-filters on metadata columns
     stored at build (``meta_cols``), pushed into the bucket-pruned
     scan — index-layer filtered ANN."""
-    from uts_spark.functions.similarity import lsh_index_probe
+    from uts_spark.functions.similarity import _lsh_index_probe
 
     m = _manifest_at(path, version)
-    scan = read_version(spark, path, version)
-    return lsh_index_probe(
-        spark, path, anchors, dim=m["dim"], k=k,
+    return _lsh_index_probe(
+        read_version(spark, path, version), anchors, dim=m["dim"], k=k,
         planes=m["planes"], tables=m["tables"],
-        id_col=id_col, vec_col=vec_col, scan=scan, where=where,
+        id_col=id_col, vec_col=vec_col, where=where,
     )
 
 
@@ -1212,12 +1209,10 @@ def ivf_vindex_recluster(
     """The corrective verb, snapshot-shaped: derive FRESH centroids
     from the current survivor corpus (raw vectors ride in the rows),
     freeze them as a NEW quantizer sidecar, re-assign every row, and
-    CAS-commit rows + pointer as one ``recluster`` version. Closes the
-    marker family's two seams in one move (ADVICE r8,
-    similarity.py:1253): history is never reset — a pre-recluster pin
-    reads its own rows AND its own centroids — and there is no
-    two-rename swap window because readers resolve manifests, not
-    directory names."""
+    CAS-commit rows + pointer as one ``recluster`` version. History is
+    never reset — a pre-recluster pin reads its own rows AND its own
+    centroids (ADVICE r8) — and there is no two-rename swap window
+    because readers resolve manifests, not directory names."""
     from uts_spark.functions.similarity import _ivf_assign, _ivf_centroids
 
     def meta_fn(pm, cur):
@@ -1267,9 +1262,8 @@ def ivf_vindex_ingest_tick(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> dict:
-    """One CLOSED-LOOP micro-batch of the SNAPSHOT vector ingest — the
-    vindex port of similarity.ivf_index_ingest_tick, with the whole
-    monitor state living ON the manifests instead of sidecar files:
+    """One CLOSED-LOOP micro-batch of the SNAPSHOT vector ingest, with
+    the whole monitor state living ON the manifests:
 
     1. APPEND exactly-once with ``record_fit`` — the batch's quantizer
        fit (exact ints against the centroids the delta was encoded
@@ -1352,15 +1346,13 @@ def ivf_vindex_probe(
     correct across any number of reclusters in between. ``where``
     pre-filters on metadata columns stored at build (``meta_cols``),
     pushed into the cell-pruned scan — index-layer filtered ANN."""
-    from uts_spark.functions.similarity import ivf_index_probe
+    from uts_spark.functions.similarity import _ivf_index_probe
 
     m = _manifest_at(path, version)
-    cents = _read_pq(spark, m["centroids_dir"])
-    scan = read_version(spark, path, version)
-    return ivf_index_probe(
-        spark, path, anchors, None, k=k, n_cells=m["n_cells"],
-        n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-        scan=scan, cents=cents, where=where,
+    return _ivf_index_probe(
+        read_version(spark, path, version),
+        _read_pq(spark, m["centroids_dir"]), anchors, k=k,
+        n_probe=n_probe, id_col=id_col, vec_col=vec_col, where=where,
     )
 
 
@@ -1396,7 +1388,7 @@ def _ivfpq_dist_ints_from_dir(
     array already names (the argmin the encoder just took), so one
     broadcast join on (m, code) replaces the |rows| x n_cent scoring
     pass of similarity.ivfpq_distortion_stat; same snap grid, so the
-    integers are interchangeable with the marker monitor's."""
+    integers are interchangeable with that stat's."""
     from uts_spark.functions.similarity import _pq_d2n
 
     d_sub = dim // m_sub
@@ -1774,17 +1766,15 @@ def ivfpq_vindex_probe(
     metadata columns stored at build (``meta_cols``), pushed into the
     cell-pruned scan BEFORE ADC scoring — the shortlist is drawn from
     eligible vectors only."""
-    from uts_spark.functions.similarity import ivfpq_index_probe
+    from uts_spark.functions.similarity import _ivfpq_index_probe
 
     m = _manifest_at(path, version)
-    cents = _read_pq(spark, m["centroids_dir"])
-    cexp = _read_pq(spark, m["codebook_dir"])
-    scan = read_version(spark, path, version)
-    return ivfpq_index_probe(
-        spark, path, anchors, None, dim=m["dim"], k=k,
-        n_cells=m["n_cells"], n_probe=n_probe, m_sub=m["m_sub"],
-        n_cent=m["n_cent"], rerank=rerank, id_col=id_col, vec_col=vec_col,
-        scan=scan, cents=cents, cexp=cexp, where=where,
+    return _ivfpq_index_probe(
+        read_version(spark, path, version),
+        _read_pq(spark, m["centroids_dir"]),
+        _read_pq(spark, m["codebook_dir"]),
+        anchors, dim=m["dim"], k=k, n_probe=n_probe, m_sub=m["m_sub"],
+        rerank=rerank, id_col=id_col, vec_col=vec_col, where=where,
     )
 
 
@@ -2080,20 +2070,14 @@ def vindex_delete_auto(
 def vindex_migrate(
     spark, src_path: str, dst_path: str, fingerprint: str = ""
 ) -> int:
-    """MIGRATE a marker-protocol index to the snapshot protocol in one
-    commit — services upgrade storage protocols without rebuilding
-    from the corpus (the corpus may be 100 TB; the index is its
-    narrow projection). The source family is inferred from its
-    on-disk shape:
-
-    - ``_centroids`` + ``codes`` column  -> ivfpq (both quantizer
-      sidecars copied into immutable ``quant/`` dirs, pointers on the
-      manifest);
-    - ``_centroids`` only                -> ivf;
-    - (table, bucket) partition grid     -> lsh;
-    - (band, grp) partition grid         -> minhash (config read from
-      the marker ``_INDEX_MANIFEST.json`` — bands/n_grps are not
-      recoverable from the rows alone).
+    """MIGRATE a marker-protocol MinHash index to the snapshot protocol
+    in one commit — services upgrade storage protocols without
+    rebuilding from the corpus (the corpus may be 100 TB; the index is
+    its narrow projection). The source must be a (band, grp) partition
+    grid with its marker ``_INDEX_MANIFEST.json`` (bands/n_grps are not
+    recoverable from the rows alone); the vector families (LSH, IVF,
+    IVF-PQ) exist only on the snapshot protocol, so there is nothing of
+    theirs to migrate.
 
     One clustered rewrite of the live rows into a delta dir + a v0
     manifest commit; the source is left untouched (cutover is the
@@ -2104,107 +2088,44 @@ def vindex_migrate(
     can prove. Returns the committed version (0)."""
     import json
 
-    src_manifest = None
-    mpath = os.path.join(src_path, "_INDEX_MANIFEST.json")
-    if os.path.exists(mpath):
-        with open(mpath) as fh:
-            src_manifest = json.load(fh)
-
     rows = _read_pq(spark, src_path)
     cols = set(rows.columns)
-    has_cents = os.path.isdir(os.path.join(src_path, "_centroids"))
+    if not {"band", "grp"} <= cols:
+        raise ValueError(
+            f"vindex_migrate: {src_path} is not a marker minhash index "
+            f"(columns {sorted(cols)}); only the minhash family has a "
+            "marker protocol to migrate from"
+        )
+    mpath = os.path.join(src_path, "_INDEX_MANIFEST.json")
+    if not os.path.exists(mpath):
+        raise ValueError(
+            f"vindex_migrate: minhash source {src_path} has no "
+            "_INDEX_MANIFEST.json — (n, k, bands, n_grps) are not "
+            "recoverable from the rows"
+        )
+    with open(mpath) as fh:
+        src_manifest = json.load(fh)
 
     # canonical column types: the marker layout stores its partition
     # keys as DIRECTORY names, which Spark re-infers as int on read —
     # but native snapshot deltas store them as physical columns with
-    # the types the row builders produce (grp/bucket/cell are LONG).
-    # Without the cast, the first post-migration append writes a long
-    # next to the migrated int and the merged scan dies with a parquet
-    # type mismatch.
-    def canon(df, types: dict):
-        return df.select(*[
-            F.col(c).cast(types[c]).alias(c) if c in types else F.col(c)
-            for c in df.columns
-        ])
-
-    if has_cents and "codes" in cols:
-        cexp = _read_pq(spark, os.path.join(src_path, "_codebook"))
-        srow = cexp.select(
-            F.max("m").alias("mx"), F.size(F.first("csub")).alias("d")
-        ).first()
-        m_sub = int(srow["mx"]) + 1
-        dim = int(srow["d"]) * m_sub
-        cents = _read_pq(spark, os.path.join(src_path, "_centroids"))
-        n_cells = cents.count()
-        n_cent = cexp.filter(F.col("m") == 0).count()
-        cdir = _write_quant_dir(cents, dst_path)
-        bdir = _write_quant_dir(cexp, dst_path)
-        rows = canon(rows, {"cell": "long"})
-        ddir = _write_delta_dir(_cluster(rows, "cell"), dst_path, _IVF_SORT)
-        n_rows, stats = _count_and_stats(spark, ddir, "vec_id")
-        meta = {
-            "family": "ivfpq", "fingerprint": fingerprint,
-            "n_cells": n_cells, "dim": dim, "m_sub": m_sub,
-            "n_cent": n_cent,
-            "centroids_dir": cdir, "codebook_dir": bdir,
-            "aux_dirs": [cdir, bdir],
-            "dir_stats": {ddir: stats}, "migrated_from": src_path,
-        }
-    elif has_cents:
-        cents = _read_pq(spark, os.path.join(src_path, "_centroids"))
-        n_cells = cents.count()
-        cdir = _write_quant_dir(cents, dst_path)
-        rows = canon(rows, {"cell": "long"})
-        ddir = _write_delta_dir(_cluster(rows, "cell"), dst_path, _IVF_SORT)
-        n_rows, stats = _count_and_stats(spark, ddir, "vec_id")
-        fit = _ivf_fit_ints_from_dir(spark, ddir, cdir, "vec_id", "embedding")
-        meta = {
-            "family": "ivf", "fingerprint": fingerprint,
-            "n_cells": n_cells, "centroids_dir": cdir, "aux_dirs": [cdir],
-            "fit_ref": list(fit),
-            "dir_stats": {ddir: stats}, "migrated_from": src_path,
-        }
-    elif {"table", "bucket"} <= cols:
-        if src_manifest is None:
-            raise ValueError(
-                f"vindex_migrate: LSH source {src_path} has no "
-                "_INDEX_MANIFEST.json — (dim, planes, tables) are not "
-                "recoverable from the rows"
-            )
-        rows = canon(rows, {"table": "int", "bucket": "long"})
-        ddir = _write_delta_dir(
-            _cluster(rows, "table", "bucket"), dst_path, _LSH_SORT
-        )
-        n_rows, stats = _count_and_stats(spark, ddir, "vec_id")
-        meta = {
-            "family": "lsh", "fingerprint": fingerprint,
-            "dim": src_manifest["dim"], "planes": src_manifest["planes"],
-            "tables": src_manifest["tables"],
-            "dir_stats": {ddir: stats}, "migrated_from": src_path,
-        }
-    elif {"band", "grp"} <= cols:
-        if src_manifest is None:
-            raise ValueError(
-                f"vindex_migrate: minhash source {src_path} has no "
-                "_INDEX_MANIFEST.json — (n, k, bands, n_grps) are not "
-                "recoverable from the rows"
-            )
-        rows = canon(rows, {"band": "int", "grp": "long"})
-        ddir = _write_delta_dir(
-            _cluster(rows, "band", "grp"), dst_path, _SORT
-        )
-        n_rows, stats = _count_and_stats(spark, ddir, "id")
-        meta = _config_meta(
-            fingerprint, src_manifest["n"], src_manifest["k"],
-            src_manifest["bands"], src_manifest["n_grps"],
-        )
-        meta["dir_stats"] = {ddir: stats}
-        meta["migrated_from"] = src_path
-    else:
-        raise ValueError(
-            f"vindex_migrate: cannot infer index family at {src_path} "
-            f"(columns {sorted(cols)})"
-        )
+    # the types the row builders produce (grp is LONG). Without the
+    # cast, the first post-migration append writes a long next to the
+    # migrated int and the merged scan dies with a parquet type
+    # mismatch.
+    rows = rows.select(*[
+        F.col(c).cast({"band": "int", "grp": "long"}[c]).alias(c)
+        if c in ("band", "grp") else F.col(c)
+        for c in rows.columns
+    ])
+    ddir = _write_delta_dir(_cluster(rows, "band", "grp"), dst_path, _SORT)
+    n_rows, stats = _count_and_stats(spark, ddir, "id")
+    meta = _config_meta(
+        fingerprint, src_manifest["n"], src_manifest["k"],
+        src_manifest["bands"], src_manifest["n_grps"],
+    )
+    meta["dir_stats"] = {ddir: stats}
+    meta["migrated_from"] = src_path
     return commit_version(dst_path, [ddir], "migrate", None, n_rows, meta)
 
 

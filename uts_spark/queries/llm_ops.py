@@ -6,6 +6,8 @@ functions/{text,dedup,similarity,multimodal}.py.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import functions as F
 
 from uts_spark.functions import multimodal as mm
@@ -1462,38 +1464,59 @@ def ann_index_path(
     )
 
 
+_VIDX_LOCKS: dict[str, threading.Lock] = {}
+_VIDX_LOCKS_GUARD = threading.Lock()
+
+
+def _vidx_chain(path: str, steps) -> None:
+    """Bring the snapshot index at ``path`` to the end of ``steps``, a
+    list of (fingerprint, commit) pairs where ``commit(fp)`` commits
+    one version stamped ``fp``. The current manifest's fingerprint says
+    which steps already committed, so a rerun resumes after the last
+    one (and a finished chain commits nothing); an index carrying none
+    of the fingerprints is stale or foreign and is rebuilt. One lock
+    per path: lanes that share an index (similarity_ann_ndcg_eval runs
+    similarity_ann_index_probe) may be built from concurrent threads."""
+    import os
+    import shutil
+
+    with _VIDX_LOCKS_GUARD:
+        lock = _VIDX_LOCKS.setdefault(path, threading.Lock())
+    with lock:
+        fps = [fp for fp, _ in steps]
+        state = _vidx_state(path)
+        if state in fps:
+            steps = steps[fps.index(state) + 1:]
+        elif os.path.exists(path):
+            shutil.rmtree(path)
+        for fp, commit in steps:
+            commit(fp)
+
+
 @query("similarity_ann_index_probe", _duck_ann_index_probe())
 def similarity_ann_index_probe(spark, sf_dir):
     """Persisted-ANN-index probe (VERDICT r4 #5): the LSH bucket table
-    is materialized ONCE as a (table, bucket)-partitioned parquet index
-    (functions/similarity.lsh_index_write) and REUSED across queries —
-    this probe builds it only if the index directory is absent, then
-    answers by scanning just the anchors' collision partitions (static
-    PartitionFilters from the driver-materialized anchor bucket list —
-    the metastore point-lookup pattern; plan-shape pinned in
-    tests/test_plan_properties.py). Exact cosine rerank on candidates,
-    top-10 per anchor; results are identical to the recompute-per-query
-    lsh_topk at the same (8 planes, 2 tables) config, pinned by
-    tests/test_llm_ops.py."""
-    import os
-
-    from uts_spark.functions.similarity import (
-        lsh_index_probe,
-        lsh_index_write,
-    )
+    is materialized ONCE as a snapshot index sorted by (table, bucket)
+    (functions/vindex.lsh_vindex_build) and REUSED across queries —
+    this probe builds it only if the index's manifest does not carry
+    the corpus fingerprint, then answers by scanning just the anchors'
+    collision buckets (a literal filter from the driver-materialized
+    anchor bucket list, pushed into the parquet scan so row-group stats
+    prune it; plan-shape pinned in tests/test_plan_properties.py).
+    Exact cosine rerank on candidates, top-10 per anchor; results are
+    identical to the recompute-per-query lsh_topk at the same (8
+    planes, 2 tables) config, pinned by tests/test_llm_ops.py."""
+    from uts_spark.functions.vindex import lsh_vindex_build, lsh_vindex_probe
 
     e = table(spark, sf_dir, "embeddings")
-    path = ann_index_path(sf_dir, _emb_fingerprint(spark, sf_dir))
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        lsh_index_write(
-            e, path, dim=EMB_DIM,
-            planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
-        )
-    anchors = e.filter(F.col("vec_id") < 5)
-    return lsh_index_probe(
-        spark, path, anchors, dim=EMB_DIM, k=10,
+    fp = _emb_fingerprint(spark, sf_dir)
+    path = ann_index_path(sf_dir, fp)
+    _vidx_chain(path, [(fp, lambda f: lsh_vindex_build(
+        e, path, dim=EMB_DIM, fingerprint=f,
         planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
-    )
+    ))])
+    anchors = e.filter(F.col("vec_id") < 5)
+    return lsh_vindex_probe(spark, path, anchors, k=10)
 
 
 @demo("similarity_ann_ivf")  # DEMO, not driver-facing: MLlib k-means
@@ -4430,29 +4453,25 @@ def _register_ivf_index_probe():
     @query("similarity_ann_ivf_index_probe", ORACLES["similarity_ann_ivf_det"])
     def similarity_ann_ivf_index_probe(spark, sf_dir):
         """Persisted-IVF-index probe: the inverted file lives on disk
-        partitioned by cell (functions/similarity.ivf_index_write,
-        built once per corpus), and each query scans ONLY its n_probe
-        cell directories via a static partition filter (plan-pinned in
-        tests/test_plan_properties.py) before the exact rerank —
-        completing the persisted-index story for BOTH ANN families
-        (LSH buckets: similarity_ann_index_probe; IVF cells: here).
-        Results identical to the recompute-per-query
+        as a snapshot index sorted by cell (built once per corpus by
+        functions/vindex.ivf_vindex_build, centroids frozen in a
+        manifest sidecar), and each query reads ONLY its n_probe cells
+        via a literal cell filter pushed into the parquet scan
+        (plan-pinned in tests/test_plan_properties.py) before the exact
+        rerank — completing the persisted-index story for BOTH ANN
+        families (LSH buckets: similarity_ann_index_probe; IVF cells:
+        here). Results identical to the recompute-per-query
         similarity_ann_ivf_det, same oracle, same hash."""
-        import os
-
-        from uts_spark.functions.similarity import (
-            ivf_index_probe,
-            ivf_index_write,
-        )
+        from uts_spark.functions.vindex import ivf_vindex_build, ivf_vindex_probe
 
         e = table(spark, sf_dir, "embeddings")
-        path = ivf_index_path(sf_dir, _emb_fingerprint(spark, sf_dir))
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            ivf_index_write(e, path, n_cells=8)
+        fp = _emb_fingerprint(spark, sf_dir)
+        path = ivf_index_path(sf_dir, fp)
+        _vidx_chain(path, [(fp, lambda f: ivf_vindex_build(
+            e, path, fingerprint=f, n_cells=8
+        ))])
         anchors = e.filter(F.col("vec_id") < 5)
-        return ivf_index_probe(
-            spark, path, anchors, e, k=10, n_cells=8, n_probe=3
-        )
+        return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
 
     return similarity_ann_ivf_index_probe
 
@@ -4467,50 +4486,33 @@ similarity_ann_ivf_index_probe = _register_ivf_index_probe()
 def similarity_ann_lsh_append_probe(spark, sf_dir):
     """LSH-index append round trip: build the (table, bucket) index
     over the base vectors (vec_id % 10 != 7), fold the new batch in via
-    functions/similarity.lsh_index_append — hyperplanes are
-    seed-derived, so bucketing the batch at the same config lands its
-    rows exactly where a rebuild would; no frozen state to load, unlike
-    the IVF lane — bump the manifest fingerprint chain, then probe.
-    After the append the index covers the FULL corpus, so the oracle is
-    literally similarity_ann_index_probe's recompute SQL. Completes
-    index maintenance across all three persisted families (MinHash
-    bands, IVF cells, LSH buckets)."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-    )
-    from uts_spark.functions.similarity import (
-        lsh_index_append,
-        lsh_index_probe,
-        lsh_index_write,
+    functions/vindex.lsh_vindex_append — hyperplanes are seed-derived,
+    so bucketing the batch at the same config lands its rows exactly
+    where a rebuild would; no frozen state to load, unlike the IVF
+    lane — as a second snapshot version, then probe. After the append
+    the index covers the FULL corpus, so the oracle is literally
+    similarity_ann_index_probe's recompute SQL. Reruns are idempotent:
+    the manifest's fingerprint chain fp(base) -> fp(all) says which
+    commits already landed."""
+    from uts_spark.functions.vindex import (
+        lsh_vindex_append,
+        lsh_vindex_build,
+        lsh_vindex_probe,
     )
 
     e = table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
+    fp0 = _emb_frame_fingerprint(base)
     cfg = dict(dim=EMB_DIM, planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES)
     path = ann_index_path(sf_dir, fp0) + "_svc"
-
-    state = index_state(path)  # None when a crashed tick left _PENDING
-    if state not in (fp0, fp1):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        lsh_index_write(base, path, **cfg)
-        index_manifest_write(path, fp0, **cfg)
-        state = fp0
-    if state == fp0:
-        # pending-marker protocol (ADVICE r7): a crash between the
-        # append and the manifest bump must not re-append on rerun
-        index_tick(path, fp1, lambda: lsh_index_append(batch, path, **cfg), **cfg)
-
+    _vidx_chain(path, [
+        (fp0, lambda f: lsh_vindex_build(base, path, fingerprint=f, **cfg)),
+        (_emb_frame_fingerprint(e),
+         lambda f: lsh_vindex_append(batch, path, fingerprint=f, **cfg)),
+    ])
     anchors = e.filter(F.col("vec_id") < 5)
-    return lsh_index_probe(spark, path, anchors, dim=EMB_DIM, k=10,
-                           planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES)
+    return lsh_vindex_probe(spark, path, anchors, k=10)
 
 
 # --- Incremental IVF append (VERDICT r6 #8) ----------------------------------
@@ -4590,112 +4592,70 @@ def _duck_ivf_det_frozen(
     ),
 )
 def similarity_ann_lsh_version_probe(spark, sf_dir):
-    """TIME TRAVEL on the LSH index — version pins are now REGISTERED
-    on all four persisted families: build over the base vectors
-    (history records version 0's (table, bucket) census), fold the
-    rem-7 batch in via the batch-id-keyed exactly-once append
-    (version 1), probe PINNED TO VERSION 0 — appended vectors are
-    physically present in the same bucket directories yet invisible,
-    so the result equals the never-appended index: oracle = the full
-    LSH replay with neighbor candidacy restricted to base."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-    )
-    from uts_spark.functions.similarity import (
-        lsh_index_append_idempotent,
-        lsh_index_probe,
-        lsh_index_write,
+    """TIME TRAVEL on the LSH index — version pins are REGISTERED on
+    all four persisted families: build over the base vectors (snapshot
+    version 0), fold the rem-7 batch in via the batch-id-keyed
+    exactly-once append (version 1), probe PINNED TO VERSION 0 — the
+    appended vectors sit in a delta dir version 0's manifest does not
+    list, so the result equals the never-appended index: oracle = the
+    full LSH replay with neighbor candidacy restricted to base."""
+    from uts_spark.functions.vindex import (
+        lsh_vindex_append,
+        lsh_vindex_build,
+        lsh_vindex_probe,
     )
 
     e = table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
+    fp0 = _emb_frame_fingerprint(base)
     cfg = dict(dim=EMB_DIM, planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES)
     path = ann_index_path(sf_dir, fp0) + "_vver"
-
-    state = index_state(path)
-    if state not in (fp0, fp1):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        lsh_index_write(base, path, **cfg)
-        index_manifest_write(path, fp0, **cfg)
-        state = fp0
-    if state == fp0:
-        index_tick(
-            path, fp1,
-            lambda: lsh_index_append_idempotent(
-                batch, path, EMB_DIM, 0,
-                planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
-            ),
-            **cfg,
-        )
-
+    _vidx_chain(path, [
+        (fp0, lambda f: lsh_vindex_build(base, path, fingerprint=f, **cfg)),
+        (_emb_frame_fingerprint(e), lambda f: lsh_vindex_append(
+            batch, path, fingerprint=f, batch_id=0, **cfg
+        )),
+    ])
     anchors = e.filter(F.col("vec_id") < 5)
-    return lsh_index_probe(
-        spark, path, anchors, dim=EMB_DIM, k=10,
-        planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES, version=0,
-    )
+    return lsh_vindex_probe(spark, path, anchors, k=10, version=0)
 
 
 @query("similarity_ann_ivf_append_probe", _duck_ivf_det_frozen())
 def similarity_ann_ivf_append_probe(spark, sf_dir):
     """Incremental-IVF round trip (VERDICT r6 #8 — without append,
     fingerprint keying forces a full index rebuild on ANY corpus
-    change): build the cell-partitioned index over the base vectors
-    (vec_id % 10 != 7) with its centroid table persisted alongside
-    (path/_centroids), fold the new batch (rem 7) in via
-    functions/similarity.ivf_index_append — batch x n_cells scoring
-    against the FROZEN centroids, partition-aligned parquet append —
-    bump the manifest fingerprint chain fp(base) -> fp(all), then
-    probe anchors against the updated index (probe loads the frozen
-    centroids from the index itself). Appended neighbors are findable
-    in their cells exactly as a frozen-centroid full rebuild would
-    place them (pinned in tests/test_llm_ops.py); re-runs are
-    idempotent via the manifest, same protocol as the MinHash lane.
-    Oracle = recompute with base-frozen centroids over the full
-    corpus — append is physical, never semantic."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-    )
-    from uts_spark.functions.similarity import (
-        ivf_index_append,
-        ivf_index_probe,
-        ivf_index_write,
+    change): build the snapshot IVF index over the base vectors
+    (vec_id % 10 != 7) with its centroid table frozen in a manifest
+    sidecar, fold the new batch (rem 7) in via
+    functions/vindex.ivf_vindex_append — batch x n_cells scoring
+    against the FROZEN centroids, one delta dir + an O(1) manifest
+    commit — advancing the manifest fingerprint fp(base) -> fp(all),
+    then probe anchors against the updated index (the probe resolves
+    the frozen centroids from the manifest). Appended neighbors are
+    findable in their cells exactly as a frozen-centroid full rebuild
+    would place them (pinned in tests/test_llm_ops.py); reruns are
+    idempotent via the fingerprint chain. Oracle = recompute with
+    base-frozen centroids over the full corpus — append is physical,
+    never semantic."""
+    from uts_spark.functions.vindex import (
+        ivf_vindex_append,
+        ivf_vindex_build,
+        ivf_vindex_probe,
     )
 
     e = table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
+    fp0 = _emb_frame_fingerprint(base)
     path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_svc"
-
-    state = index_state(path)  # None when a crashed tick left _PENDING
-    if state not in (fp0, fp1):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        ivf_index_write(base, path, n_cells=8)
-        index_manifest_write(path, fp0, n_cells=8)
-        state = fp0
-    if state == fp0:
-        index_tick(
-            path, fp1,
-            lambda: ivf_index_append(spark, batch, path),
-            n_cells=8,
-        )
-
+    _vidx_chain(path, [
+        (fp0, lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8)),
+        (_emb_frame_fingerprint(e),
+         lambda f: ivf_vindex_append(batch, path, fingerprint=f)),
+    ])
     anchors = e.filter(F.col("vec_id") < 5)
-    return ivf_index_probe(spark, path, anchors, None, k=10, n_probe=3)
+    return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
 
 
 @query(
@@ -4707,54 +4667,33 @@ def similarity_ann_ivf_append_probe(spark, sf_dir):
 def similarity_ann_ivf_version_probe(spark, sf_dir):
     """TIME TRAVEL on the vector index (the IVF sibling of
     dedup_minhash_index_version_probe): build over the base vectors
-    (history records version 0's cell-file census), fold the rem-7
-    batch in via the batch-id-keyed exactly-once append (version 1 =
-    that tick's published files), then probe anchors PINNED TO
-    VERSION 0 — the appended vectors are physically present in the
-    same cell directories yet invisible to the pinned scan, so the
-    result equals the never-appended index: oracle = the
-    frozen-base-centroid recompute with candidate membership
-    restricted to base. Erasure appends a RESET census
-    (ivf_index_delete) and older pins raise, same GDPR-over-snapshots
-    rule as the dedup index."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-    )
-    from uts_spark.functions.similarity import (
-        ivf_index_append_idempotent,
-        ivf_index_probe,
-        ivf_index_write,
+    (snapshot version 0), fold the rem-7 batch in via the
+    batch-id-keyed exactly-once append (version 1), then probe anchors
+    PINNED TO VERSION 0 — the appended vectors sit in a delta dir that
+    version 0's manifest does not list, so the result equals the
+    never-appended index: oracle = the frozen-base-centroid recompute
+    with candidate membership restricted to base. Erasure is a
+    copy-on-write version of its own (ivf_vindex_delete); earlier
+    versions stay readable until vacuum."""
+    from uts_spark.functions.vindex import (
+        ivf_vindex_append,
+        ivf_vindex_build,
+        ivf_vindex_probe,
     )
 
     e = table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
+    fp0 = _emb_frame_fingerprint(base)
     path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_vver"
-
-    state = index_state(path)
-    if state not in (fp0, fp1):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        ivf_index_write(base, path, n_cells=8)
-        index_manifest_write(path, fp0, n_cells=8)
-        state = fp0
-    if state == fp0:
-        index_tick(
-            path, fp1,
-            lambda: ivf_index_append_idempotent(spark, batch, path, 0),
-            n_cells=8,
-        )
-
+    _vidx_chain(path, [
+        (fp0, lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8)),
+        (_emb_frame_fingerprint(e), lambda f: ivf_vindex_append(
+            batch, path, fingerprint=f, batch_id=0
+        )),
+    ])
     anchors = e.filter(F.col("vec_id") < 5)
-    return ivf_index_probe(
-        spark, path, anchors, None, k=10, n_probe=3, version=0
-    )
+    return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3, version=0)
 
 
 def _duck_ivfpq(base_where: str = "", member_where: str = "") -> str:
@@ -4877,43 +4816,46 @@ def _duck_ivfpq(base_where: str = "", member_where: str = "") -> str:
     """
 
 
+def _ivfpq_index_path(sf_dir: str, fp: str) -> str:
+    # config-keyed (ADVICE r6): cells/subspaces/codebook size all
+    # change the persisted codes — any mismatch must miss the cache
+    import os
+
+    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
+    return os.path.join(
+        _warehouse_dir(), f"ann_ivfpq_index_{tag}_{fp}_c8m{_PQ_M}k{_PQ_C}"
+    )
+
+
 def _register_ivfpq_probe():
     @query("similarity_ann_ivfpq_probe", _duck_ivfpq())
     def similarity_ann_ivfpq_probe(spark, sf_dir):
-        """IVF-PQ with exact re-rank over the persisted IVF index —
+        """IVF-PQ with exact re-rank over the persisted IVF-PQ index —
         the standard billion-vector serving recipe, composing the two
         halves that shipped separately in round 5: coarse cells prune
-        the index scan to 3 of 8 partitions (static PartitionFilters,
-        plan-pinned), PQ/ADC scores the survivors from compact codes
-        via broadcast per-anchor lookup tables (integer-snapped BIGINT
-        sums, bit-reproducible in SQL), and the 40 best ADC candidates
-        per anchor get exact cosine re-ranked to the final top-10.
-        recall@10 >= the PQ-only lane by construction of the re-rank
-        (asserted in tests/test_llm_ops.py)."""
-        import os
-
-        from uts_spark.functions.similarity import (
-            ivfpq_index_probe,
-            ivfpq_index_write,
+        the index scan to 3 of 8 cells (a literal cell filter pushed
+        into the parquet scan, plan-pinned), PQ/ADC scores the
+        survivors from compact codes via broadcast per-anchor lookup
+        tables (integer-snapped BIGINT sums, bit-reproducible in SQL),
+        and the 40 best ADC candidates per anchor get exact cosine
+        re-ranked to the final top-10. recall@10 >= the PQ-only lane by
+        construction of the re-rank (asserted in
+        tests/test_llm_ops.py)."""
+        from uts_spark.functions.vindex import (
+            ivfpq_vindex_build,
+            ivfpq_vindex_probe,
         )
 
         e = table(spark, sf_dir, "embeddings")
         fp = _emb_fingerprint(spark, sf_dir)
-        tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-        # config-keyed (ADVICE r6): cells/subspaces/codebook size all
-        # change the persisted codes — any mismatch must miss the cache
-        path = os.path.join(
-            _warehouse_dir(),
-            f"ann_ivfpq_index_{tag}_{fp}_c8m{_PQ_M}k{_PQ_C}",
-        )
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            ivfpq_index_write(
-                e, path, dim=EMB_DIM, n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C
-            )
+        path = _ivfpq_index_path(sf_dir, fp)
+        _vidx_chain(path, [(fp, lambda f: ivfpq_vindex_build(
+            e, path, dim=EMB_DIM, fingerprint=f,
+            n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
+        ))])
         anchors = e.filter(F.col("vec_id") < 5)
-        return ivfpq_index_probe(
-            spark, path, anchors, e, dim=EMB_DIM, k=10,
-            n_cells=8, n_probe=3, m_sub=_PQ_M, n_cent=_PQ_C, rerank=40,
+        return ivfpq_vindex_probe(
+            spark, path, anchors, k=10, n_probe=3, rerank=40
         )
 
     return similarity_ann_ivfpq_probe
@@ -4933,61 +4875,35 @@ similarity_ann_ivfpq_probe = _register_ivfpq_probe()
 def similarity_ann_ivfpq_append_probe(spark, sf_dir):
     """IVF-PQ append round trip — the composed index's maintenance
     verb, completing all FOUR persisted families: build over the base
-    vectors freezes BOTH quantizers alongside the data
-    (path/_centroids coarse cells, path/_codebook PQ entries), the new
-    batch is assigned against the frozen centroids AND encoded against
-    the frozen codebook (codes stay comparable across the whole
-    index), manifest fingerprint chain bumped, probe loads the frozen
-    quantizers from the index itself. Oracle = the composed recompute
-    with both quantizer pools restricted to the base subset while
-    assignment/ADC/rerank run over the full corpus."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-    )
-    from uts_spark.functions.similarity import (
-        ivfpq_index_append,
-        ivfpq_index_probe,
-        ivfpq_index_write,
+    vectors freezes BOTH quantizers as manifest sidecars (coarse
+    centroids, PQ codebook), the new batch is assigned against the
+    frozen centroids AND encoded against the frozen codebook (codes
+    stay comparable across the whole index) as one appended version,
+    and the probe resolves the frozen quantizers from the manifest.
+    Oracle = the composed recompute with both quantizer pools
+    restricted to the base subset while assignment/ADC/rerank run over
+    the full corpus."""
+    from uts_spark.functions.vindex import (
+        ivfpq_vindex_append,
+        ivfpq_vindex_build,
+        ivfpq_vindex_probe,
     )
 
     e = table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    path = os.path.join(
-        _warehouse_dir(),
-        f"ann_ivfpq_index_{tag}_{fp0}_c8m{_PQ_M}k{_PQ_C}_svc",
-    )
-
-    state = index_state(path)  # None when a crashed tick left _PENDING
-    if state not in (fp0, fp1):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        ivfpq_index_write(
-            base, path, dim=EMB_DIM, n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C
-        )
-        index_manifest_write(path, fp0, n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C)
-        state = fp0
-    if state == fp0:
-        index_tick(
-            path, fp1,
-            lambda: ivfpq_index_append(
-                spark, batch, path, dim=EMB_DIM, m_sub=_PQ_M
-            ),
+    fp0 = _emb_frame_fingerprint(base)
+    path = _ivfpq_index_path(sf_dir, fp0) + "_svc"
+    _vidx_chain(path, [
+        (fp0, lambda f: ivfpq_vindex_build(
+            base, path, dim=EMB_DIM, fingerprint=f,
             n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
-        )
-
+        )),
+        (_emb_frame_fingerprint(e),
+         lambda f: ivfpq_vindex_append(batch, path, fingerprint=f)),
+    ])
     anchors = e.filter(F.col("vec_id") < 5)
-    return ivfpq_index_probe(
-        spark, path, anchors, None, dim=EMB_DIM, k=10,
-        n_cells=8, n_probe=3, m_sub=_PQ_M, n_cent=_PQ_C, rerank=40,
-    )
+    return ivfpq_vindex_probe(spark, path, anchors, k=10, n_probe=3, rerank=40)
 
 
 # --- Vector-index ERASURE (VERDICT r7 #1): the GDPR verb for all three ------
@@ -4995,9 +4911,9 @@ def similarity_ann_ivfpq_append_probe(spark, sf_dir):
 # persisted ANN families. The MinHash lane could already forget a
 # document; these give the similarity service the same right-to-be-
 # forgotten: build the index over the FULL corpus (quantizers frozen
-# from it), erase the rem-7 batch via the shared left-anti partition
-# kernel (sources/sinks.delete_from_partitioned — the erased-id list
-# never materializes on the driver, VERDICT r7 #2), and probe. Each
+# from it), erase the rem-7 batch by bare id through the pruned
+# copy-on-write kernel (vindex._delete_pruned — the erased-id frame
+# stays distributed, VERDICT r7 #2), and probe. Each
 # oracle is the family's recompute SQL with quantizer pools pinned to
 # the BUILD corpus and candidate membership restricted to survivors —
 # the exact semantics "delete is physical, never semantic" implies.
@@ -5015,62 +4931,38 @@ _ANN_DEL_PRED = f" % {_IVF_APP_MOD} != {_IVF_APP_REM}"
     ),
 )
 def similarity_ann_ivfpq_version_probe(spark, sf_dir):
-    """TIME TRAVEL on the composed IVF-PQ index — version pins now span
-    ALL FOUR persisted families: build over the base vectors (history
-    records version 0's cell census; both quantizers frozen), fold the
-    rem-7 batch in via the batch-id-keyed exactly-once append (version
-    1), probe PINNED TO VERSION 0 — the appended vectors' rows AND
-    codes are physically present yet invisible to the pinned scan, so
-    the result equals the never-appended index (oracle = the composed
+    """TIME TRAVEL on the composed IVF-PQ index — version pins span
+    ALL FOUR persisted families: build over the base vectors (snapshot
+    version 0; both quantizers frozen as sidecars), fold the rem-7
+    batch in via the batch-id-keyed exactly-once append (version 1),
+    probe PINNED TO VERSION 0 — the appended vectors' rows AND codes
+    sit in a delta dir version 0's manifest does not list, so the
+    result equals the never-appended index (oracle = the composed
     recompute with both quantizer pools AND candidate membership
     restricted to base)."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-    )
-    from uts_spark.functions.similarity import (
-        ivfpq_index_append_idempotent,
-        ivfpq_index_probe,
-        ivfpq_index_write,
+    from uts_spark.functions.vindex import (
+        ivfpq_vindex_append,
+        ivfpq_vindex_build,
+        ivfpq_vindex_probe,
     )
 
     e = table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    path = os.path.join(
-        _warehouse_dir(),
-        f"ann_ivfpq_index_{tag}_{fp0}_c8m{_PQ_M}k{_PQ_C}_vver",
-    )
-
-    state = index_state(path)
-    if state not in (fp0, fp1):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        ivfpq_index_write(
-            base, path, dim=EMB_DIM, n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C
-        )
-        index_manifest_write(path, fp0, n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C)
-        state = fp0
-    if state == fp0:
-        index_tick(
-            path, fp1,
-            lambda: ivfpq_index_append_idempotent(
-                spark, batch, path, EMB_DIM, 0, m_sub=_PQ_M
-            ),
+    fp0 = _emb_frame_fingerprint(base)
+    path = _ivfpq_index_path(sf_dir, fp0) + "_vver"
+    _vidx_chain(path, [
+        (fp0, lambda f: ivfpq_vindex_build(
+            base, path, dim=EMB_DIM, fingerprint=f,
             n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
-        )
-
+        )),
+        (_emb_frame_fingerprint(e), lambda f: ivfpq_vindex_append(
+            batch, path, fingerprint=f, batch_id=0
+        )),
+    ])
     anchors = e.filter(F.col("vec_id") < 5)
-    return ivfpq_index_probe(
-        spark, path, anchors, None, dim=EMB_DIM, k=10,
-        n_cells=8, n_probe=3, m_sub=_PQ_M, n_cent=_PQ_C, rerank=40,
-        version=0,
+    return ivfpq_vindex_probe(
+        spark, path, anchors, k=10, n_probe=3, rerank=40, version=0
     )
 
 
@@ -5080,56 +4972,37 @@ def similarity_ann_ivfpq_version_probe(spark, sf_dir):
 )
 def similarity_ann_lsh_delete_probe(spark, sf_dir):
     """LSH-index ERASURE round trip: build the (table, bucket) index
-    over the full corpus, delete the rem-7 vectors
-    (functions/similarity.lsh_index_delete — re-bucket ONLY the erased
-    vectors at the index's seed-derived hyperplane config to locate
-    their partitions, left-anti rewrite, sweep emptied dirs), then
-    probe. Deleted vectors must be GONE from every anchor's neighbor
-    list while surviving pairs are untouched — the oracle is the full
-    LSH replay with the erased ids removed from candidacy, which a
-    rebuild-without would produce identically (hyperplanes are
-    corpus-independent). Idempotent via the manifest chain + pending
-    marker like every service tick."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-    )
-    from uts_spark.functions.similarity import (
-        lsh_index_delete,
-        lsh_index_probe,
-        lsh_index_write,
+    over the full corpus, delete the rem-7 vectors by bare id
+    (functions/vindex.lsh_vindex_delete — manifest id-range stats pick
+    the dirs the erasure can touch, a left-anti rewrite of those dirs
+    commits the next version), then probe. Deleted vectors must be
+    GONE from every anchor's neighbor list while surviving pairs are
+    untouched — the oracle is the full LSH replay with the erased ids
+    removed from candidacy, which a rebuild-without would produce
+    identically (hyperplanes are corpus-independent). Idempotent via
+    the manifest's fingerprint chain like every service tick."""
+    from uts_spark.functions.vindex import (
+        lsh_vindex_build,
+        lsh_vindex_delete,
+        lsh_vindex_probe,
     )
 
     e = table(spark, sf_dir, "embeddings")
     b_del = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
-    fp_full, fp_del = _emb_frame_fingerprint(e), _emb_frame_fingerprint(base)
-    cfg = dict(dim=EMB_DIM, planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES)
+    fp_full = _emb_frame_fingerprint(e)
     path = ann_index_path(sf_dir, fp_full) + "_lshdel"
-
-    state = index_state(path)
-    if state not in (fp_full, fp_del):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        lsh_index_write(e, path, **cfg)
-        index_manifest_write(path, fp_full, **cfg)
-        state = fp_full
-    if state == fp_full:
-        index_tick(
-            path, fp_del,
-            lambda: lsh_index_delete(spark, b_del, path, **cfg),
-            **cfg,
-        )
-
+    _vidx_chain(path, [
+        (fp_full, lambda f: lsh_vindex_build(
+            e, path, dim=EMB_DIM, fingerprint=f,
+            planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
+        )),
+        (_emb_frame_fingerprint(base), lambda f: lsh_vindex_delete(
+            spark, b_del.select("vec_id"), path, fingerprint=f
+        )),
+    ])
     anchors = e.filter(F.col("vec_id") < 5)
-    return lsh_index_probe(
-        spark, path, anchors, dim=EMB_DIM, k=10,
-        planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
-    )
+    return lsh_vindex_probe(spark, path, anchors, k=10)
 
 
 @query(
@@ -5139,52 +5012,34 @@ def similarity_ann_lsh_delete_probe(spark, sf_dir):
     ),
 )
 def similarity_ann_ivf_delete_probe(spark, sf_dir):
-    """IVF-index ERASURE round trip: build the cell-partitioned index
-    over the full corpus (centroids frozen from it under
-    path/_centroids), delete the rem-7 vectors
-    (functions/similarity.ivf_index_delete — assign ONLY the erased
-    vectors against the FROZEN centroids to locate their cells,
-    left-anti rewrite those cells), then probe with the frozen
+    """IVF-index ERASURE round trip: build the snapshot IVF index over
+    the full corpus (centroids frozen from it in a manifest sidecar),
+    delete the rem-7 vectors by bare id (vindex.ivf_vindex_delete —
+    the pruned copy-on-write kernel; the centroid
+    pointer carries forward untouched), then probe with the frozen
     centroids. Oracle = the frozen-quantizer recompute with the
     centroid pool pinned to the FULL build corpus and candidate
     membership restricted to survivors — the mirror image of the
     append lane's (base-frozen centroids, full membership)."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-    )
-    from uts_spark.functions.similarity import (
-        ivf_index_delete,
-        ivf_index_probe,
-        ivf_index_write,
+    from uts_spark.functions.vindex import (
+        ivf_vindex_build,
+        ivf_vindex_delete,
+        ivf_vindex_probe,
     )
 
     e = table(spark, sf_dir, "embeddings")
     b_del = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
-    fp_full, fp_del = _emb_frame_fingerprint(e), _emb_frame_fingerprint(base)
+    fp_full = _emb_frame_fingerprint(e)
     path = ivf_index_path(sf_dir, fp_full, n_cells=8) + "_ivfdel"
-
-    state = index_state(path)
-    if state not in (fp_full, fp_del):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        ivf_index_write(e, path, n_cells=8)
-        index_manifest_write(path, fp_full, n_cells=8)
-        state = fp_full
-    if state == fp_full:
-        index_tick(
-            path, fp_del,
-            lambda: ivf_index_delete(spark, b_del, path),
-            n_cells=8,
-        )
-
+    _vidx_chain(path, [
+        (fp_full, lambda f: ivf_vindex_build(e, path, fingerprint=f, n_cells=8)),
+        (_emb_frame_fingerprint(base), lambda f: ivf_vindex_delete(
+            spark, b_del.select("vec_id"), path, fingerprint=f
+        )),
+    ])
     anchors = e.filter(F.col("vec_id") < 5)
-    return ivf_index_probe(spark, path, anchors, None, k=10, n_probe=3)
+    return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
 
 
 @query(
@@ -5196,57 +5051,33 @@ def similarity_ann_ivfpq_delete_probe(spark, sf_dir):
     deleted document's PQ code array IS a compressed copy of its
     embedding, reconstructible until erased. Build over the full
     corpus (coarse centroids AND PQ codebook frozen from it), delete
-    the rem-7 vectors (functions/similarity.ivfpq_index_delete — cells
-    located via the frozen centroids; codes ride in the same rows and
-    vanish with them; the codebook holds no per-document state and is
-    untouched), probe with both frozen quantizers. Oracle = the
-    composed IVF-PQ recompute with unrestricted quantizer pools and
-    survivor-only candidacy."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-    )
-    from uts_spark.functions.similarity import (
-        ivfpq_index_delete,
-        ivfpq_index_probe,
-        ivfpq_index_write,
+    the rem-7 vectors by bare id (functions/vindex.ivfpq_vindex_delete
+    — codes ride in the same rows and vanish with them; the codebook
+    holds no per-document state and carries forward), probe with both
+    frozen quantizers. Oracle = the composed IVF-PQ recompute with
+    unrestricted quantizer pools and survivor-only candidacy."""
+    from uts_spark.functions.vindex import (
+        ivfpq_vindex_build,
+        ivfpq_vindex_delete,
+        ivfpq_vindex_probe,
     )
 
     e = table(spark, sf_dir, "embeddings")
     b_del = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
-    fp_full, fp_del = _emb_frame_fingerprint(e), _emb_frame_fingerprint(base)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    path = os.path.join(
-        _warehouse_dir(),
-        f"ann_ivfpq_index_{tag}_{fp_full}_c8m{_PQ_M}k{_PQ_C}_del",
-    )
-
-    state = index_state(path)
-    if state not in (fp_full, fp_del):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        ivfpq_index_write(
-            e, path, dim=EMB_DIM, n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C
-        )
-        index_manifest_write(path, fp_full, n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C)
-        state = fp_full
-    if state == fp_full:
-        index_tick(
-            path, fp_del,
-            lambda: ivfpq_index_delete(spark, b_del, path),
+    fp_full = _emb_frame_fingerprint(e)
+    path = _ivfpq_index_path(sf_dir, fp_full) + "_del"
+    _vidx_chain(path, [
+        (fp_full, lambda f: ivfpq_vindex_build(
+            e, path, dim=EMB_DIM, fingerprint=f,
             n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
-        )
-
+        )),
+        (_emb_frame_fingerprint(base), lambda f: ivfpq_vindex_delete(
+            spark, b_del.select("vec_id"), path, fingerprint=f
+        )),
+    ])
     anchors = e.filter(F.col("vec_id") < 5)
-    return ivfpq_index_probe(
-        spark, path, anchors, None, dim=EMB_DIM, k=10,
-        n_cells=8, n_probe=3, m_sub=_PQ_M, n_cent=_PQ_C, rerank=40,
-    )
+    return ivfpq_vindex_probe(spark, path, anchors, k=10, n_probe=3, rerank=40)
 
 
 # --- IVF n_probe sweep: the recall-vs-cost tuning curve ---------------------
@@ -5553,8 +5384,9 @@ def similarity_ann_append_drift_eval(spark, sf_dir):
     drift 0 the two arms differ only by quantizer-pool sampling noise
     (0.417 vs 0.450); at drift 0.125 the frozen configuration is down
     -0.13 recall vs the rebuild (0.617 vs 0.750) and stays behind at
-    0.5 (0.650 vs 0.717) — the measured decay behind ivf_index_append's
-    re-cluster policy and the monitor threshold below. (At extreme
+    0.5 (0.650 vs 0.717) — the measured decay behind the re-cluster
+    policy of vindex.ivf_vindex_ingest_tick and the monitor threshold
+    below. (At extreme
     drift ~1.0 the regime inverts: the drifted cohort collapses into
     one self-similar cluster any probe finds, 0.750 vs 0.717 — also
     measured, also in SCALE.md.) Every stage is bit-reproducible
@@ -5669,12 +5501,12 @@ def similarity_ann_ivf_drift_monitor(spark, sf_dir):
     recall is measurably -0.13 — drops to 0.798 and 0.5 to 0.638 (flag
     ON); full sweep in SCALE.md's drift table.
 
-    The service verb is functions/similarity.ivf_index_fit: batch x
-    n_cells scoring against path/_centroids — one number per append
-    tick, cost batch-shaped, no corpus scan. Policy (folded into
-    ivf_index_append's docstring): re-cluster (ivf_index_write over
-    the full corpus, fresh centroids + manifest bump) when the flag
-    fires or cumulative appended volume exceeds the base build."""
+    The service verb is functions/vindex.ivf_vindex_ingest_tick: each
+    append tick commits its batch's fit ints (against the centroids
+    its delta was assigned with) on the manifest — one number per
+    tick, cost batch-shaped, no corpus scan — and runs
+    ivf_vindex_recluster (fresh centroids over the index's own rows)
+    when the flag fires."""
     from uts_spark.functions.similarity import (
         FIT_SCALE,
         _ivf_centroids,
@@ -5797,8 +5629,9 @@ def similarity_ann_ivfpq_drift_monitor(spark, sf_dir):
     (0.85 -> 0.80 -> 0.64 over the same ladder) because distortion
     grows with the squared shift while top-1 cosine saturates; the
     1.3x threshold sits far from both sides. Service verb:
-    functions/similarity.ivfpq_index_distortion (batch x codebook
-    scoring against path/_codebook, one number per tick)."""
+    functions/vindex.ivfpq_vindex_ingest_tick (the batch's distortion
+    ints from its stored codes, one number per tick, committed on the
+    manifest; re-encode at the flag)."""
     from uts_spark.functions.similarity import (
         SCALE,
         _pq_codebook_exp,
@@ -6517,9 +6350,6 @@ def similarity_ann_lsh_vindex_lifecycle_probe(spark, sf_dir):
     replay minus the erased vectors' candidacy (hyperplanes are
     corpus-independent, so build+append+delete ≡ rebuild-without).
     Concurrency is optimistic CAS like every snapshot verb."""
-    import os
-    import shutil
-
     from uts_spark.functions.vindex import (
         lsh_vindex_append,
         lsh_vindex_build,
@@ -6534,26 +6364,15 @@ def similarity_ann_lsh_vindex_lifecycle_probe(spark, sf_dir):
     deleted = e.filter(F.col("vec_id") % _IVF_APP_MOD == _VIDX_DEL_REM).select(
         "vec_id"
     )
+    cfg = dict(dim=EMB_DIM, planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES)
     fp0 = _emb_frame_fingerprint(base)
-    stages = _vidx_stages(fp0)
     path = ann_index_path(sf_dir, fp0) + "_snap"
-
-    state = _vidx_state(path)
-    if state not in stages:
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        lsh_vindex_build(base, path, dim=EMB_DIM, fingerprint=stages[0],
-                         planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES)
-        state = stages[0]
-    if state == stages[0]:
-        lsh_vindex_append(batch, path, dim=EMB_DIM, fingerprint=stages[1],
-                          planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES)
-        state = stages[1]
-    if state == stages[1]:
-        lsh_vindex_delete(spark, deleted, path, fingerprint=stages[2])
-        state = stages[2]
-    if state == stages[2]:
-        lsh_vindex_compact(spark, path, fingerprint=stages[3])
+    _vidx_chain(path, list(zip(_vidx_stages(fp0), [
+        lambda f: lsh_vindex_build(base, path, fingerprint=f, **cfg),
+        lambda f: lsh_vindex_append(batch, path, fingerprint=f, **cfg),
+        lambda f: lsh_vindex_delete(spark, deleted, path, fingerprint=f),
+        lambda f: lsh_vindex_compact(spark, path, fingerprint=f),
+    ])))
 
     anchors = e.filter(F.col("vec_id") < 5)
     return lsh_vindex_probe(spark, path, anchors, k=10)
@@ -6575,9 +6394,6 @@ def similarity_ann_ivf_vindex_lifecycle_probe(spark, sf_dir):
     probe at the current snapshot with the manifest's own centroids.
     Oracle = the frozen-quantizer recompute: centroid pool pinned to
     base (build corpus), membership = survivors."""
-    import os
-    import shutil
-
     from uts_spark.functions.vindex import (
         ivf_vindex_append,
         ivf_vindex_build,
@@ -6593,23 +6409,13 @@ def similarity_ann_ivf_vindex_lifecycle_probe(spark, sf_dir):
         "vec_id"
     )
     fp0 = _emb_frame_fingerprint(base)
-    stages = _vidx_stages(fp0)
     path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_snap"
-
-    state = _vidx_state(path)
-    if state not in stages:
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        ivf_vindex_build(base, path, fingerprint=stages[0], n_cells=8)
-        state = stages[0]
-    if state == stages[0]:
-        ivf_vindex_append(batch, path, fingerprint=stages[1])
-        state = stages[1]
-    if state == stages[1]:
-        ivf_vindex_delete(spark, deleted, path, fingerprint=stages[2])
-        state = stages[2]
-    if state == stages[2]:
-        ivf_vindex_compact(spark, path, fingerprint=stages[3])
+    _vidx_chain(path, list(zip(_vidx_stages(fp0), [
+        lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8),
+        lambda f: ivf_vindex_append(batch, path, fingerprint=f),
+        lambda f: ivf_vindex_delete(spark, deleted, path, fingerprint=f),
+        lambda f: ivf_vindex_compact(spark, path, fingerprint=f),
+    ])))
 
     anchors = e.filter(F.col("vec_id") < 5)
     return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
@@ -6978,9 +6784,6 @@ def similarity_ann_ivfpq_vindex_lifecycle_probe(spark, sf_dir):
     GDPR sequence), COMPACT, probe with the manifest's own quantizers.
     Oracle = the composed IVF-PQ recompute with quantizer pools pinned
     to base and survivor-only candidacy."""
-    import os
-    import shutil
-
     from uts_spark.functions.vindex import (
         ivfpq_vindex_append,
         ivfpq_vindex_build,
@@ -6996,30 +6799,16 @@ def similarity_ann_ivfpq_vindex_lifecycle_probe(spark, sf_dir):
         "vec_id"
     )
     fp0 = _emb_frame_fingerprint(base)
-    stages = _vidx_stages(fp0)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    path = os.path.join(
-        _warehouse_dir(),
-        f"ann_ivfpq_index_{tag}_{fp0}_c8m{_PQ_M}k{_PQ_C}_snap",
-    )
-
-    state = _vidx_state(path)
-    if state not in stages:
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        ivfpq_vindex_build(
-            base, path, dim=EMB_DIM, fingerprint=stages[0],
+    path = _ivfpq_index_path(sf_dir, fp0) + "_snap"
+    _vidx_chain(path, list(zip(_vidx_stages(fp0), [
+        lambda f: ivfpq_vindex_build(
+            base, path, dim=EMB_DIM, fingerprint=f,
             n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
-        )
-        state = stages[0]
-    if state == stages[0]:
-        ivfpq_vindex_append(batch, path, fingerprint=stages[1])
-        state = stages[1]
-    if state == stages[1]:
-        ivfpq_vindex_delete(spark, deleted, path, fingerprint=stages[2])
-        state = stages[2]
-    if state == stages[2]:
-        ivfpq_vindex_compact(spark, path, fingerprint=stages[3])
+        ),
+        lambda f: ivfpq_vindex_append(batch, path, fingerprint=f),
+        lambda f: ivfpq_vindex_delete(spark, deleted, path, fingerprint=f),
+        lambda f: ivfpq_vindex_compact(spark, path, fingerprint=f),
+    ])))
 
     anchors = e.filter(F.col("vec_id") < 5)
     return ivfpq_vindex_probe(
@@ -7033,9 +6822,6 @@ def _ensure_ivf_vindex_recluster_chain(spark, sf_dir) -> tuple[str, int]:
     must not fight over one index). Returns (path, pre-recluster
     version) for the pin lane. Versions: 0 build, 1 append, 2 delete,
     3 recluster."""
-    import os
-    import shutil
-
     from uts_spark.functions.vindex import (
         ivf_vindex_append,
         ivf_vindex_build,
@@ -7050,23 +6836,17 @@ def _ensure_ivf_vindex_recluster_chain(spark, sf_dir) -> tuple[str, int]:
         "vec_id"
     )
     fp0 = _emb_frame_fingerprint(base)
-    stages = [fp0, fp0 + ":a", fp0 + ":a:d", fp0 + ":a:d:r"]
     path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_snapr"
-
-    state = _vidx_state(path)
-    if state not in stages:
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        ivf_vindex_build(base, path, fingerprint=stages[0], n_cells=8)
-        state = stages[0]
-    if state == stages[0]:
-        ivf_vindex_append(batch, path, fingerprint=stages[1])
-        state = stages[1]
-    if state == stages[1]:
-        ivf_vindex_delete(spark, deleted, path, fingerprint=stages[2])
-        state = stages[2]
-    if state == stages[2]:
-        ivf_vindex_recluster(spark, path, fingerprint=stages[3])
+    _vidx_chain(path, [
+        (fp0, lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8)),
+        (fp0 + ":a", lambda f: ivf_vindex_append(batch, path, fingerprint=f)),
+        (fp0 + ":a:d", lambda f: ivf_vindex_delete(
+            spark, deleted, path, fingerprint=f
+        )),
+        (fp0 + ":a:d:r", lambda f: ivf_vindex_recluster(
+            spark, path, fingerprint=f
+        )),
+    ])
     return path, 2
 
 
@@ -7126,66 +6906,38 @@ def similarity_ann_ivf_vindex_pin_across_recluster(spark, sf_dir):
 
 @query("similarity_ann_ivf_migrate_probe", _duck_ivf_det_frozen())
 def similarity_ann_ivf_migrate_probe(spark, sf_dir):
-    """Cross-protocol MIGRATION round trip: build the marker-protocol
-    IVF index over base, fold the rem-7 batch in with the marker
-    append, then MIGRATE to the snapshot protocol in one commit
-    (vindex.vindex_migrate — live rows rewritten into a delta dir,
-    frozen centroids copied into a manifest sidecar, fit_ref computed
-    so the drift tick works from the first post-migration batch; the
-    source is untouched, so cutover is a path swap and rollback is
-    free) and probe at the migrated snapshot. Oracle = the marker
-    append lane's frozen-quantizer recompute — migration is physical,
-    never semantic, so the snapshot probe must hash-match what the
-    marker index would answer. Why it matters at 100 TB: the corpus
-    is 100 TB but the index is its narrow projection — a service
-    upgrading storage protocols must not pay a corpus-sized rebuild."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-    )
-    from uts_spark.functions.similarity import (
-        ivf_index_append,
-        ivf_index_write,
-    )
+    """The state a storage migration leaves behind, reached natively:
+    build the snapshot IVF index over base, append the rem-7 batch,
+    then COMPACT the chain into one clustered dir with the frozen
+    centroid pointer carried forward — exactly the shape the retired
+    marker-to-snapshot IVF migration committed (live rows rewritten
+    into one delta dir, quantizer sidecar on the manifest) — and probe
+    at the compacted snapshot. Oracle = the append lane's
+    frozen-quantizer recompute: the rewrite is physical, never
+    semantic, so the probe must hash-match the appended index's
+    answer. Why it matters at 100 TB: the corpus is 100 TB but the
+    index is its narrow projection — rewriting the index must never
+    cost a corpus-sized rebuild."""
     from uts_spark.functions.vindex import (
+        ivf_vindex_append,
+        ivf_vindex_build,
+        ivf_vindex_compact,
         ivf_vindex_probe,
-        vindex_config,
-        vindex_migrate,
     )
 
     e = table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
-    src = ivf_index_path(sf_dir, fp0, n_cells=8) + "_migsrc"
-    dst = ivf_index_path(sf_dir, fp0, n_cells=8) + "_migdst"
-
-    state = index_state(src)
-    if state not in (fp0, fp1):
-        if os.path.exists(src):
-            shutil.rmtree(src)
-        ivf_index_write(base, src, n_cells=8)
-        index_manifest_write(src, fp0, n_cells=8)
-        state = fp0
-    if state == fp0:
-        index_tick(
-            src, fp1,
-            lambda: ivf_index_append(spark, batch, src),
-            n_cells=8,
-        )
-
-    m = vindex_config(dst)
-    if m is None or m.get("fingerprint") != fp1:
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        vindex_migrate(spark, src, dst, fingerprint=fp1)
-
+    fp0 = _emb_frame_fingerprint(base)
+    fp1 = _emb_frame_fingerprint(e)
+    path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_migrate"
+    _vidx_chain(path, [
+        (fp0, lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8)),
+        (fp1, lambda f: ivf_vindex_append(batch, path, fingerprint=f)),
+        (fp1 + ":c", lambda f: ivf_vindex_compact(spark, path, fingerprint=f)),
+    ])
     anchors = e.filter(F.col("vec_id") < 5)
-    return ivf_vindex_probe(spark, dst, anchors, k=10, n_probe=3)
+    return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
 
 
 @query(
@@ -7200,18 +6952,15 @@ def similarity_ann_protocol_facade_probe(spark, sf_dir):
     bare-id delete, compact, probe — driven through
     functions/index_protocol.py with NO protocol argument, so the lane
     exercises whatever ``DEFAULT_PROTOCOL`` says. The default is
-    measured, not asserted: tools/protocol_ab.py ran the same matched
-    suite on both protocols for all four families (SCALE.md round 9c);
-    snapshot won or tied every maintenance lane, so the default
-    flipped and the marker verbs became the compatibility surface.
-    Oracle = the frozen-quantizer recompute the per-family lanes
-    share — the facade owns protocol choice and family dispatch,
-    never semantics, so its answer must hash-match the family lane's
-    (facade-vs-family parity is additionally pinned across all four
-    families in tests/test_index_protocol.py)."""
-    import os
-    import shutil
-
+    measured, not asserted: the same matched suite ran on both
+    protocols for all four families (SCALE.md round 9c); snapshot won
+    or tied every maintenance lane, so the default flipped and the
+    vector families' marker verbs were retired. Oracle = the
+    frozen-quantizer recompute the per-family lanes share — the facade
+    owns protocol choice and family dispatch, never semantics, so its
+    answer must hash-match the family lane's (facade parity is
+    additionally pinned across all four families in
+    tests/test_index_protocol.py)."""
     from uts_spark.functions.index_protocol import (
         index_append,
         index_build,
@@ -7219,8 +6968,6 @@ def similarity_ann_protocol_facade_probe(spark, sf_dir):
         index_delete,
         index_probe,
     )
-    from uts_spark.functions.vindex import vindex_config
-
     e = table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
@@ -7228,24 +6975,13 @@ def similarity_ann_protocol_facade_probe(spark, sf_dir):
         F.col("vec_id") % _IVF_APP_MOD == _VIDX_DEL_REM
     ).select("vec_id")
     fp0 = _emb_frame_fingerprint(base)
-    stages = _vidx_stages(fp0)
     path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_facade"
-
-    m = vindex_config(path)
-    state = m["fingerprint"] if m else None
-    if state not in stages:
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        index_build(base, "ivf", path, fingerprint=stages[0], n_cells=8)
-        state = stages[0]
-    if state == stages[0]:
-        index_append(batch, path, fingerprint=stages[1])
-        state = stages[1]
-    if state == stages[1]:
-        index_delete(spark, deleted, path, fingerprint=stages[2])
-        state = stages[2]
-    if state == stages[2]:
-        index_compact(spark, path, fingerprint=stages[3])
+    _vidx_chain(path, list(zip(_vidx_stages(fp0), [
+        lambda f: index_build(base, "ivf", path, fingerprint=f, n_cells=8),
+        lambda f: index_append(batch, path, fingerprint=f),
+        lambda f: index_delete(spark, deleted, path, fingerprint=f),
+        lambda f: index_compact(spark, path, fingerprint=f),
+    ])))
 
     anchors = e.filter(F.col("vec_id") < 5)
     return index_probe(spark, path, anchors, k=10, n_probe=3)
@@ -7447,7 +7183,7 @@ _EEV_REM = 6  # erase_everywhere slice: id % 10 == 6 (docs AND vectors)
                  WHERE vec_id % 10 = {_EEV_REM}) AS BIGINT) AS removed,
            CAST(0 AS BIGINT) AS leaked
     UNION ALL
-    SELECT 'lsh_marker', 'marker',
+    SELECT 'lsh_snapshot', 'snapshot',
            CAST((SELECT COUNT(*) FROM embeddings
                  WHERE vec_id % 10 = {_EEV_REM})
                 * {_ANN_IDX_TABLES} AS BIGINT), CAST(0 AS BIGINT)
@@ -7465,18 +7201,18 @@ _EEV_REM = 6  # erase_everywhere slice: id % 10 == 6 (docs AND vectors)
 )
 def index_gdpr_erase_everywhere(spark, sf_dir):
     """The ONE-CALL GDPR verb behind an oracle (VERDICT r9 #1c): the
-    facade's erase_everywhere reaches a MIXED target set — a snapshot
-    IVF index (bare ids, manifest-stats-pruned rewrite), a MARKER LSH
-    index and a MARKER minhash index (protocol detected per path and
-    dispatched through the family delete verbs with the deleted rows'
-    CONTENT), and a stats-pruned versioned data table — in two calls
-    (one per id domain: vectors, documents). The lane returns the
-    PERSISTED compliance accounting: per target, protocol, rows
-    removed and the self-audit's surviving-id count (must be 0). The
-    oracle is closed-form row arithmetic — the marker families' index
-    cardinality is rows-per-member exact (tables per vector, bands
-    per doc), the snapshot removals fold from manifest n_rows — so a
-    missed partition, a miscounted rewrite, or any survivor is an
+    facade's erase_everywhere reaches a MIXED target set — snapshot
+    IVF and LSH indexes (bare ids, manifest-stats-pruned rewrites), a
+    MARKER minhash index (protocol detected per path and dispatched
+    through the minhash delete verb with the deleted rows' CONTENT),
+    and a stats-pruned versioned data table — in two calls (one per id
+    domain: vectors, documents). The lane returns the PERSISTED
+    compliance accounting: per target, protocol, rows removed and the
+    self-audit's surviving-id count (must be 0). The oracle is
+    closed-form row arithmetic — index cardinality is rows-per-member
+    exact (one row per vector for IVF, tables per vector for LSH,
+    bands per doc), the snapshot removals fold from manifest n_rows —
+    so a missed bucket, a miscounted rewrite, or any survivor is an
     exact mismatch. The accounting is written ONCE at erasure time
     and read back on replay (a takedown record is durable evidence,
     not a recomputable view — the data it describes is gone). Scale:
@@ -7492,7 +7228,7 @@ def index_gdpr_erase_everywhere(spark, sf_dir):
         erase_everywhere,
         index_build,
     )
-    from uts_spark.functions.vindex import ivf_vindex_build
+    from uts_spark.functions.vindex import ivf_vindex_build, lsh_vindex_build
     from uts_spark.sources.versioned import write_snapshot
 
     docs = table(spark, sf_dir, "documents")
@@ -7502,23 +7238,24 @@ def index_gdpr_erase_everywhere(spark, sf_dir):
     root = os.path.join(_warehouse_dir(), f"gdpr_eev_{tag}")
     audit_file = os.path.join(root, "_ERASURE_AUDIT.json")
 
+    targets = ("ivf_snapshot", "lsh_snapshot", "minhash_marker", "tbl_documents")
     state = None
     if os.path.exists(audit_file):
         with open(audit_file) as f:
             rec = json.load(f)
-        if rec.get("fp_d") == fp_d and rec.get("fp_e") == fp_e:
+        # a record of another corpus or another target set is stale
+        if (rec.get("fp_d"), rec.get("fp_e")) == (fp_d, fp_e) and sorted(
+            a["target"] for a in rec["acct"]
+        ) == sorted(targets):
             state = rec
     if state is None:
         if os.path.exists(root):
             shutil.rmtree(root)
-        p_ivf = os.path.join(root, "ivf_snapshot")
-        p_lsh = os.path.join(root, "lsh_marker")
-        p_mh = os.path.join(root, "minhash_marker")
-        p_tbl = os.path.join(root, "tbl_documents")
+        p_ivf, p_lsh, p_mh, p_tbl = (os.path.join(root, t) for t in targets)
         ivf_vindex_build(e, p_ivf, fingerprint=fp_e, n_cells=8)
-        index_build(
-            e, "lsh", p_lsh, protocol="marker", fingerprint=fp_e,
-            dim=EMB_DIM, planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
+        lsh_vindex_build(
+            e, p_lsh, dim=EMB_DIM, fingerprint=fp_e,
+            planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
         )
         index_build(
             docs, "minhash", p_mh, protocol="marker", fingerprint=fp_d,
@@ -7533,7 +7270,7 @@ def index_gdpr_erase_everywhere(spark, sf_dir):
         doc_del = docs.filter(F.col("doc_id") % 10 == _EEV_REM)
         acct = erase_everywhere(
             spark, vec_del.select("vec_id"), [p_ivf, p_lsh],
-            fingerprint=fp_e + ":gdpr", deleted_rows=vec_del,
+            fingerprint=fp_e + ":gdpr",
         )
         acct += erase_everywhere(
             spark, doc_del.select("doc_id"), [p_mh],

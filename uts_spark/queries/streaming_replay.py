@@ -37,7 +37,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from uts_spark.operators.aggregates import Metric
 from uts_spark.sources.tables import parquet_cached_schema as _read_pq
-from uts_spark.registry import DAY, DSUM, FDIV, HOUR, MS, NOW_MS, query, table
+from uts_spark.registry import (
+    DAY, DSUM, FDIV, HOUR, MS, NOW_MS, ORACLES, query, table,
+)
 from uts_spark.streaming.ops import (
     tumbling_agg_stream,
     uts_interval_agg_stream,
@@ -1698,112 +1700,13 @@ def _register_stream_langid_route():
 stream_langid_route_replay = _register_stream_langid_route()
 
 
-def _register_stream_ann_ingest():
-    # final index = base + batch assigned against frozen base centroids,
-    # independent of micro-batch boundaries — exactly what the batch
-    # APPEND lane's oracle recomputes
-    from uts_spark.registry import ORACLES
-
-    @query(
-        "stream_ann_index_ingest_replay",
-        ORACLES["similarity_ann_ivf_append_probe"],
-    )
-    def stream_ann_index_ingest_replay(spark, sf_dir):
-        """The VECTOR service's INGEST LOOP as Structured Streaming
-        (the ANN sibling of stream_dedup_index_ingest_replay): new
-        embeddings arrive as 4 micro-batches and foreachBatch folds
-        each into the persisted cell-partitioned IVF index via the
-        batch-id-keyed EXACTLY-ONCE append
-        (similarity.ivf_index_append_idempotent — frozen-centroid
-        assignment + the shared staged-publish kernel, so a replayed
-        epoch converges instead of duplicating vectors). The whole
-        stream runs as one pending-marker tick; after it drains the
-        manifest bumps and anchors probe the updated index with the
-        frozen centroids. Final index rows are independent of
-        micro-batch boundaries, so the probe hash-matches the batch
-        append lane's oracle verbatim."""
-        import os
-        import shutil
-        import tempfile
-
-        from uts_spark.functions.dedup import (
-            index_manifest_write,
-            index_state,
-            index_tick,
-        )
-        from uts_spark.functions.similarity import (
-            ivf_index_append_idempotent,
-            ivf_index_probe,
-            ivf_index_write,
-        )
-        from uts_spark.queries.llm_ops import (
-            _IVF_APP_MOD,
-            _IVF_APP_REM,
-            _emb_frame_fingerprint,
-            ivf_index_path,
-        )
-
-        e = table(spark, sf_dir, "embeddings")
-        base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
-        batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
-        path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_ingest"
-
-        state = index_state(path)
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            ivf_index_write(base, path, n_cells=8)
-            index_manifest_write(path, fp0, n_cells=8)
-            state = fp0
-        if state == fp0:
-
-            def _ingest():
-                scratch = tempfile.mkdtemp(prefix="uts_ann_ingest_")
-                try:
-                    src = os.path.join(scratch, "src")
-                    chk = os.path.join(scratch, "chk")
-                    batch.select("vec_id", "embedding").repartition(
-                        4
-                    ).write.parquet(src)
-                    stream = (
-                        spark.readStream.schema(
-                            "vec_id long, embedding array<float>"
-                        )
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(src)
-                    )
-                    q = (
-                        stream.writeStream.foreachBatch(
-                            lambda bdf, bid: ivf_index_append_idempotent(
-                                spark, bdf, path, bid
-                            )
-                        )
-                        .option("checkpointLocation", chk)
-                        .start()
-                    )
-                    try:
-                        q.processAllAvailable()
-                    finally:
-                        q.stop()
-                finally:
-                    shutil.rmtree(scratch, ignore_errors=True)
-
-            index_tick(path, fp1, _ingest, n_cells=8)
-
-        anchors = e.filter(F.col("vec_id") < 5)
-        return ivf_index_probe(spark, path, anchors, None, k=10, n_probe=3)
-
-    return stream_ann_index_ingest_replay
 
 
-stream_ann_index_ingest_replay = _register_stream_ann_ingest()
-
-
-def _register_stream_ann_drift_recluster():
-    """The CLOSED drift-control loop (VERDICT r8 #3): round 8 shipped
-    the fit monitor and the recluster verb as separate lanes — a real
-    service needs the loop wired into the ingest itself."""
+def _drift_recluster_oracle() -> str:
+    """Oracle of the CLOSED drift-control loop lanes (VERDICT r8 #3):
+    round 8 shipped the fit monitor and the recluster verb as separate
+    lanes — a real service needs the loop wired into the ingest
+    itself (_stream_ann_drift)."""
     from uts_spark.functions.hashing import duck_hash64
     from uts_spark.queries.llm_ops import (
         _DRIFT_ANCHOR_PRED,
@@ -1903,164 +1806,7 @@ def _register_stream_ann_drift_recluster():
     FROM ranked WHERE rank <= 10
     """
 
-    @query("stream_ann_ingest_drift_recluster_replay", oracle)
-    def stream_ann_ingest_drift_recluster_replay(spark, sf_dir):
-        """The vector service's ingest loop with the DRIFT CONTROL
-        LOOP CLOSED (VERDICT r8 #3): each micro-batch runs
-        similarity.ivf_index_ingest_tick — measure the batch's
-        quantizer fit against the frozen centroids (exact integers,
-        recorded ON the tick's history line), exactly-once append,
-        and re-cluster over the index's own contents when the
-        measured 0.82 flag fires. The corpus is the DERIVED clustered
-        one (see the registration comment — the fixture embeddings
-        are diffuse, so their fit floor IS the random level and no
-        exact transform can trip the flag at both gate SFs; clustered
-        data is also the regime the monitor exists for). Micro-batch
-        1 (vectors joining the BASE clusters) records fit ratio ~1.0
-        and does NOT trip the flag; micro-batch 2 (clusters on
-        components 56..63, orthogonal to every frozen centroid)
-        measures ~0.07 and trips it, and the corrective recluster
-        runs UNDER the stream's pending marker (the marker and the
-        version-history chain both carry across the rebuild swap;
-        stale pins raise 'predates the rewrite'). The final index
-        therefore equals a FRESH build over the full
-        drifted corpus — the oracle recomputes exactly that probe.
-        Tick sequencing is two processAllAvailable barriers (write
-        batch-1 file, drain, write batch-2, drain): the flag decision
-        depends on WHICH centroids are frozen at measurement time, so
-        the replay pins a deterministic order instead of racing file
-        discovery. Scale: ticks stay batch-shaped until a flag fires;
-        the recluster is the one full-build the monitor exists to
-        amortize (measured 15x cheaper to monitor than to recluster
-        blindly, SCALE.md round 8)."""
-        from uts_spark.functions.dedup import (
-            index_manifest_write,
-            index_state,
-            index_tick,
-        )
-        from uts_spark.functions.similarity import (
-            ivf_fit_ref_write,
-            ivf_index_fit_ints,
-            ivf_index_ingest_tick,
-            ivf_index_probe,
-            ivf_index_write,
-        )
-        from uts_spark.queries.llm_ops import (
-            _DRIFT_ANCHOR_IDS,
-            _emb_frame_fingerprint,
-            ivf_index_path,
-        )
-
-        def dvec(id_col, center_col):
-            # exact at every SF: 8.0 at the cluster component plus
-            # 1/16-grid jitter everywhere (mirrors _dvec_sql verbatim)
-            return F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda j: (
-                    ((id_col * 31 + j * 7) % 16 - 8).cast("double")
-                    / F.lit(16.0)
-                )
-                + F.when(j == center_col, F.lit(8.0)).otherwise(F.lit(0.0)),
-            )
-
-        e = table(spark, sf_dir, "embeddings")
-        base = e.filter(
-            F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
-        ).select(
-            "vec_id",
-            dvec(F.col("vec_id"), F.col("vec_id") % 8).alias("embedding"),
-        )
-        moved = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        rid = (F.col("vec_id") + F.lit(_DRIFT_ID0))
-        b1 = moved.filter(F.col("vec_id") % 20 == 7).select(
-            rid.alias("vec_id"),
-            dvec(rid, rid % 8).alias("embedding"),
-        )
-        b2 = moved.filter(F.col("vec_id") % 20 == 17).select(
-            rid.alias("vec_id"),
-            dvec(rid, F.lit(56) + rid % 8).alias("embedding"),
-        )
-        corpus = base.unionAll(b1).unionAll(b2)
-
-        fp0 = _emb_frame_fingerprint(base)
-        fp1 = _emb_frame_fingerprint(corpus)
-        path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_drift"
-
-        state = index_state(path)
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            # freeze the build-time quantizer from the 8 PURE cluster
-            # centers (an 8-row frame — _ivf_centroids takes all of
-            # it), so the reference fit is the clustered regime's
-            # ~0.92, not a hash-sample's cluster-coverage lottery
-            centers = spark.range(8).select(
-                (F.col("id") + F.lit(9000)).alias("vec_id"),
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(63)),
-                    lambda j: F.when(
-                        j == F.col("id").cast("int"), F.lit(8.0)
-                    ).otherwise(F.lit(0.0)),
-                ).alias("embedding"),
-            )
-            ivf_index_write(base, path, n_cells=8, centroid_src=centers)
-            index_manifest_write(path, fp0, n_cells=8)
-            s, n = ivf_index_fit_ints(spark, base, path)
-            ivf_fit_ref_write(path, s, n)
-            state = fp0
-        if state == fp0:
-
-            def _ingest():
-                scratch = tempfile.mkdtemp(prefix="uts_drift_ingest_")
-                try:
-                    src = os.path.join(scratch, "src")
-                    chk = os.path.join(scratch, "chk")
-                    schema = "vec_id long, embedding array<double>"
-                    # deterministic tick order: batch 1's file exists
-                    # BEFORE the stream starts (a start on an empty
-                    # dir can commit an empty epoch and then swallow
-                    # both files into one batch — the flag decision
-                    # depends on which centroids are frozen at
-                    # measurement time, so each batch must be its own
-                    # epoch); batch 2 lands only after epoch 0 drains
-                    b1.coalesce(1).write.parquet(src)
-                    stream = (
-                        spark.readStream.schema(schema)
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(src)
-                    )
-                    q = (
-                        stream.writeStream.foreachBatch(
-                            lambda bdf, bid: ivf_index_ingest_tick(
-                                spark, bdf, path, bid
-                            )
-                        )
-                        .option("checkpointLocation", chk)
-                        .start()
-                    )
-                    try:
-                        q.processAllAvailable()
-                        b2.coalesce(1).write.mode("append").parquet(src)
-                        q.processAllAvailable()
-                    finally:
-                        q.stop()
-                finally:
-                    shutil.rmtree(scratch, ignore_errors=True)
-
-            index_tick(path, fp1, _ingest, n_cells=8)
-
-        anchors = corpus.filter(
-            (F.col("vec_id") < 3)
-            | F.col("vec_id").isin(list(_DRIFT_ANCHOR_IDS))
-        )
-        return ivf_index_probe(spark, path, anchors, None, k=10, n_probe=3)
-
-    return stream_ann_ingest_drift_recluster_replay
-
-
-stream_ann_ingest_drift_recluster_replay = (
-    _register_stream_ann_drift_recluster()
-)
+    return oracle
 
 
 # Measured skew-loop fixture constants (SCALE.md round 9b) — shared by
@@ -2566,17 +2312,17 @@ def _register_stream_dedup_skew_cap():
 ) = _register_stream_dedup_skew_cap()
 
 
-def _register_stream_ann_vindex_ingest():
-    # the post-ingest snapshot index covers exactly what the marker
-    # family's append lane does (centroids frozen from base, membership
-    # = full corpus), so its oracle is reused verbatim
-    from uts_spark.registry import ORACLES
 
-    @query(
-        "stream_ann_vindex_ingest_replay",
-        ORACLES["similarity_ann_ivf_append_probe"],
-    )
-    def stream_ann_vindex_ingest_replay(spark, sf_dir):
+
+def _stream_ann_ingest(suffix: str):
+    """The streamed vector ingest lane body over its own index path
+    (``suffix``): two lanes register it, and the registry-wide plan
+    sweep builds lanes concurrently, so they must never share a path.
+    The post-ingest index covers exactly what the batch append lane's
+    does (centroids frozen from base, membership = full corpus), so
+    both reuse that lane's oracle verbatim."""
+
+    def stream_ann_ingest_replay(spark, sf_dir):
         """The vector ingest loop on the SNAPSHOT-COMMITTED index — no
         pending marker, no staged/sweep kernel, no O_EXCL anywhere:
         each micro-batch folds in via ivf_vindex_append(batch_id=bid),
@@ -2588,14 +2334,12 @@ def _register_stream_ann_vindex_ingest():
         unreferenced garbage). After the stream drains, a MANIFEST-ONLY
         seal commit advances the fingerprint — a run crashed
         mid-stream leaves the ingest fingerprint and the next
-        invocation rebuilds instead of serving a half-folded index
-        (the snapshot protocol's answer to the marker family's
-        pending-marker tick). Probe at the final snapshot with the
-        frozen sidecar centroids; oracle = the marker append lane's
-        recompute, because the two storage protocols are
-        semantics-identical by construction. Scale: every tick is
-        batch-sized + an O(1) commit; object-storage-safe end to end
-        (VERDICT r8 #4's 100 TB motivation)."""
+        invocation rebuilds instead of serving a half-folded index.
+        Probe at the final snapshot with the frozen sidecar centroids;
+        oracle = the batch append lane's recompute, because final
+        index rows are independent of micro-batch boundaries. Scale:
+        every tick is batch-sized + an O(1) commit; object-storage-safe
+        end to end (VERDICT r8 #4's 100 TB motivation)."""
         from uts_spark.functions.vindex import (
             ivf_vindex_append,
             ivf_vindex_build,
@@ -2616,7 +2360,7 @@ def _register_stream_ann_vindex_ingest():
         fp0 = _emb_frame_fingerprint(base)
         fp1 = _emb_frame_fingerprint(e)
         fp_ing = fp0 + ":ingesting"
-        path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_snapstream"
+        path = ivf_index_path(sf_dir, fp0, n_cells=8) + suffix
 
         m = vindex_config(path)
         state = m["fingerprint"] if m else None
@@ -2669,38 +2413,49 @@ def _register_stream_ann_vindex_ingest():
         anchors = e.filter(F.col("vec_id") < 5)
         return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
 
-    return stream_ann_vindex_ingest_replay
+    return stream_ann_ingest_replay
 
 
-stream_ann_vindex_ingest_replay = _register_stream_ann_vindex_ingest()
+stream_ann_index_ingest_replay = query(
+    "stream_ann_index_ingest_replay",
+    ORACLES["similarity_ann_ivf_append_probe"],
+)(_stream_ann_ingest("_ingest"))
+stream_ann_vindex_ingest_replay = query(
+    "stream_ann_vindex_ingest_replay",
+    ORACLES["similarity_ann_ivf_append_probe"],
+)(_stream_ann_ingest("_snapstream"))
 
 
-def _register_stream_ann_vindex_drift():
-    # the final snapshot index equals a fresh rebuild over the full
-    # drifted corpus — exactly the marker drift lane's oracle
-    from uts_spark.registry import ORACLES
+def _stream_ann_drift(suffix: str):
+    """The streamed drift-loop lane body over its own index path
+    (``suffix``; two lanes register it — see _stream_ann_ingest)."""
 
-    @query(
-        "stream_ann_vindex_drift_recluster_replay",
-        ORACLES["stream_ann_ingest_drift_recluster_replay"],
-    )
-    def stream_ann_vindex_drift_recluster_replay(spark, sf_dir):
+    def stream_ann_drift_recluster_replay(spark, sf_dir):
         """The CLOSED drift loop on the SNAPSHOT index — the entire
-        monitor state lives ON the manifests (no _FIT_REF.json, no
-        history sidecar, no pending marker): the build manifest
+        monitor state lives ON the manifests (no sidecar files, no
+        pending marker): the build manifest
         carries ``fit_ref`` (exact corpus-fit ints against the frozen
         sidecar centroids), every ingest tick commits its batch's fit
         ints ATOMICALLY WITH its data (one manifest = data + stat +
         exactly-once batch key), and the flagged tick's recluster is
         an ordinary rewrite commit that resets ``fit_ref`` — history
         intact, pre-recluster pins still resolve their own quantizer.
-        Same derived clustered corpus and thresholds as the marker
-        lane (micro-batch 1 joins the base clusters, fit ratio ~1.0,
-        no flag; micro-batch 2 clusters on orthogonal components,
-        ~0.07, flags at the measured 0.82): the two protocols are
-        semantics-identical, so the oracle is reused verbatim. A
-        crashed run leaves the ingest fingerprint (never fp1 — the
-        SEAL is the last commit) and the next invocation rebuilds."""
+        The corpus is a DERIVED clustered one (see the oracle's
+        comment — the fixture embeddings are diffuse, so their fit
+        floor IS the random level and no exact transform can trip the
+        flag at both gate SFs; clustered data is also the regime the
+        monitor exists for): micro-batch 1 joins the base clusters
+        (fit ratio ~1.0, no flag); micro-batch 2 clusters on
+        orthogonal components (~0.07, flags at the measured 0.82), so
+        the final index equals a FRESH build over the full drifted
+        corpus — the oracle recomputes exactly that probe. Tick
+        sequencing is two processAllAvailable barriers (write batch-1
+        file, drain, write batch-2, drain): the flag decision depends
+        on WHICH centroids are frozen at measurement time, so the
+        replay pins a deterministic order instead of racing file
+        discovery. A crashed run leaves the ingest fingerprint (never
+        fp1 — the SEAL is the last commit) and the next invocation
+        rebuilds."""
         from uts_spark.functions.vindex import (
             ivf_vindex_build,
             ivf_vindex_ingest_tick,
@@ -2749,16 +2504,17 @@ def _register_stream_ann_vindex_drift():
         fp0 = _emb_frame_fingerprint(base)
         fp1 = _emb_frame_fingerprint(corpus)
         fp_ing = fp0 + ":ingesting"
-        path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_snapdrift"
+        path = ivf_index_path(sf_dir, fp0, n_cells=8) + suffix
 
         m = vindex_config(path)
         state = m["fingerprint"] if m else None
         if state not in (fp0, fp1):
             if os.path.exists(path):
                 shutil.rmtree(path)
-            # freeze the quantizer from the 8 PURE cluster centers
-            # (same fixture-honesty device as the marker lane): the
-            # manifest's fit_ref is then the clustered regime's fit
+            # freeze the quantizer from the 8 PURE cluster centers (an
+            # 8-row frame — _ivf_centroids takes all of it), so the
+            # manifest's fit_ref is the clustered regime's ~0.92, not
+            # a hash-sample's cluster-coverage lottery
             centers = spark.range(8).select(
                 (F.col("id") + F.lit(9000)).alias("vec_id"),
                 F.transform(
@@ -2816,12 +2572,16 @@ def _register_stream_ann_vindex_drift():
         )
         return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
 
-    return stream_ann_vindex_drift_recluster_replay
+    return stream_ann_drift_recluster_replay
 
 
-stream_ann_vindex_drift_recluster_replay = (
-    _register_stream_ann_vindex_drift()
-)
+_DRIFT_ORACLE = _drift_recluster_oracle()
+stream_ann_ingest_drift_recluster_replay = query(
+    "stream_ann_ingest_drift_recluster_replay", _DRIFT_ORACLE
+)(_stream_ann_drift("_drift"))
+stream_ann_vindex_drift_recluster_replay = query(
+    "stream_ann_vindex_drift_recluster_replay", _DRIFT_ORACLE
+)(_stream_ann_drift("_snapdrift"))
 
 
 def _register_stream_cdc_apply():

@@ -821,7 +821,6 @@ def erase_by_names(
     fingerprint: str = "",
     deleted_rows=None,
     text_col: str = "text",
-    vec_col: str = "embedding",
     table_keys: dict[str, str] | None = None,
     table_mode: str = "cow",
     index_mode: str = "cow",
@@ -882,7 +881,7 @@ def erase_by_names(
     acct = erase_everywhere(
         spark, deleted_ids, index_paths, table_specs,
         fingerprint=fingerprint, deleted_rows=deleted_rows,
-        text_col=text_col, vec_col=vec_col, table_mode=table_mode,
+        text_col=text_col, table_mode=table_mode,
         index_mode=index_mode,
     )
     return [{**a, "name": order[a["target"]]} for a in acct]

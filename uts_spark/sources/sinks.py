@@ -256,16 +256,15 @@ def delete_from_partitioned(
     part_cols: list[str],
     id_col: str,
 ) -> int:
-    """ERASE rows from a partitioned index in place — the shared kernel
-    behind every index family's GDPR verb (MinHash bands, LSH buckets,
-    IVF/IVF-PQ cells). ``located`` carries one row per (deleted id,
-    partition key) — the caller derives it by re-sketching / re-hashing
-    / re-assigning ONLY the deleted documents, so the work here is
+    """ERASE rows from a partitioned index in place — the kernel behind
+    the marker MinHash index's GDPR verb. ``located`` carries one row
+    per (deleted id, partition key) — the caller derives it by
+    re-sketching ONLY the deleted documents, so the work here is
     bounded by the touched partitions, never the index:
 
     1. collect the DISTINCT touched partition keys (bounded by the
-       index's partition COUNT — bands x n_grps, tables x 2^planes,
-       n_cells — never by the erasure batch size) into a static
+       index's partition COUNT — bands x n_grps — never by the erasure
+       batch size) into a static
        partition filter;
     2. rewrite those partitions minus the deleted ids via a LEFT ANTI
        join against the id FRAME (VERDICT r7 #2 / ADVICE r7: the first
