@@ -1,11 +1,12 @@
 """Facade parity: uts_spark.functions.index_protocol must route every
-verb to the same kernels the per-family lanes use. Vector-family facade
-probes equal independent references (lsh_topk, ivf_topk_det with the
-build-time centroids, a fresh frozen-quantizer build), and the SAME
-inputs through either minhash protocol produce IDENTICAL probe results
-— protocol choice is never a semantics change."""
+verb to the same kernels the per-family lanes use. Facade probes equal
+independent references (lsh_topk, ivf_topk_det with the build-time
+centroids, a fresh frozen-quantizer build, the minhash recompute band
+join), and a directory without a snapshot manifest chain is refused by
+name."""
 
 import os
+import re
 import sys
 
 import pytest
@@ -14,7 +15,6 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from uts_spark.functions.index_protocol import (
-    DEFAULT_PROTOCOL,
     index_append,
     index_build,
     index_compact,
@@ -41,13 +41,6 @@ def _dim(emb):
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_default_protocol_is_snapshot():
-    # the measured default (SCALE.md round 9c): snapshot won or tied
-    # every maintenance lane and is the only protocol safe on object
-    # storage / under concurrent writers
-    assert DEFAULT_PROTOCOL == "snapshot"
 
 
 def test_facade_lsh_probe_parity_across_protocols(spark, emb, tmp_path):
@@ -90,22 +83,46 @@ def test_facade_ivf_full_lifecycle_parity(spark, emb, tmp_path):
 
 
 def test_facade_minhash_probe_parity(spark, docs, tmp_path):
-    corpus = docs.select("doc_id", "text").filter(F.col("doc_id") % 3 != 0).limit(300)
-    probe_new = docs.select("doc_id", "text").filter(F.col("doc_id") % 3 == 0).limit(50)
-    outs = {}
-    for proto in ("marker", "snapshot"):
-        path = str(tmp_path / f"mh_{proto}")
-        index_build(
-            corpus, "minhash", path, protocol=proto,
-            text_col="text", id_col="doc_id",
-        )
-        outs[proto] = _rows(
-            index_probe(
-                spark, path, (probe_new, corpus, "text", "doc_id"),
-                protocol=proto,
-            )
-        )
-    assert outs["marker"] == outs["snapshot"]
+    """The facade's minhash probe equals the recompute band join on the
+    same new x old quadrant at the same config (persistence is
+    physical, never semantic — the reference never touches an index)."""
+    from uts_spark.functions.dedup import (
+        _band_bucket_rows,
+        doc_shingle_arrays_portable,
+        minhash_signatures_portable,
+        pair_jaccard,
+    )
+
+    d = docs.select("doc_id", "text")
+    corpus = d.filter(F.col("doc_id") % 3 != 0)
+    probe_new = d.filter(F.col("doc_id") % 3 == 0)
+    path = str(tmp_path / "mh")
+    index_build(corpus, "minhash", path, text_col="text", id_col="doc_id")
+    got = {
+        (r.id_new, r.id_old, r.jaccard)
+        for r in index_probe(
+            spark, path, (probe_new, corpus, "text", "doc_id"), threshold=0.3
+        ).collect()
+    }
+
+    arrays = doc_shingle_arrays_portable(d, "text", "doc_id", 3).cache()
+    bk = _band_bucket_rows(minhash_signatures_portable(arrays, 32), 32, 8)
+    a = bk.filter(F.col("id") % 3 == 0).select(
+        F.col("id").alias("id_a"), "band", "bucket"
+    )
+    b = bk.filter(F.col("id") % 3 != 0).select(
+        F.col("id").alias("id_b"), "band", "bucket"
+    )
+    cand = a.join(b, ["band", "bucket"]).select("id_a", "id_b").distinct()
+    want = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in pair_jaccard(cand, arrays)
+        .filter(F.col("jaccard") >= 0.3)
+        .collect()
+    }
+    arrays.unpersist()
+    assert got == want
+    assert len(got) > 0
 
 
 def test_facade_ivfpq_build_append_probe_parity(spark, emb, tmp_path):
@@ -148,8 +165,11 @@ def test_facade_family_resolution_from_manifest(spark, emb, tmp_path):
 def test_facade_rejects_unknown_family_and_protocol(spark, emb, tmp_path):
     with pytest.raises(ValueError, match="unknown index family"):
         index_build(emb, "kdtree", str(tmp_path / "x"))
-    with pytest.raises(ValueError, match="unknown index protocol"):
-        index_build(emb, "ivf", str(tmp_path / "y"), protocol="paxos")
+    # one commit protocol: a directory committed by any other (here the
+    # retired marker layout) is refused by name, never guessed at
+    p_marker = _marker_layout_dir(spark, tmp_path)
+    with pytest.raises(ValueError, match=re.escape(p_marker)):
+        index_append(emb, p_marker)
 
 
 def test_facade_service_tick_parity_ivf(spark, emb, tmp_path):
@@ -203,15 +223,15 @@ def test_facade_service_tick_lsh_and_marker_refusal(spark, emb, tmp_path):
     index_build(base, "lsh", p_snap, dim=dim)
     out = index_service_tick(spark, batch, p_snap, batch_id=0)
     assert out["monitor"] == "none" and out["family"] == "lsh"
+    assert out["protocol"] == "snapshot"
 
-    # the vector families have no marker protocol: refused at build,
-    # naming the snapshot default
-    for family in ("lsh", "ivf", "ivfpq"):
-        with _pytest.raises(ValueError, match="no marker protocol.*'snapshot'"):
-            index_build(
-                base, family, str(tmp_path / f"{family}_marker"),
-                protocol="marker", dim=dim,
-            )
+    # a marker-layout directory is not an index: refused, path named
+    p_marker = _marker_layout_dir(spark, tmp_path)
+    with _pytest.raises(ValueError, match=re.escape(p_marker)):
+        index_service_tick(
+            spark, batch, p_marker, batch_id=0,
+            text_col="text", id_col="doc_id",
+        )
 
 
 def test_facade_erase_everywhere(spark, emb, docs, tmp_path):
@@ -255,15 +275,14 @@ def test_facade_erase_everywhere(spark, emb, docs, tmp_path):
 def test_facade_erase_everywhere_mixed_protocols_custom_id(
     spark, emb, docs, tmp_path
 ):
-    """VERDICT r9 #1: one facade call reaches BOTH protocols — snapshot
-    IVF and LSH indexes built with a CUSTOM id column (the audit
-    resolves it from each manifest, never a hardcoded 'vec_id') and a
-    marker minhash (dispatched through its delete verb with the deleted
-    rows' content) — and the self-audit is PRUNED: the snapshot
-    entries probe only the rewritten dirs and fold rows_after from
-    manifest arithmetic."""
+    """VERDICT r9 #1: one facade call reaches IVF and LSH indexes built
+    with a CUSTOM id column (the audit resolves it from each manifest,
+    never a hardcoded 'vec_id'), and a minhash index takes the same
+    bare ids — and the self-audit is PRUNED: the entries probe only the
+    rewritten dirs and fold rows_after from manifest arithmetic."""
     from uts_spark.functions.index_protocol import erase_everywhere
     from uts_spark.functions.vindex import ivf_vindex_build, lsh_vindex_build
+    from uts_spark.sources.versioned import read_version
 
     dim = _dim(emb)
     emb_c = emb.withColumnRenamed("vec_id", "item_id")
@@ -289,22 +308,17 @@ def test_facade_erase_everywhere_mixed_protocols_custom_id(
     assert lsh["protocol"] == "snapshot" and lsh["family"] == "lsh"
     assert lsh["rows_removed"] == 2 * n_del  # one row per (vector, table)
 
-    # marker MINHASH route: text-content relocation, same facade call
-    p_mh = str(tmp_path / "mh_marker")
-    index_build(
-        docs, "minhash", p_mh, protocol="marker",
-        text_col="text", id_col="doc_id",
-    )
+    # MINHASH: the same bare-id shape, one row per (doc, band) removed
+    p_mh = str(tmp_path / "mh")
+    index_build(docs, "minhash", p_mh, text_col="text", id_col="doc_id")
     d_ids = docs.filter(F.col("doc_id") % 11 == 2).select("doc_id")
-    d_rows = docs.filter(F.col("doc_id") % 11 == 2)
-    acct2 = erase_everywhere(
-        spark, d_ids, [p_mh], fingerprint="gdpr2", deleted_rows=d_rows,
-    )
-    assert acct2[0]["leaked"] == 0 and acct2[0]["rows_removed"] > 0
-
-    # bare ids against a marker index refuse loudly (content needed)
-    with pytest.raises(ValueError, match="deleted_rows"):
-        erase_everywhere(spark, d_ids, [p_mh], fingerprint="x")
+    want = read_version(spark, p_mh).join(
+        d_ids.toDF("id"), "id", "left_semi"
+    ).count()
+    acct2 = erase_everywhere(spark, d_ids, [p_mh], fingerprint="gdpr2")
+    mh = acct2[0]
+    assert mh["leaked"] == 0 and mh["family"] == "minhash"
+    assert mh["rows_removed"] == want > 0
 
 
 def test_erase_everywhere_table_mode_mor(spark, tmp_path):
@@ -367,3 +381,55 @@ def test_erase_everywhere_index_mode_mor(spark, emb, tmp_path):
     pm = list_versions(path)[-1]
     assert pm["operation"] == "delete_mor" and len(pm["dv"]) == 1
     assert pm["family"] == "ivf" and "centroids_dir" in pm
+
+
+def test_stale_marker_directory_is_refused(spark, tmp_path):
+    """A MinHash directory in the retired marker layout — (band, grp)
+    partitioned parquet plus _INDEX_MANIFEST.json, no snapshot manifest
+    chain — is not an index: the facade probe, the facade erasure and
+    the catalog probe each raise ValueError naming the path, and the
+    erasure refuses before touching any target."""
+    from uts_spark.functions.index_protocol import erase_everywhere
+    from uts_spark.functions.vindex import lsh_vindex_build
+    from uts_spark.sources.catalog import index_probe_by_name, register_entry
+    from uts_spark.sources.versioned import list_versions
+
+    path = _marker_layout_dir(spark, tmp_path)
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
+    )
+    probe = (docs, docs, "text", "doc_id")
+    with pytest.raises(ValueError, match=re.escape(path)):
+        index_probe(spark, path, probe)
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    p_lsh = str(tmp_path / "lsh")
+    lsh_vindex_build(emb, p_lsh, _dim(emb), fingerprint="f0")
+    ids = spark.createDataFrame([(1,)], "id long")
+    with pytest.raises(ValueError, match=re.escape(path)):
+        erase_everywhere(spark, ids, [p_lsh, path])
+    assert len(list_versions(p_lsh)) == 1  # nothing was erased
+
+    cat = str(tmp_path / "cat")
+    register_entry(cat, "dedup", path, kind="index")
+    with pytest.raises(ValueError, match=re.escape(path)):
+        index_probe_by_name(spark, cat, "dedup", probe)
+
+
+def _marker_layout_dir(spark, tmp_path) -> str:
+    """A directory in the retired marker MinHash layout: (id, band,
+    bucket) rows partitioned by (band, grp), its _INDEX_MANIFEST.json,
+    and no _versions/ chain."""
+    import json
+
+    path = str(tmp_path / "mh_marker")
+    spark.createDataFrame(
+        [(1, 0, "b0", 3), (2, 1, "b1", 5)],
+        "id long, band int, bucket string, grp long",
+    ).write.partitionBy("band", "grp").parquet(path)
+    with open(os.path.join(path, "_INDEX_MANIFEST.json"), "w") as fh:
+        json.dump(
+            {"fingerprint": "", "n": 3, "k": 32, "bands": 8, "n_grps": 16},
+            fh,
+        )
+    return path

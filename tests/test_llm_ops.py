@@ -905,17 +905,18 @@ def test_minhash_index_append_roundtrip(spark):
     """The dedup service survives its second batch: batch-2 pairs
     against batch-1 docs exist ONLY via the appended index rows (sf0.01
     is the scale where such a pair occurs), and the flow is idempotent —
-    a second run sees the bumped manifest fingerprint, skips the
+    a second run sees the advanced manifest fingerprint, skips the
     append, and returns the identical pair set (no duplicate index rows
     from re-appending)."""
     import uts_spark.registry as reg  # registry first: import trap
-    from uts_spark.functions.dedup import index_manifest_read
+    from uts_spark.functions.vindex import vindex_config
     from uts_spark.queries.llm_ops import (
         _MIDX_MOD,
         _MIDX_REM,
         _frame_fingerprint,
         minhash_index_path,
     )
+    from uts_spark.sources.versioned import list_versions
 
     sf01 = "/root/testdata/sf0.01"
     q = reg.QUERIES["dedup_minhash_index_append_probe"]
@@ -924,7 +925,7 @@ def test_minhash_index_append_roundtrip(spark):
     second = {(r.id_new, r.id_old) for r in q(spark, sf01).collect()}
     assert first == second
 
-    # the manifest chain landed on fp(base + batch1)
+    # the fingerprint chain landed on fp(base + batch1), one append
     docs = spark.read.parquet(f"{sf01}/documents.parquet")
     base = docs.filter(
         (F.col("doc_id") % 11 != 3) & (F.col("doc_id") % 11 != 7)
@@ -933,8 +934,9 @@ def test_minhash_index_append_roundtrip(spark):
     path = minhash_index_path(
         sf01, _frame_fingerprint(base), k=32, bands=8, n=3
     ) + "_svc"
-    m = index_manifest_read(path)
+    m = vindex_config(path)
     assert m and m["fingerprint"] == _frame_fingerprint(old)
+    assert [v["operation"] for v in list_versions(path)] == ["build", "append"]
 
 
 def test_ivf_append_equals_frozen_centroid_rebuild(spark, sf_dir, tmp_path):
@@ -1007,28 +1009,28 @@ def test_minhash_index_delete_erases_matches(spark):
 
 
 def test_minhash_index_delete_sweeps_emptied_partitions(spark, sf_dir, tmp_path):
-    """Deleting EVERY doc of an index must leave no live rows — the
-    emptied-directory sweep (dynamic overwrite cannot clear a partition
-    it writes zero rows into) actually fires."""
-    from uts_spark.functions.dedup import (
-        minhash_index_delete,
-        minhash_index_write,
+    """Deleting EVERY doc of an index must leave no live rows: the
+    erasure rewrites every dir the ids touch, and the current snapshot
+    reads empty while the pre-delete version still holds its rows
+    until vacuum."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_build,
+        minhash_vindex_delete,
     )
+    from uts_spark.sources.versioned import list_versions, read_version
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
     path = str(tmp_path / "idx")
-    minhash_index_write(docs, "text", "doc_id", path)
-    removed = minhash_index_delete(spark, docs, "text", "doc_id", path)
-    assert removed > 0
-    import glob
-
-    files = glob.glob(f"{path}/band=*/grp=*/*.parquet")
-    live = (
-        spark.read.parquet(path).count()
-        if files
-        else 0
+    minhash_vindex_build(docs, "text", "doc_id", path)
+    v = minhash_vindex_delete(
+        spark, docs.select(F.col("doc_id").alias("id")), path
     )
-    assert live == 0, (removed, live)
+    ms = {m["version"]: m for m in list_versions(path)}
+    removed = ms[ms[v]["parent"]]["n_rows"] - ms[v]["n_rows"]
+    assert removed > 0
+    live = read_version(spark, path).count()
+    assert live == 0 == ms[v]["n_rows"], (removed, live)
+    assert read_version(spark, path, ms[v]["parent"]).count() == removed
 
 
 def test_lsh_append_equals_rebuild(spark, sf_dir, tmp_path):
@@ -1079,45 +1081,48 @@ def test_ivfpq_append_equals_frozen_quantizer_rebuild(spark, sf_dir, tmp_path):
 
 def test_index_compact_preserves_probe_and_shrinks_files(spark, sf_dir, tmp_path):
     """Service lifecycle third verb: after several appends the index
-    accumulates one file per touched partition per tick; compaction
-    must shrink the file count while leaving probe results AND the
-    frozen sidecars (manifest) byte-identical."""
+    references one delta dir per tick; compaction must fold the chain
+    into one dir while leaving probe results AND the manifest config
+    unchanged."""
     import uts_spark.registry  # noqa: F401  (registry first: import trap)
-    from uts_spark.functions.dedup import (
-        index_manifest_read,
-        index_manifest_write,
-        minhash_index_append,
-        minhash_index_probe,
-        minhash_index_write,
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_compact,
+        minhash_vindex_probe,
+        vindex_config,
     )
-    from uts_spark.sources.sinks import compact_partitioned
+    from uts_spark.sources.versioned import _manifest_dirs, list_versions
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     probe_batch = docs.filter(F.col("doc_id") % 10 == 9)
     old = docs.filter(F.col("doc_id") % 10 != 9)
     path = str(tmp_path / "idx")
-    minhash_index_write(
+    minhash_vindex_build(
         old.filter(F.col("doc_id") % 3 == 0), "text", "doc_id", path,
         fingerprint="seed",
     )
     for rem in (1, 2):
-        minhash_index_append(
-            old.filter(F.col("doc_id") % 3 == rem), "text", "doc_id", path
+        minhash_vindex_append(
+            old.filter(F.col("doc_id") % 3 == rem), "text", "doc_id", path,
+            fingerprint="after-appends",
         )
-    index_manifest_write(path, "after-appends", n=3, k=32, bands=8, n_grps=16)
 
     pairs = lambda: {  # noqa: E731
         (r.id_new, r.id_old)
-        for r in minhash_index_probe(
+        for r in minhash_vindex_probe(
             spark, path, probe_batch, old, "text", "doc_id"
         ).collect()
     }
     want = pairs()
-    before, after = compact_partitioned(spark, path, ["band", "grp"])
+    cfg_before = vindex_config(path)
+    before = len(_manifest_dirs(list_versions(path)[-1]))
+    minhash_vindex_compact(spark, path, fingerprint="after-appends")
+    after = len(_manifest_dirs(list_versions(path)[-1]))
     assert after < before, (before, after)
-    assert pairs() == want
-    m = index_manifest_read(path)
-    assert m and m["fingerprint"] == "after-appends"
+    assert pairs() == want and want
+    assert vindex_config(path) == cfg_before
+    assert cfg_before["fingerprint"] == "after-appends"
 
 
 def test_privacy_generalize_dominates_suppression(spark, sf_dir):
@@ -1208,121 +1213,19 @@ def test_minhash_index_config_mismatch_raises(spark, sf_dir, tmp_path):
     raise, never silently drop pairs (ADVICE r6, medium)."""
     import pytest
 
-    from uts_spark.functions.dedup import (
-        minhash_index_probe,
-        minhash_index_write,
+    from uts_spark.functions.vindex import (
+        minhash_vindex_build,
+        minhash_vindex_probe,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
     path = str(tmp_path / "idx")
-    minhash_index_write(docs, "text", "doc_id", path, n=3, k=32, bands=8)
+    minhash_vindex_build(docs, "text", "doc_id", path, n=3, k=32, bands=8)
     with pytest.raises(ValueError, match="config mismatch"):
-        minhash_index_probe(
+        minhash_vindex_probe(
             spark, path, docs.limit(5), docs, "text", "doc_id",
             n=3, k=32, bands=4,
         )
-
-
-def test_index_compact_recovers_from_crashed_prior_run(spark, sf_dir, tmp_path):
-    """compact_partitioned re-entrancy (ADVICE r7): a prior run that
-    died BETWEEN its two renames leaves the index only at `path__old`
-    (nothing at `path`); one that died after the second rename leaves a
-    stale `__old` beside the live index. Both states must self-heal on
-    the next invocation — same probe pairs, no OSError."""
-    import os
-    import shutil
-
-    import uts_spark.registry  # noqa: F401  (registry first: import trap)
-    from uts_spark.functions.dedup import (
-        minhash_index_probe,
-        minhash_index_write,
-    )
-    from uts_spark.sources.sinks import compact_partitioned
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    probe_batch = docs.filter(F.col("doc_id") % 10 == 9)
-    old = docs.filter(F.col("doc_id") % 10 != 9)
-    path = str(tmp_path / "idx")
-    minhash_index_write(old, "text", "doc_id", path, fingerprint="seed")
-    pairs = lambda: {  # noqa: E731
-        (r.id_new, r.id_old)
-        for r in minhash_index_probe(
-            spark, path, probe_batch, old, "text", "doc_id"
-        ).collect()
-    }
-    want = pairs()
-
-    # state 1: crash between rename(path, old) and rename(tmp, path)
-    os.rename(path, path + "__old")
-    assert not os.path.exists(path)
-    compact_partitioned(spark, path, ["band", "grp"])
-    assert os.path.exists(path) and not os.path.exists(path + "__old")
-    assert pairs() == want
-
-    # state 2: crash after the second rename, before the rmtree —
-    # stale __old (superseded copy) beside the live index
-    shutil.copytree(path, path + "__old")
-    compact_partitioned(spark, path, ["band", "grp"])
-    assert not os.path.exists(path + "__old")
-    assert pairs() == want
-
-
-def test_index_tick_pending_marker_forces_rebuild(spark, sf_dir):
-    """Append-vs-manifest atomicity (ADVICE r7): the append protocol is
-    append-files THEN bump-manifest; a crash between them must not lead
-    a re-run to re-append the batch (permanent row duplication). The
-    tick writes a _PENDING marker first — index_state() reports the
-    index untrusted while it exists, so the service lane rebuilds; and
-    a successful tick clears it."""
-    import json
-    import os
-
-    import uts_spark.registry as reg  # registry first: import trap
-    from uts_spark.functions.dedup import index_state
-    from uts_spark.queries.llm_ops import (
-        _MIDX_BANDS,
-        _MIDX_K,
-        _MIDX_MOD,
-        _MIDX_N,
-        _MIDX_REM,
-        _MIDX_REM2,
-        _frame_fingerprint,
-        minhash_index_path,
-    )
-
-    run = lambda: sorted(  # noqa: E731
-        tuple(r) for r in reg.QUERIES["dedup_minhash_index_append_probe"](
-            spark, sf_dir
-        ).collect()
-    )
-    want = run()
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    base = docs.filter(
-        (F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
-        & (F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
-    )
-    fp0 = _frame_fingerprint(base)
-    cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
-    path = minhash_index_path(sf_dir, fp0, **cfg) + "_svc"
-    assert os.path.exists(path), path
-    # after a clean tick there is no marker and state == the manifest fp
-    assert not os.path.exists(os.path.join(path, "_PENDING.json"))
-    assert index_state(path) is not None
-
-    # simulate the torn tick: marker present, manifest stale or not —
-    # state must read None and the lane must rebuild + re-tick cleanly
-    with open(os.path.join(path, "_PENDING.json"), "w") as fh:
-        json.dump({"fingerprint": "torn"}, fh)
-    assert index_state(path) is None
-    n0 = sum(len(fs) for _, _, fs in os.walk(path))
-    got = run()
-    assert got == want
-    assert not os.path.exists(os.path.join(path, "_PENDING.json"))
-    # the rebuild did NOT double-append: file census is tick-shaped,
-    # not monotonically grown from the torn state
-    n1 = sum(len(fs) for _, _, fs in os.walk(path))
-    assert n1 <= n0 + 1, (n0, n1)
 
 
 def test_vector_index_delete_probes_erase_physically_and_idempotent(
@@ -1506,54 +1409,20 @@ def test_quality_model_refit_gate_is_deterministic_and_strict():
         assert "candidate_weights" in a
 
 
-def test_index_tick_enforces_single_writer(tmp_path):
-    """Multi-writer safety: the pending marker is O_EXCL, so a second
-    concurrent tick fails fast with IndexBusyError instead of both
-    writers interleaving appends and stomping the manifest; after the
-    first tick completes, the next one proceeds."""
-    import pytest
-    from uts_spark.functions.dedup import (
-        IndexBusyError,
-        index_state,
-        index_tick,
-    )
-
-    idx = str(tmp_path / "idx")
-    import os
-
-    os.makedirs(idx)
-
-    seen = []
-
-    def work_outer():
-        # while the outer tick holds the marker, a competitor must bounce
-        with pytest.raises(IndexBusyError):
-            index_tick(idx, "fp_competitor", lambda: seen.append("inner"))
-        seen.append("outer")
-
-    index_tick(idx, "fp1", work_outer)
-    assert seen == ["outer"], "competitor work must never have run"
-    assert index_state(idx) == "fp1"
-    index_tick(idx, "fp2", lambda: seen.append("second"))
-    assert seen == ["outer", "second"] and index_state(idx) == "fp2"
-
-
 def test_index_version_pinned_reads_and_reset_semantics(spark, tmp_path):
-    """Round 8 time travel: (a) a version-0-pinned probe of an
-    appended index equals a probe of the never-appended index; (b) the
-    replayed idempotent append does not duplicate its history line;
-    (c) erasure appends a RESET census and older pins raise."""
-    import os
-
-    import pytest
-    from uts_spark.functions.dedup import (
-        index_files_at,
-        index_history_versions,
-        minhash_index_append_idempotent,
-        minhash_index_delete,
-        minhash_index_probe,
-        minhash_index_write,
+    """Round 8 time travel on the snapshot index: (a) a version-0-pinned
+    probe of an appended index equals a probe of the never-appended
+    index; (b) a replayed batch-id append commits nothing new; (c) an
+    erasure is a NEW version — the current snapshot no longer sees the
+    erased docs while the pre-delete pin still reads its rows (until
+    vacuum)."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_delete,
+        minhash_vindex_probe,
     )
+    from uts_spark.sources.versioned import list_versions, read_version
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     base = docs.filter(F.col("doc_id") % 11 == 0)
@@ -1562,21 +1431,24 @@ def test_index_version_pinned_reads_and_reset_semantics(spark, tmp_path):
     cfg = dict(n=3, k=16, bands=4)
 
     idx = str(tmp_path / "idx")
-    minhash_index_write(base, "text", "doc_id", idx, fingerprint="f0", **cfg)
+    minhash_vindex_build(base, "text", "doc_id", idx, fingerprint="f0", **cfg)
     ref = str(tmp_path / "ref")  # never-appended twin
-    minhash_index_write(base, "text", "doc_id", ref, fingerprint="f0", **cfg)
+    minhash_vindex_build(base, "text", "doc_id", ref, fingerprint="f0", **cfg)
 
-    minhash_index_append_idempotent(b1, "text", "doc_id", idx, 0, **cfg)
-    # replay the same epoch: history must not grow a duplicate line
-    minhash_index_append_idempotent(b1, "text", "doc_id", idx, 0, **cfg)
-    recs = index_history_versions(idx)
-    assert [r["version"] for r in recs] == [0, 1]
+    assert minhash_vindex_append(
+        b1, "text", "doc_id", idx, fingerprint="f1", batch_id=0, **cfg
+    ) == 1
+    # replay the same batch id: no new version
+    assert minhash_vindex_append(
+        b1, "text", "doc_id", idx, fingerprint="f1", batch_id=0, **cfg
+    ) == 1
+    assert [m["version"] for m in list_versions(idx)] == [0, 1]
 
     def probe(path, old, **kw):
         return sorted(
             map(
                 tuple,
-                minhash_index_probe(
+                minhash_vindex_probe(
                     spark, path, b2, old, "text", "doc_id",
                     threshold=0.3, **cfg, **kw,
                 ).collect(),
@@ -1589,15 +1461,24 @@ def test_index_version_pinned_reads_and_reset_semantics(spark, tmp_path):
     both = docs.filter(F.col("doc_id") % 11 <= 1)
     assert probe(idx, both, version=1) == probe(idx, both)
 
-    # erasure invalidates earlier pins
-    n_files_before = len(index_files_at(idx, 1))
-    minhash_index_delete(spark, b1, "text", "doc_id", idx, **cfg)
-    recs = index_history_versions(idx)
-    assert recs[-1]["reset"] and recs[-1]["version"] == 2
-    with pytest.raises(ValueError, match="predates the rewrite"):
-        index_files_at(idx, 1)
-    assert len(index_files_at(idx, 2)) <= n_files_before
-    assert os.path.exists(idx)
+    # erasure is a new version; the older pin keeps its rows
+    before = probe(idx, both)
+    v1_rows = read_version(spark, idx, 1)
+    n_b1_rows = v1_rows.join(
+        b1.select(F.col("doc_id").alias("id")), "id", "left_semi"
+    ).count()
+    assert n_b1_rows > 0
+    v2 = minhash_vindex_delete(
+        spark, b1.select(F.col("doc_id").alias("id")), idx,
+        fingerprint="f2", **cfg,
+    )
+    assert v2 == 2 and list_versions(idx)[-1]["operation"] == "delete"
+    ids = b1.select(F.col("doc_id").alias("id"))
+    assert read_version(spark, idx).join(ids, "id", "left_semi").count() == 0
+    assert read_version(spark, idx, 1).join(
+        ids, "id", "left_semi"
+    ).count() == n_b1_rows
+    assert probe(idx, both, version=1) == before
 
 
 def test_ivf_append_idempotent_replay_converges(spark, tmp_path):
@@ -1795,78 +1676,20 @@ def test_dsir_select_prefers_target_like_docs(spark):
 # history carry, realized-pool coreset guard, empty-census pin errors.
 
 
-def test_compaction_resets_version_history(spark, tmp_path):
-    """VERDICT r8 #1 (the one defect found): compaction rewrites every
-    data file under new part-* names, so it must append a RESET census
-    line exactly like the erasure path — (a) a pinned probe at the
-    post-compaction version is row-identical to an unpinned probe,
-    (b) a pinned probe at any pre-compaction version raises the
-    designed 'predates the rewrite' ValueError, never PATH_NOT_FOUND."""
-    from uts_spark.functions.dedup import (
-        index_files_at,
-        index_history_versions,
-        minhash_index_append_idempotent,
-        minhash_index_probe,
-        minhash_index_write,
-    )
-    from uts_spark.sources.sinks import compact_partitioned
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    base = docs.filter(F.col("doc_id") % 11 == 0)
-    b1 = docs.filter(F.col("doc_id") % 11 == 1)
-    b2 = docs.filter(F.col("doc_id") % 11 == 2)
-    cfg = dict(n=3, k=16, bands=4)
-
-    idx = str(tmp_path / "idx")
-    minhash_index_write(base, "text", "doc_id", idx, fingerprint="f0", **cfg)
-    minhash_index_append_idempotent(b1, "text", "doc_id", idx, 0, **cfg)
-    assert [r["version"] for r in index_history_versions(idx)] == [0, 1]
-
-    old_docs = docs.filter(F.col("doc_id") % 11 <= 1)
-
-    def probe(**kw):
-        return sorted(
-            map(
-                tuple,
-                minhash_index_probe(
-                    spark, idx, b2, old_docs, "text", "doc_id",
-                    threshold=0.3, **cfg, **kw,
-                ).collect(),
-            )
-        )
-
-    want = probe()
-    compact_partitioned(spark, idx, ["band", "grp"])
-
-    recs = index_history_versions(idx)
-    assert recs[-1]["version"] == 2 and recs[-1]["reset"]
-    assert recs[-1].get("compaction") is True
-    # (a) pin at the post-compaction version == unpinned
-    assert probe(version=2) == probe() == want
-    # (b) pre-compaction pins fail with the DESIGNED error
-    for v in (0, 1):
-        with pytest.raises(ValueError, match="predates the rewrite"):
-            index_files_at(idx, v)
-
-
 def test_batch_id_reuse_after_reset_is_epoch_keyed(spark, tmp_path):
-    """ADVICE r8 (medium): a batch_id REUSED after a reset (a fresh
-    stream restarting at bid 0 post-compaction/-erasure) must (a) open
-    a NEW history line instead of rewriting the dead pre-reset one,
-    and (b) publish under an epoch-qualified name so the staged
-    kernel's sweep cannot delete the earlier generation's surviving
-    b0-* files out of untouched partitions."""
-    import glob
-    import os
-
-    from uts_spark.functions.dedup import (
-        index_epoch,
-        index_files_at,
-        index_history_versions,
-        minhash_index_append_idempotent,
-        minhash_index_write,
+    """ADVICE r8 (medium), on the snapshot band index: a batch_id
+    REUSED after a rewrite (a fresh stream restarting at bid 0
+    post-compaction) must commit its NEW docs instead of being skipped
+    as a replay of the earlier generation — the exactly-once key is
+    e{epoch}b{bid} and a compaction opens a new epoch — while a replay
+    inside the new epoch is still a no-op and the pre-compaction pins
+    keep reading their own rows."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_compact,
     )
-    from uts_spark.sources.sinks import compact_partitioned
+    from uts_spark.sources.versioned import list_versions, read_version
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     base = docs.filter(F.col("doc_id") % 11 == 0)
@@ -1875,35 +1698,29 @@ def test_batch_id_reuse_after_reset_is_epoch_keyed(spark, tmp_path):
     cfg = dict(n=3, k=16, bands=4)
 
     idx = str(tmp_path / "idx")
-    minhash_index_write(base, "text", "doc_id", idx, fingerprint="f0", **cfg)
-    assert index_epoch(idx) == 0
-    minhash_index_append_idempotent(b1, "text", "doc_id", idx, 0, **cfg)
-    # compaction's reset lands at version 2 -> epoch 2 (epochs are
-    # keyed by the reset VERSION so they survive a history vacuum)
-    compact_partitioned(spark, idx, ["band", "grp"])
-    assert index_epoch(idx) == 2
+    minhash_vindex_build(base, "text", "doc_id", idx, fingerprint="f0", **cfg)
+    v1 = minhash_vindex_append(
+        b1, "text", "doc_id", idx, fingerprint="f1", batch_id=0, **cfg
+    )
+    assert list_versions(idx)[-1]["batch_key"] == "e0b0"
+    v2 = minhash_vindex_compact(spark, idx, fingerprint="f1c", **cfg)
+    rows_before = read_version(spark, idx).count()
 
-    rows_before = spark.read.parquet(idx).count()
     # the restarted stream reuses batch_id 0 with DIFFERENT docs
-    minhash_index_append_idempotent(b2, "text", "doc_id", idx, 0, **cfg)
-    recs = index_history_versions(idx)
-    # (a) a NEW line at version 3 — the dead pre-reset bid-0 line
-    # (version 1) is untouched
-    assert [r["version"] for r in recs] == [0, 1, 2, 3]
-    assert recs[-1]["batch_id"] == 0 and not recs[-1]["reset"]
-    assert recs[1]["batch_id"] == 0 and recs[1]["version"] == 1
-    # (b) epoch-qualified publish names; no compacted file was swept
-    pub = glob.glob(os.path.join(idx, "band=*", "grp=*", "e2b0-*.parquet"))
-    assert pub, "epoch-2 publish names missing"
-    assert spark.read.parquet(idx).count() > rows_before
-    # the current-version census covers compacted files + the new tick
-    latest = index_files_at(idx, 3)
-    assert set(os.path.join(idx, r) for r in recs[-1]["files"]) <= set(latest)
-    assert len(latest) > len(index_files_at(idx, 2))
-
-    # replaying the SAME (epoch, batch_id) still converges: no new line
-    minhash_index_append_idempotent(b2, "text", "doc_id", idx, 0, **cfg)
-    assert [r["version"] for r in index_history_versions(idx)] == [0, 1, 2, 3]
+    v3 = minhash_vindex_append(
+        b2, "text", "doc_id", idx, fingerprint="f2", batch_id=0, **cfg
+    )
+    assert v3 > v2 > v1
+    assert list_versions(idx)[-1]["batch_key"] == f"e{v2}b0"
+    assert read_version(spark, idx).count() > rows_before
+    # replaying the SAME (epoch, batch_id) still converges
+    assert minhash_vindex_append(
+        b2, "text", "doc_id", idx, fingerprint="f2", batch_id=0, **cfg
+    ) == v3
+    assert [m["version"] for m in list_versions(idx)] == [0, 1, 2, 3]
+    # compaction reset nothing: the pre-compaction pins still resolve
+    assert read_version(spark, idx, 1).count() == rows_before
+    assert read_version(spark, idx, 0).count() < rows_before
 
 
 def test_ivf_recluster_carries_version_history(spark, tmp_path):
@@ -1958,78 +1775,6 @@ def test_coreset_realized_pool_guard(spark):
         coreset_facility_location(e, k=6, pool=24)
     out = coreset_facility_location(e, k=3, pool=24).collect()
     assert [r["rank"] for r in sorted(out, key=lambda r: r.rank)] == [1, 2, 3]
-
-
-def test_version_pin_empty_census_raises_descriptive(spark, tmp_path):
-    """ADVICE r8 (low): a version whose census is EMPTY (empty build /
-    empty-batch tick) must produce a descriptive error from the pinned
-    probe path, not spark.read.parquet()'s opaque 'cannot infer
-    schema' on zero paths."""
-    import os
-
-    from uts_spark.functions.dedup import (
-        index_history_append,
-        index_scan_at,
-    )
-
-    idx = str(tmp_path / "empty")
-    os.makedirs(idx)
-    index_history_append(idx, 0, [])  # an empty build's census
-    with pytest.raises(ValueError, match="EMPTY file census"):
-        index_scan_at(spark, idx, 0)
-
-
-def test_index_history_vacuum_bounds_sidecar(spark, tmp_path):
-    """VERDICT r8 #7: the history sidecar grows one line per tick
-    forever; vacuum truncates to the records from the last reset on.
-    Nothing reachable changes — the current version's census and
-    probe results are identical, stale pins raise the SAME 'predates
-    the rewrite' error (the reset line is retained), the epoch does
-    not regress — and the dead lines are gone."""
-    from uts_spark.functions.dedup import (
-        index_epoch,
-        index_files_at,
-        index_history_vacuum,
-        index_history_versions,
-        minhash_index_append_idempotent,
-        minhash_index_delete,
-        minhash_index_write,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    base = docs.filter(F.col("doc_id") % 11 == 0)
-    b1 = docs.filter(F.col("doc_id") % 11 == 1)
-    b2 = docs.filter(F.col("doc_id") % 11 == 2)
-    cfg = dict(n=3, k=16, bands=4)
-
-    idx = str(tmp_path / "idx")
-    minhash_index_write(base, "text", "doc_id", idx, fingerprint="f0", **cfg)
-    minhash_index_append_idempotent(b1, "text", "doc_id", idx, 0, **cfg)
-    minhash_index_delete(spark, b1, "text", "doc_id", idx, **cfg)  # reset v2
-    minhash_index_append_idempotent(b2, "text", "doc_id", idx, 1, **cfg)
-    assert [r["version"] for r in index_history_versions(idx)] == [0, 1, 2, 3]
-
-    epoch_before = index_epoch(idx)
-    census_before = index_files_at(idx, 3)
-    removed = index_history_vacuum(idx)
-    assert removed == 2  # versions 0 and 1 dropped
-    assert [r["version"] for r in index_history_versions(idx)] == [2, 3]
-    assert index_files_at(idx, 3) == census_before
-    assert index_epoch(idx) == epoch_before
-    for v in (0, 1):
-        with pytest.raises(ValueError, match="predates the rewrite"):
-            index_files_at(idx, v)
-    # idempotent: second vacuum is a no-op
-    assert index_history_vacuum(idx) == 0
-    # no reset in history -> no-op by design
-    from uts_spark.functions.dedup import index_history_append
-
-    fresh = str(tmp_path / "fresh")
-    import os
-
-    os.makedirs(fresh)
-    index_history_append(fresh, 0, ["a.parquet"])
-    assert index_history_vacuum(fresh) == 0
 
 
 def test_drift_control_loop_closed(spark, tmp_path):
@@ -2532,86 +2277,6 @@ def test_vindex_family_mismatch_fails_loudly(spark, emb, tmp_path):
         vx.lsh_vindex_append(batch, path, dim=64)
 
 
-def test_minhash_ingest_tick_skew_flag_and_cap(spark, docs, tmp_path):
-    """The dedup ingest's closed skew loop (round-10 candidate #3): an
-    organic batch records its collision integers on the history line
-    and does NOT flag; a boilerplate flood (same slice, one template
-    text) trips the measured 8x flag, the cap verb quarantines its
-    mega-buckets (auditable under _quarantine), the history records a
-    RESET with the hot-bucket count, and a probe with a boiler-texted
-    doc finds NO candidates while a verbatim clone of an indexed doc
-    still matches at jaccard 1.0."""
-    from uts_spark.functions.dedup import (
-        index_history_versions,
-        minhash_coll_ref_init,
-        minhash_coll_ref_read,
-        minhash_index_probe,
-        minhash_index_write,
-        minhash_ingest_tick,
-    )
-
-    BOILER = "limited time offer click here to unsubscribe from this list"
-    d = docs.select("doc_id", "text")
-    base = d.filter(~F.col("doc_id").__mod__(11).isin(3, 7))
-    b1 = d.filter(F.col("doc_id") % 11 == 3)
-    boiler = d.filter(F.col("doc_id") % 11 == 7).select(
-        "doc_id", F.lit(BOILER).alias("text")
-    )
-    path = str(tmp_path / "midx")
-    cfg = dict(n=3, k=16, bands=4)
-    minhash_index_write(base, "text", "doc_id", path, fingerprint="f0", **cfg)
-    ref0 = minhash_coll_ref_init(spark, path)
-    assert ref0["rows_total"] == ref0["rown"] > 0
-
-    t1 = minhash_ingest_tick(spark, b1, "text", "doc_id", path, 0, **cfg)
-    assert not t1["flagged"] and t1["capped_rows"] == 0 and t1["row_n"] > 0
-    # rows_total advanced by the appended band rows
-    assert (
-        minhash_coll_ref_read(path)["rows_total"]
-        == ref0["rows_total"] + t1["row_n"]
-    )
-
-    t2 = minhash_ingest_tick(spark, boiler, "text", "doc_id", path, 1, **cfg)
-    assert t2["flagged"] and t2["capped_rows"] >= t2["row_n"]
-    q = spark.read.parquet(str(tmp_path / "midx" / "_quarantine"))
-    assert q.count() == t2["capped_rows"]
-    # the live index retains NO row of any quarantined bucket
-    live = spark.read.parquet(path)
-    assert (
-        live.join(
-            q.select("band", "bucket").distinct(), ["band", "bucket"]
-        ).count()
-        == 0
-    )
-    recs = index_history_versions(path)
-    assert recs[-1]["reset"] and recs[-1]["hot_buckets"] > 0
-    by_bid = {r.get("batch_id"): r for r in recs if "batch_id" in r}
-    assert by_bid[0]["coll_sum"] == t1["coll_sum"]
-    assert by_bid[1]["coll_sum"] == t2["coll_sum"] > t1["coll_sum"]
-
-    # probe: boiler-texted doc -> zero candidates (its buckets are
-    # quarantined); verbatim clone of an indexed doc -> jaccard 1.0
-    clone_src = base.limit(1)
-    probe = clone_src.select(
-        (F.col("doc_id") + F.lit(10_000_000)).alias("doc_id"), "text"
-    ).unionByName(
-        spark.createDataFrame([(20_000_000, BOILER)], "doc_id long, text string")
-    )
-    old = base.unionByName(b1).unionByName(boiler)
-    got = minhash_index_probe(
-        spark, path, probe, old, "text", "doc_id", threshold=0.5, **cfg
-    ).collect()
-    new_ids = {r["id_new"] for r in got}
-    assert 20_000_000 not in new_ids
-    src_id = clone_src.first()["doc_id"]
-    assert any(
-        r["id_new"] == src_id + 10_000_000
-        and r["id_old"] == src_id
-        and r["jaccard"] == 1.0
-        for r in got
-    )
-
-
 def test_vindex_append_exactly_once_by_batch_key(spark, emb, tmp_path):
     """Snapshot-family streaming appends are EXACTLY-ONCE structurally
     (the Iceberg idempotent-commit shape): (a) replaying a batch_id
@@ -2731,72 +2396,6 @@ def test_ivf_vindex_ingest_tick_drift_loop(spark, tmp_path):
     assert t3["replayed"] and not t3["reclustered"]
     assert read_version(spark, path).count() == n_after
     assert list_versions(path)[-1]["operation"] == "recluster"
-
-
-def test_vindex_migrate_marker_to_snapshot(spark, docs, emb, tmp_path):
-    """Cross-protocol MIGRATION: a marker-protocol index becomes a
-    snapshot index in one commit, without rebuilding from the corpus.
-    (a) minhash: config carried from the marker manifest, snapshot
-    probe row-identical to the marker probe, and the migrated index
-    accepts snapshot verbs (append + pruned delete); (b) a vector-family
-    source (the cell-partitioned layout of a marker IVF index) fails
-    loudly — those families have no marker protocol to migrate from;
-    (c) a source without its config manifest fails loudly."""
-    import pytest as _pytest
-
-    import uts_spark.functions.vindex as vx
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        minhash_index_probe,
-        minhash_index_write,
-    )
-    from uts_spark.sources.versioned import list_versions
-
-    d = docs.select("doc_id", "text")
-    base = d.filter(F.col("doc_id") % 11 != 3)
-    probe_batch = d.filter(F.col("doc_id") % 11 == 3)
-    cfg = dict(n=3, k=16, bands=4)
-    src = str(tmp_path / "marker_minhash")
-    minhash_index_write(base, "text", "doc_id", src, fingerprint="f0", **cfg)
-    index_manifest_write(src, "f0", n_grps=16, **cfg)
-
-    dst = str(tmp_path / "snap_minhash")
-    assert vx.vindex_migrate(spark, src, dst, fingerprint="f0") == 0
-    m = list_versions(dst)[-1]
-    assert m["family"] == "minhash" and m["bands"] == 4 and m["k"] == 16
-
-    want = sorted(map(tuple, minhash_index_probe(
-        spark, src, probe_batch, base, "text", "doc_id",
-        threshold=0.3, **cfg,
-    ).collect()))
-    got = sorted(map(tuple, vx.minhash_vindex_probe(
-        spark, dst, probe_batch, base, "text", "doc_id",
-        threshold=0.3, **cfg,
-    ).collect()))
-    assert got == want and len(want) > 0
-    # the migrated index is a full citizen: snapshot append + delete
-    vx.minhash_vindex_append(
-        probe_batch, "text", "doc_id", dst, fingerprint="f1", **cfg
-    )
-    removed = vx.minhash_vindex_delete(
-        spark, probe_batch.select(F.col("doc_id").alias("id")), dst,
-        fingerprint="f2", **cfg,
-    )
-    assert removed > 0
-
-    # (b) a cell-partitioned vector source refuses
-    isrc = str(tmp_path / "marker_ivf")
-    emb.withColumn("cell", F.col("vec_id") % 8).write.partitionBy(
-        "cell"
-    ).parquet(isrc)
-    with _pytest.raises(ValueError, match="not a marker minhash index"):
-        vx.vindex_migrate(spark, isrc, str(tmp_path / "snap_ivf"))
-
-    # (c) missing config manifest fails loudly (minhash shape)
-    import os
-    os.remove(os.path.join(src, "_INDEX_MANIFEST.json"))
-    with _pytest.raises(ValueError, match="not\\s+recoverable|no\\s+"):
-        vx.vindex_migrate(spark, src, str(tmp_path / "snap2"))
 
 
 def test_vindex_maybe_compact_trigger(spark, emb, tmp_path):
@@ -2978,21 +2577,21 @@ def test_ivfpq_vindex_ingest_tick_distortion_loop(spark, tmp_path):
 
 
 def test_index_history_changes_feed_and_reset_refusal(spark, tmp_path):
-    """Marker-index CDF: the 0->1 feed is exactly the appended tick's
-    rows (no join — history diff); a range crossing a RESET (erasure)
-    refuses loudly; unknown versions and empty diffs behave."""
+    """Band-index CDF through versioned.table_changes: the 0->1 feed of
+    an append-only chain is exactly the appended batch's rows (the
+    dir-diff fast path, no join); same-version feeds are empty; unknown
+    versions raise; a range crossing an erasure refuses without a key
+    and diffs by (id, band) identity with one."""
     import os
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from uts_spark.functions.dedup import (
-        index_history_changes,
-        index_manifest_write,
-        index_tick,
-        minhash_index_append_idempotent,
-        minhash_index_delete,
-        minhash_index_write,
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_delete,
     )
+    from uts_spark.sources.versioned import table_changes
 
     SF = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
@@ -3002,35 +2601,35 @@ def test_index_history_changes_feed_and_reset_refusal(spark, tmp_path):
     b1 = docs.filter(F.col("doc_id") % 7 == 0)
     path = str(tmp_path / "mh_cdf")
     cfg = dict(n=3, k=32, bands=8)
-    minhash_index_write(base, "text", "doc_id", path, fingerprint="f0", **cfg)
-    index_manifest_write(path, "f0", **cfg)
-    index_tick(
-        path, "f1",
-        lambda: minhash_index_append_idempotent(
-            b1, "text", "doc_id", path, batch_id=0, **cfg
-        ),
-        **cfg,
+    minhash_vindex_build(base, "text", "doc_id", path, fingerprint="f0", **cfg)
+    minhash_vindex_append(
+        b1, "text", "doc_id", path, fingerprint="f1", batch_id=0, **cfg
     )
 
-    feed = index_history_changes(spark, path, 0, 1)
+    feed = table_changes(spark, path, 0, 1)
     assert set(feed.select("_change_type").distinct().toPandas()[
         "_change_type"
     ]) == {"insert"}
     # feed ids == the appended batch's ids, 8 band rows per doc
     n_b1 = b1.count()
     assert feed.count() == n_b1 * 8
-    assert index_history_changes(spark, path, 0, 0).count() == 0
-    assert index_history_changes(spark, path, 1, 1).count() == 0
+    assert feed.select("id").distinct().count() == n_b1
+    assert table_changes(spark, path, 0, 0).count() == 0
+    assert table_changes(spark, path, 1, 1).count() == 0
 
-    with _pytest.raises(ValueError, match="unknown version"):
-        index_history_changes(spark, path, 0, 99)
+    with _pytest.raises(ValueError, match="not found"):
+        table_changes(spark, path, 0, 99)
 
-    # erasure appends a reset: feeds crossing it refuse
-    minhash_index_delete(
-        spark, b1.limit(5), "text", "doc_id", path, **cfg
-    )
-    with _pytest.raises(ValueError, match="reset"):
-        index_history_changes(spark, path, 0)
+    # an erasure is a rewrite: the feed needs row identity across it
+    gone = b1.limit(5).select(F.col("doc_id").alias("id"))
+    minhash_vindex_delete(spark, gone, path, fingerprint="f2", **cfg)
+    with _pytest.raises(ValueError, match="rewrite"):
+        table_changes(spark, path, 1)
+    deletes = table_changes(spark, path, 1, key=("id", "band"))
+    assert set(deletes.select("_change_type").distinct().toPandas()[
+        "_change_type"
+    ]) == {"delete"}
+    assert deletes.count() == 5 * 8
 
 
 def test_vindex_delete_mor_lifecycle(spark, emb, tmp_path):

@@ -761,10 +761,11 @@ def test_registry_wide_no_unpartitioned_windows(spark, sf_dir):
     # sweep was 479 s serial — 26% of the whole suite; the time is
     # Catalyst analysis in JVM threads plus the service lanes' own
     # build-time jobs, both of which overlap across py4j connections).
-    # Lanes whose build trips a concurrency artifact (a service lane's
-    # single-writer marker meeting a sibling mid-build) are RETRIED
-    # SERIALLY before anything is called a failure, so the gate's
-    # verdict is exactly the serial sweep's.
+    # Lanes whose build trips a concurrency artifact (two lanes racing
+    # one warehouse table's CAS manifest commit; index chains that
+    # several lanes share serialize on llm_ops._vidx_chain's per-path
+    # lock and cannot) are RETRIED SERIALLY before anything is called
+    # a failure, so the gate's verdict is exactly the serial sweep's.
     names = sorted(QUERIES)
     bad = []
     errors = []
@@ -843,23 +844,57 @@ def test_utf8_prefix_key_monotone_under_binary_string_order(spark):
     assert got == {t: i for i, t in enumerate(vocab)}
 
 
+def _band_index_scan_filters(p: str) -> list[str]:
+    # PushedFilters of every FileScan over a band index's rows, picked
+    # by their read schema (id, band, bucket, grp) — the Location path
+    # list is width-truncated in plan strings; the filter list holds
+    # In-lists, so it ends at the ReadSchema key, not the first "]"
+    return [
+        seg.split("PushedFilters: [", 1)[1].split("], ReadSchema", 1)[0]
+        for seg in p.split("FileScan")[1:]
+        if "bucket#" in seg[:200]
+    ]
+
+
 def test_minhash_index_probe_scan_is_partition_pruned(spark, sf_dir):
     # dedup-as-a-service: the persisted band index is scanned ONLY at
-    # the probe batch's (band, grp) partitions — every index scan
-    # carries non-empty PartitionFilters on both partition columns.
-    # checkpoint=False keeps the lazy plan (the registered query eagerly
-    # checkpoints to release its shingle caches per probe, ADVICE r6).
-    from uts_spark.queries.llm_ops import _minhash_index_probe_impl
+    # the probe batch's (band, grp) keys — every index scan carries
+    # the band and grp In-lists in its PushedFilters, so row-group
+    # stats of the (band, grp, bucket)-sorted snapshot dirs prune it.
+    # The registered lane eagerly checkpoints (ADVICE r6), hiding the
+    # scan, so build the index through it and re-issue the probe
+    # kernel lazily on the same snapshot.
+    from pyspark.sql import functions as F
 
-    df = _minhash_index_probe_impl(spark, sf_dir, checkpoint=False)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    index_scans = [
-        seg for seg in p.split("FileScan")[1:] if "dedup_minhash_index" in seg
-    ]
-    assert index_scans
-    for seg in index_scans:
-        filters = seg.split("PartitionFilters: [", 1)[1].split("]")[0]
-        assert "band" in filters and "grp" in filters, filters
+    from uts_spark.functions.dedup import _minhash_index_probe
+    from uts_spark.queries.llm_ops import (
+        _MIDX_BANDS,
+        _MIDX_K,
+        _MIDX_MOD,
+        _MIDX_N,
+        _MIDX_REM,
+        _MIDX_THR,
+        _docs_fingerprint,
+        minhash_index_path,
+    )
+    from uts_spark.sources.versioned import read_version
+
+    QUERIES["dedup_minhash_index_probe"](spark, sf_dir).collect()
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    new = d.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM)
+    old = d.filter(F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
+    path = minhash_index_path(sf_dir, _docs_fingerprint(spark, sf_dir))
+    df = _minhash_index_probe(
+        read_version(spark, path), new, old, "text", "doc_id",
+        n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS, threshold=_MIDX_THR,
+        checkpoint=False,
+    )
+    filters = _band_index_scan_filters(
+        df._jdf.queryExecution().executedPlan().toString()
+    )
+    assert filters  # the probe must actually read the index
+    for f in filters:
+        assert "In(band" in f and "In(grp" in f, f
 
 
 def test_privacy_verdict_joins_unhinted_but_aqe_broadcasts(spark, sf_dir):
@@ -883,13 +918,15 @@ def test_privacy_verdict_joins_unhinted_but_aqe_broadcasts(spark, sf_dir):
 
 
 def test_version_pinned_index_probe_still_partition_pruned(spark, sf_dir):
-    # round 8: a version-pinned probe reads an EXPLICIT file list with
-    # basePath — the claim that partition pruning survives must be
-    # plan-pinned, not asserted: the pinned scan's PartitionFilters
-    # still carries both partition columns. The registered query eagerly
+    # round 8: a version-pinned probe reads the pinned manifest's dir
+    # list — the claim that key pruning survives the pin must be
+    # plan-pinned, not asserted: the pinned scan's PushedFilters still
+    # carries the band and grp In-lists. The registered query eagerly
     # checkpoints (hiding lineage), so build the index through it, then
     # re-issue the pinned probe lazily.
-    from uts_spark.functions.dedup import minhash_index_probe
+    from pyspark.sql import functions as F
+
+    from uts_spark.functions.dedup import _minhash_index_probe
     from uts_spark.queries.llm_ops import (
         _MIDX_BANDS,
         _MIDX_K,
@@ -901,12 +938,10 @@ def test_version_pinned_index_probe_still_partition_pruned(spark, sf_dir):
         _frame_fingerprint,
         minhash_index_path,
     )
+    from uts_spark.sources.versioned import read_version
 
     QUERIES["dedup_minhash_index_version_probe"](spark, sf_dir).collect()
 
-    from pyspark.sql import functions as F
-
-    docs = QUERIES  # noqa: F841  (placeholder keeps import block tight)
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = d.filter(
         (F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
@@ -915,17 +950,13 @@ def test_version_pinned_index_probe_still_partition_pruned(spark, sf_dir):
     b2 = d.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM2)
     cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
     path = minhash_index_path(sf_dir, _frame_fingerprint(base), **cfg) + "_ver"
-    df = minhash_index_probe(
-        spark, path, b2, base, "text", "doc_id",
-        threshold=_MIDX_THR, version=0, checkpoint=False, **cfg,
+    df = _minhash_index_probe(
+        read_version(spark, path, 0), b2, base, "text", "doc_id",
+        threshold=_MIDX_THR, checkpoint=False, **cfg,
     )
-    p = df._jdf.queryExecution().executedPlan().toString()
-    # select the index scans by their read schema (id, bucket, band,
-    # grp) — the Location path list is width-truncated in plan strings
-    index_scans = [
-        seg for seg in p.split("FileScan")[1:] if "bucket#" in seg[:200]
-    ]
-    assert index_scans, "version-pinned index scan missing from the plan"
-    for seg in index_scans:
-        filters = seg.split("PartitionFilters: [", 1)[1].split("]")[0]
-        assert "band" in filters and "grp" in filters, filters
+    filters = _band_index_scan_filters(
+        df._jdf.queryExecution().executedPlan().toString()
+    )
+    assert filters, "version-pinned index scan missing from the plan"
+    for f in filters:
+        assert "In(band" in f and "In(grp" in f, f

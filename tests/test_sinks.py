@@ -1371,7 +1371,7 @@ def test_catalog_register_resolve_alter_collisions(spark, tmp_path):
 
 def test_catalog_index_probe_by_name(spark, tmp_path):
     """Indexes register in the same catalog and probe by name through
-    the protocol facade (protocol auto-detected per path)."""
+    the index facade (family and config read off its manifest)."""
     import os as _os
 
     from uts_spark.sources.catalog import index_probe_by_name, register_entry
@@ -1441,7 +1441,7 @@ def test_versioned_branch_changes_staged_feed(spark, tmp_path):
 def test_catalog_erase_by_names(spark, tmp_path):
     """Catalog-wide GDPR: erase_by_names resolves every named holder
     (or the whole catalog), dispatches tables by their manifest
-    stats_col and indexes by protocol/family, and the per-target
+    stats_col and indexes by family, and the per-target
     accounting carries the catalog name with zero leaks."""
     import os as _os
 
@@ -1867,8 +1867,7 @@ def test_catalog_maintenance_tick(spark, tmp_path):
     """The nightly janitor: (a) a table whose append chain outgrew the
     knee compacts; a healthy index chain is a no-op; (b) vacuum only
     on opt-in; (c) CAS debris older than the grace window is removed,
-    referenced dirs and young debris survive; (d) marker-protocol
-    indexes are skipped LOUDLY, never guessed at."""
+    referenced dirs and young debris survive."""
     import os as _os
     import time as _time
 
@@ -1937,18 +1936,6 @@ def test_catalog_maintenance_tick(spark, tmp_path):
     )}
     assert len(rep2["t"]["vacuumed"]) >= 1
     assert read_version(spark, p_tbl).count() == n_before
-
-    # (d) marker index: loud skip
-    from uts_spark.functions.index_protocol import index_build
-    p_marker = str(tmp_path / "marker")
-    docs_full = spark.read.parquet(f"{SF}/documents.parquet")
-    index_build(
-        docs_full, "minhash", p_marker, protocol="marker",
-        fingerprint="fm", text_col="text", id_col="doc_id",
-    )
-    register_entry(cat, "m", p_marker, kind="index")
-    rep3 = {r["name"]: r for r in catalog_maintenance_tick(spark, cat)}
-    assert "skipped" in rep3["m"] and "marker" in rep3["m"]["skipped"]
 
 
 def test_catalog_replicate_by_name(spark, tmp_path):
@@ -3690,48 +3677,6 @@ def test_versioned_reserved_address_columns_refused(spark, tmp_path):
             spark.createDataFrame([(2, 0)], "k long, __pos long"), p
         )
     assert V.read_version(spark, p).count() == 1
-
-
-def test_catalog_retention_marker_protocol(spark, tmp_path):
-    """ADVICE r10 (low): the janitor cannot vacuum a marker-protocol
-    index — set_retention refuses at set time, and a policy recorded
-    before registration/migration is reported as UNENFORCED by the
-    tick instead of silently skipped."""
-    import os
-
-    import pytest as _pytest
-
-    from uts_spark.functions.dedup import index_manifest_write
-    from uts_spark.sources.catalog import (
-        _cas_write,
-        _entries_dir,
-        catalog_maintenance_tick,
-        register_entry,
-        resolve,
-        set_retention,
-    )
-
-    cat = str(tmp_path / "cat")
-    ip = str(tmp_path / "midx")
-    os.makedirs(ip)
-    index_manifest_write(ip, "fp0", family="minhash")
-    register_entry(cat, "midx", ip, kind="index")
-    with _pytest.raises(ValueError, match="marker-protocol"):
-        set_retention(cat, "midx", keep_last=1)
-
-    # a stale policy (e.g. set before a protocol migration) surfaces
-    # loudly in the tick report rather than pretending enforcement
-    cur = resolve(cat, "midx")
-    _cas_write(
-        os.path.join(_entries_dir(cat), "midx.g1.json"),
-        {
-            "name": "midx", "path": cur["path"], "kind": "index",
-            "retention": {"keep_last": 1},
-        },
-    )
-    rep = {r["name"]: r for r in catalog_maintenance_tick(spark, cat)}
-    assert rep["midx"]["skipped"].startswith("marker-protocol")
-    assert rep["midx"]["retention_unenforced"] == {"keep_last": 1}
 
 
 def test_kmv_join_estimate_oracle_regimes(spark, tmp_path):

@@ -1282,23 +1282,20 @@ def test_stream_merges_into_versioned_table(spark, tmp_path):
 
 def test_stream_ingest_crash_midbatch_restart_converges(spark, tmp_path):
     """VERDICT r7 #6: kill the dedup-index ingest stream MID-EPOCH —
-    after a micro-batch's files hit the index but BEFORE its
+    after a micro-batch's append COMMITTED to the index but BEFORE its
     checkpoint commits — then restart from the same checkpoint. With
-    the batch-id-keyed idempotent append the replayed epoch sweeps its
-    own torn publish and re-publishes, so the final index row multiset
-    and manifest chain exactly equal an uninterrupted run's (plain
-    append-in-foreachBatch would duplicate the replayed batch's rows
-    forever)."""
-    import glob
-    import os
-
+    the batch-id-keyed append (minhash_vindex_append(batch_id=...)) the
+    replayed epoch finds its key on a committed manifest and skips, so
+    the final index row multiset and version chain exactly equal an
+    uninterrupted run's (a keyless append-in-foreachBatch would
+    duplicate the replayed batch's rows forever)."""
     import pytest
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        minhash_index_append_idempotent,
-        minhash_index_write,
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        vindex_seal,
     )
+    from uts_spark.sources.versioned import list_versions, read_version
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     base = docs.filter(F.col("doc_id") % 11 != 3)
@@ -1309,7 +1306,7 @@ def test_stream_ingest_crash_midbatch_restart_converges(spark, tmp_path):
     b1.select("doc_id", "text").repartition(4).write.parquet(src)
 
     def build(idx):
-        minhash_index_write(
+        minhash_vindex_build(
             base, "text", "doc_id", idx, fingerprint="fp0", **cfg
         )
 
@@ -1328,8 +1325,9 @@ def test_stream_ingest_crash_midbatch_restart_converges(spark, tmp_path):
             q.stop()
 
     def appender(idx):
-        return lambda bdf, bid: minhash_index_append_idempotent(
-            bdf, "text", "doc_id", idx, bid, **cfg
+        return lambda bdf, bid: minhash_vindex_append(
+            bdf, "text", "doc_id", idx, fingerprint="fp-ingest",
+            batch_id=bid, **cfg,
         )
 
     # reference: uninterrupted ingest of all 4 micro-batches
@@ -1337,7 +1335,7 @@ def test_stream_ingest_crash_midbatch_restart_converges(spark, tmp_path):
     build(idx_ref)
     run_stream(idx_ref, str(tmp_path / "chk_ref"), appender(idx_ref))
 
-    # crashing run: batch 2 PUBLISHES its files, then dies pre-commit
+    # crashing run: batch 2 COMMITS its append, then dies pre-checkpoint
     idx_c = str(tmp_path / "c")
     build(idx_c)
     chk = str(tmp_path / "chk_c")
@@ -1345,37 +1343,40 @@ def test_stream_ingest_crash_midbatch_restart_converges(spark, tmp_path):
     def crashing(bdf, bid):
         appender(idx_c)(bdf, bid)
         if bid == 2:
-            raise RuntimeError("simulated crash after files hit disk")
+            raise RuntimeError("simulated crash after the commit")
 
     with pytest.raises(Exception):
         run_stream(idx_c, chk, crashing)
-    torn = glob.glob(os.path.join(idx_c, "band=*", "grp=*", "b2-*.parquet"))
-    assert torn, "the crash must leave batch-2 files on disk (torn state)"
+    keys = [m.get("batch_key") for m in list_versions(idx_c)]
+    assert "e0b2" in keys, "the crash must leave batch 2 committed"
 
     # restart from the SAME checkpoint with the normal appender: the
-    # uncommitted epoch replays (same batch id), sweeps, re-publishes
+    # uncommitted epoch replays (same batch id) and skips its commit
     run_stream(idx_c, chk, appender(idx_c))
 
     cols = ["id", "band", "bucket", "grp"]
     ref_rows = sorted(
-        map(tuple, spark.read.parquet(idx_ref).select(*cols).collect())
+        map(tuple, read_version(spark, idx_ref).select(*cols).collect())
     )
     got_rows = sorted(
-        map(tuple, spark.read.parquet(idx_c).select(*cols).collect())
+        map(tuple, read_version(spark, idx_c).select(*cols).collect())
     )
     assert got_rows == ref_rows, "restarted index multiset diverged"
 
-    # physical convergence too: per-batch published file censuses match
-    def census(idx):
-        return sorted(
-            os.path.relpath(p, idx)
-            for p in glob.glob(os.path.join(idx, "band=*", "grp=*", "b*-*.parquet"))
-        )
+    # the version chains converge too: one commit per batch key
+    def chain(idx):
+        return [
+            (m["operation"], m.get("batch_key")) for m in list_versions(idx)
+        ]
 
-    assert census(idx_c) == census(idx_ref)
-    assert not os.path.exists(os.path.join(idx_c, "_staging", "b2"))
+    assert chain(idx_c) == chain(idx_ref)
+    assert len(chain(idx_ref)) == 1 + 4
 
-    # manifest chain ends identically
-    index_manifest_write(idx_ref, "fp1", **cfg)
-    index_manifest_write(idx_c, "fp1", **cfg)
-    assert index_state(idx_c) == index_state(idx_ref) == "fp1"
+    # and the seals end identically
+    vindex_seal(idx_ref, "fp1")
+    vindex_seal(idx_c, "fp1")
+    assert (
+        list_versions(idx_c)[-1]["fingerprint"]
+        == list_versions(idx_ref)[-1]["fingerprint"]
+        == "fp1"
+    )

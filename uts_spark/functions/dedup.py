@@ -12,6 +12,11 @@ Scale design (the reason each exists):
   cheapest stream-side prefilter.
 - EMBEDDING COSINE: semantic near-dup; brute force here, LSH/IVF variant
   in functions/similarity.py.
+- PERSISTED BAND INDEX: dedup-as-a-service keeps the corpus band rows at
+  rest and probes each new batch against them. The index verbs are the
+  snapshot-committed ``minhash_vindex_*`` in functions/vindex.py; this
+  module holds the row builder, probe/verify kernel and skew statistic
+  they share.
 
 Everything is Column-expression-only (no UDFs); the md5-based hash family
 (functions/hashing) keeps every step reproducible in the DuckDB oracle.
@@ -24,7 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from uts_spark.functions.hashing import hash64
-from uts_spark.sources.tables import parquet_cached_schema as _read_pq
 from uts_spark.functions.text import tokens, word_ngrams
 
 SIMHASH_BITS = 48  # 48 (not 64): avoids BIGINT sign-bit overflow under ANSI
@@ -593,11 +597,12 @@ def simhash_band_pairs(
 # --------------------------------------------------------------------------
 # Persisted MinHash band index (round 6): dedup-as-a-service. Production
 # dedup doesn't recompute the corpus sketch per batch — it maintains a
-# band-bucket index at rest and probes it with each new crawl. This is
-# the MinHash sibling of the persisted LSH/IVF ANN indexes
-# (functions/vindex.py): the same literal bucket-filter probe, the same
-# "persistence is physical, never semantic" contract (the probe's
-# oracle is the recompute formulation).
+# band-bucket index at rest and probes it with each new crawl. The index
+# verbs live in functions/vindex.py (minhash_vindex_*, snapshot-committed
+# like the LSH/IVF ANN indexes); this module keeps the shared row builder,
+# the probe/verify kernel and the skew monitor's primitives. The contract
+# is "persistence is physical, never semantic": the probe's oracle is the
+# recompute formulation.
 
 def _band_bucket_rows(sig: DataFrame, k: int, bands: int) -> DataFrame:
     """(id, h0..h{k-1}, band, bucket): one row per (doc, band) with the
@@ -612,574 +617,8 @@ def _band_bucket_rows(sig: DataFrame, k: int, bands: int) -> DataFrame:
     )
 
 
-def minhash_index_write(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    path: str,
-    n: int = 3,
-    k: int = 32,
-    bands: int = 8,
-    n_grps: int = 16,
-    fingerprint: str | None = None,
-) -> None:
-    """Persist the corpus MinHash band index: one NARROW row per
-    (doc, band) — just (id, band, bucket) — written as parquet
-    PARTITIONED BY (band, grp) where ``grp = pmod(xxhash64(bucket),
-    n_grps)`` coarsens the unbounded md5-bucket space into a prunable
-    directory grid. ``grp`` is a physical layout detail only — probes
-    re-derive it Spark-side and re-filter on the exact bucket string,
-    so no oracle ever sees it.
-
-    The index deliberately stores NO signatures and NO shingle sets:
-    a first cut carried both, and the probe's wide scan of them
-    dominated its wall (measured ~25 s vs 27 s recompute at 1M docs —
-    no win). Candidate verification instead re-sketches only the
-    CANDIDATE old docs from the corpus table, which is bounded by
-    bucket collisions, so the probe's cost is narrow-scan + batch-sized
-    hashing (see tools/neardup_smoke.py --index-probe for the A/B)."""
-    from uts_spark.sources.sinks import write_partitioned
-
-    arrays = doc_shingle_arrays_portable(df, text_col, id_col, n)
-    sig = minhash_signatures_portable(arrays, k)
-    rows = (
-        _band_bucket_rows(sig, k, bands)
-        .select("id", "band", "bucket")
-        .withColumn("grp", F.pmod(F.xxhash64("bucket"), F.lit(n_grps)))
-    )
-    write_partitioned(rows, path, ["band", "grp"], cluster=True)
-    index_manifest_write(
-        path, fingerprint or "", n=n, k=k, bands=bands, n_grps=n_grps
-    )
-    index_history_append(
-        path, 0, _index_data_files(path), fingerprint=fingerprint or ""
-    )
-
-
-_MANIFEST_NAME = "_INDEX_MANIFEST.json"
-_HISTORY_NAME = "_MANIFEST_HISTORY.jsonl"
-
-
-def _index_data_files(
-    path: str, parts: tuple[str, ...] = ("band=*", "grp=*")
-) -> list[str]:
-    """All data-file relpaths currently in the index's partition grid
-    (``parts`` names the grid — compact_partitioned passes its own)."""
-    import glob
-    import os
-
-    return sorted(
-        os.path.relpath(p, path)
-        for p in glob.glob(os.path.join(path, *parts, "*.parquet"))
-    )
-
-
-def index_history_append(
-    path: str, version: int, files: list[str], reset: bool = False, **meta
-) -> None:
-    """Record one index VERSION in the append-only history sidecar:
-    the build writes version 0 with its full file census, each
-    idempotent append tick appends (version, its published files), and
-    rewriting verbs (DELETE) append a ``reset`` line carrying the full
-    post-rewrite census — erasure legally invalidates time travel to
-    the pre-erasure index, so versions before a reset become
-    unreadable BY DESIGN (GDPR wins over snapshots)."""
-    import json
-    import os
-
-    with open(os.path.join(path, _HISTORY_NAME), "a") as fh:
-        fh.write(
-            json.dumps(
-                {"version": version, "reset": reset, "files": files, **meta}
-            )
-            + "\n"
-        )
-
-
-def _index_history_rewrite(path: str, recs: list[dict]) -> None:
-    """Atomically replace the history sidecar (tmp + rename)."""
-    import json
-    import os
-
-    p = os.path.join(path, _HISTORY_NAME)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        for r in recs:
-            fh.write(json.dumps(r) + "\n")
-    os.replace(tmp, p)
-
-
-def index_history_versions(path: str) -> list[dict]:
-    import json
-    import os
-
-    p = os.path.join(path, _HISTORY_NAME)
-    if not os.path.exists(p):
-        return []
-    with open(p) as fh:
-        return [json.loads(line) for line in fh if line.strip()]
-
-
-def index_history_vacuum(path: str) -> int:
-    """Truncate the history sidecar to the records FROM the last reset
-    on (VERDICT r8 #7 — the sidecar grows one line per tick forever
-    and every history reader parses all of it; over a service
-    lifetime that is an unbounded driver-side scan per probe).
-    Everything before the last reset is unreadable BY DESIGN already
-    (index_files_at raises 'predates the rewrite'), so dropping those
-    lines changes no reachable version's census — stale pins keep
-    raising the same error, because the reset line itself is
-    retained. No-op (returns 0) when the history has no reset.
-    Returns the number of lines removed. Run it inside the same
-    service tick that compacts the data files — both are the
-    'bounded metadata over unbounded ticks' hygiene."""
-    recs = index_history_versions(path)
-    last_reset = max(
-        (r["version"] for r in recs if r.get("reset")), default=None
-    )
-    if last_reset is None:
-        return 0
-    kept = [r for r in recs if r["version"] >= last_reset]
-    if len(kept) == len(recs):
-        return 0
-    _index_history_rewrite(path, kept)
-    return len(recs) - len(kept)
-
-
-def index_history_changes(
-    spark, path: str, from_version: int, to_version: int | None = None
-):
-    """CHANGE DATA FEED for the MARKER-protocol index families,
-    derived from the history sidecar (ROADMAP r10 #2 — the snapshot
-    side has versioned.table_changes; this gives migration tooling
-    the same incremental read over a marker index): between two
-    history versions with NO reset in the range, every change is an
-    insert living in the files the ticks between them published — the
-    feed is a plain scan of ``files_at(to) - files_at(from)``, no
-    join, mirroring the snapshot table's append-only dir-diff fast
-    path. A RESET in the range (erasure, compaction) makes the feed
-    undefined by design — the pre-reset files are physically gone —
-    so the call refuses loudly and the consumer resyncs from the
-    reset census (exactly how Delta CDF consumers handle a vacuumed
-    range). Partition columns (band/grp, table/bucket, cell) are
-    recovered via basePath."""
-    from pyspark.sql import functions as F
-
-    recs = index_history_versions(path)
-    if not recs:
-        raise ValueError(f"index at {path}: no version history")
-    known = {r["version"] for r in recs}
-    if to_version is None:
-        to_version = max(known)
-    for v in (from_version, to_version):
-        if v not in known:
-            raise ValueError(
-                f"index at {path}: unknown version {v} "
-                f"(history has {sorted(known)})"
-            )
-    if from_version > to_version:
-        raise ValueError(
-            f"index at {path}: from_version {from_version} > "
-            f"to_version {to_version}"
-        )
-    resets = [
-        r["version"] for r in recs
-        if r.get("reset") and from_version < r["version"] <= to_version
-    ]
-    if resets:
-        raise ValueError(
-            f"index at {path}: versions {from_version}->{to_version} "
-            f"cross the rewrite at version {min(resets)} — the feed is "
-            "undefined across a reset (pre-reset files are physically "
-            "gone); resync from the reset census"
-        )
-    f_from = set(index_files_at(path, from_version))
-    f_to = index_files_at(path, to_version)
-    added = [f for f in f_to if f not in f_from]
-    scan = spark.read.option("basePath", path)
-    if not added:
-        return scan.parquet(*f_to).withColumn(
-            "_change_type", F.lit("insert")
-        ).limit(0)
-    return scan.parquet(*added).withColumn(
-        "_change_type", F.lit("insert")
-    )
-
-
-def index_epoch(path: str) -> int:
-    """The index's current EPOCH = the VERSION of the last reset line
-    in its history (0 when no history or no reset exists — resets are
-    always appended at max(version)+1 >= 1, so 0 is unambiguous).
-    Rewriting verbs (delete, compaction, re-cluster) each append a
-    reset, so the epoch names the physical generation of the index's
-    files. Idempotent appends key their published file names by
-    (epoch, batch_id) — see
-    :func:`uts_spark.sources.sinks.staged_idempotent_append` — so a
-    batch_id REUSED after a rewrite (a new stream restarting at bid 0
-    post-erasure, ADVICE r8) lands in a fresh name space instead of
-    sweeping the earlier generation's surviving ``b0-*`` files out of
-    untouched partitions. The reset VERSION (not a count of reset
-    lines) keys the epoch because versions never repeat and the last
-    reset line survives :func:`index_history_vacuum` — a counting
-    epoch would REGRESS after a vacuum and re-collide with the
-    earlier generation's surviving publish names."""
-    return max(
-        (
-            r["version"]
-            for r in index_history_versions(path)
-            if r.get("reset")
-        ),
-        default=0,
-    )
-
-
-def index_files_at(path: str, version: int) -> list[str]:
-    """The index's data-file set AT ``version`` (absolute paths):
-    the latest reset line at or below ``version`` plus every
-    subsequent append's files. Raises for versions older than the
-    last reset (those files are physically gone — see
-    index_history_append) and for unknown versions."""
-    import os
-
-    recs = index_history_versions(path)
-    if not recs:
-        raise ValueError(f"index at {path}: no version history")
-    known = {r["version"] for r in recs}
-    resets = [r["version"] for r in recs if r.get("reset")]
-    newer_resets = [v for v in resets if v > version]
-    # the rewrite check comes FIRST: after a history vacuum the
-    # pre-reset records are gone from the sidecar, so a stale pin is
-    # both "unknown" and "predates the rewrite" — the second is the
-    # truthful diagnosis either way
-    if newer_resets:
-        raise ValueError(
-            f"index at {path}: version {version} predates the rewrite at "
-            f"version {min(newer_resets)} — its files were physically "
-            "removed (erasure invalidates earlier snapshots by design)"
-        )
-    if version not in known:
-        raise ValueError(
-            f"index at {path}: unknown version {version} "
-            f"(history has {sorted(known)})"
-        )
-    last_reset = max((v for v in resets if v <= version), default=0)
-    out: list[str] = []
-    for r in recs:
-        v = r["version"]
-        if v < last_reset or v > version:
-            continue
-        if r.get("reset") and v != last_reset:
-            continue
-        out.extend(r["files"])
-    return [os.path.join(path, f) for f in out]
-
-
-def index_scan_at(spark, path: str, version: int):
-    """VERSION-PINNED scan shared by every index family's probe: the
-    DataFrame reads exactly the file census the history recorded at
-    ``version`` (explicit file list + basePath, so the partition
-    columns — and therefore pruning — are unchanged). Raises a
-    DESCRIPTIVE error when the census at ``version`` is empty (an
-    empty build or an all-empty-batch tick, ADVICE r8): handing zero
-    paths to spark.read.parquet throws an opaque 'cannot infer
-    schema' instead of naming the actual condition."""
-    files = index_files_at(path, version)
-    if not files:
-        raise ValueError(
-            f"index at {path}: version {version} has an EMPTY file "
-            "census — nothing was ever published at that version "
-            "(empty build or empty-batch tick); probe unpinned or pin "
-            "a version with data"
-        )
-    return spark.read.option("basePath", path).parquet(*files)
-
-
-def index_manifest_write(path: str, fingerprint: str, **config) -> None:
-    """Persist the index's (fingerprint, config) manifest next to
-    _SUCCESS (ADVICE r6, medium): probes validate BOTH before trusting
-    the index — reuse is never on pathname alone, and an append bumps
-    the fingerprint so a service's index tracks the corpus it actually
-    covers (the 'fingerprint chain' of VERDICT r6 #2/#8)."""
-    import json
-    import os
-
-    with open(os.path.join(path, _MANIFEST_NAME), "w") as fh:
-        json.dump({"fingerprint": fingerprint, **config}, fh)
-
-
-def index_manifest_read(path: str) -> dict | None:
-    import json
-    import os
-
-    p = os.path.join(path, _MANIFEST_NAME)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)
-
-
-_PENDING_NAME = "_PENDING.json"
-
-
-def index_state(path: str) -> str | None:
-    """Crash-safe manifest state (ADVICE r7, low): the append protocol
-    is append-files THEN bump-manifest — two non-atomic steps. A crash
-    between them leaves the manifest at fp(base) while the batch's rows
-    are already (partially) on disk, so a naive re-run re-appends the
-    entire batch and PERMANENTLY duplicates index rows (probe output
-    survives via DISTINCT candidates, but file/row counts drift and
-    delete's removed-count inflates). Service ticks therefore write a
-    ``_PENDING.json`` marker carrying the TARGET fingerprint before
-    touching the data (:func:`index_tick`) and clear it only after the
-    manifest bump; this reader returns ``None`` (= index untrusted,
-    rebuild) whenever a marker is present, regardless of what the
-    manifest claims."""
-    import os
-
-    if os.path.exists(os.path.join(path, _PENDING_NAME)):
-        return None
-    m = index_manifest_read(path)
-    return m["fingerprint"] if m else None
-
-
-class IndexBusyError(RuntimeError):
-    """A concurrent writer holds the index's pending marker."""
-
-
-def index_tick(path: str, target_fp: str, work, **config) -> None:
-    """One service mutation (append/delete/ingest) under the
-    pending-marker protocol: write marker(target_fp) → ``work()`` →
-    manifest bump → clear marker. Any crash inside the window leaves
-    the marker behind, and :func:`index_state` reports the index as
-    untrusted so the next tick rebuilds instead of double-applying.
-
-    The marker is created with O_EXCL, so single-writer is ENFORCED,
-    not assumed: a second concurrent ticker fails fast with
-    :class:`IndexBusyError` instead of both writers interleaving
-    appends and stomping each other's manifest bump (the multi-writer
-    corruption mode). A crashed writer's stale marker surfaces as
-    ``index_state() is None`` — the caller's rebuild path — never as a
-    silent wait."""
-    import json
-    import os
-
-    p = os.path.join(path, _PENDING_NAME)
-    try:
-        fd = os.open(p, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise IndexBusyError(
-            f"index at {path}: another writer holds {_PENDING_NAME} — "
-            "concurrent tick refused (if the holder crashed, "
-            "index_state() is None and the caller rebuilds)"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"fingerprint": target_fp, **config}, fh)
-    work()
-    index_manifest_write(path, target_fp, **config)
-    os.remove(p)
-
-
-def _check_index_config(path: str, **config) -> None:
-    """Raise if a manifest exists and disagrees with the probe's
-    parameters — a silent config mismatch drops pairs, never errors."""
-    m = index_manifest_read(path)
-    if m is None:
-        return
-    for key, val in config.items():
-        if key in m and m[key] != val:
-            raise ValueError(
-                f"minhash index at {path}: config mismatch — index has "
-                f"{key}={m[key]}, probe asked {key}={val}; rebuild or "
-                "probe with the index's parameters"
-            )
-
-
-def minhash_index_append(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    path: str,
-    n: int = 3,
-    k: int = 32,
-    bands: int = 8,
-    n_grps: int = 16,
-) -> None:
-    """Fold a new batch into the persisted band index (VERDICT r6 #2 —
-    without this a dedup service serves a stale corpus after its first
-    batch): sketch ONLY the batch, append its narrow (id, band, bucket)
-    rows partition-aligned into the existing (band, grp) directory grid
-    (parquet append adds files to matching partitions; no existing file
-    is rewritten). Cost is batch-sized — sketching + one
-    bands-per-doc-row write — independent of index size; SCALE.md
-    records append-vs-rebuild at 1M docs. The caller bumps the manifest
-    fingerprint via :func:`index_manifest_write` after the append."""
-    from uts_spark.sources.sinks import write_partitioned
-
-    _check_index_config(path, n=n, k=k, bands=bands, n_grps=n_grps)
-    arrays = doc_shingle_arrays_portable(df, text_col, id_col, n)
-    sig = minhash_signatures_portable(arrays, k)
-    rows = (
-        _band_bucket_rows(sig, k, bands)
-        .select("id", "band", "bucket")
-        .withColumn("grp", F.pmod(F.xxhash64("bucket"), F.lit(n_grps)))
-    )
-    write_partitioned(rows, path, ["band", "grp"], mode="append", cluster=True)
-
-
-def minhash_index_append_idempotent(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    path: str,
-    batch_id: int,
-    n: int = 3,
-    k: int = 32,
-    bands: int = 8,
-    n_grps: int = 16,
-) -> None:
-    """EXACTLY-ONCE micro-batch append for the streaming ingest loop
-    (VERDICT r7 #6): plain ``minhash_index_append`` inside foreachBatch
-    is append-files-then-commit-checkpoint — a crash after the files
-    hit disk but before the epoch commits makes the restarted stream
-    re-run the batch and append its rows TWICE. This variant is
-    idempotent per (index, batch_id), so a replayed batch converges to
-    the same physical index:
-
-    1. STAGE: sketch the batch and write its (band, grp)-partitioned
-       rows under ``path/_staging/b{batch_id}`` in overwrite mode
-       (underscore dir — invisible to the index's partition discovery;
-       a torn prior staging of the same batch is replaced wholesale);
-    2. SWEEP: delete any ``b{batch_id}-*.parquet`` already published
-       into the index partitions by a crashed prior attempt;
-    3. PUBLISH: os.replace each staged file into its partition dir
-       under the deterministic name ``b{batch_id}-{seq}.parquet``.
-
-    Every crash window re-runs to the identical end state: staging is
-    overwrite, the sweep erases any partial publish, and the names are
-    a pure function of batch_id. Same batch-sized cost as the plain
-    append plus a file-move pass (renames, no data copy). The
-    query-level pending-marker tick still guards the WHOLE stream; this
-    makes the cheap path — resume from the checkpoint without a
-    rebuild — actually exact."""
-    from uts_spark.sources.sinks import staged_idempotent_append
-
-    _check_index_config(path, n=n, k=k, bands=bands, n_grps=n_grps)
-    arrays = doc_shingle_arrays_portable(df, text_col, id_col, n)
-    sig = minhash_signatures_portable(arrays, k)
-    rows = (
-        _band_bucket_rows(sig, k, bands)
-        .select("id", "band", "bucket")
-        .withColumn("grp", F.pmod(F.xxhash64("bucket"), F.lit(n_grps)))
-    )
-    published = staged_idempotent_append(
-        rows, path, ["band", "grp"], batch_id, epoch=index_epoch(path)
-    )
-    _index_history_record_batch(path, batch_id, published)
-
-
-def _index_history_record_batch(
-    path: str, batch_id: int, published: list[str], **meta
-) -> None:
-    """Record one idempotent-append tick in the version history (no-op
-    when the index predates the history feature). Idempotent per
-    (epoch, batch_id) — a replayed micro-batch REWRITES its own line
-    with the re-published census instead of appending a second. The
-    match is scoped to records AFTER the last reset (ADVICE r8): a
-    batch_id reused across a rewrite (a new stream restarting at bid 0
-    after an erasure) must open a NEW version line, not resurrect the
-    dead pre-reset one — rewriting that line would make index_files_at
-    silently omit the new tick's files at every current version.
-    ``meta`` rides on the line (the drift control loop records the
-    tick's quantizer-fit integers here — the stat is part of the
-    index's durable record, VERDICT r8 #3)."""
-    recs = index_history_versions(path)
-    if not recs:
-        return
-    published = sorted(published)
-    last_reset = max(
-        (r["version"] for r in recs if r.get("reset")), default=-1
-    )
-    mine = [
-        r
-        for r in recs
-        if r.get("batch_id") == batch_id and r["version"] > last_reset
-    ]
-    if mine:
-        others = [r for r in recs if r is not mine[0]]
-        others.append(
-            {
-                "version": mine[0]["version"],
-                "reset": False,
-                "files": published,
-                "batch_id": batch_id,
-                **meta,
-            }
-        )
-        _index_history_rewrite(path, sorted(others, key=lambda r: r["version"]))
-    else:
-        index_history_append(
-            path,
-            max(r["version"] for r in recs) + 1,
-            published,
-            batch_id=batch_id,
-            **meta,
-        )
-
-
-def minhash_index_delete(
-    spark,
-    deleted_docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    path: str,
-    n: int = 3,
-    k: int = 32,
-    bands: int = 8,
-    n_grps: int = 16,
-) -> int:
-    """ERASE documents from the persisted band index (the service's
-    GDPR verb — an index that can only grow keeps serving matches
-    against data the corpus no longer legally holds): re-sketch ONLY
-    the deleted docs to find which (band, grp) partitions hold their
-    rows, then hand (id, band, grp) to the shared partition-delete
-    kernel (sources/sinks.delete_from_partitioned — left-anti id join,
-    dynamic partition overwrite, emptied-dir sweep). Cost ∝ touched
-    partitions (bounded by deleted x bands), never the index; the
-    deleted-id list stays a
-    DataFrame end-to-end, so a domain-takedown-sized erasure batch
-    never materializes on the driver (VERDICT r7 #2). Returns the
-    number of index rows removed; the caller bumps the manifest
-    fingerprint afterwards."""
-    from uts_spark.sources.sinks import delete_from_partitioned
-
-    _check_index_config(path, n=n, k=k, bands=bands, n_grps=n_grps)
-    arrays = doc_shingle_arrays_portable(deleted_docs, text_col, id_col, n)
-    sig = minhash_signatures_portable(arrays, k)
-    rows = (
-        _band_bucket_rows(sig, k, bands)
-        .select("id", "band", "bucket")
-        .withColumn("grp", F.pmod(F.xxhash64("bucket"), F.lit(n_grps)))
-    )
-    removed = delete_from_partitioned(
-        spark, path, rows.select("id", "band", "grp"), ["band", "grp"], "id"
-    )
-    # erasure physically rewrites partitions, so pre-delete snapshot
-    # versions are gone — record a RESET with the post-delete census
-    # (time travel resumes from here; see index_history_append)
-    recs = index_history_versions(path)
-    if recs:
-        index_history_append(
-            path,
-            max(r["version"] for r in recs) + 1,
-            _index_data_files(path),
-            reset=True,
-        )
-    return removed
-
-
-def minhash_index_probe(
-    spark,
-    path: str,
+def _minhash_index_probe(
+    scan: DataFrame,
     new_docs: DataFrame,
     old_docs: DataFrame,
     text_col: str,
@@ -1190,20 +629,19 @@ def minhash_index_probe(
     threshold: float = 0.5,
     n_grps: int = 16,
     checkpoint: bool = True,
-    version: int | None = None,
-    scan: DataFrame | None = None,
 ) -> DataFrame:
-    """Probe the persisted index with a new batch: sketch the BATCH
-    (batch-sized work only), push its distinct (band, grp) list into
-    the narrow index scan as a static partition filter (bounded by
-    batch x bands — the same driver-materialized-literal precedent as
-    similarity._lsh_index_probe), equi-join on the exact (band, bucket) for
-    candidate pairs, then re-sketch ONLY the candidate old docs from
-    ``old_docs`` (bounded by bucket collisions) for the estimated +
-    exact Jaccard verify. Returns directional (id_new, id_old,
-    est_jaccard, jaccard) pairs with jaccard >= threshold — new x old
-    only; the corpus is never re-sketched wholesale and the old x old
-    quadrant is never generated.
+    """Probe a band index with a new batch: sketch the BATCH
+    (batch-sized work only), push its distinct (band, grp) keys into
+    the narrow index ``scan`` — the (id, band, bucket, grp) rows of one
+    resolved snapshot (functions/vindex.minhash_vindex_probe) — as a
+    static filter (bounded by batch x bands — the same
+    driver-materialized-literal precedent as similarity._lsh_index_probe),
+    equi-join on the exact (band, bucket) for candidate pairs, then
+    re-sketch ONLY the candidate old docs from ``old_docs`` (bounded by
+    bucket collisions) for the estimated + exact Jaccard verify. Returns
+    directional (id_new, id_old, est_jaccard, jaccard) pairs with
+    jaccard >= threshold — new x old only; the corpus is never
+    re-sketched wholesale and the old x old quadrant is never generated.
 
     ``checkpoint=True`` (default — ADVICE r6, low) eagerly
     ``localCheckpoint``s the (candidate-bounded) verified pair set and
@@ -1211,19 +649,12 @@ def minhash_index_probe(
     :func:`minhash_lsh` / :func:`simhash_band_pairs`: a dedup service
     probes repeatedly in one session, and un-released caches accumulate
     executor storage per probe. ``checkpoint=False`` keeps the full
-    lazy plan (plan-shape tests pin the partition-pruned index scan).
-
-    ``scan`` overrides the index source with an explicit (id, band,
-    bucket, grp) frame — the snapshot-committed family
-    (functions/vindex.py) passes its manifest-resolved version read
-    here, so both storage protocols share one probe/verify kernel."""
-    if scan is None:
-        _check_index_config(path, n=n, k=k, bands=bands, n_grps=n_grps)
+    lazy plan (plan-shape tests pin the pruned index scan)."""
     arrays_n = doc_shingle_arrays_portable(new_docs, text_col, id_col, n).cache()
     # cached (optimization r11): the batch signatures are consumed
-    # THREE times (probed-partition list, candidate join, estimate
-    # join) and each read would re-run the explode + k-min groupBy
-    # from the cached arrays — the cache bounds it to one computation
+    # THREE times (probed-key list, candidate join, estimate join) and
+    # each read would re-run the explode + k-min groupBy from the
+    # cached arrays — the cache bounds it to one computation
     sig_n = minhash_signatures_portable(arrays_n, k).cache()
     bk_n = _band_bucket_rows(sig_n, k, bands)
 
@@ -1234,28 +665,21 @@ def minhash_index_probe(
         .distinct()
         .toPandas()
     )
-    # one combined-key IN over both partition columns (not a pair-wise
-    # OR-chain): stays a single static PartitionFilters expression even
-    # for hundreds of probed partitions, and an empty probe batch
-    # degrades to IN () = false, i.e. an empty result
-    keys = sorted(int(b) * n_grps + int(g) for b, g in pdf.itertuples(index=False))
-    if scan is not None:
-        pass  # caller-resolved rows (snapshot family)
-    elif version is None:
-        scan = _read_pq(spark, path)
+    pairs = sorted((int(b), int(g)) for b, g in pdf.itertuples(index=False))
+    if pairs:
+        # the per-column IN-lists are what the parquet reader can push
+        # down (row groups of the (band, grp, bucket)-sorted snapshot
+        # dirs prune on their min/max stats); the combined key is the
+        # exact (band, grp) set, one IN even for hundreds of keys
+        idx = scan.filter(
+            F.col("band").isin(sorted({b for b, _ in pairs}))
+            & F.col("grp").isin(sorted({g for _, g in pairs}))
+            & (F.col("band") * n_grps + F.col("grp")).isin(
+                [b * n_grps + g for b, g in pairs]
+            )
+        )
     else:
-        # VERSION-PINNED read: the scan sees exactly the file set the
-        # history recorded at `version` — a reader stays on a
-        # consistent snapshot while append ticks land (files published
-        # after the pin are invisible; batch-keyed names make the set
-        # reconstructible). basePath keeps (band, grp) as partition
-        # columns, so pruning is unchanged.
-        scan = index_scan_at(spark, path, version)
-    idx = scan.filter(
-        (F.col("band") * n_grps + F.col("grp")).isin(keys)
-        if keys
-        else F.lit(False)
-    )
+        idx = scan.filter(F.lit(False))  # empty batch: empty result
 
     cand = (
         bk_n.select(F.col("id").alias("id_new"), "band", "bucket")
@@ -1321,8 +745,10 @@ def minhash_index_probe(
 
 
 # --------------------------------------------------------------------------
-# Band-occupancy skew monitor + hot-bucket cap: the dedup ingest's drift
-# control loop (the MinHash sibling of vindex.ivf_vindex_ingest_tick).
+# Band-occupancy skew monitor: the measured thresholds and the collision
+# statistic of the dedup ingest's drift control loop
+# (vindex.minhash_vindex_ingest_tick / minhash_vindex_cap_hot_buckets, the
+# MinHash sibling of vindex.ivf_vindex_ingest_tick).
 # The band index has no quantizer to drift, but it has the analogous
 # failure: a boilerplate/template FLOOD (many near-identical documents)
 # collapses into a handful of mega-buckets, and every future probe's
@@ -1342,7 +768,6 @@ def minhash_index_probe(
 # batch and two below every flood; HOT_BUCKET_CAP = 16 sits above every
 # organic bucket and below the smallest flood bucket (45).
 
-_COLL_REF_NAME = "_COLL_REF.json"
 SKEW_MILLI = 8000      # flag when batch collision rate > 8x reference
 HOT_BUCKET_CAP = 16    # quarantine buckets larger than this on a flag
 
@@ -1387,233 +812,3 @@ def minhash_collision_stat_ints(
         .first()
     )
     return int(row["c"] or 0), int(row["n"] or 0)
-
-
-def minhash_coll_ref_write(
-    path: str, coll: int, rown: int, rows_total: int
-) -> None:
-    """Persist the monitor's REFERENCE: the build corpus's organic
-    self-collision integers (coll = Σ s·(s−1) over buckets, rown = its
-    band rows) plus the live index's current row count (``rows_total``,
-    maintained incrementally per tick — the batch rate's denominator
-    must never cost an index scan). Written at build; rows_total
-    advances on every append and shrinks on a cap."""
-    import json
-    import os
-
-    with open(os.path.join(path, _COLL_REF_NAME), "w") as fh:
-        json.dump(
-            {
-                "coll": int(coll),
-                "rown": int(rown),
-                "rows_total": int(rows_total),
-            },
-            fh,
-        )
-
-
-def minhash_coll_ref_read(path: str) -> dict | None:
-    import json
-    import os
-
-    p = os.path.join(path, _COLL_REF_NAME)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)
-
-
-def minhash_coll_ref_init(spark, path: str) -> dict:
-    """Compute and persist the reference from the index as built: one
-    index-shaped aggregate (build time is already corpus-shaped, so
-    the reference costs a rounding error of the build)."""
-    idx = _read_pq(spark, path)
-    row = (
-        idx.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("s"))
-        .agg(
-            F.sum(F.col("s") * (F.col("s") - F.lit(1))).alias("c"),
-            F.sum("s").alias("n"),
-        )
-        .first()
-    )
-    coll, rown = int(row["c"] or 0), int(row["n"] or 0)
-    minhash_coll_ref_write(path, coll, rown, rown)
-    return {"coll": coll, "rown": rown, "rows_total": rown}
-
-
-def minhash_index_cap_hot_buckets(
-    spark, path: str, cap: int = HOT_BUCKET_CAP, n_grps: int = 16
-) -> int:
-    """The corrective verb: QUARANTINE every bucket larger than ``cap``
-    — its rows move to ``path/_quarantine`` (underscore dir, invisible
-    to the index's partition discovery; auditable and reversible) and
-    the touched (band, grp) partitions rewrite without them, so future
-    probes generate no candidates through flood buckets. Semantics are
-    the documented cap policy (a probe's oracle replicates the size
-    rule in SQL), not silent loss: the quarantined rows remain on disk
-    with their bucket keys.
-
-    Cost ∝ touched partitions (the hot buckets' directories), never
-    the index; the hot-bucket key set is bounded by live_rows/cap
-    groups and is broadcast to the rewrite. Records a RESET line in
-    the version history (physical rewrite — same contract as erasure).
-    Returns the number of rows quarantined."""
-    import os
-
-    idx = _read_pq(spark, path)
-    hot = (
-        idx.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("s"))
-        .filter(F.col("s") > cap)
-        .select("band", "bucket")
-        .localCheckpoint(eager=True)
-    )
-    n_hot = hot.count()
-    if n_hot == 0:
-        return 0
-    touched = sorted(
-        (int(r["band"]), int(r["grp"]))
-        for r in hot.select(
-            "band", F.pmod(F.xxhash64("bucket"), F.lit(n_grps)).alias("grp")
-        )
-        .distinct()
-        .collect()
-    )  # bounded by the (band, grp) partition GRID, never by rows
-    combined = F.concat_ws(
-        "/", F.col("band").cast("string"), F.col("grp").cast("string")
-    )
-    cond = combined.isin(["/".join(map(str, key)) for key in touched])
-    scan = _read_pq(spark, path).filter(cond)
-    quarantined = scan.join(F.broadcast(hot), ["band", "bucket"], "left_semi")
-    keep = scan.join(
-        F.broadcast(hot), ["band", "bucket"], "left_anti"
-    ).localCheckpoint(eager=True)
-    removed = scan.count() - keep.count()
-    # write the quarantine BEFORE overwriting the partitions it reads
-    quarantined.write.mode("append").parquet(
-        os.path.join(path, "_quarantine")
-    )
-    (
-        keep.repartition(F.col("band"), F.col("grp"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("band", "grp")
-        .parquet(path)
-    )
-    import shutil as _sh
-
-    remaining = {
-        (int(r["band"]), int(r["grp"]))
-        for r in keep.select("band", "grp").distinct().collect()
-    }
-    for key in touched:
-        if key not in remaining:
-            _sh.rmtree(
-                os.path.join(path, f"band={key[0]}", f"grp={key[1]}"),
-                ignore_errors=True,
-            )
-    recs = index_history_versions(path)
-    if recs:
-        index_history_append(
-            path,
-            max(r["version"] for r in recs) + 1,
-            _index_data_files(path),
-            reset=True,
-            hot_buckets=n_hot,
-        )
-    return removed
-
-
-def minhash_ingest_tick(
-    spark,
-    batch_docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    path: str,
-    batch_id: int,
-    cap: int = HOT_BUCKET_CAP,
-    skew_milli: int = SKEW_MILLI,
-    n: int = 3,
-    k: int = 32,
-    bands: int = 8,
-    n_grps: int = 16,
-) -> dict:
-    """One CLOSED-LOOP micro-batch of the dedup ingest service (the
-    MinHash sibling of vindex.ivf_vindex_ingest_tick — round-10
-    candidate #3). Per tick, under the caller's pending marker:
-
-    1. MEASURE first: the batch's bucket-collision integers against
-       the CURRENT live index (pre-append — the stat must see the
-       index the batch is colliding into, and the intra-batch term
-       catches self-similar floods);
-    2. APPEND exactly-once (epoch-keyed staged publish), recording
-       (coll_sum, coll_rown) on the tick's history line — the stat is
-       part of the index's durable record;
-    3. ACT when the measured flag fires — batch rate > skew_milli/1000
-       × the build-time organic rate, cross-multiplied in exact
-       arbitrary-precision ints:
-         coll·ref_rown·(ref_rown−1)·1000
-           > skew_milli·ref_coll·row_n·(rows_total+row_n−1)
-       (8x sits between the measured ≤0.94x healthy-batch band and
-       the ≥475x flood band, SCALE.md round 9b) — by QUARANTINING
-       buckets above ``cap`` (16: above every measured organic bucket,
-       below the smallest measured flood bucket).
-
-    Returns {"coll_sum", "row_n", "flagged", "capped_rows"}. A missing
-    collision reference (index predates the loop) records the stat but
-    never flags — monitoring degrades gracefully, it does not guess."""
-    from uts_spark.sources.sinks import staged_idempotent_append
-
-    _check_index_config(path, n=n, k=k, bands=bands, n_grps=n_grps)
-    arrays = doc_shingle_arrays_portable(batch_docs, text_col, id_col, n)
-    sig = minhash_signatures_portable(arrays, k)
-    rows = (
-        _band_bucket_rows(sig, k, bands)
-        .select("id", "band", "bucket")
-        .withColumn("grp", F.pmod(F.xxhash64("bucket"), F.lit(n_grps)))
-        .localCheckpoint(eager=True)  # sketched once: stat + append reuse
-    )
-    live = _read_pq(spark, path)
-    coll, row_n = minhash_collision_stat_ints(
-        rows.select("id", "band", "bucket"), live
-    )
-    published = staged_idempotent_append(
-        rows, path, ["band", "grp"], batch_id, epoch=index_epoch(path)
-    )
-    _index_history_record_batch(
-        path, batch_id, published, coll_sum=coll, coll_rown=row_n
-    )
-
-    ref = minhash_coll_ref_read(path)
-    flagged = False
-    if ref is not None and row_n > 0 and ref["coll"] > 0 and ref["rown"] > 1:
-        lhs = coll * ref["rown"] * (ref["rown"] - 1) * 1000
-        rhs = (
-            skew_milli
-            * ref["coll"]
-            * row_n
-            * (ref["rows_total"] + row_n - 1)
-        )
-        flagged = lhs > rhs
-    if ref is not None:
-        minhash_coll_ref_write(
-            path, ref["coll"], ref["rown"], ref["rows_total"] + row_n
-        )
-    capped = 0
-    if flagged:
-        capped = minhash_index_cap_hot_buckets(
-            spark, path, cap=cap, n_grps=n_grps
-        )
-        ref2 = minhash_coll_ref_read(path)
-        if ref2 is not None:
-            minhash_coll_ref_write(
-                path, ref2["coll"], ref2["rown"],
-                ref2["rows_total"] - capped,
-            )
-    return {
-        "coll_sum": coll,
-        "row_n": row_n,
-        "flagged": bool(flagged),
-        "capped_rows": capped,
-    }

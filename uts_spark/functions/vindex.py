@@ -1,9 +1,11 @@
 """Snapshot-committed index maintenance (VERDICT r8 #4, completed for
 ALL FOUR index families in round 9): full index CRUD routed through the
-versioned table's ATOMIC MANIFEST COMMIT (sources/versioned.py) instead
-of the rename-swap + O_EXCL pending-marker protocol.
+versioned table's ATOMIC MANIFEST COMMIT (sources/versioned.py). It is
+the only index protocol: the rename-swap + O_EXCL pending-marker
+protocol that came before it is retired (SCALE.md round 9c measured
+snapshot ahead on maintenance and at parity on probes).
 
-Why this exists: the marker protocol is POSIX-local-FS only — object
+Why this exists: the marker protocol was POSIX-local-FS only — object
 storage has no rename and no O_EXCL, so at 100 TB none of those
 primitives exist. The versioned table's commit point is a single
 PUT-if-absent of the next version's manifest (os.link locally, a
@@ -59,7 +61,7 @@ Cost shapes (the 100 TB contract):
   fresh quantizer sidecar);
 - probe: manifest-resolved read fed to the family's candidate/verify
   kernel (similarity._lsh_index_probe / _ivf_index_probe /
-  _ivfpq_index_probe, dedup.minhash_index_probe's ``scan=``).
+  _ivfpq_index_probe, dedup._minhash_index_probe).
   Pruning note: snapshot dirs are not directory-partitioned; rows are
   cluster-SORTED on write instead, so parquet row-group min/max stats
   prune the selective probe scan — the same file-stats pruning a
@@ -80,8 +82,8 @@ from uts_spark.sources.tables import parquet_cached_schema as _read_pq
 
 from uts_spark.functions.dedup import (
     _band_bucket_rows,
+    _minhash_index_probe,
     doc_shingle_arrays_portable,
-    minhash_index_probe,
     minhash_signatures_portable,
 )
 from uts_spark.sources.versioned import (
@@ -143,8 +145,7 @@ def _batch_key(
       on the snapshot).
     - no ``stream_id`` (manual/driver appends): key =
       ``e{epoch}b{batch_id}`` where the epoch is the last non-append
-      version — same namespacing as the marker family's staged kernel
-      (ADVICE r8); a reused batch_id after a rewrite cannot alias,
+      version (ADVICE r8); a reused batch_id after a rewrite cannot alias,
       but a replay ACROSS a rewrite re-appends (callers replaying
       through rewrites must pass a stream_id)."""
     if stream_id is not None:
@@ -181,8 +182,7 @@ def _append_commit(
     reruns. ``batch_id`` makes the commit EXACTLY-ONCE per (epoch,
     batch_id): a replayed micro-batch whose key already sits on a
     committed manifest returns that version untouched (the Iceberg
-    streaming-sink idempotent-commit shape — the snapshot family's
-    answer to the marker family's staged/sweep kernel)."""
+    streaming-sink idempotent-commit shape)."""
     last: Exception | None = None
     for _ in range(max_retries):
         versions = {m["version"]: m for m in list_versions(path)}
@@ -367,8 +367,7 @@ _SYS_KEYS = {
 
 def vindex_seal(path: str, fingerprint: str) -> int:
     """MANIFEST-ONLY commit: advance the index fingerprint without
-    touching any data — the snapshot analog of the marker family's
-    index_manifest_write, as an O(1) CAS commit. A streamed ingest
+    touching any data, as an O(1) CAS commit. A streamed ingest
     seals its TARGET fingerprint only after every micro-batch
     committed, so a run that crashed mid-stream leaves an
     intermediate fingerprint and the next invocation detects the torn
@@ -400,7 +399,8 @@ def _cluster(df: DataFrame, *cols: str) -> DataFrame:
     delete-rewrite paths: partition count follows
     spark.sql.shuffle.partitions. (A hardcoded repartition(4, ...)
     serialized the 1M-row snapshot build through 4 sort+write tasks —
-    measured 61.7s vs the marker family's 22.6s; tools/vindex_smoke.py.)
+    measured 61.7s vs 22.6s for the since-retired marker build;
+    tools/vindex_smoke.py.)
     Batch-sized APPEND deltas keep their explicit small count so each
     tick lands a handful of files."""
     return df.repartition(*[F.col(c) for c in cols])
@@ -707,9 +707,7 @@ def minhash_vindex_compact(
     """Compaction as a snapshot: rewrite the (possibly many-dir append
     chain's) union into ONE clustered dir and CAS-commit it — after
     which vacuum can drop the superseded chain. Time travel to
-    PRE-compaction versions keeps working until vacuum (contrast the
-    marker family, where compaction physically replaces files and
-    must RESET history)."""
+    PRE-compaction versions keeps working until vacuum."""
     def meta_fn(pm, cur):
         return _mh_carry(
             _config_meta(fingerprint, n, k, bands, n_grps), pm
@@ -740,7 +738,7 @@ def minhash_vindex_probe(
 ) -> DataFrame:
     """Probe at the current (or a pinned) snapshot: resolve the
     manifest's immutable dir list and run the SHARED candidate/verify
-    kernel (dedup.minhash_index_probe with scan=). Snapshot isolation
+    kernel (dedup._minhash_index_probe). Snapshot isolation
     is structural — concurrent commits cannot change the resolved dir
     list mid-read. ``where`` pre-filters the index rows on metadata
     columns stored at build (``meta_cols``): candidate generation is
@@ -751,10 +749,9 @@ def minhash_vindex_probe(
     scan = read_version(spark, path, version)
     if where is not None:
         scan = scan.filter(where)
-    return minhash_index_probe(
-        spark, path, new_docs, old_docs, text_col, id_col,
+    return _minhash_index_probe(
+        scan, new_docs, old_docs, text_col, id_col,
         n=n, k=k, bands=bands, threshold=threshold, n_grps=n_grps,
-        scan=scan,
     )
 
 
@@ -2067,68 +2064,6 @@ def vindex_delete_auto(
     )
 
 
-def vindex_migrate(
-    spark, src_path: str, dst_path: str, fingerprint: str = ""
-) -> int:
-    """MIGRATE a marker-protocol MinHash index to the snapshot protocol
-    in one commit — services upgrade storage protocols without
-    rebuilding from the corpus (the corpus may be 100 TB; the index is
-    its narrow projection). The source must be a (band, grp) partition
-    grid with its marker ``_INDEX_MANIFEST.json`` (bands/n_grps are not
-    recoverable from the rows alone); the vector families (LSH, IVF,
-    IVF-PQ) exist only on the snapshot protocol, so there is nothing of
-    theirs to migrate.
-
-    One clustered rewrite of the live rows into a delta dir + a v0
-    manifest commit; the source is left untouched (cutover is the
-    caller swapping paths, rollback is free). Version history does NOT
-    carry over — the marker family's file-census history describes
-    files the migration leaves behind; the snapshot chain starts
-    fresh at the migrated state, which is exactly what its manifests
-    can prove. Returns the committed version (0)."""
-    import json
-
-    rows = _read_pq(spark, src_path)
-    cols = set(rows.columns)
-    if not {"band", "grp"} <= cols:
-        raise ValueError(
-            f"vindex_migrate: {src_path} is not a marker minhash index "
-            f"(columns {sorted(cols)}); only the minhash family has a "
-            "marker protocol to migrate from"
-        )
-    mpath = os.path.join(src_path, "_INDEX_MANIFEST.json")
-    if not os.path.exists(mpath):
-        raise ValueError(
-            f"vindex_migrate: minhash source {src_path} has no "
-            "_INDEX_MANIFEST.json — (n, k, bands, n_grps) are not "
-            "recoverable from the rows"
-        )
-    with open(mpath) as fh:
-        src_manifest = json.load(fh)
-
-    # canonical column types: the marker layout stores its partition
-    # keys as DIRECTORY names, which Spark re-infers as int on read —
-    # but native snapshot deltas store them as physical columns with
-    # the types the row builders produce (grp is LONG). Without the
-    # cast, the first post-migration append writes a long next to the
-    # migrated int and the merged scan dies with a parquet type
-    # mismatch.
-    rows = rows.select(*[
-        F.col(c).cast({"band": "int", "grp": "long"}[c]).alias(c)
-        if c in ("band", "grp") else F.col(c)
-        for c in rows.columns
-    ])
-    ddir = _write_delta_dir(_cluster(rows, "band", "grp"), dst_path, _SORT)
-    n_rows, stats = _count_and_stats(spark, ddir, "id")
-    meta = _config_meta(
-        fingerprint, src_manifest["n"], src_manifest["k"],
-        src_manifest["bands"], src_manifest["n_grps"],
-    )
-    meta["dir_stats"] = {ddir: stats}
-    meta["migrated_from"] = src_path
-    return commit_version(dst_path, [ddir], "migrate", None, n_rows, meta)
-
-
 def vindex_compact_auto(spark, path: str, fingerprint: str = "") -> int:
     """Family-dispatching compaction (the OPTIMIZE verb behind the
     trigger below)."""
@@ -2208,7 +2143,7 @@ def minhash_vindex_cap_hot_buckets(
     live rows rewrite WITHOUT them as one CAS rewrite commit. Cost is
     table-sized (the compact class — snapshot dirs are id-range
     clustered, not bucket-partitioned, so there is no partition-pruned
-    path like the marker cap verb's; cap ticks are rare flood
+    path; cap ticks are rare flood
     responses and the manifest records ``hot_buckets`` for the audit).
     Pre-cap versions stay readable until vacuum. Returns the number of
     rows quarantined (0 without committing when no bucket exceeds the
@@ -2286,8 +2221,8 @@ def minhash_vindex_ingest_tick(
     bands: int = 8,
     n_grps: int = 16,
 ) -> dict:
-    """One CLOSED-LOOP micro-batch of the SNAPSHOT dedup ingest — the
-    vindex port of dedup.minhash_ingest_tick, with the whole monitor
+    """One CLOSED-LOOP micro-batch of the dedup ingest (the MinHash
+    sibling of :func:`ivf_vindex_ingest_tick`), with the whole monitor
     on manifests: the build commits the organic collision reference
     (``coll_ref``), each tick's batch-collision ints commit atomically
     WITH its data, the flag cross-multiplies exact integers against

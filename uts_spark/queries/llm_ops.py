@@ -5803,80 +5803,48 @@ def _duck_minhash_index_probe(rem: int = _MIDX_REM, old_pred: str = "") -> str:
 @query("dedup_minhash_index_probe", _duck_minhash_index_probe())
 def dedup_minhash_index_probe(spark, sf_dir):
     """Dedup-as-a-service: the corpus MinHash band index lives at rest
-    as a NARROW (id, band, bucket) parquet partitioned by (band, grp)
-    (functions/dedup.minhash_index_write — built once per corpus
-    fingerprint, the same staleness keying as the ANN indexes), and
-    each new crawl batch (deterministic ~9% doc_id split) probes it
-    with batch-sized sketching, a static (band, grp) partition filter
-    (plan-pinned), an exact (band, bucket) equi-join, then re-sketches
-    ONLY the candidate old docs for the estimated + exact Jaccard
-    verify (candidates are bounded by bucket collisions — measured
-    probe wall 6.5 s vs 27 s full recompute at 1M docs, SCALE.md).
-    New x old pairs only — the corpus is never re-sketched wholesale
-    and the old x old quadrant is never generated. Oracle = the
-    recompute formulation (persistence is physical, never semantic).
-    The default eager checkpoint releases the probe's shingle caches
-    per call (ADVICE r6); the partition-pruned index scan is pinned on
-    the ``checkpoint=False`` lazy plan in tests/test_plan_properties."""
-    return _minhash_index_probe_impl(spark, sf_dir, checkpoint=True)
-
-
-def _minhash_index_probe_impl(spark, sf_dir, checkpoint: bool):
-    import os
-
-    from uts_spark.functions.dedup import (
-        minhash_index_probe,
-        minhash_index_write,
+    as a NARROW (id, band, bucket, grp) snapshot index sorted by
+    (band, grp, bucket) (functions/vindex.minhash_vindex_build — built
+    once per corpus fingerprint, the same staleness keying as the ANN
+    indexes), and each new crawl batch (deterministic ~9% doc_id
+    split) probes it with batch-sized sketching, a static (band, grp)
+    key filter pushed into the scan (plan-pinned), an exact
+    (band, bucket) equi-join, then re-sketches ONLY the candidate old
+    docs for the estimated + exact Jaccard verify (candidates are
+    bounded by bucket collisions — measured probe wall 6.5 s vs 27 s
+    full recompute at 1M docs, SCALE.md). New x old pairs only — the
+    corpus is never re-sketched wholesale and the old x old quadrant
+    is never generated. Oracle = the recompute formulation
+    (persistence is physical, never semantic). The probe's eager
+    checkpoint releases its shingle caches per call (ADVICE r6); the
+    pruned index scan is pinned on the lazy kernel plan in
+    tests/test_plan_properties."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_build,
+        minhash_vindex_probe,
     )
 
     docs = table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM)
     old = docs.filter(F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
-    path = minhash_index_path(sf_dir, _docs_fingerprint(spark, sf_dir))
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        minhash_index_write(
-            old, "text", "doc_id", path,
-            n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS,
-        )
-    return minhash_index_probe(
+    fp = _docs_fingerprint(spark, sf_dir)
+    cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
+    path = minhash_index_path(sf_dir, fp)
+    _vidx_chain(path, [(fp, lambda f: minhash_vindex_build(
+        old, "text", "doc_id", path, fingerprint=f, **cfg
+    ))])
+    return minhash_vindex_probe(
         spark, path, new, old, "text", "doc_id",
-        n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS, threshold=_MIDX_THR,
-        checkpoint=checkpoint,
+        threshold=_MIDX_THR, **cfg,
     )
 
 
 _MIDX_REM2 = 7  # second crawl batch = doc_id % 11 == 7 (~9% of docs)
 
 
-@query("dedup_minhash_index_append_probe", _duck_minhash_index_probe(_MIDX_REM2))
-def dedup_minhash_index_append_probe(spark, sf_dir):
-    """Dedup-as-a-service ROUND TRIP (VERDICT r6 #2 — without append
-    the service serves a stale corpus after its first batch): build the
-    band index over the BASE corpus (doc_id % 11 not in {3, 7}), fold
-    batch-1 (rem 3) in via functions/dedup.minhash_index_append —
-    batch-sized sketching, partition-aligned parquet append into the
-    existing (band, grp) grid, manifest fingerprint bumped from
-    fp(base) to fp(base + batch1) — then probe batch-2 (rem 7) against
-    the UPDATED index. Batch-2's near-dup pairs against batch-1 docs
-    are findable ONLY through the appended rows (pinned in
-    tests/test_llm_ops.py), so the query proves the index survives its
-    second batch. The manifest chain makes the flow idempotent: a
-    re-run sees fp(base + batch1) and skips straight to the probe; a
-    foreign or half-built index (unknown fingerprint) is rebuilt, never
-    trusted. Oracle = the recompute formulation with new = rem-7 docs
-    and old = everything else — append is physical, never semantic."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-        minhash_index_append,
-        minhash_index_probe,
-        minhash_index_write,
-    )
-
+def _midx_batches(spark, sf_dir):
+    """(docs, base, b1, b2) of the band-index service lanes: batch-1 is
+    doc_id % 11 == 3, batch-2 is doc_id % 11 == 7, base is the rest."""
     docs = table(spark, sf_dir, "documents")
     base = docs.filter(
         (F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
@@ -5884,31 +5852,47 @@ def dedup_minhash_index_append_probe(spark, sf_dir):
     )
     b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM)
     b2 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM2)
-    old = docs.filter(F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
+    return docs, base, b1, b2
 
+
+@query("dedup_minhash_index_append_probe", _duck_minhash_index_probe(_MIDX_REM2))
+def dedup_minhash_index_append_probe(spark, sf_dir):
+    """Dedup-as-a-service ROUND TRIP (VERDICT r6 #2 — without append
+    the service serves a stale corpus after its first batch): build the
+    band index over the BASE corpus (doc_id % 11 not in {3, 7}) as
+    snapshot v0, fold batch-1 (rem 3) in via
+    functions/vindex.minhash_vindex_append — batch-sized sketching, one
+    delta dir and an O(1) manifest commit whose fingerprint moves from
+    fp(base) to fp(base + batch1) — then probe batch-2 (rem 7) against
+    the UPDATED index. Batch-2's near-dup pairs against batch-1 docs
+    are findable ONLY through the appended rows (pinned in
+    tests/test_llm_ops.py), so the query proves the index survives its
+    second batch. The fingerprint chain makes the flow idempotent: a
+    re-run sees fp(base + batch1) and skips straight to the probe; a
+    foreign or half-built index (unknown fingerprint) is rebuilt, never
+    trusted. Oracle = the recompute formulation with new = rem-7 docs
+    and old = everything else — append is physical, never semantic."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_probe,
+    )
+
+    docs, base, b1, b2 = _midx_batches(spark, sf_dir)
+    old = docs.filter(F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
     fp0 = _frame_fingerprint(base)
     fp1 = _frame_fingerprint(old)  # base + batch1 = all but batch2
     cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
     path = minhash_index_path(sf_dir, fp0, **cfg) + "_svc"
-
-    state = index_state(path)  # None when a crashed tick left _PENDING
-    if state not in (fp0, fp1):
-        # absent, half-built, torn-tick, or foreign index: rebuild
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        minhash_index_write(base, "text", "doc_id", path, fingerprint=fp0, **cfg)
-        state = fp0
-    if state == fp0:
-        # the service tick: fold batch-1 in under the pending-marker
-        # protocol (ADVICE r7 — a crash between the append and the
-        # manifest bump must not re-append the batch on rerun)
-        index_tick(
-            path, fp1,
-            lambda: minhash_index_append(b1, "text", "doc_id", path, **cfg),
-            **cfg,
-        )
-
-    return minhash_index_probe(
+    _vidx_chain(path, [
+        (fp0, lambda f: minhash_vindex_build(
+            base, "text", "doc_id", path, fingerprint=f, **cfg
+        )),
+        (fp1, lambda f: minhash_vindex_append(
+            b1, "text", "doc_id", path, fingerprint=f, **cfg
+        )),
+    ])
+    return minhash_vindex_probe(
         spark, path, b2, old, "text", "doc_id",
         threshold=_MIDX_THR, **cfg,
     )
@@ -5925,58 +5909,34 @@ def dedup_minhash_index_delete_probe(spark, sf_dir):
     """Dedup-as-a-service ERASURE round trip (the GDPR verb — an index
     that can only grow keeps matching against data the corpus no
     longer holds): build the band index over old + batch-1 docs,
-    DELETE batch-1 (functions/dedup.minhash_index_delete: re-sketch
-    ONLY the erased docs to locate their (band, grp) partitions,
-    dynamic-partition-overwrite those minus the erased ids, sweep
-    fully-emptied dirs, fingerprint bumped), then probe batch-2. The
-    content near-dup pairs between batch-2 and batch-1 that the APPEND
-    lane finds must be GONE here (pinned in tests/test_llm_ops.py),
-    while every batch-2 x old pair survives — the oracle recomputes
-    with old restricted to neither batch. Idempotent via the manifest
-    chain like the append lane."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_manifest_write,
-        index_state,
-        index_tick,
-        minhash_index_delete,
-        minhash_index_probe,
-        minhash_index_write,
+    DELETE batch-1 by BARE ids (functions/vindex.minhash_vindex_delete:
+    the manifest's per-dir id-range stats pick the dirs to rewrite
+    copy-on-write, the ids never reach the driver), then probe
+    batch-2. The content near-dup pairs between batch-2 and batch-1
+    that the APPEND lane finds must be GONE here (pinned in
+    tests/test_llm_ops.py), while every batch-2 x old pair survives —
+    the oracle recomputes with old restricted to neither batch.
+    Idempotent via the fingerprint chain like the append lane."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_build,
+        minhash_vindex_delete,
+        minhash_vindex_probe,
     )
 
-    docs = table(spark, sf_dir, "documents")
-    b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM)
-    b2 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM2)
+    docs, base, b1, b2 = _midx_batches(spark, sf_dir)
     full = docs.filter(F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
-    base = docs.filter(
-        (F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
-        & (F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
-    )
     fp_full, fp_del = _frame_fingerprint(full), _frame_fingerprint(base)
     cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
     path = minhash_index_path(sf_dir, fp_full, **cfg) + "_del"
-
-    state = index_state(path)  # None when a crashed tick left _PENDING
-    if state not in (fp_full, fp_del):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        minhash_index_write(full, "text", "doc_id", path, fingerprint=fp_full, **cfg)
-        state = fp_full
-    if state == fp_full:
-        # the erasure tick under the pending-marker protocol: a torn
-        # delete (some partitions rewritten, manifest not bumped) must
-        # read as untrusted, not as fp_full
-        index_tick(
-            path, fp_del,
-            lambda: minhash_index_delete(
-                spark, b1, "text", "doc_id", path, **cfg
-            ),
-            **cfg,
-        )
-
-    return minhash_index_probe(
+    _vidx_chain(path, [
+        (fp_full, lambda f: minhash_vindex_build(
+            full, "text", "doc_id", path, fingerprint=f, **cfg
+        )),
+        (fp_del, lambda f: minhash_vindex_delete(
+            spark, b1.select("doc_id"), path, fingerprint=f, **cfg
+        )),
+    ])
+    return minhash_vindex_probe(
         spark, path, b2, base, "text", "doc_id",
         threshold=_MIDX_THR, **cfg,
     )
@@ -5991,63 +5951,36 @@ def dedup_minhash_index_delete_probe(spark, sf_dir):
 )
 def dedup_minhash_index_version_probe(spark, sf_dir):
     """TIME TRAVEL on the band index (round 8): build over the base
-    corpus (history records VERSION 0 with its file census), fold
-    batch-1 in via the batch-id-keyed idempotent append (version 1 =
-    that tick's published files — the deterministic b{id}-* names make
-    every version's file set reconstructible), then probe batch-2
-    PINNED TO VERSION 0. The scan reads exactly version 0's files
-    (explicit file list + basePath, partition pruning unchanged), so
-    the result equals a probe of the never-appended index — the oracle
-    recomputes with old restricted to base — even though batch-1's
-    rows are physically present in the same directories. This is
-    snapshot isolation for index READERS while service ticks land:
-    a long-running dedup job pins the version it started on and never
-    sees a half-applied tick. Erasure intentionally breaks older
-    pins: minhash_index_delete appends a RESET census line and
-    index_files_at refuses versions that predate it (GDPR wins over
-    snapshots; pinned in tests)."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_state,
-        index_tick,
-        minhash_index_append_idempotent,
-        minhash_index_probe,
-        minhash_index_write,
+    corpus (snapshot v0), fold batch-1 in via the batch-id-keyed
+    exactly-once append (v1), then probe batch-2 PINNED TO VERSION 0.
+    The scan reads exactly v0's manifest dirs, so the result equals a
+    probe of the never-appended index — the oracle recomputes with old
+    restricted to base — even though batch-1's rows are committed in
+    the same index. This is snapshot isolation for index READERS while
+    service ticks land: a long-running dedup job pins the version it
+    started on and never sees a half-applied tick. A later delete or
+    compaction is a new version; the v0 pin keeps reading its own
+    rows until vacuum (pinned in tests)."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_probe,
     )
 
-    docs = table(spark, sf_dir, "documents")
-    base = docs.filter(
-        (F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
-        & (F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
-    )
-    b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM)
-    b2 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM2)
+    docs, base, b1, b2 = _midx_batches(spark, sf_dir)
     old = docs.filter(F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
-
     fp0, fp1 = _frame_fingerprint(base), _frame_fingerprint(old)
     cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
     path = minhash_index_path(sf_dir, fp0, **cfg) + "_ver"
-
-    state = index_state(path)
-    if state not in (fp0, fp1):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        minhash_index_write(
-            base, "text", "doc_id", path, fingerprint=fp0, **cfg
-        )
-        state = fp0
-    if state == fp0:
-        index_tick(
-            path, fp1,
-            lambda: minhash_index_append_idempotent(
-                b1, "text", "doc_id", path, batch_id=0, **cfg
-            ),
-            **cfg,
-        )
-
-    return minhash_index_probe(
+    _vidx_chain(path, [
+        (fp0, lambda f: minhash_vindex_build(
+            base, "text", "doc_id", path, fingerprint=f, **cfg
+        )),
+        (fp1, lambda f: minhash_vindex_append(
+            b1, "text", "doc_id", path, fingerprint=f, batch_id=0, **cfg
+        )),
+    ])
+    return minhash_vindex_probe(
         spark, path, b2, base, "text", "doc_id",
         threshold=_MIDX_THR, version=0, **cfg,
     )
@@ -6089,30 +6022,21 @@ def _duck_minhash_cdf_oracle() -> str:
 
 @query("dedup_minhash_index_cdf", _duck_minhash_cdf_oracle())
 def dedup_minhash_index_cdf(spark, sf_dir):
-    """CHANGE DATA FEED on a MARKER index (ROADMAP r10 #2): build the
-    band index over base (history version 0 with its file census),
-    fold batch-1 in via the batch-id-keyed idempotent append (version
-    1 = that tick's published files), then read
-    ``index_history_changes(0 -> 1)`` — the feed is a plain scan of
-    exactly the files the tick published (no join; the history
-    sidecar IS the change log, mirroring the snapshot table's
-    manifest-diff fast path), and it must equal the appended docs'
-    re-sketched (id, band, bucket) rows — the oracle recomputes them
-    closed-form through the portable hash family. A range crossing a
-    RESET (erasure/compaction) refuses loudly — pinned in
-    tests/test_llm_ops.py — because pre-reset files are physically
-    gone; migration tooling resyncs from the census. Scale: feed cost
-    is delta-file-sized, never index-sized."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_history_changes,
-        index_state,
-        index_tick,
-        minhash_index_append_idempotent,
-        minhash_index_write,
+    """CHANGE DATA FEED on the band index (ROADMAP r10 #2): build over
+    base (snapshot v0), fold batch-1 in via the batch-id-keyed append
+    (v1 = one delta dir), then read
+    ``versioned.table_changes(path, 0, 1)`` — the chain is append-only,
+    so the feed takes the dir-diff fast path: a plain scan of exactly
+    the dir the append committed (no join; the manifest IS the change
+    log). It must equal the appended docs' re-sketched (id, band,
+    bucket) rows — the oracle recomputes them closed-form through the
+    portable hash family. Scale: feed cost is delta-dir-sized, never
+    index-sized."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
     )
+    from uts_spark.sources.versioned import table_changes
 
     docs = table(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
@@ -6121,25 +6045,15 @@ def dedup_minhash_index_cdf(spark, sf_dir):
     fp1 = _frame_fingerprint(docs)
     cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
     path = minhash_index_path(sf_dir, fp0, **cfg) + "_cdf"
-
-    state = index_state(path)
-    if state not in (fp0, fp1):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        minhash_index_write(
-            base, "text", "doc_id", path, fingerprint=fp0, **cfg
-        )
-        state = fp0
-    if state == fp0:
-        index_tick(
-            path, fp1,
-            lambda: minhash_index_append_idempotent(
-                b1, "text", "doc_id", path, batch_id=0, **cfg
-            ),
-            **cfg,
-        )
-
-    return index_history_changes(spark, path, 0, 1).select(
+    _vidx_chain(path, [
+        (fp0, lambda f: minhash_vindex_build(
+            base, "text", "doc_id", path, fingerprint=f, **cfg
+        )),
+        (fp1, lambda f: minhash_vindex_append(
+            b1, "text", "doc_id", path, fingerprint=f, batch_id=0, **cfg
+        )),
+    ])
+    return table_changes(spark, path, 0, 1).select(
         "id", "band", "bucket", "_change_type"
     )
 
@@ -6149,77 +6063,44 @@ def dedup_minhash_index_cdf(spark, sf_dir):
     _duck_minhash_index_probe(_MIDX_REM2),
 )
 def dedup_minhash_index_compact_version_probe(spark, sf_dir):
-    """COMPACTION x TIME TRAVEL (VERDICT r8 #1 — the one defect the
-    round-8 judge found: the two features were individually gated but
-    their composition was untested, and compact_partitioned carried
-    the history sidecar over verbatim while renaming every data file,
-    so any pinned probe after a compaction died with a raw
-    PATH_NOT_FOUND). The service lifecycle here: build over base
-    (version 0), fold batch-1 in via the batch-id-keyed idempotent
-    append (version 1), then COMPACT — which now appends a RESET line
-    with the post-compaction census (version 2), exactly like the
-    erasure verbs, because compaction physically replaces every file.
-    The probe pins version 2: row-identical to an unpinned probe of
-    the compacted index (oracle = recompute with old = base+batch1),
-    while pins at versions 0/1 raise the designed 'predates the
-    rewrite' error (pinned in tests/test_llm_ops.py). Scale: the
-    compaction tick is touched-partition-shaped; the reset line keeps
-    the history chain walkable without resurrecting renamed files."""
-    import os
-    import shutil
-
-    from uts_spark.functions.dedup import (
-        index_epoch,
-        index_state,
-        index_tick,
-        minhash_index_append_idempotent,
-        minhash_index_probe,
-        minhash_index_write,
+    """COMPACTION x TIME TRAVEL (VERDICT r8 #1 — the round-8 defect was
+    a compaction that renamed every data file under a pinned reader):
+    build over base (v0), fold batch-1 in via the batch-id-keyed
+    append (v1), then COMPACT the two-dir chain into one clustered dir
+    (functions/vindex.minhash_vindex_compact — a CAS rewrite commit,
+    v2). The probe pins the version the compaction committed (the
+    chain's last): row-identical to an unpinned probe of the compacted
+    index (oracle = recompute with old = base+batch1). Compaction
+    never resets history — the v0/v1 pins keep reading their own dirs
+    until vacuum (pinned in tests/test_llm_ops.py). Scale: the
+    compaction is one table-sized rewrite; appends stay batch-sized."""
+    from uts_spark.functions.vindex import (
+        minhash_vindex_append,
+        minhash_vindex_build,
+        minhash_vindex_compact,
+        minhash_vindex_probe,
     )
-    from uts_spark.sources.sinks import compact_partitioned
+    from uts_spark.sources.versioned import current_version
 
-    docs = table(spark, sf_dir, "documents")
-    base = docs.filter(
-        (F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
-        & (F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
-    )
-    b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM)
-    b2 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM2)
+    docs, base, b1, b2 = _midx_batches(spark, sf_dir)
     old = docs.filter(F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
-
     fp0, fp1 = _frame_fingerprint(base), _frame_fingerprint(old)
-    fp1c = fp1 + ":compacted"
     cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
     path = minhash_index_path(sf_dir, fp0, **cfg) + "_cver"
-
-    state = index_state(path)
-    if state not in (fp0, fp1, fp1c):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        minhash_index_write(
-            base, "text", "doc_id", path, fingerprint=fp0, **cfg
-        )
-        state = fp0
-    if state == fp0:
-        index_tick(
-            path, fp1,
-            lambda: minhash_index_append_idempotent(
-                b1, "text", "doc_id", path, batch_id=0, **cfg
-            ),
-            **cfg,
-        )
-        state = fp1
-    if state == fp1:
-        index_tick(
-            path, fp1c,
-            lambda: compact_partitioned(spark, path, ["band", "grp"]),
-            **cfg,
-        )
-
-    # the compaction's reset version IS the current epoch — pin there
-    return minhash_index_probe(
+    _vidx_chain(path, [
+        (fp0, lambda f: minhash_vindex_build(
+            base, "text", "doc_id", path, fingerprint=f, **cfg
+        )),
+        (fp1, lambda f: minhash_vindex_append(
+            b1, "text", "doc_id", path, fingerprint=f, batch_id=0, **cfg
+        )),
+        (fp1 + ":compacted", lambda f: minhash_vindex_compact(
+            spark, path, fingerprint=f, **cfg
+        )),
+    ])
+    return minhash_vindex_probe(
         spark, path, b2, old, "text", "doc_id",
-        threshold=_MIDX_THR, version=index_epoch(path), **cfg,
+        threshold=_MIDX_THR, version=current_version(path), **cfg,
     )
 
 
@@ -6240,33 +6121,23 @@ def dedup_minhash_vindex_lifecycle_probe(spark, sf_dir):
     commit — the table is never rewritten), DELETE the rem-5 slice as
     copy-on-write v2 (left-anti, ids never on the driver), COMPACT
     the chain into one clustered dir as v3, then probe batch-2 at the
-    current snapshot through the SAME candidate/verify kernel as the
-    marker family. Oracle = recompute with old = everything except
+    current snapshot through the shared candidate/verify kernel.
+    Oracle = recompute with old = everything except
     batch-2 and the deleted slice. Concurrency is optimistic (no
     marker, no lock): every commit is a CAS on the next manifest —
     losers retry (appends as-is, rewrites recomputed); pinned in
     tests/test_llm_ops.py. Scale: append ticks are batch-sized;
     pruning comes from cluster-sorted row-group stats (manifests, not
     directory names, define membership — the Iceberg shape)."""
-    import os
-    import shutil
-
     from uts_spark.functions.vindex import (
         minhash_vindex_append,
         minhash_vindex_build,
         minhash_vindex_compact,
         minhash_vindex_delete,
         minhash_vindex_probe,
-        vindex_config,
     )
 
-    docs = table(spark, sf_dir, "documents")
-    base = docs.filter(
-        (F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
-        & (F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
-    )
-    b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM)
-    b2 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM2)
+    docs, base, b1, b2 = _midx_batches(spark, sf_dir)
     deleted = docs.filter(F.col("doc_id") % _MIDX_MOD == 5).select(
         F.col("doc_id").alias("id")
     )
@@ -6277,30 +6148,19 @@ def dedup_minhash_vindex_lifecycle_probe(spark, sf_dir):
 
     fp0 = _frame_fingerprint(base)
     cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
-    stages = [fp0, fp0 + ":a1", fp0 + ":a1:d5", fp0 + ":a1:d5:c"]
     path = minhash_index_path(sf_dir, fp0, **cfg) + "_snap"
-
-    m = vindex_config(path)
-    state = m["fingerprint"] if m else None
-    if state not in stages:
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        minhash_vindex_build(
-            base, "text", "doc_id", path, fingerprint=stages[0], **cfg
-        )
-        state = stages[0]
-    if state == stages[0]:
-        minhash_vindex_append(
-            b1, "text", "doc_id", path, fingerprint=stages[1], **cfg
-        )
-        state = stages[1]
-    if state == stages[1]:
-        minhash_vindex_delete(
-            spark, deleted, path, fingerprint=stages[2], **cfg
-        )
-        state = stages[2]
-    if state == stages[2]:
-        minhash_vindex_compact(spark, path, fingerprint=stages[3], **cfg)
+    _vidx_chain(path, list(zip(_vidx_stages(fp0), [
+        lambda f: minhash_vindex_build(
+            base, "text", "doc_id", path, fingerprint=f, **cfg
+        ),
+        lambda f: minhash_vindex_append(
+            b1, "text", "doc_id", path, fingerprint=f, **cfg
+        ),
+        lambda f: minhash_vindex_delete(
+            spark, deleted, path, fingerprint=f, **cfg
+        ),
+        lambda f: minhash_vindex_compact(spark, path, fingerprint=f, **cfg),
+    ])))
 
     return minhash_vindex_probe(
         spark, path, b2, old, "text", "doc_id",
@@ -6947,17 +6807,16 @@ def similarity_ann_ivf_migrate_probe(spark, sf_dir):
     ),
 )
 def similarity_ann_protocol_facade_probe(spark, sf_dir):
-    """The PROTOCOL FACADE lane (round-10 #2, the marker-retirement
+    """The INDEX FACADE lane (round-10 #2, the marker-retirement
     decision made code): the full IVF lifecycle — build, append,
     bare-id delete, compact, probe — driven through
-    functions/index_protocol.py with NO protocol argument, so the lane
-    exercises whatever ``DEFAULT_PROTOCOL`` says. The default is
-    measured, not asserted: the same matched suite ran on both
-    protocols for all four families (SCALE.md round 9c); snapshot won
-    or tied every maintenance lane, so the default flipped and the
-    vector families' marker verbs were retired. Oracle = the
-    frozen-quantizer recompute the per-family lanes share — the facade
-    owns protocol choice and family dispatch, never semantics, so its
+    functions/index_protocol.py, which has one commit protocol. The
+    choice was measured, not asserted: the same matched suite ran on
+    both protocols for all four families (SCALE.md round 9c); snapshot
+    won or tied every maintenance lane, so the marker verbs were
+    retired, the vector families' first and MinHash's last. Oracle =
+    the frozen-quantizer recompute the per-family lanes share — the
+    facade owns family dispatch, never semantics, so its
     answer must hash-match the family lane's (facade parity is
     additionally pinned across all four families in
     tests/test_index_protocol.py)."""
@@ -7188,7 +7047,7 @@ _EEV_REM = 6  # erase_everywhere slice: id % 10 == 6 (docs AND vectors)
                  WHERE vec_id % 10 = {_EEV_REM})
                 * {_ANN_IDX_TABLES} AS BIGINT), CAST(0 AS BIGINT)
     UNION ALL
-    SELECT 'minhash_marker', 'marker',
+    SELECT 'minhash_snapshot', 'snapshot',
            CAST((SELECT COUNT(*) FROM documents
                  WHERE doc_id % 10 = {_EEV_REM})
                 * {_MIDX_BANDS} AS BIGINT), CAST(0 AS BIGINT)
@@ -7201,12 +7060,11 @@ _EEV_REM = 6  # erase_everywhere slice: id % 10 == 6 (docs AND vectors)
 )
 def index_gdpr_erase_everywhere(spark, sf_dir):
     """The ONE-CALL GDPR verb behind an oracle (VERDICT r9 #1c): the
-    facade's erase_everywhere reaches a MIXED target set — snapshot
-    IVF and LSH indexes (bare ids, manifest-stats-pruned rewrites), a
-    MARKER minhash index (protocol detected per path and dispatched
-    through the minhash delete verb with the deleted rows' CONTENT),
-    and a stats-pruned versioned data table — in two calls (one per id
-    domain: vectors, documents). The lane returns the PERSISTED
+    facade's erase_everywhere reaches a MIXED target set — IVF, LSH
+    and minhash indexes (bare ids, family dispatched off each
+    manifest, manifest-stats-pruned rewrites) and a stats-pruned
+    versioned data table — in two calls (one per id domain: vectors,
+    documents). The lane returns the PERSISTED
     compliance accounting: per target, protocol, rows removed and the
     self-audit's surviving-id count (must be 0). The oracle is
     closed-form row arithmetic — index cardinality is rows-per-member
@@ -7215,11 +7073,11 @@ def index_gdpr_erase_everywhere(spark, sf_dir):
     so a missed bucket, a miscounted rewrite, or any survivor is an
     exact mismatch. The accounting is written ONCE at erasure time
     and read back on replay (a takedown record is durable evidence,
-    not a recomputable view — the data it describes is gone). Scale:
-    every delete is partition- or dir-pruned, and the self-audit now
-    has the SAME bound (it probes only rewritten dirs / touched
-    partitions — VERDICT r9's table-sized-audit defect, fixed and
-    pinned here)."""
+    not a recomputable view — the data it describes is gone; a record
+    of another corpus or target set is stale and rebuilt). Scale:
+    every delete is dir-pruned, and the self-audit has the SAME bound
+    (it probes only rewritten dirs — VERDICT r9's table-sized-audit
+    defect, fixed and pinned here)."""
     import json
     import os
     import shutil
@@ -7238,7 +7096,9 @@ def index_gdpr_erase_everywhere(spark, sf_dir):
     root = os.path.join(_warehouse_dir(), f"gdpr_eev_{tag}")
     audit_file = os.path.join(root, "_ERASURE_AUDIT.json")
 
-    targets = ("ivf_snapshot", "lsh_snapshot", "minhash_marker", "tbl_documents")
+    targets = (
+        "ivf_snapshot", "lsh_snapshot", "minhash_snapshot", "tbl_documents"
+    )
     state = None
     if os.path.exists(audit_file):
         with open(audit_file) as f:
@@ -7258,7 +7118,7 @@ def index_gdpr_erase_everywhere(spark, sf_dir):
             planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
         )
         index_build(
-            docs, "minhash", p_mh, protocol="marker", fingerprint=fp_d,
+            docs, "minhash", p_mh, fingerprint=fp_d,
             text_col="text", id_col="doc_id",
             n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS,
         )
@@ -7275,8 +7135,7 @@ def index_gdpr_erase_everywhere(spark, sf_dir):
         acct += erase_everywhere(
             spark, doc_del.select("doc_id"), [p_mh],
             table_specs=[(p_tbl, "doc_id")],
-            fingerprint=fp_d + ":gdpr", deleted_rows=doc_del,
-            text_col="text",
+            fingerprint=fp_d + ":gdpr",
         )
         state = {
             "fp_d": fp_d, "fp_e": fp_e,

@@ -1554,102 +1554,83 @@ def _register_stream_dedup_ingest():
     def stream_dedup_index_ingest_replay(spark, sf_dir):
         """The dedup service's INGEST LOOP as Structured Streaming:
         batch-1 docs arrive as 4 micro-batches, and foreachBatch folds
-        each one into the persisted band index via
-        functions/dedup.minhash_index_append — batch-sized sketching
-        per tick, clustered partition-aligned appends (one file per
-        touched directory per tick). After the stream drains, the
-        manifest fingerprint bumps and batch-2 probes the updated
-        index. The final index row multiset is independent of the
-        micro-batch boundaries (each append sketches only its rows), so
-        the probe hash-matches the BATCH append lane's oracle exactly.
-        Idempotent across runs via the same manifest chain; a re-run
-        sees fp(base + batch1) and skips straight to the probe."""
-        import os
-        import shutil
-        import tempfile
-
-        from uts_spark.functions.dedup import (
-            index_state,
-            index_tick,
-            minhash_index_append_idempotent,
-            minhash_index_probe,
-            minhash_index_write,
+        each one into the snapshot band index via
+        functions/vindex.minhash_vindex_append(batch_id=bid) —
+        batch-sized sketching per tick, one delta dir and an O(1)
+        manifest commit whose batch key makes the tick exactly-once
+        (a batch replayed after a mid-epoch crash finds its key
+        committed and skips; checkpoint-restart pin in
+        tests/test_streaming.py). After the stream drains, a
+        manifest-only SEAL advances the fingerprint and batch-2 probes
+        the updated index. The final index row multiset is independent
+        of the micro-batch boundaries (each append sketches only its
+        rows), so the probe hash-matches the BATCH append lane's oracle
+        exactly. A run killed mid-stream leaves the ingest fingerprint,
+        so the next invocation rebuilds instead of serving a
+        half-folded index; a finished run skips straight to the
+        probe."""
+        from uts_spark.functions.vindex import (
+            minhash_vindex_append,
+            minhash_vindex_build,
+            minhash_vindex_probe,
+            vindex_seal,
         )
         from uts_spark.queries.llm_ops import (
             _MIDX_BANDS,
             _MIDX_K,
             _MIDX_MOD,
             _MIDX_N,
-            _MIDX_REM,
             _MIDX_REM2,
             _MIDX_THR,
             _frame_fingerprint,
+            _midx_batches,
+            _vidx_chain,
             minhash_index_path,
         )
 
-        docs = table(spark, sf_dir, "documents")
-        base = docs.filter(
-            (F.col("doc_id") % _MIDX_MOD != _MIDX_REM)
-            & (F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
-        )
-        b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM)
-        b2 = docs.filter(F.col("doc_id") % _MIDX_MOD == _MIDX_REM2)
+        docs, base, b1, b2 = _midx_batches(spark, sf_dir)
         old = docs.filter(F.col("doc_id") % _MIDX_MOD != _MIDX_REM2)
-
         fp0, fp1 = _frame_fingerprint(base), _frame_fingerprint(old)
         cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
         path = minhash_index_path(sf_dir, fp0, **cfg) + "_stream"
 
-        state = index_state(path)  # None when a crashed run left _PENDING
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            minhash_index_write(
-                base, "text", "doc_id", path, fingerprint=fp0, **cfg
-            )
-            state = fp0
-        if state == fp0:
-            # the streaming ingest: 4 files -> 4 micro-batch appends,
-            # run as ONE pending-marker tick (ADVICE r7): a run killed
-            # mid-stream leaves _PENDING, so the next invocation
-            # rebuilds instead of re-appending over a torn index. (The
-            # component-level checkpoint-resume path — cheap recovery
-            # without a rebuild — is pinned separately in
-            # tests/test_streaming.py.)
-            def _ingest():
-                scratch = tempfile.mkdtemp(prefix="uts_ingest_")
-                try:
-                    src = os.path.join(scratch, "src")
-                    chk = os.path.join(scratch, "chk")
-                    b1.select("doc_id", "text").repartition(4).write.parquet(src)
-                    stream = (
-                        spark.readStream.schema("doc_id long, text string")
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(src)
-                    )
-                    q = (
-                        stream.writeStream.foreachBatch(
-                            # batch-id-keyed idempotent append: a batch
-                            # replayed after a mid-epoch crash converges
-                            # to the same physical index (VERDICT r7 #6;
-                            # checkpoint-restart pin in test_streaming)
-                            lambda bdf, bid: minhash_index_append_idempotent(
-                                bdf, "text", "doc_id", path, bid, **cfg
-                            )
+        def ingest(fp):
+            fp_ing = fp0 + ":ingesting"
+            scratch = tempfile.mkdtemp(prefix="uts_ingest_")
+            try:
+                src = os.path.join(scratch, "src")
+                chk = os.path.join(scratch, "chk")
+                b1.select("doc_id", "text").repartition(4).write.parquet(src)
+                stream = (
+                    spark.readStream.schema("doc_id long, text string")
+                    .option("maxFilesPerTrigger", 1)
+                    .parquet(src)
+                )
+                q = (
+                    stream.writeStream.foreachBatch(
+                        lambda bdf, bid: minhash_vindex_append(
+                            bdf, "text", "doc_id", path,
+                            fingerprint=fp_ing, batch_id=bid, **cfg,
                         )
-                        .option("checkpointLocation", chk)
-                        .start()
                     )
-                    try:
-                        q.processAllAvailable()
-                    finally:
-                        q.stop()
+                    .option("checkpointLocation", chk)
+                    .start()
+                )
+                try:
+                    q.processAllAvailable()
                 finally:
-                    shutil.rmtree(scratch, ignore_errors=True)
+                    q.stop()
+            finally:
+                shutil.rmtree(scratch, ignore_errors=True)
+            vindex_seal(path, fp)
 
-            index_tick(path, fp1, _ingest, **cfg)
-
-        return minhash_index_probe(
+        _vidx_chain(path, [
+            (fp0, lambda f: minhash_vindex_build(
+                base, "text", "doc_id", path, fingerprint=f, **cfg
+            )),
+            (fp1, ingest),
+        ])
+        return minhash_vindex_probe(
             spark, path, b2, old, "text", "doc_id",
             threshold=_MIDX_THR, **cfg,
         )
@@ -1810,9 +1791,9 @@ def _drift_recluster_oracle() -> str:
 
 
 # Measured skew-loop fixture constants (SCALE.md round 9b) — shared by
-# the marker lane, the snapshot (vindex) lane, and the facade-routed
-# lane below, so the three storage routes answer the SAME derived
-# corpus and the oracle is reused verbatim.
+# the two direct-verb lanes and the facade-routed lane below, so every
+# route answers the SAME derived corpus and the oracle is reused
+# verbatim.
 _SKEW_BOILER = (
     "breaking news subscribe to our newsletter terms of service "
     "apply all rights reserved"
@@ -1974,148 +1955,118 @@ def _register_stream_dedup_skew_cap():
             / (za.ns + zb.ns - COALESCE(s.sh, 0)) >= {_MIDX_THR!r}
     """
 
-    @query("stream_dedup_ingest_skew_cap_replay", oracle)
-    def stream_dedup_ingest_skew_cap_replay(spark, sf_dir):
-        """The dedup service's ingest loop with the SKEW CONTROL LOOP
-        closed: each micro-batch runs functions/dedup.minhash_ingest_tick
-        — measure the batch's bucket-collision integers against the
-        live index (recorded ON the tick's history line), exactly-once
-        append, and QUARANTINE buckets above the cap when the measured
-        8x flag fires. Micro-batch 1 (an organic crawl slice) measures
-        0.63-0.94x the build reference and must NOT flag; micro-batch 2
-        (the same-size slice with its text replaced by one boilerplate
-        template) measures 475-5892x and trips the flag — the cap verb
-        moves the flood's band rows (45-454 per bucket vs organic max
-        2-3) to path/_quarantine and rewrites only their partitions,
-        under the stream's pending marker, with a history RESET line.
-        The probe batch then carries three proofs at once: organic
-        docs (normal candidacy), verbatim CLONES of indexed docs
-        (guaranteed jaccard-1.0 matches — the positive control at
-        every SF), and boilerplate clones (ZERO candidates — their
-        only collision buckets are quarantined; the negative control).
-        Oracle = the full recompute with the SAME bucket-size cap rule
-        in SQL: the quarantine is physical, the cap policy is the
-        semantics. Tick sequencing is two processAllAvailable barriers
-        (the flag decision depends on the index state at measurement
-        time). Scale: ticks are candidate-shaped (broadcast semi-join
-        on the batch's buckets); the cap rewrite touches only the hot
-        buckets' partitions."""
-        path = _ensure_capped_chain(spark, sf_dir)
-        from uts_spark.functions.dedup import minhash_index_probe
-
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        base = docs.filter(
-            ~F.col("doc_id").__mod__(_MIDX_MOD).isin(
-                NORM_REM, BOIL_REM, PROBE_REM
-            )
-        )
-        b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == NORM_REM)
-        boiler = docs.filter(F.col("doc_id") % _MIDX_MOD == BOIL_REM).select(
-            "doc_id", F.lit(BOILER).alias("text")
-        )
-        old = base.unionByName(b1).unionByName(boiler)
-        new = (
-            docs.filter(F.col("doc_id") % _MIDX_MOD == PROBE_REM)
-            .unionByName(
-                docs.filter(F.col("doc_id") % CLONE_MOD == 0).select(
-                    (F.col("doc_id") + F.lit(CLONE_OFF)).alias("doc_id"),
-                    "text",
-                )
-            )
-            .unionByName(
-                docs.filter(F.col("doc_id") % _MIDX_MOD == PROBE_REM).select(
-                    (F.col("doc_id") + F.lit(BOIL_OFF)).alias("doc_id"),
-                    F.lit(BOILER).alias("text"),
-                )
-            )
-        )
-        cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
-        return minhash_index_probe(
-            spark, path, new, old, "text", "doc_id",
-            threshold=_MIDX_THR, **cfg,
-        )
-
-    def _ensure_capped_chain(spark, sf_dir) -> str:
+    def _ensure_capped_chain(spark, sf_dir, suffix: str) -> str:
         """Idempotent build -> normal tick -> flood tick (flag + cap)
-        chain, shared by the replay lane and the quarantine-review
-        lane (two state machines fighting over one index would wipe
-        each other's progress)."""
-        from uts_spark.functions.dedup import (
-            index_state,
-            index_tick,
-            minhash_coll_ref_init,
-            minhash_index_write,
-            minhash_ingest_tick,
+        -> seal chain on the snapshot band index at its own path
+        (``suffix``). Lanes that read one chain share it through
+        _vidx_chain's per-path lock, so the threaded plan sweep never
+        runs two writers on one path; lanes on different paths never
+        touch each other's state."""
+        from uts_spark.functions.vindex import (
+            minhash_vindex_build,
+            minhash_vindex_ingest_tick,
+            vindex_seal,
         )
         from uts_spark.queries.llm_ops import (
             _frame_fingerprint,
+            _vidx_chain,
             minhash_index_path,
         )
 
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        base = docs.filter(
-            ~F.col("doc_id").__mod__(_MIDX_MOD).isin(
-                NORM_REM, BOIL_REM, PROBE_REM
-            )
-        )
-        b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == NORM_REM)
-        boiler = docs.filter(F.col("doc_id") % _MIDX_MOD == BOIL_REM).select(
-            "doc_id", F.lit(BOILER).alias("text")
-        )
-        old = base.unionByName(b1).unionByName(boiler)
-
+        base, b1, boiler, old, _new = _skew_fixture(spark, sf_dir)
         fp0, fp1 = _frame_fingerprint(base), _frame_fingerprint(old)
         cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
-        path = minhash_index_path(sf_dir, fp0, **cfg) + "_skew"
+        path = minhash_index_path(sf_dir, fp0, **cfg) + suffix
 
-        state = index_state(path)
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            minhash_index_write(
-                base, "text", "doc_id", path, fingerprint=fp0, **cfg
-            )
-            minhash_coll_ref_init(spark, path)
-            state = fp0
-        if state == fp0:
-
-            def _ingest():
-                scratch = tempfile.mkdtemp(prefix="uts_skew_ingest_")
-                try:
-                    src = os.path.join(scratch, "src")
-                    chk = os.path.join(scratch, "chk")
-                    # deterministic tick order (same device as the ANN
-                    # drift lane): the organic batch's file exists
-                    # before the stream starts, the flood batch lands
-                    # only after epoch 0 drains — the flag decision
-                    # depends on the index state at measurement time
-                    b1.coalesce(1).write.parquet(src)
-                    stream = (
-                        spark.readStream.schema("doc_id long, text string")
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(src)
-                    )
-                    q = (
-                        stream.writeStream.foreachBatch(
-                            lambda bdf, bid: minhash_ingest_tick(
-                                spark, bdf, "text", "doc_id", path, bid,
-                                cap=CAP, **cfg,
-                            )
+        def ingest(fp):
+            fp_ing = fp0 + ":ingesting"
+            scratch = tempfile.mkdtemp(prefix="uts_skew_ingest_")
+            try:
+                src = os.path.join(scratch, "src")
+                chk = os.path.join(scratch, "chk")
+                # deterministic tick order (same device as the ANN
+                # drift lane): the organic batch's file exists before
+                # the stream starts, the flood batch lands only after
+                # epoch 0 drains — the flag decision depends on the
+                # index state at measurement time
+                b1.coalesce(1).write.parquet(src)
+                stream = (
+                    spark.readStream.schema("doc_id long, text string")
+                    .option("maxFilesPerTrigger", 1)
+                    .parquet(src)
+                )
+                run_id = uuid.uuid4().hex[:8]
+                q = (
+                    stream.writeStream.foreachBatch(
+                        lambda bdf, bid: minhash_vindex_ingest_tick(
+                            spark, bdf, "text", "doc_id", path, bid,
+                            fingerprint=fp_ing, stream_id=run_id,
+                            cap=CAP, **cfg,
                         )
-                        .option("checkpointLocation", chk)
-                        .start()
                     )
-                    try:
-                        q.processAllAvailable()
-                        boiler.coalesce(1).write.mode("append").parquet(src)
-                        q.processAllAvailable()
-                    finally:
-                        q.stop()
+                    .option("checkpointLocation", chk)
+                    .start()
+                )
+                try:
+                    q.processAllAvailable()
+                    boiler.coalesce(1).write.mode("append").parquet(src)
+                    q.processAllAvailable()
                 finally:
-                    shutil.rmtree(scratch, ignore_errors=True)
+                    q.stop()
+            finally:
+                shutil.rmtree(scratch, ignore_errors=True)
+            vindex_seal(path, fp)
 
-            index_tick(path, fp1, _ingest, **cfg)
+        _vidx_chain(path, [
+            (fp0, lambda f: minhash_vindex_build(
+                base, "text", "doc_id", path, fingerprint=f, **cfg
+            )),
+            (fp1, ingest),
+        ])
         return path
+
+    def _skew_cap_replay(suffix: str):
+        def stream_dedup_skew_cap_replay(spark, sf_dir):
+            """The dedup service's ingest loop with the SKEW CONTROL
+            LOOP closed, monitor state entirely on manifests: each
+            micro-batch runs functions/vindex.minhash_vindex_ingest_tick
+            — measure the batch's bucket-collision integers against
+            the live index (committed WITH the tick's data),
+            exactly-once append (stream-id keyed, so a tick replayed
+            after its own cap rewrite skips), and QUARANTINE buckets
+            above the cap when the measured 8x flag fires. Micro-batch
+            1 (an organic crawl slice) measures 0.63-0.94x the build
+            reference and must NOT flag; micro-batch 2 (the same-size
+            slice with its text replaced by one boilerplate template)
+            measures 475-5892x and trips the flag — the cap verb moves
+            the flood's band rows (45-454 per bucket vs organic max
+            2-3) to a quarantine dir that rides the manifest, as one
+            CAS rewrite. A manifest-only SEAL marks completion. The
+            probe batch then carries three proofs at once: organic
+            docs (normal candidacy), verbatim CLONES of indexed docs
+            (guaranteed jaccard-1.0 matches — the positive control at
+            every SF), and boilerplate clones (ZERO candidates — their
+            only collision buckets are quarantined; the negative
+            control). Oracle = the full recompute with the SAME
+            bucket-size cap rule in SQL: the quarantine is physical,
+            the cap policy is the semantics. Tick sequencing is two
+            processAllAvailable barriers (the flag decision depends on
+            the index state at measurement time)."""
+            from uts_spark.functions.vindex import minhash_vindex_probe
+
+            path = _ensure_capped_chain(spark, sf_dir, suffix)
+            _base, _b1, _boiler, old, new = _skew_fixture(spark, sf_dir)
+            return minhash_vindex_probe(
+                spark, path, new, old, "text", "doc_id",
+                threshold=_MIDX_THR,
+                n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS,
+            )
+
+        return stream_dedup_skew_cap_replay
+
+    stream_dedup_ingest_skew_cap_replay = query(
+        "stream_dedup_ingest_skew_cap_replay", oracle
+    )(_skew_cap_replay("_skew"))
 
     # quarantine REVIEW (round-10 candidate #3): a capped hot bucket IS
     # one duplicate cluster — surface the quarantine as clusters with a
@@ -2168,7 +2119,7 @@ def _register_stream_dedup_skew_cap():
         the auditable artifact is (doc, cluster representative, how
         many of its band rows were quarantined) — the shape a human or
         a downstream keep-one-per-cluster pass consumes, instead of
-        opaque parquet under _quarantine. The representative is the
+        opaque parquet in the quarantine dir. The representative is the
         1-hop min id over shared hot buckets (for a template flood,
         1-hop IS the whole cluster — every member shares every
         bucket). n_hot_rows = bands for a full-flood member: all 8 of
@@ -2177,11 +2128,14 @@ def _register_stream_dedup_skew_cap():
         index membership at cap time) — so a cap verb that moved the
         wrong rows, or a review that read the wrong census, is an
         exact mismatch. Runs on the SAME chain as the replay lane
-        (shared idempotent state machine)."""
-        path = _ensure_capped_chain(spark, sf_dir)
-        q = _read_pq(spark, os.path.join(path, "_quarantine")).select(
-            "id", "band", "bucket"
-        )
+        (shared idempotent state machine); the quarantine dir is the
+        one the cap commit recorded on the manifest."""
+        from uts_spark.functions.vindex import _current_manifest
+
+        path = _ensure_capped_chain(spark, sf_dir, "_skew")
+        q = _read_pq(
+            spark, _current_manifest(path)["quarantine_dir"]
+        ).select("id", "band", "bucket")
         pairs = q.alias("a").join(q.alias("b"), ["band", "bucket"]).select(
             F.col("a.id").alias("doc_id"), F.col("b.id").alias("nb")
         )
@@ -2191,112 +2145,9 @@ def _register_stream_dedup_skew_cap():
             "doc_id", "rep_id", "n_hot_rows"
         )
 
-    from uts_spark.registry import ORACLES as _OR
-
-    @query(
-        "stream_dedup_vindex_skew_cap_replay",
-        _OR["stream_dedup_ingest_skew_cap_replay"],
-    )
-    def stream_dedup_vindex_skew_cap_replay(spark, sf_dir):
-        """The skew control loop on the SNAPSHOT dedup index — monitor
-        state entirely on manifests (vindex.minhash_vindex_ingest_tick:
-        build commits coll_ref, each tick's collision ints commit WITH
-        its data, the cap is a CAS rewrite whose quarantine dir rides
-        the manifest as an aux dir), stream-id-keyed exactly-once (a
-        tick replayed after its own cap rewrite skips), a manifest-only
-        SEAL marks completion. Same derived flood corpus, thresholds,
-        and probe as the marker-family lane — the two protocols are
-        semantics-identical, so the oracle is reused verbatim (the cap
-        rule recomputed in SQL gates BOTH storage protocols)."""
-        from uts_spark.functions.vindex import (
-            minhash_vindex_build,
-            minhash_vindex_ingest_tick,
-            minhash_vindex_probe,
-            vindex_config,
-            vindex_seal,
-        )
-        from uts_spark.queries.llm_ops import (
-            _frame_fingerprint,
-            minhash_index_path,
-        )
-
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        base = docs.filter(
-            ~F.col("doc_id").__mod__(_MIDX_MOD).isin(
-                NORM_REM, BOIL_REM, PROBE_REM
-            )
-        )
-        b1 = docs.filter(F.col("doc_id") % _MIDX_MOD == NORM_REM)
-        boiler = docs.filter(F.col("doc_id") % _MIDX_MOD == BOIL_REM).select(
-            "doc_id", F.lit(BOILER).alias("text")
-        )
-        old = base.unionByName(b1).unionByName(boiler)
-        new = (
-            docs.filter(F.col("doc_id") % _MIDX_MOD == PROBE_REM)
-            .unionByName(
-                docs.filter(F.col("doc_id") % CLONE_MOD == 0).select(
-                    (F.col("doc_id") + F.lit(CLONE_OFF)).alias("doc_id"),
-                    "text",
-                )
-            )
-            .unionByName(
-                docs.filter(F.col("doc_id") % _MIDX_MOD == PROBE_REM).select(
-                    (F.col("doc_id") + F.lit(BOIL_OFF)).alias("doc_id"),
-                    F.lit(BOILER).alias("text"),
-                )
-            )
-        )
-
-        fp0, fp1 = _frame_fingerprint(base), _frame_fingerprint(old)
-        fp_ing = fp0 + ":ingesting"
-        cfg = dict(n=_MIDX_N, k=_MIDX_K, bands=_MIDX_BANDS)
-        path = minhash_index_path(sf_dir, fp0, **cfg) + "_snapskew"
-
-        m = vindex_config(path)
-        state = m["fingerprint"] if m else None
-        if state not in (fp0, fp1):
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            minhash_vindex_build(
-                base, "text", "doc_id", path, fingerprint=fp0, **cfg
-            )
-            state = fp0
-        if state == fp0:
-            scratch = tempfile.mkdtemp(prefix="uts_vskew_ingest_")
-            try:
-                src = os.path.join(scratch, "src")
-                chk = os.path.join(scratch, "chk")
-                b1.coalesce(1).write.parquet(src)
-                stream = (
-                    spark.readStream.schema("doc_id long, text string")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(src)
-                )
-                run_id = uuid.uuid4().hex[:8]
-                q = (
-                    stream.writeStream.foreachBatch(
-                        lambda bdf, bid: minhash_vindex_ingest_tick(
-                            spark, bdf, "text", "doc_id", path, bid,
-                            fingerprint=fp_ing, stream_id=run_id, **cfg,
-                        )
-                    )
-                    .option("checkpointLocation", chk)
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                    boiler.coalesce(1).write.mode("append").parquet(src)
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-            finally:
-                shutil.rmtree(scratch, ignore_errors=True)
-            vindex_seal(path, fp1)
-
-        return minhash_vindex_probe(
-            spark, path, new, old, "text", "doc_id",
-            threshold=_MIDX_THR, **cfg,
-        )
+    stream_dedup_vindex_skew_cap_replay = query(
+        "stream_dedup_vindex_skew_cap_replay", oracle
+    )(_skew_cap_replay("_snapskew"))
 
     return (
         stream_dedup_ingest_skew_cap_replay,
@@ -3220,8 +3071,8 @@ def _register_facade_tick_lanes():
         bucket-collision monitor + hot-bucket quarantine at the
         measured 8x/16 thresholds), probe via index_probe. Same
         derived flood corpus and oracle as
-        stream_dedup_ingest_skew_cap_replay / the vindex lane — three
-        routes, one contract."""
+        stream_dedup_ingest_skew_cap_replay and its vindex twin — the
+        facade route and the direct verbs, one contract."""
         from uts_spark.functions.index_protocol import (
             index_build,
             index_probe,
@@ -3420,7 +3271,7 @@ def _register_facade_tick_lanes():
         append (hyperplanes are seed-derived — no quantizer to drift,
         no monitor to run; the tick's dict says so honestly). After
         the stream drains the index covers the full corpus, so the
-        marker append lane's recompute oracle is reused verbatim."""
+        batch append lane's recompute oracle is reused verbatim."""
         from uts_spark.functions.index_protocol import (
             index_build,
             index_probe,
@@ -3502,7 +3353,7 @@ def _register_facade_tick_lanes():
         committed WITH the data, flag at the measured 1.3x). The
         organic rem-7 batch sits at ~1.0x, so the monitor runs and
         honestly does NOT fire — the final index equals
-        build-then-append, and the marker append lane's composed
+        build-then-append, and the batch append lane's composed
         recompute oracle is reused verbatim."""
         from uts_spark.functions.index_protocol import (
             index_build,

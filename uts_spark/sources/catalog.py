@@ -165,25 +165,6 @@ def set_retention(
     cur = _current(catalog, name)
     if cur is None:
         raise ValueError(f"catalog has no entry named {name!r}")
-    if (keep_last is not None or max_age_secs is not None) and cur[
-        "kind"
-    ] == "index":
-        # the janitor can only vacuum manifest-chain (snapshot-
-        # protocol) entries; accepting a policy on a marker-protocol
-        # index would record a compliance window that nothing ever
-        # enforces (ADVICE r10, low) — refuse loudly at set time
-        from uts_spark.functions.index_protocol import (
-            _detect_index_protocol,
-        )
-
-        if _detect_index_protocol(cur["path"]) != "snapshot":
-            raise ValueError(
-                f"set_retention: entry {name!r} is a marker-protocol "
-                "index — its history is a JSONL census, not a "
-                "manifest chain, so the janitor cannot vacuum it; "
-                "migrate to the snapshot protocol (vindex_migrate) "
-                "before attaching a retention policy"
-            )
     g = cur["generation"] + 1
     rec = {"name": name, "path": cur["path"], "kind": cur["kind"]}
     policy: dict = {}
@@ -436,22 +417,17 @@ def index_probe_by_name(
     version: int | None = None,
     **kwargs,
 ) -> DataFrame:
-    """Probe a registered index by name through the protocol facade
+    """Probe a registered index by name through the index facade
     (family and config resolve from the index's own manifest)."""
     rec = resolve(catalog, name)
     if rec["kind"] != "index":
         raise ValueError(
             f"catalog entry {name!r} is a {rec['kind']}, not an index"
         )
-    from uts_spark.functions.index_protocol import (
-        _detect_index_protocol,
-        index_probe,
-    )
+    from uts_spark.functions.index_protocol import index_probe
 
-    proto = _detect_index_protocol(rec["path"])
     return index_probe(
-        spark, rec["path"], probe_input, protocol=proto,
-        version=version, **kwargs,
+        spark, rec["path"], probe_input, version=version, **kwargs
     )
 
 
@@ -819,8 +795,6 @@ def erase_by_names(
     catalog: str,
     names: list[str] | None = None,
     fingerprint: str = "",
-    deleted_rows=None,
-    text_col: str = "text",
     table_keys: dict[str, str] | None = None,
     table_mode: str = "cow",
     index_mode: str = "cow",
@@ -828,7 +802,7 @@ def erase_by_names(
     """CATALOG-WIDE GDPR: one call erases a takedown batch from every
     named target (default: the WHOLE catalog) — tables and indexes
     dispatch by their registered kind, indexes by their manifest's
-    protocol/family, through :func:`index_protocol.erase_everywhere`
+    family, through :func:`index_protocol.erase_everywhere`
     (pruned deletes, pruned self-audit, leaked must be 0). A table's
     erase key resolves from its manifest's ``stats_col`` (falling
     back to ``bloom_col`` — either opt-in marks the column the table
@@ -880,8 +854,7 @@ def erase_by_names(
         order[rec["path"]] = rec["name"]
     acct = erase_everywhere(
         spark, deleted_ids, index_paths, table_specs,
-        fingerprint=fingerprint, deleted_rows=deleted_rows,
-        text_col=text_col, table_mode=table_mode,
+        fingerprint=fingerprint, table_mode=table_mode,
         index_mode=index_mode,
     )
     return [{**a, "name": order[a["target"]]} for a in acct]
@@ -906,7 +879,7 @@ def stage_erasure_by_names(
     stats_col/bloom_col opt-in), and the single-column id frame is
     renamed to that key. The auditor reads ``read_branch`` (masked)
     and ``branch_changes`` (keyless delete images). Index entries are
-    reported ``staged=False`` — index protocols have no branch
+    reported ``staged=False`` — indexes have no branch
     concept, so indexes erase AT PUBLISH time via erase_by_names
     (run it right after the flip; the report says so explicitly
     rather than letting a compliance operator believe an index was
@@ -1066,8 +1039,6 @@ def catalog_maintenance_tick(
         vacuum,
     )
 
-    from uts_spark.functions.index_protocol import _detect_index_protocol
-
     entries = list_entries(catalog)
     views = [r for r in entries if r["kind"] == "view"]
     if len(views) > 1:
@@ -1109,25 +1080,6 @@ def catalog_maintenance_tick(
             "orphans_removed": 0,
         }
         if rec["kind"] == "index":
-            # marker-protocol indexes are partitioned layouts, not
-            # manifest chains — the versioned-table chores don't
-            # apply (their compaction is the partition-grain
-            # compact_partitioned, a deliberate operator call, and
-            # their file censuses make orphan cleanup a different
-            # verb). Skip LOUDLY in the report, never guess.
-            if _detect_index_protocol(rec["path"]) != "snapshot":
-                r["skipped"] = (
-                    "marker-protocol index (compact via "
-                    "index_protocol.index_compact)"
-                )
-                # a policy recorded before the entry became (or was
-                # registered as) marker-protocol is NOT enforced by
-                # this tick — say so, never let the operator believe
-                # a compliance window is active (ADVICE r10, low)
-                if rec.get("retention"):
-                    r["retention_unenforced"] = rec["retention"]
-                report.append(r)
-                continue
             from uts_spark.functions.vindex import vindex_maybe_materialize
 
             r["dv_materialized"] = vindex_maybe_materialize(

@@ -13,6 +13,10 @@ wholly ours. The layout rules ARE the 100 TB design:
   (saveAsTable + bucketBy; needs a metastore catalog).
 - **CSV/JSON sources**: schema-explicit readers (never inferSchema on a
   100 TB lake — a schema scan is a full read).
+
+Maintained indexes are not written here: every index family commits
+through the versioned table's manifests (functions/vindex.py over
+sources/versioned.py), which needs no rename and no O_EXCL.
 """
 
 from __future__ import annotations
@@ -60,276 +64,16 @@ def write_partitioned(
     partition_by: list[str],
     mode: str = "overwrite",
     max_records_per_file: int = 5_000_000,
-    cluster: bool = False,
 ) -> None:
     """Partitioned parquet append/overwrite. ``maxRecordsPerFile`` bounds
     file sizes (small-file storms and 10 GB monsters are both scan
-    poison).
-
-    ``cluster=True`` repartitions on the partition columns first, so
-    each directory receives ONE file per write instead of one per
-    (task x directory). Index builds/appends pass it: measured at 1M
-    docs, five un-clustered MinHash-index appends left 24,576 files and
-    a 40 s probe; the same index at one-file-per-dir probes in 10.5 s
-    (SCALE.md round 7). Costs one batch-sized shuffle — the right trade
-    for service ticks; bulk one-shot writes keep the parallel layout."""
-    if cluster:
-        from pyspark.sql import functions as F
-
-        df = df.repartition(*[F.col(c) for c in partition_by])
+    poison)."""
     (
         df.write.mode(mode)
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy(*partition_by)
         .parquet(path)
     )
-
-
-def staged_idempotent_append(
-    rows: "DataFrame",
-    path: str,
-    partition_by: list[str],
-    batch_id: int,
-    epoch: int = 0,
-) -> list[str]:
-    """EXACTLY-ONCE partitioned append keyed by ``(epoch, batch_id)``
-    (the shared kernel behind the streaming ingest lanes): stage the
-    rows under ``path/_staging/{tag}`` in overwrite mode (underscore
-    dir — invisible to partition discovery; a torn prior staging of
-    the same batch is replaced wholesale), SWEEP any
-    ``{tag}-*.parquet`` a crashed prior attempt already published
-    into the partition grid, then os.replace each staged file into
-    its partition dir under the deterministic name
-    ``{tag}-{seq}.parquet``. Every crash window replays to the
-    identical physical table. Returns the published relpaths (for
-    version-history sidecars). Cost: the same clustered write a plain
-    append does, plus renames — no data copy.
-
-    ``epoch`` (ADVICE r8) namespaces the tag: epoch 0 keeps the
-    original ``b{batch_id}`` names; after a rewriting verb (erasure /
-    compaction / re-cluster — each appends a reset to the version
-    history) the caller passes ``index_epoch(path)`` so a REUSED
-    batch_id (a fresh stream restarting at bid 0) publishes as
-    ``e{epoch}b{batch_id}-*`` and the sweep can never delete the
-    prior generation's surviving ``b{batch_id}-*`` files out of
-    partitions the rewrite left untouched."""
-    import glob
-    import os
-    import shutil
-
-    tag = f"b{batch_id}" if epoch == 0 else f"e{epoch}b{batch_id}"
-    staged = os.path.join(path, "_staging", tag)
-    write_partitioned(rows, staged, partition_by, cluster=True)
-
-    pat = [f"{c}=*" for c in partition_by]
-    for stale in glob.glob(
-        os.path.join(path, *pat, f"{tag}-*.parquet")
-    ):
-        os.remove(stale)
-
-    published: list[str] = []
-    seq = 0
-
-    def walk(src_dir: str, rel_parts: list[str], depth: int):
-        nonlocal seq
-        if depth == len(partition_by):
-            tgt = os.path.join(path, *rel_parts)
-            os.makedirs(tgt, exist_ok=True)
-            for f in sorted(glob.glob(os.path.join(src_dir, "*.parquet"))):
-                name = f"{tag}-{seq}.parquet"
-                os.replace(f, os.path.join(tgt, name))
-                published.append(os.path.join(*rel_parts, name))
-                seq += 1
-            return
-        for d in sorted(
-            glob.glob(os.path.join(src_dir, f"{partition_by[depth]}=*"))
-        ):
-            walk(d, rel_parts + [os.path.basename(d)], depth + 1)
-
-    walk(staged, [], 0)
-    shutil.rmtree(staged, ignore_errors=True)
-    return published
-
-
-def compact_partitioned(
-    spark, path: str, partition_by: list[str]
-) -> tuple[int, int]:
-    """Compact a partitioned index/table directory in place: every
-    append (dedup/ANN service ticks) adds one file per touched
-    partition, and after many ticks the per-partition file count — not
-    data size — starts to dominate scan planning. Rewrite shuffles on
-    exactly the partition columns (all rows of a directory land in one
-    task → one output file per directory), then swaps directories via
-    rename. Underscore-prefixed sidecars (frozen quantizer tables,
-    _INDEX_MANIFEST.json) are carried over verbatim — compaction is
-    physical layout only, never content: probe results are pinned
-    identical pre/post in tests/test_llm_ops.py.
-
-    Returns (files_before, files_after). The swap is two renames — the
-    brief window between them is acceptable for a single-writer
-    service tick; a multi-writer deployment would commit via a
-    versioned manifest (sources/versioned.py) instead. Re-entrant
-    (ADVICE r7): a run that crashed between its two renames leaves the
-    index only at ``path__old`` — that is detected and restored here
-    before anything else, and stale ``__old``/``__compact_tmp`` debris
-    from any crashed prior run is swept so the swap's own renames can
-    never collide with it.
-
-    VERSION HISTORY (VERDICT r8 #1 — the round-8 composition defect):
-    compaction rewrites every data file under new Spark ``part-*``
-    names, so when a ``_MANIFEST_HISTORY.jsonl`` sidecar rides along,
-    carrying it over VERBATIM leaves every recorded version pointing
-    at a file census that no longer exists — a version-pinned probe
-    then dies with a raw PATH_NOT_FOUND instead of the designed
-    "predates the rewrite" error. A RESET line with the
-    post-compaction census is therefore appended (exactly what the
-    erasure verbs do): pins taken BEFORE the compaction raise the
-    descriptive ValueError, pins at/after it read the compacted
-    files and stay row-identical to an unpinned probe."""
-    import glob
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    old = path + "__old"
-    tmp = path + "__compact_tmp"
-    if not os.path.exists(path) and os.path.exists(old):
-        # prior run died between rename(path, old) and rename(tmp, path):
-        # __old IS the (uncompacted but complete) index — restore it
-        os.rename(old, path)
-    if os.path.exists(old):
-        # prior run died after its second rename but before the rmtree —
-        # __old is a superseded copy; a live one was renamed back above
-        shutil.rmtree(old)
-    count = lambda p: len(  # noqa: E731
-        glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True)
-    )
-    before = count(path)
-    df = spark.read.parquet(path)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    (
-        df.repartition(*[F.col(c) for c in partition_by])
-        .write.mode("overwrite")
-        .partitionBy(*partition_by)
-        .parquet(tmp)
-    )
-    for entry in os.listdir(path):
-        if entry.startswith("_") and entry != "_SUCCESS":
-            src, dst = os.path.join(path, entry), os.path.join(tmp, entry)
-            if os.path.isdir(src):
-                if os.path.exists(dst):
-                    shutil.rmtree(dst)
-                shutil.copytree(src, dst)
-            else:
-                shutil.copy2(src, dst)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    from uts_spark.functions.dedup import (
-        _HISTORY_NAME,
-        _index_data_files,
-        index_history_append,
-        index_history_versions,
-    )
-
-    if os.path.exists(os.path.join(path, _HISTORY_NAME)):
-        recs = index_history_versions(path)
-        if recs:
-            index_history_append(
-                path,
-                max(r["version"] for r in recs) + 1,
-                _index_data_files(
-                    path, tuple(f"{c}=*" for c in partition_by)
-                ),
-                reset=True,
-                compaction=True,
-            )
-    return before, count(path)
-
-
-def delete_from_partitioned(
-    spark: SparkSession,
-    path: str,
-    located: DataFrame,
-    part_cols: list[str],
-    id_col: str,
-) -> int:
-    """ERASE rows from a partitioned index in place — the kernel behind
-    the marker MinHash index's GDPR verb. ``located`` carries one row
-    per (deleted id, partition key) — the caller derives it by
-    re-sketching ONLY the deleted documents, so the work here is
-    bounded by the touched partitions, never the index:
-
-    1. collect the DISTINCT touched partition keys (bounded by the
-       index's partition COUNT — bands x n_grps — never by the erasure
-       batch size) into a static
-       partition filter;
-    2. rewrite those partitions minus the deleted ids via a LEFT ANTI
-       join against the id FRAME (VERDICT r7 #2 / ADVICE r7: the first
-       implementation collected every deleted id to the driver and
-       embedded them in one isin() literal — fine for user-sized GDPR
-       requests, a driver-side bottleneck for a multi-million-id domain
-       takedown; the anti join broadcasts when the batch is small and
-       shuffles when it is not, and the driver never holds the ids);
-    3. dynamic-partition-overwrite the kept rows (untouched directories
-       keep their files byte-identical) and rmtree any directory whose
-       rows were ALL deleted — dynamic overwrite cannot clear a
-       partition it writes zero rows into, so without the sweep those
-       rows would silently survive.
-
-    Returns the number of index rows removed; the caller bumps the
-    manifest fingerprint afterwards (ideally inside an
-    :func:`uts_spark.functions.dedup.index_tick`)."""
-    touched = sorted(
-        tuple(int(r[c]) for c in part_cols)
-        for r in located.select(*part_cols).distinct().collect()
-    )
-    if not touched:
-        return 0
-    # ONE flat isin over a combined key, not an OR-chain of per-key
-    # conjunctions: a chain of hundreds of (c1=v1 AND c2=v2) terms
-    # builds a Column tree deep enough to StackOverflow the expression
-    # converter (hit at 512 touched LSH partitions); a combined-key
-    # In-list stays a single flat predicate over partition columns
-    # only, so partition pruning is unchanged
-    if len(part_cols) == 1:
-        cond = F.col(part_cols[0]).isin([key[0] for key in touched])
-    else:
-        combined = F.concat_ws(
-            "/", *[F.col(c).cast("string") for c in part_cols]
-        )
-        cond = combined.isin(
-            ["/".join(str(v) for v in key) for key in touched]
-        )
-    scan = spark.read.parquet(path).filter(cond)
-    ids = located.select(F.col(id_col)).distinct()
-    # materialize BEFORE overwriting: the rewrite targets the same path
-    # it reads from, and a lazy plan would race its own output. Bounded
-    # by the touched partitions' rows.
-    keep = scan.join(ids, id_col, "left_anti").localCheckpoint(eager=True)
-    removed = scan.count() - keep.count()
-    (
-        keep.repartition(*[F.col(c) for c in part_cols])
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*part_cols)
-        .parquet(path)
-    )
-    remaining = {
-        tuple(int(r[c]) for c in part_cols)
-        for r in keep.select(*part_cols).distinct().collect()
-    }
-    for key in touched:
-        if key not in remaining:
-            shutil.rmtree(
-                os.path.join(
-                    path, *[f"{c}={v}" for c, v in zip(part_cols, key)]
-                ),
-                ignore_errors=True,
-            )
-    return removed
 
 
 def write_bucketed(
