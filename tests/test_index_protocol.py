@@ -17,10 +17,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from uts_spark.functions.index_protocol import (
     index_append,
     index_build,
-    index_compact,
-    index_delete,
     index_probe,
 )
+from uts_spark.functions.vindex import vindex_compact, vindex_delete
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
@@ -71,8 +70,8 @@ def test_facade_ivf_full_lifecycle_parity(spark, emb, tmp_path):
     path = str(tmp_path / "ivf")
     index_build(base, "ivf", path)
     index_append(batch, path)
-    index_delete(spark, dele_ids, path)
-    index_compact(spark, path)
+    vindex_delete(spark, dele_ids, path)
+    vindex_compact(spark, path)
     got = _rows(index_probe(spark, path, anchors, k=5))
     want = _rows(ivf_topk_det(
         emb.filter(F.col("vec_id") % 10 != 0), anchors,

@@ -222,22 +222,6 @@ def test_multimodal_frame_sample_fanout(docs):
     assert all(len(r.feature) == 8 for r in rows)
 
 
-def test_ngram_jaccard_prefix_orders_agree(docs):
-    """Any consistent global shingle order yields the same exact result:
-    the cheap per-doc hash-order prefix must match the freq-order one."""
-    a = {
-        (r.id_a, r.id_b, round(r.jaccard, 9))
-        for r in ngram_jaccard_pairs(docs, "text", "doc_id", 3, 0.6).collect()
-    }
-    b = {
-        (r.id_a, r.id_b, round(r.jaccard, 9))
-        for r in ngram_jaccard_pairs(
-            docs, "text", "doc_id", 3, 0.6, prefix_order="hash"
-        ).collect()
-    }
-    assert a == b and a
-
-
 def test_ivf_cells_as_partition_column_prune(spark, emb, tmp_path):
     """The SCALE.md IVF claim, demonstrated: persist cell assignments as
     a partition column; probing a cell is then a directory-pruned scan
@@ -1015,14 +999,14 @@ def test_minhash_index_delete_sweeps_emptied_partitions(spark, sf_dir, tmp_path)
     until vacuum."""
     from uts_spark.functions.vindex import (
         minhash_vindex_build,
-        minhash_vindex_delete,
+        vindex_delete,
     )
     from uts_spark.sources.versioned import list_versions, read_version
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
     path = str(tmp_path / "idx")
     minhash_vindex_build(docs, "text", "doc_id", path)
-    v = minhash_vindex_delete(
+    v = vindex_delete(
         spark, docs.select(F.col("doc_id").alias("id")), path
     )
     ms = {m["version"]: m for m in list_versions(path)}
@@ -1088,8 +1072,8 @@ def test_index_compact_preserves_probe_and_shrinks_files(spark, sf_dir, tmp_path
     from uts_spark.functions.vindex import (
         minhash_vindex_append,
         minhash_vindex_build,
-        minhash_vindex_compact,
         minhash_vindex_probe,
+        vindex_compact,
         vindex_config,
     )
     from uts_spark.sources.versioned import _manifest_dirs, list_versions
@@ -1117,7 +1101,7 @@ def test_index_compact_preserves_probe_and_shrinks_files(spark, sf_dir, tmp_path
     want = pairs()
     cfg_before = vindex_config(path)
     before = len(_manifest_dirs(list_versions(path)[-1]))
-    minhash_vindex_compact(spark, path, fingerprint="after-appends")
+    vindex_compact(spark, path, fingerprint="after-appends")
     after = len(_manifest_dirs(list_versions(path)[-1]))
     assert after < before, (before, after)
     assert pairs() == want and want
@@ -1419,8 +1403,8 @@ def test_index_version_pinned_reads_and_reset_semantics(spark, tmp_path):
     from uts_spark.functions.vindex import (
         minhash_vindex_append,
         minhash_vindex_build,
-        minhash_vindex_delete,
         minhash_vindex_probe,
+        vindex_delete,
     )
     from uts_spark.sources.versioned import list_versions, read_version
 
@@ -1468,9 +1452,9 @@ def test_index_version_pinned_reads_and_reset_semantics(spark, tmp_path):
         b1.select(F.col("doc_id").alias("id")), "id", "left_semi"
     ).count()
     assert n_b1_rows > 0
-    v2 = minhash_vindex_delete(
+    v2 = vindex_delete(
         spark, b1.select(F.col("doc_id").alias("id")), idx,
-        fingerprint="f2", **cfg,
+        fingerprint="f2",
     )
     assert v2 == 2 and list_versions(idx)[-1]["operation"] == "delete"
     ids = b1.select(F.col("doc_id").alias("id"))
@@ -1521,8 +1505,8 @@ def test_lsh_ivfpq_exactly_once_and_version_pins(spark, tmp_path):
         ivfpq_vindex_build,
         lsh_vindex_append,
         lsh_vindex_build,
-        lsh_vindex_delete,
         lsh_vindex_probe,
+        vindex_delete,
     )
     from uts_spark.queries.llm_ops import EMB_DIM
     from uts_spark.sources.versioned import list_versions, read_version
@@ -1560,7 +1544,7 @@ def test_lsh_ivfpq_exactly_once_and_version_pins(spark, tmp_path):
     before_delete = lprobe(li)
     assert lprobe(li, version=1) == before_delete
 
-    lsh_vindex_delete(spark, batch.select("vec_id"), li)
+    vindex_delete(spark, batch.select("vec_id"), li)
     assert list_versions(li)[-1]["operation"] == "delete"
     assert lprobe(li) == lprobe(ref)
     assert lprobe(li, version=1) == before_delete
@@ -1687,7 +1671,7 @@ def test_batch_id_reuse_after_reset_is_epoch_keyed(spark, tmp_path):
     from uts_spark.functions.vindex import (
         minhash_vindex_append,
         minhash_vindex_build,
-        minhash_vindex_compact,
+        vindex_compact,
     )
     from uts_spark.sources.versioned import list_versions, read_version
 
@@ -1703,7 +1687,7 @@ def test_batch_id_reuse_after_reset_is_epoch_keyed(spark, tmp_path):
         b1, "text", "doc_id", idx, fingerprint="f1", batch_id=0, **cfg
     )
     assert list_versions(idx)[-1]["batch_key"] == "e0b0"
-    v2 = minhash_vindex_compact(spark, idx, fingerprint="f1c", **cfg)
+    v2 = vindex_compact(spark, idx, fingerprint="f1c")
     rows_before = read_version(spark, idx).count()
 
     # the restarted stream reuses batch_id 0 with DIFFERENT docs
@@ -1951,12 +1935,13 @@ def test_vindex_optimistic_concurrency_and_time_travel(spark, tmp_path):
     walkable."""
     import pytest
     from uts_spark.functions.vindex import (
+        _carry_meta,
         _rows,
         minhash_vindex_append,
         minhash_vindex_build,
-        minhash_vindex_compact,
-        minhash_vindex_delete,
         minhash_vindex_probe,
+        vindex_compact,
+        vindex_delete,
     )
     from uts_spark.sources.versioned import (
         VersionConflictError,
@@ -1998,13 +1983,17 @@ def test_vindex_optimistic_concurrency_and_time_travel(spark, tmp_path):
         )
     cur = current_version(path)
     dirs = _manifest_dirs(list_versions(path)[-1]) + [ddir_b]
-    v = commit_version(path, dirs, "append", cur, n_b)  # B's retry
+    # B's retry, carrying the index state like the append kernel does
+    v = commit_version(
+        path, dirs, "append", cur, n_b,
+        _carry_meta(list_versions(path)[-1], "f1"),
+    )
     assert v == cur + 1 == 2
 
     # (c): delete b1's docs as copy-on-write; the pre-delete snapshot
     # is STILL readable, then vacuum enforces erasure-for-real
     deleted = b1.select(F.col("doc_id").alias("id"))
-    minhash_vindex_delete(spark, deleted, path, "f2", **cfg)
+    vindex_delete(spark, deleted, path, "f2")
     assert current_version(path) == 3
     ids_v2 = {
         r["id"] for r in read_version(spark, path, 2).select("id").collect()
@@ -2029,7 +2018,7 @@ def test_vindex_optimistic_concurrency_and_time_travel(spark, tmp_path):
     )
 
     # (d): compact, probe identical, chain walkable, then vacuum
-    minhash_vindex_compact(spark, path, "f3", **cfg)
+    vindex_compact(spark, path, "f3")
     got = sorted(
         map(
             tuple,
@@ -2066,8 +2055,8 @@ def test_vindex_delete_prunes_by_dir_stats(spark, tmp_path):
     from uts_spark.functions.vindex import (
         minhash_vindex_append,
         minhash_vindex_build,
-        minhash_vindex_delete,
         minhash_vindex_probe,
+        vindex_delete,
     )
     from uts_spark.sources.versioned import (
         _manifest_dirs,
@@ -2096,7 +2085,7 @@ def test_vindex_delete_prunes_by_dir_stats(spark, tmp_path):
     # the ACTUAL deleted ids, so the count of touched dirs is exactly
     # the dirs whose [min, max] contains at least one deleted id
     deleted = b1.select(F.col("doc_id").alias("id"))
-    minhash_vindex_delete(spark, deleted, path, "f3", **cfg)
+    vindex_delete(spark, deleted, path, "f3")
     post = list_versions(path)[-1]
     post_dirs = _manifest_dirs(post)
     carried = set(pre_dirs) & set(post_dirs)
@@ -2114,7 +2103,7 @@ def test_vindex_delete_prunes_by_dir_stats(spark, tmp_path):
     before = list_versions(path)[-1]
     before_dirs = _manifest_dirs(before)
     far_ids = far.select(F.col("doc_id").alias("id"))
-    minhash_vindex_delete(spark, far_ids, path, "f5", **cfg)
+    vindex_delete(spark, far_ids, path, "f5")
     after = list_versions(path)[-1]
     after_dirs = _manifest_dirs(after)
     # every pre-existing dir carried by reference; only the far dir
@@ -2258,19 +2247,47 @@ def test_ivfpq_vindex_quantizer_time_travel_and_vacuum(
     assert vx.ivfpq_vindex_probe(spark, path, anchors, k=10).count() > 0
 
 
+def test_vindex_sort_of_family_layouts():
+    """One family table states every layout: the base sort, and with
+    meta_sort the metadata columns at the family's position, closed by
+    the manifest's id column (no Spark needed)."""
+    from uts_spark.functions.vindex import _sort_of
+
+    meta = {"meta_cols": ["lang", "label"], "meta_sort": True}
+    cases = {
+        "minhash": (
+            ("band", "grp", "bucket"),
+            ("band", "grp", "lang", "label", "bucket", "id"),
+        ),
+        "lsh": (
+            ("table", "bucket"),
+            ("table", "bucket", "lang", "label", "doc_id"),
+        ),
+        "ivf": (("cell", "vec_id"), ("cell", "lang", "label", "doc_id")),
+        "ivfpq": (("cell", "vec_id"), ("cell", "lang", "label", "doc_id")),
+    }
+    for fam, (base, sorted_meta) in cases.items():
+        idc = {} if fam == "minhash" else {"id_col": "doc_id"}
+        assert _sort_of({"family": fam, **idc}) == base
+        # meta_cols without meta_sort keep the base layout
+        assert _sort_of(
+            {"family": fam, **idc, "meta_cols": ["lang"]}
+        ) == base
+        assert _sort_of({"family": fam, **idc, **meta}) == sorted_meta
+
+
 def test_vindex_family_mismatch_fails_loudly(spark, emb, tmp_path):
-    """Pointing one family's verbs at another family's snapshot index
-    must raise a descriptive error, not write incompatible rows or
-    probe garbage — the manifest records its family and every verb
-    checks it."""
+    """Pointing one family's append at another family's snapshot index
+    must raise a descriptive error, not write incompatible rows — the
+    manifest records its family and every family verb checks it
+    (erase and compact read the family off the manifest, so they
+    cannot target the wrong one)."""
     import uts_spark.functions.vindex as vx
 
     base = emb.filter(F.col("vec_id") % 10 != 7)
     batch = emb.filter(F.col("vec_id") % 10 == 7)
     path = str(tmp_path / "fam")
     vx.ivf_vindex_build(base, path, fingerprint="f0", n_cells=8)
-    with pytest.raises(ValueError, match="family"):
-        vx.lsh_vindex_delete(spark, batch.select("vec_id"), path)
     with pytest.raises(ValueError, match="family"):
         vx.ivfpq_vindex_append(batch, path)
     with pytest.raises(ValueError, match="family"):
@@ -2512,6 +2529,26 @@ def test_minhash_vindex_ingest_tick_skew_loop(spark, docs, tmp_path):
     assert t3["coll_sum"] == t2["coll_sum"]
     assert read_version(spark, path).count() == live.count()
 
+    # (e) the quarantine is index state: every later commit keeps
+    # quarantine_dir and its aux_dirs entry, so vacuum keeps the dir
+    from uts_spark.sources.versioned import vacuum
+
+    qdir = m2["quarantine_dir"]
+    fresh = b1.select((F.col("doc_id") + 10**9).alias("doc_id"), "text")
+    vx.minhash_vindex_append(fresh, "text", "doc_id", path, "fa", **cfg)
+    vx.vindex_delete(spark, fresh.select("doc_id"), path, "fd")
+    vx.vindex_delete_mor(spark, b1.select("doc_id"), path, "fm")
+    vx.vindex_materialize_dvs(spark, path, "fz")
+    vx.vindex_compact(spark, path, "fc")
+    later = [m for m in list_versions(path) if m["version"] > m2["version"]]
+    assert [m["operation"] for m in later] == [
+        "append", "delete", "delete_mor", "materialize_dv", "compact",
+    ]
+    for m in later:
+        assert m["quarantine_dir"] == qdir and qdir in m["aux_dirs"]
+    vacuum(path, keep_last=1)
+    assert os.path.isdir(qdir)
+
 
 def test_ivfpq_vindex_ingest_tick_distortion_loop(spark, tmp_path):
     """The codebook-side drift loop on the snapshot IVF-PQ index:
@@ -2589,7 +2626,7 @@ def test_index_history_changes_feed_and_reset_refusal(spark, tmp_path):
     from uts_spark.functions.vindex import (
         minhash_vindex_append,
         minhash_vindex_build,
-        minhash_vindex_delete,
+        vindex_delete,
     )
     from uts_spark.sources.versioned import table_changes
 
@@ -2622,7 +2659,7 @@ def test_index_history_changes_feed_and_reset_refusal(spark, tmp_path):
 
     # an erasure is a rewrite: the feed needs row identity across it
     gone = b1.limit(5).select(F.col("doc_id").alias("id"))
-    minhash_vindex_delete(spark, gone, path, fingerprint="f2", **cfg)
+    vindex_delete(spark, gone, path, fingerprint="f2")
     with _pytest.raises(ValueError, match="rewrite"):
         table_changes(spark, path, 1)
     deletes = table_changes(spark, path, 1, key=("id", "band"))
@@ -2710,7 +2747,7 @@ def test_vindex_delete_mor_lifecycle(spark, emb, tmp_path):
         path, fingerprint="f4",
     )
     assert list_versions(path)[-1].get("dv")
-    vx.ivf_vindex_delete(
+    vx.vindex_delete(
         spark,
         spark.createDataFrame([(9999999,)], "vec_id long"),
         path, fingerprint="f5",
@@ -2745,7 +2782,7 @@ def test_vindex_delete_mor_minhash_and_compact(spark, docs, tmp_path):
     hits = vx.minhash_vindex_probe(spark, path, gone, base, "text", "id")
     assert not ({r.id_old for r in hits.collect()} & set(victims))
     # compact = implicit materialize (reads masked, commits clean)
-    vx.minhash_vindex_compact(spark, path, fingerprint="m2")
+    vx.vindex_compact(spark, path, fingerprint="m2")
     pm = list_versions(path)[-1]
     assert not pm.get("dv") and pm["operation"] == "compact"
     hits2 = vx.minhash_vindex_probe(spark, path, gone, base, "text", "id")
@@ -3058,7 +3095,7 @@ def test_ivf_vindex_meta_sort_layout(spark, emb, tmp_path):
     )
     assert list_versions(p)[-1]["meta_sort"] is True
     vx.ivf_vindex_append(batch, p, fingerprint="f1")
-    vx.ivf_vindex_compact(spark, p, fingerprint="f2")
+    vx.vindex_compact(spark, p, fingerprint="f2")
     assert list_versions(p)[-1]["meta_sort"] is True
 
     ref = str(tmp_path / "scattered")
@@ -3165,8 +3202,8 @@ def test_meta_sort_layout_all_families(spark, emb, docs, tmp_path):
         vx.lsh_vindex_append(
             batch, tgt, dim=EMB_DIM, fingerprint="f1", planes=4, tables=2
         )
-        vx.lsh_vindex_delete(spark, victims, tgt, fingerprint="f2")
-    vx.lsh_vindex_compact(spark, p, fingerprint="f3")
+        vx.vindex_delete(spark, victims, tgt, fingerprint="f2")
+    vx.vindex_compact(spark, p, fingerprint="f3")
     m = list_versions(p)[-1]
     assert m["meta_sort"] is True and m["meta_cols"] == ["label"]
     key = lambda df: sorted(
@@ -3194,8 +3231,8 @@ def test_meta_sort_layout_all_families(spark, emb, docs, tmp_path):
             m_sub=4, n_cent=8, meta_cols=("label",), meta_sort=ms,
         )
         vx.ivfpq_vindex_append(batch, tgt, fingerprint="f1")
-        vx.ivfpq_vindex_delete(spark, victims, tgt, fingerprint="f2")
-    vx.ivfpq_vindex_compact(spark, p, fingerprint="f3")
+        vx.vindex_delete(spark, victims, tgt, fingerprint="f2")
+    vx.vindex_compact(spark, p, fingerprint="f3")
     m = list_versions(p)[-1]
     assert m["meta_sort"] is True
     assert key(
@@ -3226,8 +3263,8 @@ def test_meta_sort_layout_all_families(spark, emb, docs, tmp_path):
         vx.minhash_vindex_append(
             dbatch, "text", "doc_id", tgt, fingerprint="f1", **cfg
         )
-        vx.minhash_vindex_delete(spark, dvic, tgt, fingerprint="f2", **cfg)
-    vx.minhash_vindex_compact(spark, p, fingerprint="f3", **cfg)
+        vx.vindex_delete(spark, dvic, tgt, fingerprint="f2")
+    vx.vindex_compact(spark, p, fingerprint="f3")
     m = list_versions(p)[-1]
     assert m["meta_sort"] is True and m["meta_cols"] == ["lang"]
     pkey = lambda df: sorted(

@@ -384,9 +384,8 @@ def _brute_jaccard_pairs(docs, n, threshold):
 @given(
     data=st.data(),
     threshold=st.sampled_from([0.3, 0.5, 0.8]),
-    order=st.sampled_from(["freq", "hash"]),
 )
-def test_ngram_jaccard_pairs_match_brute_force(spark, data, threshold, order):
+def test_ngram_jaccard_pairs_match_brute_force(spark, data, threshold):
     from uts_spark.functions.dedup import ngram_jaccard_pairs
 
     n_docs = data.draw(st.integers(2, 8))
@@ -400,7 +399,7 @@ def test_ngram_jaccard_pairs_match_brute_force(spark, data, threshold, order):
     got = {
         (r.id_a, r.id_b): r.jaccard
         for r in ngram_jaccard_pairs(
-            df, "text", "doc_id", n=3, threshold=threshold, prefix_order=order
+            df, "text", "doc_id", n=3, threshold=threshold
         ).collect()
     }
     exp = _brute_jaccard_pairs(docs, 3, threshold)

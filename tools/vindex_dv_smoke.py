@@ -117,15 +117,7 @@ def run_family(spark, work: str, family: str, n_vec: int, n_docs: int,
             vx.ivfpq_vindex_build(vecs(spark, 0, n_vec), p, DIM, "f0")
 
     def cow_delete(p, i):
-        ids = batch_ids(spark, n_rows, k, i, idc)
-        if family == "minhash":
-            vx.minhash_vindex_delete(spark, ids, p)
-        elif family == "lsh":
-            vx.lsh_vindex_delete(spark, ids, p)
-        elif family == "ivf":
-            vx.ivf_vindex_delete(spark, ids, p)
-        else:
-            vx.ivfpq_vindex_delete(spark, ids, p)
+        vx.vindex_delete(spark, batch_ids(spark, n_rows, k, i, idc), p)
 
     def probe(p):
         if family == "minhash":

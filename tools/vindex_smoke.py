@@ -88,16 +88,14 @@ def chain_main() -> None:
     from uts_spark.functions.vindex import (
         ivf_vindex_append,
         ivf_vindex_build,
-        ivf_vindex_compact,
         ivf_vindex_probe,
         lsh_vindex_append,
         lsh_vindex_build,
-        lsh_vindex_compact,
         lsh_vindex_probe,
         minhash_vindex_append,
         minhash_vindex_build,
-        minhash_vindex_compact,
         minhash_vindex_probe,
+        vindex_compact,
     )
 
     work = tempfile.mkdtemp(prefix="uts_vindex_chain_")
@@ -117,9 +115,6 @@ def chain_main() -> None:
         probe = lambda: ivf_vindex_probe(  # noqa: E731
             spark, path, anchors, k=10, n_probe=3
         )
-        compact = lambda: ivf_vindex_compact(  # noqa: E731
-            spark, path, fingerprint="fc"
-        )
     elif family == "lsh":
         build = lambda: lsh_vindex_build(  # noqa: E731
             vecs(0, rows), path, 64, fingerprint="f0"
@@ -128,9 +123,6 @@ def chain_main() -> None:
             vecs(lo, 1000), path, 64, fingerprint="fi", batch_id=lo
         )
         probe = lambda: lsh_vindex_probe(spark, path, anchors, k=10)  # noqa: E731
-        compact = lambda: lsh_vindex_compact(  # noqa: E731
-            spark, path, fingerprint="fc"
-        )
     elif family == "minhash":
         build = lambda: minhash_vindex_build(  # noqa: E731
             corpus, "text", "doc_id", path, fingerprint="f0"
@@ -141,9 +133,6 @@ def chain_main() -> None:
         )
         probe = lambda: minhash_vindex_probe(  # noqa: E731
             spark, path, probe_new, corpus, "text", "doc_id"
-        )
-        compact = lambda: minhash_vindex_compact(  # noqa: E731
-            spark, path, fingerprint="fc"
         )
     else:
         raise SystemExit(f"unknown chain family {family!r}")
@@ -172,7 +161,7 @@ def chain_main() -> None:
                 append(nxt)
                 nxt += 1000
             probe_wall(f"dirs={target}")
-        compact()
+        vindex_compact(spark, path, fingerprint="fc")
         probe_wall("compacted")
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -223,8 +212,8 @@ def main() -> None:
         from uts_spark.functions.vindex import (
             ivf_vindex_append,
             ivf_vindex_build,
-            ivf_vindex_delete,
             ivf_vindex_probe,
+            vindex_delete,
         )
         from uts_spark.sources.versioned import list_versions
 
@@ -241,7 +230,7 @@ def main() -> None:
         ranged = spark.range(rows, rows + batch // 2).select(
             F.col("id").alias("vec_id")
         )
-        t("delete_snapshot_ranged", lambda: ivf_vindex_delete(
+        t("delete_snapshot_ranged", lambda: vindex_delete(
             spark, ranged, snap, fingerprint="f2"))
         pruned["ranged_pruned_dirs"] = list_versions(snap)[-1]["pruned_dirs"]
 
@@ -249,7 +238,7 @@ def main() -> None:
         scattered = spark.range(0, rows + batch, rows // 7).select(
             F.col("id").alias("vec_id")
         )
-        t("delete_snapshot_scattered", lambda: ivf_vindex_delete(
+        t("delete_snapshot_scattered", lambda: vindex_delete(
             spark, scattered, snap, fingerprint="f3"))
         pruned["scattered_pruned_dirs"] = (
             list_versions(snap)[-1]["pruned_dirs"]

@@ -582,19 +582,6 @@ def mix_trained_byte_merges(
     )
 
 
-@lru_cache(maxsize=8)
-def mix_trained_byte_vocab_ids(samples: tuple) -> dict[str, int]:
-    """token hex-string -> 1-based id for a mix-trained table: the 256
-    base bytes first, then merge outputs in rank order (same scheme as
-    the shipped table, so the two tables' id spaces are comparable)."""
-    ids: dict[str, int] = {h: i + 1 for i, h in enumerate(_ALL_BYTES)}
-    for x, y in mix_trained_byte_merges(samples):
-        tok = x + y
-        assert tok not in ids, tok
-        ids[tok] = len(ids) + 1
-    return ids
-
-
 def merges_to_patterns_sql(merges) -> str:
     """Any merge table as a DuckDB list literal of boundary-safe
     ``'|x||y|'`` patterns in rank order (hex symbols — no quoting

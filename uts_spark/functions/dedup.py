@@ -126,7 +126,6 @@ def pair_jaccard(cands: DataFrame, arrays: DataFrame) -> DataFrame:
 
 def ngram_jaccard_pairs(
     df: DataFrame, text_col: str, id_col: str, n: int = 3, threshold: float = 0.5,
-    prefix_order: str = "freq", checkpoint: bool = False,
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs at ``jaccard >= threshold`` via
     PPJoin-style PREFIX FILTERING (result-identical to the naive
@@ -154,55 +153,32 @@ def ngram_jaccard_pairs(
     4. exact Jaccard on full sets per candidate (array_intersect on the
        64-bit shingle hashes).
 
-    ``prefix_order`` picks the global total order the filter needs:
-
-    - ``"freq"`` (default): ascending global frequency — hot shingles
-      fall out of prefixes, which is what keeps candidates bounded on
-      skewed/template-heavy corpora (the 100 TB-safe choice). Costs one
-      extra groupBy over the inverted index + a join back.
-    - ``"hash"``: the shingle hash itself — prefix becomes a pure
-      per-doc array expression (array_sort + slice: NO extra shuffle,
-      no window). Same output (any consistent total order is correct);
-      cheaper on uniform corpora, risky under shingle skew.
-
-    ``checkpoint=True`` eagerly materializes the (tiny) verified pair
-    set and releases the ``arrays``/``prefix`` caches immediately —
-    same opt-in contract and tradeoffs as :func:`minhash_lsh_pairs`
-    (VERDICT r11 #8: the lazy default pins both caches in executor
-    storage for the session lifetime; a one-shot batch query should
-    opt in, a caller holding the lazy plan must unpersist itself or
-    accept the LRU-bounded pin).
+    The prefix order is ascending global shingle frequency: hot
+    shingles fall out of prefixes, which keeps candidates bounded on
+    skewed/template-heavy corpora (the 100 TB-safe choice), at the cost
+    of one extra groupBy over the inverted index + a join back.
     """
-    assert prefix_order in ("freq", "hash")
     arrays = doc_shingle_arrays(df, text_col, id_col, n).cache()
     prefix_len = F.col("ns") - F.ceil(F.col("ns") * F.lit(threshold)) + 1
 
-    if prefix_order == "hash":
-        prefix = arrays.select(
-            "id", "ns",
-            F.posexplode(
-                F.slice(F.array_sort("sh"), 1, prefix_len.cast("int"))
-            ).alias("__p0", "shingle"),
-        ).select("id", "ns", "shingle", (F.col("__p0") + 1).alias("pos"))
-    else:
-        inv = arrays.select("id", "ns", F.explode("sh").alias("shingle"))
-        freq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq"))
-        w = Window.partitionBy("id").orderBy("freq", "shingle")
-        # groupBy + join back kept DELIBERATELY (optimization r11,
-        # measured): a whole-partition window over `shingle` forces the
-        # full inverted index through a high-cardinality sort-shuffle,
-        # while this shape reduces to the distinct-shingle table first
-        # and lets AQE broadcast it (no shuffle of inv at all when the
-        # vocabulary fits) — the adaptive choice survives at scale too.
-        # cached: the a/b self-join below would otherwise recompute the
-        # freq-join + window sort twice
-        prefix = (
-            inv.join(freq, "shingle")
-            .withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= prefix_len)
-            .select("id", "ns", "shingle", F.col("__r").alias("pos"))
-            .cache()
-        )
+    inv = arrays.select("id", "ns", F.explode("sh").alias("shingle"))
+    freq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq"))
+    w = Window.partitionBy("id").orderBy("freq", "shingle")
+    # groupBy + join back kept DELIBERATELY (optimization r11,
+    # measured): a whole-partition window over `shingle` forces the
+    # full inverted index through a high-cardinality sort-shuffle,
+    # while this shape reduces to the distinct-shingle table first
+    # and lets AQE broadcast it (no shuffle of inv at all when the
+    # vocabulary fits) — the adaptive choice survives at scale too.
+    # cached: the a/b self-join below would otherwise recompute the
+    # freq-join + window sort twice
+    prefix = (
+        inv.join(freq, "shingle")
+        .withColumn("__r", F.row_number().over(w))
+        .filter(F.col("__r") <= prefix_len)
+        .select("id", "ns", "shingle", F.col("__r").alias("pos"))
+        .cache()
+    )
 
     a = prefix.select(
         F.col("id").alias("id_a"), F.col("ns").alias("na"),
@@ -239,13 +215,7 @@ def ngram_jaccard_pairs(
         .filter(count_bound >= alpha)
         .select("id_a", "id_b")
     )
-    out = pair_jaccard(cands, arrays).filter(F.col("jaccard") >= threshold)
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-        arrays.unpersist()
-        if prefix_order == "freq":
-            prefix.unpersist()
-    return out
+    return pair_jaccard(cands, arrays).filter(F.col("jaccard") >= threshold)
 
 
 # Universal-hash family over ONE base md5 hash per shingle:

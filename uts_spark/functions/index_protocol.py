@@ -18,10 +18,16 @@ warm-probe noise; same scan kernels). A path without a snapshot
 manifest chain (such as a directory left by the marker protocol) is
 not an index: every verb raises ``ValueError`` naming the path.
 
-The facade is deliberately THIN: it owns family dispatch, never
-semantics — each route calls the same functions the per-family lanes
-register, so facade results are hash-identical to the family lanes'
-oracles (pinned in tests/test_index_protocol.py).
+The facade is deliberately THIN: it owns family dispatch for the verbs
+whose row construction differs per family — build, append, probe and
+the service tick — never semantics; each route calls the same
+functions the per-family lanes register, so facade results are
+hash-identical to the family lanes' oracles (pinned in
+tests/test_index_protocol.py). Erase and compact need no dispatch:
+``vindex.vindex_delete`` / ``vindex.vindex_compact`` (and the
+merge-on-read ``vindex_delete_mor``) read family, layout and config
+off the manifest themselves, and :func:`erase_everywhere` fans them
+out over many indexes and tables.
 """
 
 from __future__ import annotations
@@ -104,19 +110,6 @@ def index_append(
     )
 
 
-def index_delete(
-    spark,
-    deleted: DataFrame,
-    path: str,
-    fingerprint: str = "",
-) -> int:
-    """Erase ids from an index (the GDPR verb): BARE ids, manifest
-    dir-stats prune the rewrite. Returns the committed version."""
-    from uts_spark.functions import vindex as vx
-
-    return vx.vindex_delete_auto(spark, deleted, path, fingerprint=fingerprint)
-
-
 def index_probe(
     spark,
     path: str,
@@ -142,13 +135,6 @@ def index_probe(
     if family == "ivf":
         return vx.ivf_vindex_probe(spark, path, probe_input, version=version, **kwargs)
     return vx.ivfpq_vindex_probe(spark, path, probe_input, version=version, **kwargs)
-
-
-def index_compact(spark, path: str, fingerprint: str = ""):
-    """Compact an index (a CAS rewrite commit). Returns the version."""
-    from uts_spark.functions import vindex as vx
-
-    return vx.vindex_compact_auto(spark, path, fingerprint=fingerprint)
 
 
 def index_service_tick(
@@ -236,8 +222,9 @@ def erase_everywhere(
     index_mode: str = "cow",
 ) -> list[dict]:
     """FACADE-LEVEL GDPR: one call erases a takedown batch from every
-    index (family dispatched off each manifest, all four routes through
-    the pruned copy-on-write kernel) AND every versioned data table
+    index (:func:`vindex.vindex_delete`, the pruned copy-on-write
+    kernel, which reads each index's family off its manifest) AND
+    every versioned data table
     (``table_specs`` = (path, key_col) pairs; dir-stats-pruned when the
     table opted in at write time). Every index path must carry a
     snapshot manifest chain; one that does not raises ``ValueError``
@@ -272,7 +259,9 @@ def erase_everywhere(
     vindex_read_rows_for_ids at the committed version)."""
     from uts_spark.functions.vindex import (
         _current_manifest,
-        vindex_delete_auto,
+        _layout_of,
+        vindex_delete,
+        vindex_delete_mor,
     )
     from uts_spark.sources.versioned import (
         delete_rows,
@@ -285,16 +274,15 @@ def erase_everywhere(
     for nm, md in (("table_mode", table_mode), ("index_mode", index_mode)):
         if md not in ("cow", "mor"):
             raise ValueError(f"{nm} {md!r} not supported (cow | mor)")
+    erase = vindex_delete_mor if index_mode == "mor" else vindex_delete
+    # every index resolves (manifest chain, known family) before any
+    # erasure commits
     parents = [(path, _current_manifest(path)) for path in index_paths]
+    id_cols = [_layout_of(pm)[2] for _, pm in parents]
     out: list[dict] = []
-    for path, pm in parents:
-        fam = pm.get("family")
-        idc = pm.get("id_col") or ("id" if fam == "minhash" else "vec_id")
+    for (path, pm), idc in zip(parents, id_cols):
         parent_dirs = set(_manifest_dirs(pm))
-        ver = vindex_delete_auto(
-            spark, deleted_ids, path, fingerprint=fingerprint,
-            mode=index_mode,
-        )
+        ver = erase(spark, deleted_ids, path, fingerprint=fingerprint)
         m2 = {m["version"]: m for m in list_versions(path)}[ver]
         idf = (
             deleted_ids.toDF(idc)
@@ -327,7 +315,7 @@ def erase_everywhere(
             audited = len(rewritten)
         out.append({
             "target": path, "kind": "index", "protocol": "snapshot",
-            "family": fam, "version": ver,
+            "family": pm["family"], "version": ver,
             "rows_after": m2["n_rows"],
             "rows_removed": pm["n_rows"] - m2["n_rows"],
             "leaked": leaked, "audited_dirs": audited,

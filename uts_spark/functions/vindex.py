@@ -22,7 +22,15 @@ conditional PUT on object storage), which gives:
   compact / recluster) recomputes against the new current. No lock is
   ever held.
 
-The four families and what each adds to the shared kernel:
+Every commit that builds no rows is FAMILY-GENERIC, driven by the
+current manifest through one family table (``_FAMILY_LAYOUT``:
+repartition columns, sort, id column) and one carry rule
+(``_carry_meta``: the state keys the next manifest keeps):
+:func:`vindex_delete`, :func:`vindex_compact`,
+:func:`vindex_delete_mor`, :func:`vindex_materialize_dvs` and
+:func:`vindex_seal` take no family config at all. Build, append,
+probe, recluster and the ingest ticks stay per family, because their
+row construction differs. The four families and what each adds:
 
 - **MinHash bands** (the round-9 template): band rows, no frozen state;
 - **LSH buckets**: (table, bucket) rows from SEED-DERIVED hyperplanes —
@@ -91,18 +99,111 @@ from uts_spark.sources.versioned import (
     _manifest_dirs,
     _write_delta_dir,
     commit_version,
-    current_version,
     list_versions,
     read_version,
 )
 
-_SORT = ("band", "grp", "bucket")
+# --------------------------------------------------------------------------
+# The family table, the one statement of each family's row layout:
+# family -> (repartition columns, base sort, position of ``meta_cols``
+# in a ``meta_sort`` layout, default id column).
+
+_FAMILY_LAYOUT = {
+    "minhash": (("band", "grp"), ("band", "grp", "bucket"), 2, "id"),
+    "lsh": (("table", "bucket"), ("table", "bucket"), 2, "vec_id"),
+    "ivf": (("cell",), ("cell", "vec_id"), 1, "vec_id"),
+    "ivfpq": (("cell",), ("cell", "vec_id"), 1, "vec_id"),
+}
+
+# The index STATE every commit carries into the next manifest: schema
+# and config, sidecar pointers (quantizers and the skew quarantine —
+# vacuum keeps exactly the ``aux_dirs`` some kept manifest lists), and
+# the drift/skew monitors' references. Everything else on a manifest
+# is a record of ONE commit (batch_key, dir_stats, dv, pruned_dirs,
+# materialized_dvs, hot_buckets, coll_sum/coll_rown, fit_sum/fit_n,
+# dist_sum/dist_n) and never carries; the verbs that keep dir_stats or
+# dv pass them on explicitly.
+_STATE_KEYS = (
+    "family", "id_col", "meta_cols", "meta_sort",
+    "n", "k", "bands", "n_grps",  # minhash
+    "dim", "planes", "tables",  # lsh (dim: also ivfpq)
+    "n_cells", "m_sub", "n_cent",  # ivf / ivfpq
+    "centroids_dir", "codebook_dir", "quarantine_dir", "aux_dirs",
+    "fit_ref", "coll_ref", "dist_ref",
+)
+
+
+def _layout_of(pm: dict) -> tuple[tuple[str, ...], tuple[str, ...], str]:
+    """(repartition columns, delta-dir sort, id column) of the index
+    whose manifest is ``pm``."""
+    sort = _sort_of(pm)
+    repart, _, _, default_id = _FAMILY_LAYOUT[pm["family"]]
+    return repart, sort, pm.get("id_col", default_id)
+
+
+def _sort_of(pm: dict) -> tuple[str, ...]:
+    """The delta-dir sort key, resolved from the manifest so every
+    rewrite preserves the layout the build chose. ``meta_sort``
+    (opt-in at build) puts ``meta_cols`` into the family's sort at its
+    stated position and closes it with the id column — e.g. (band, grp,
+    meta..., bucket, id) for MinHash, (cell, meta..., id) for IVF — so
+    a filtered probe's metadata predicate prunes ROW GROUPS via parquet
+    min/max stats (measured per family in tools/meta_sort_smoke.py).
+    The family's primary pruning key stays ahead of the metadata, so
+    its row-group ranges stay tight. Multi-column ordering is the
+    DECLARATION order by contract (SCALE.md r12 #3: the first meta
+    column is the only reliable pruner, and which column dominates the
+    filter workload is not inferable at build time, so declare
+    ``meta_cols`` in expected-filter order)."""
+    fam = pm.get("family")
+    if fam not in _FAMILY_LAYOUT:
+        raise ValueError(
+            f"snapshot index: unknown family {fam!r} — cannot route"
+        )
+    _, sort, at, default_id = _FAMILY_LAYOUT[fam]
+    if not (pm.get("meta_sort") and pm.get("meta_cols")):
+        return sort
+    return (
+        *sort[:at], *pm["meta_cols"],
+        *(c for c in sort[at:] if c != default_id),
+        pm.get("id_col", default_id),
+    )
+
+
+def _carry_meta(pm: dict, fingerprint: str) -> dict:
+    """The next manifest's metadata: the parent's state keys
+    (``_STATE_KEYS``) verbatim, with the fingerprint advanced. The one
+    carry rule of every commit after the build."""
+    meta = {k: pm[k] for k in _STATE_KEYS if k in pm}
+    meta["fingerprint"] = fingerprint
+    return meta
+
+
+def _build_meta(
+    family: str, fingerprint: str, id_col: str,
+    meta_cols: tuple[str, ...] = (), meta_sort: bool = False, **config,
+) -> dict:
+    """Version 0's metadata: family, fingerprint, the PHYSICAL id
+    column of the index rows (audits resolve it from the manifest
+    instead of guessing — ADVICE r9), the family config, and the
+    optional metadata columns and their layout choice."""
+    if meta_sort and not meta_cols:
+        raise ValueError(
+            f"{family}_vindex_build: meta_sort=True needs meta_cols — "
+            "there is nothing to cluster by"
+        )
+    return {
+        "family": family, "fingerprint": fingerprint, "id_col": id_col,
+        **config,
+        **({"meta_cols": list(meta_cols)} if meta_cols else {}),
+        **({"meta_sort": True} if meta_sort else {}),
+    }
 
 
 # --------------------------------------------------------------------------
-# Shared snapshot-index kernels: every family's verbs are thin wrappers
-# over these four commit shapes (append / pruned-delete / rewrite) plus
-# per-family row construction and quantizer handling.
+# Shared snapshot-index kernels: the commit shapes (append / pruned
+# delete / rewrite / seal) every family's verbs run through; the
+# families add only row construction and quantizer handling.
 
 
 def _count_and_stats(spark, ddir: str, id_col: str = "id") -> tuple[int, list[int]]:
@@ -171,24 +272,24 @@ def _batch_committed(versions: dict, key: str) -> int | None:
 
 def _append_commit(
     spark, path: str, ddir: str, stats: list[int], n_new: int,
-    meta_fn, batch_id: int | None = None, stream_id: str | None = None,
+    fingerprint: str, record: dict | None = None,
+    batch_id: int | None = None, stream_id: str | None = None,
     max_retries: int = 5,
 ) -> int:
     """Fast-append commit loop: manifest = parent dirs + the (already
-    written) delta dir. ``meta_fn(parent_manifest)`` builds the new
-    manifest's metadata — config, fingerprint, and (for the quantizer
-    families) the sidecar pointers carried forward. File adds commute,
-    so a conflict retries the manifest only; the data job never
-    reruns. ``batch_id`` makes the commit EXACTLY-ONCE per (epoch,
-    batch_id): a replayed micro-batch whose key already sits on a
-    committed manifest returns that version untouched (the Iceberg
-    streaming-sink idempotent-commit shape)."""
+    written) delta dir, the parent's state carried (``_carry_meta``)
+    plus this commit's own ``record`` (the skew tick's collision
+    ints). File adds commute, so a conflict retries the manifest only;
+    the data job never reruns. ``batch_id`` makes the commit
+    EXACTLY-ONCE per (epoch, batch_id): a replayed micro-batch whose
+    key already sits on a committed manifest returns that version
+    untouched (the Iceberg streaming-sink idempotent-commit shape)."""
     last: Exception | None = None
     for _ in range(max_retries):
         versions = {m["version"]: m for m in list_versions(path)}
         parent = max(versions) if versions else None
         pm = versions[parent] if parent is not None else {}
-        meta = meta_fn(pm)
+        meta = {**_carry_meta(pm, fingerprint), **(record or {})}
         if batch_id is not None:
             key = _batch_key(versions, batch_id, stream_id)
             done = _batch_committed(versions, key)
@@ -214,36 +315,34 @@ def _append_commit(
     raise last  # type: ignore[misc]
 
 
-def _delete_pruned(
-    spark,
-    deleted_ids: DataFrame,
-    path: str,
-    id_col: str,
-    repart_cols: tuple[str, ...],
-    sort: tuple[str, ...],
-    meta_fn,
-    max_retries: int = 5,
+def vindex_delete(
+    spark, deleted_ids: DataFrame, path: str, fingerprint: str = ""
 ) -> int:
-    """Erasure as a PRUNED copy-on-write snapshot: the manifest's
-    per-dir (min_id, max_id) stats decide which dirs the erasure can
-    possibly touch — one tiny agg over the DELETED frame (never the
-    table) marks each dir touched iff some deleted id falls inside its
-    range; untouched dirs carry into the new manifest BY REFERENCE,
-    only the touched dirs rewrite through the left-anti join. Cost ∝
+    """Erase ids from a snapshot index of any family (the GDPR verb) as
+    a PRUNED copy-on-write snapshot. Family, id column, layout and
+    config all come from the current manifest, so the caller passes
+    BARE ids — no embeddings or sketch config needed, which is exactly
+    the shape a takedown request arrives in, and an erasure cannot
+    target the wrong family. The manifest's per-dir (min_id, max_id)
+    stats decide which dirs the erasure can possibly touch — one tiny
+    agg over the DELETED frame (never the table) marks each dir
+    touched iff some deleted id falls inside its range; untouched
+    dirs carry into the new manifest BY REFERENCE, only the touched
+    dirs rewrite through the left-anti join (family repartition and
+    sort preserved, so bucket/cell pruning still holds). Cost ∝
     touched data, the deleted-id frame stays distributed, and a
     service whose appends arrive in id-ordered batches (the common
-    case) erases at batch-directory granularity. On a CAS conflict the
-    whole decision recomputes against the new current. Earlier
-    versions REMAIN READABLE until vacuum — erase-then-vacuum is the
-    complete GDPR sequence."""
-    idf = (
-        deleted_ids.toDF(id_col)
-        if len(deleted_ids.columns) == 1
-        else deleted_ids
-    ).select(id_col)
+    case) erases at batch-directory granularity. Quantizer and
+    quarantine sidecars carry forward untouched — they hold no
+    per-vector state; IVF-PQ's code arrays ARE compressed embeddings,
+    but they ride in the data rows and leave with them. On a CAS
+    conflict the whole decision recomputes against the new current.
+    Earlier versions REMAIN READABLE until vacuum — erase-then-vacuum
+    is the complete GDPR sequence."""
+    from uts_spark.sources.versioned import _dir_footer_meta
 
     last: Exception | None = None
-    for _ in range(max_retries):
+    for _ in range(5):
         versions = {m["version"]: m for m in list_versions(path)}
         parent = max(versions) if versions else None
         if parent is None:
@@ -255,49 +354,36 @@ def _delete_pruned(
             # pruned) and erase against a vector-free manifest
             vindex_materialize_dvs(spark, path)
             continue
+        repart, sort, idc = _layout_of(pm)
+        idf = (
+            deleted_ids.toDF(idc)
+            if len(deleted_ids.columns) == 1
+            else deleted_ids
+        ).select(idc)
         dirs = _manifest_dirs(pm)
         stats = pm.get("dir_stats", {})
-        if set(stats) >= set(dirs):
-            # one pass over the DELETED frame: which dir ranges admit
-            # at least one deleted id (bounded by n_dirs columns)
-            hit_row = idf.agg(
-                *[
-                    F.max(
-                        F.col(id_col).between(
-                            F.lit(stats[d][0]), F.lit(stats[d][1])
-                        )
-                    ).alias(f"h{i}")
-                    for i, d in enumerate(dirs)
-                ]
-            ).first()
-            touched = [
-                d for i, d in enumerate(dirs) if bool(hit_row[f"h{i}"])
-            ]
-        else:
-            touched = list(dirs)  # stats-less legacy manifest: rewrite all
+        touched = _stats_admitting(spark, pm, idf, idc)
         untouched = [d for d in dirs if d not in set(touched)]
         if not touched:
             return parent  # nothing to erase — current version stands
 
         kept = (
             _read_pq(spark, *touched)
-            .join(idf, id_col, "left_anti")
-            .repartition(*[F.col(c) for c in repart_cols])
+            .join(idf, idc, "left_anti")
+            .repartition(*[F.col(c) for c in repart])
         )
         ddir = _write_delta_dir(kept, path, sort)
-        n_kept, kept_stats = _count_and_stats(spark, ddir, id_col)
+        n_kept, kept_stats = _count_and_stats(spark, ddir, idc)
         # exact rows: parent total - touched rows + kept rows; footer
         # counts of the (already-committed, immutable) touched dirs —
         # no Spark job for a number their footers hold
-        from uts_spark.sources.versioned import _dir_footer_meta
-
         metas = [_dir_footer_meta(d) for d in touched]
         if all(m is not None for m in metas):
             n_touched = sum(m[0] for m in metas)
         else:
             n_touched = _read_pq(spark, *touched).count()
         n_rows = pm["n_rows"] - n_touched + n_kept
-        meta = meta_fn(pm)
+        meta = _carry_meta(pm, fingerprint)
         meta["dir_stats"] = {
             **{d: stats[d] for d in untouched if d in stats},
             ddir: kept_stats,
@@ -318,14 +404,14 @@ def _delete_pruned(
 
 
 def _rewrite_with_retry(
-    spark, path: str, make_rows, operation: str,
-    meta_fn, sort: tuple[str, ...] = _SORT, id_col: str = "id",
+    spark, path: str, make_rows, operation: str, meta_fn,
     amend_fn=None, max_retries: int = 5,
 ) -> int:
-    """Shared rewrite commit loop (compact / recluster): compute the
-    new row set AGAINST the current version, write it to a fresh delta
-    dir, CAS-commit; on conflict, RECOMPUTE against the new current (a
-    rewrite does not commute with whatever landed in between).
+    """Shared rewrite commit loop (compact / recluster / cap): compute
+    the new row set AGAINST the current version, write it to a fresh
+    delta dir in the manifest's layout, CAS-commit; on conflict,
+    RECOMPUTE against the new current (a rewrite does not commute with
+    whatever landed in between).
     ``meta_fn(parent_manifest, current_rows)`` may itself write fresh
     quantizer sidecars — recluster does — so it runs inside the retry
     loop, after ``make_rows``'s source is resolved. ``amend_fn(meta,
@@ -338,15 +424,15 @@ def _rewrite_with_retry(
         if parent is None:
             raise ValueError(f"snapshot index at {path}: nothing to rewrite")
         pm = versions[parent]
+        _, sort, idc = _layout_of(pm)
         cur = read_version(spark, path, parent)  # masked: outstanding
         # deletion vectors apply here, so every rewrite (compact /
         # recluster) MATERIALIZES them — the committed meta stays
-        # vector-free by construction (meta_fn never copies dv)
+        # vector-free by construction (_carry_meta never copies dv)
         meta = meta_fn(pm, cur)
-        meta.pop("dv", None)
         rows = make_rows(cur, meta)
         ddir = _write_delta_dir(rows, path, sort)
-        n_rows, rw_stats = _count_and_stats(spark, ddir, id_col)
+        n_rows, rw_stats = _count_and_stats(spark, ddir, idc)
         meta["dir_stats"] = {ddir: rw_stats}
         if amend_fn is not None:
             amend_fn(meta, ddir)
@@ -359,10 +445,20 @@ def _rewrite_with_retry(
     raise last  # type: ignore[misc]
 
 
-_SYS_KEYS = {
-    "version", "parent", "operation", "n_rows",
-    "data_dirs", "data_dir", "dir_stats", "batch_key",
-}
+def vindex_compact(spark, path: str, fingerprint: str = "") -> int:
+    """Compaction of a snapshot index of any family (the OPTIMIZE verb
+    behind :func:`vindex_maybe_compact`): rewrite the (possibly
+    many-dir append chain's) union into ONE clustered dir in the
+    manifest's layout and CAS-commit it, state and sidecar pointers
+    carried forward — after which vacuum can drop the superseded
+    chain. Outstanding deletion vectors are folded on the way (the
+    rewrite reads masked). Time travel to PRE-compaction versions
+    keeps working until vacuum."""
+    repart, _, _ = _layout_of(_current_manifest(path))
+    return _rewrite_with_retry(
+        spark, path, lambda cur, meta: _cluster(cur, *repart), "compact",
+        lambda pm, cur: _carry_meta(pm, fingerprint),
+    )
 
 
 def vindex_seal(path: str, fingerprint: str) -> int:
@@ -381,9 +477,10 @@ def vindex_seal(path: str, fingerprint: str) -> int:
         if not versions:
             raise ValueError(f"snapshot index at {path}: nothing to seal")
         pm = versions[max(versions)]
-        meta = {k: v for k, v in pm.items() if k not in _SYS_KEYS}
-        meta["fingerprint"] = fingerprint
+        meta = _carry_meta(pm, fingerprint)
         meta["dir_stats"] = pm.get("dir_stats", {})
+        if pm.get("dv"):
+            meta["dv"] = pm["dv"]  # a seal folds nothing
         try:
             return commit_version(
                 path, _manifest_dirs(pm), "seal", pm["version"],
@@ -416,20 +513,6 @@ def _write_quant_dir(df: DataFrame, path: str) -> str:
     qdir = os.path.join(path, "quant", f"q-{uuid.uuid4().hex[:12]}")
     df.write.mode("errorifexists").parquet(qdir)
     return qdir
-
-
-def _carry_meta(pm: dict, fingerprint: str, keys: tuple[str, ...]) -> dict:
-    """New-manifest metadata for verbs that do not change config or
-    quantizers: config keys and sidecar pointers carry forward from
-    the parent manifest verbatim; only the fingerprint advances."""
-    meta = {k: pm[k] for k in keys if k in pm}
-    for k in ("centroids_dir", "codebook_dir", "aux_dirs", "family",
-              "fit_ref", "coll_ref", "dist_ref", "id_col", "meta_cols",
-              "meta_sort"):
-        if k in pm:
-            meta[k] = pm[k]
-    meta["fingerprint"] = fingerprint
-    return meta
 
 
 def _check_family_config(path: str, family: str, **config) -> None:
@@ -497,47 +580,6 @@ def _rows(df: DataFrame, text_col: str, id_col: str, n, k, bands, n_grps,
     return rows
 
 
-def _mh_carry(meta: dict, pm: dict) -> dict:
-    """Carry the minhash manifest's monitor + schema keys that
-    _config_meta does not re-derive (the skew reference, the
-    filtered-probe metadata column list, and the layout choice)."""
-    for key in ("coll_ref", "meta_cols", "meta_sort"):
-        if key in pm:
-            meta[key] = pm[key]
-    return meta
-
-
-def _mh_sort_of(pm: dict) -> tuple[str, ...]:
-    """The minhash family's delta-dir sort key, resolved from the
-    manifest (ROADMAP r11 #2 — the IVF ``meta_sort`` pattern
-    generalized): ``meta_sort`` clusters rows by (band, grp,
-    meta_cols..., bucket, id) instead of (band, grp, bucket), so a
-    filtered probe's metadata predicate (e.g. same-language dedup)
-    prunes ROW GROUPS of the (band, grp)-pruned scan via parquet
-    min/max stats — admit fraction ~1/|meta values| on homogeneous
-    metadata (measured per family in tools/meta_sort_smoke.py).
-    Every rewrite verb resolves the sort HERE so compaction and
-    erasure preserve the layout the build chose."""
-    if pm.get("meta_sort") and pm.get("meta_cols"):
-        return (
-            "band", "grp", *pm["meta_cols"], "bucket",
-            pm.get("id_col", "id"),
-        )
-    return _SORT
-
-
-def _config_meta(fingerprint: str, n, k, bands, n_grps) -> dict:
-    # id_col is the PHYSICAL id column of the index rows — the shingle
-    # kernel normalizes the caller's id_col to "id", so audits resolve
-    # it from the manifest instead of guessing (ADVICE r9)
-    return {
-        "family": "minhash",
-        "fingerprint": fingerprint,
-        "id_col": "id",
-        "n": n, "k": k, "bands": bands, "n_grps": n_grps,
-    }
-
-
 def vindex_config(path: str) -> dict | None:
     """The index config+fingerprint from the CURRENT manifest (every
     commit carries it forward — the manifest is the single source of
@@ -551,18 +593,6 @@ def vindex_config(path: str) -> dict | None:
         for key in ("fingerprint", "n", "k", "bands", "n_grps")
         if key in m
     }
-
-
-def _check_config(path: str, **config) -> None:
-    m = vindex_config(path)
-    if m is None:
-        return
-    for key, val in config.items():
-        if key in m and m[key] != val:
-            raise ValueError(
-                f"snapshot minhash index at {path}: config mismatch — "
-                f"index has {key}={m[key]}, caller asked {key}={val}"
-            )
 
 
 def minhash_vindex_build(
@@ -588,20 +618,15 @@ def minhash_vindex_build(
     dedup, e.g. only same-language collisions). ``meta_sort`` ALSO
     clusters rows by (band, grp, meta_cols..., bucket, id) so the
     pushed predicate prunes row groups, not just rows
-    (:func:`_mh_sort_of`)."""
-    if meta_sort and not meta_cols:
-        raise ValueError(
-            "minhash_vindex_build: meta_sort=True needs meta_cols — "
-            "there is nothing to cluster by"
-        )
-    meta = _config_meta(fingerprint, n, k, bands, n_grps)
-    if meta_cols:
-        meta["meta_cols"] = list(meta_cols)
-    if meta_sort:
-        meta["meta_sort"] = True
+    (:func:`_sort_of`)."""
+    # id_col "id": the shingle kernel normalizes the caller's id column
+    meta = _build_meta(
+        "minhash", fingerprint, "id", meta_cols, meta_sort,
+        n=n, k=k, bands=bands, n_grps=n_grps,
+    )
     rows = _rows(df, text_col, id_col, n, k, bands, n_grps, meta_cols)
     ddir = _write_delta_dir(
-        _cluster(rows, "band", "grp"), path, _mh_sort_of(meta)
+        _cluster(rows, "band", "grp"), path, _sort_of(meta)
     )
     spark = df.sparkSession
     n_rows, stats = _count_and_stats(spark, ddir)
@@ -643,7 +668,9 @@ def minhash_vindex_append(
     sketch never reruns. ``batch_id`` makes the commit exactly-once
     per (epoch, batch_id) — a replayed micro-batch returns the
     already-committed version WITHOUT re-running the sketch."""
-    _check_config(path, n=n, k=k, bands=bands, n_grps=n_grps)
+    _check_family_config(
+        path, "minhash", n=n, k=k, bands=bands, n_grps=n_grps
+    )
     spark = batch.sparkSession
     if batch_id is not None:
         versions = {m["version"]: m for m in list_versions(path)}
@@ -656,68 +683,12 @@ def minhash_vindex_append(
     keep = tuple(pm0.get("meta_cols", ()))
     rows = _rows(batch, text_col, id_col, n, k, bands, n_grps, keep)
     ddir = _write_delta_dir(
-        rows.repartition(4, "band", "grp"), path, _mh_sort_of(pm0)
+        rows.repartition(4, "band", "grp"), path, _sort_of(pm0)
     )
     n_new, stats = _count_and_stats(spark, ddir)
-
-    def meta_fn(pm):
-        return _mh_carry(
-            _config_meta(fingerprint, n, k, bands, n_grps), pm
-        )
-
     return _append_commit(
-        spark, path, ddir, stats, n_new, meta_fn,
+        spark, path, ddir, stats, n_new, fingerprint,
         batch_id=batch_id, stream_id=stream_id,
-    )
-
-
-def minhash_vindex_delete(
-    spark,
-    deleted_ids: DataFrame,
-    path: str,
-    fingerprint: str = "",
-    n: int = 3,
-    k: int = 32,
-    bands: int = 8,
-    n_grps: int = 16,
-) -> int:
-    """Erasure through the shared pruned copy-on-write kernel (see
-    :func:`_delete_pruned` for the id-range pruning contract)."""
-    _check_config(path, n=n, k=k, bands=bands, n_grps=n_grps)
-    def meta_fn(pm):
-        return _mh_carry(
-            _config_meta(fingerprint, n, k, bands, n_grps), pm
-        )
-
-    return _delete_pruned(
-        spark, deleted_ids, path, "id", ("band", "grp"),
-        _mh_sort_of(_current_manifest(path)), meta_fn,
-    )
-
-
-def minhash_vindex_compact(
-    spark,
-    path: str,
-    fingerprint: str = "",
-    n: int = 3,
-    k: int = 32,
-    bands: int = 8,
-    n_grps: int = 16,
-) -> int:
-    """Compaction as a snapshot: rewrite the (possibly many-dir append
-    chain's) union into ONE clustered dir and CAS-commit it — after
-    which vacuum can drop the superseded chain. Time travel to
-    PRE-compaction versions keeps working until vacuum."""
-    def meta_fn(pm, cur):
-        return _mh_carry(
-            _config_meta(fingerprint, n, k, bands, n_grps), pm
-        )
-
-    return _rewrite_with_retry(
-        spark, path,
-        lambda cur, meta: _cluster(cur, "band", "grp"),
-        "compact", meta_fn,
-        sort=_mh_sort_of(_current_manifest(path)),
     )
 
 
@@ -745,7 +716,9 @@ def minhash_vindex_probe(
     restricted to eligible old docs BEFORE the verify — filtered dedup
     (e.g. same-language collisions only), composed with the banded
     partition pruning in one scan."""
-    _check_config(path, n=n, k=k, bands=bands, n_grps=n_grps)
+    _check_family_config(
+        path, "minhash", n=n, k=k, bands=bands, n_grps=n_grps
+    )
     scan = read_version(spark, path, version)
     if where is not None:
         scan = scan.filter(where)
@@ -760,47 +733,12 @@ def minhash_vindex_probe(
 # quantizer sidecar) — structurally the MinHash shape with (table,
 # bucket) rows over embeddings instead of band rows over shingles.
 
-_LSH_SORT = ("table", "bucket")
-_LSH_KEYS = ("dim", "planes", "tables")
-
-
-def _lsh_sort_of(pm: dict) -> tuple[str, ...]:
-    """The LSH family's delta-dir sort key, resolved from the manifest
-    (ROADMAP r11 #2 — the IVF ``meta_sort`` pattern generalized):
-    ``meta_sort`` clusters rows by (table, bucket, meta_cols..., id)
-    so a filtered probe's metadata predicate prunes row groups of the
-    bucket-pruned scan via parquet min/max stats (measured per family
-    in tools/meta_sort_smoke.py). Bucket stays AHEAD of the metadata —
-    the probe's primary pruning key keeps its tight row-group ranges;
-    metadata runs form inside each bucket run. Every rewrite verb
-    resolves the sort here so the layout survives compaction and
-    erasure."""
-    if pm.get("meta_sort") and pm.get("meta_cols"):
-        return (
-            "table", "bucket", *pm["meta_cols"],
-            pm.get("id_col", "vec_id"),
-        )
-    return _LSH_SORT
-
-
 def _lsh_rows(emb, dim, planes, tables, id_col, vec_col, keep_cols=()):
     from uts_spark.functions.similarity import lsh_bucket_table
 
     return lsh_bucket_table(
         emb, dim, planes, tables, id_col, vec_col, keep_cols=tuple(keep_cols)
     ).select(id_col, vec_col, *keep_cols, "table", "bucket")
-
-
-def _lsh_meta(
-    fingerprint, dim, planes, tables, id_col="vec_id", meta_cols=(),
-    meta_sort=False,
-) -> dict:
-    return {
-        "family": "lsh", "fingerprint": fingerprint, "id_col": id_col,
-        "dim": dim, "planes": planes, "tables": tables,
-        **({"meta_cols": list(meta_cols)} if meta_cols else {}),
-        **({"meta_sort": True} if meta_sort else {}),
-    }
 
 
 def lsh_vindex_build(
@@ -824,18 +762,14 @@ def lsh_vindex_build(
     the manifest so appends keep the row schema and probes can push a
     ``where`` into the bucket-pruned scan (filtered ANN). ``meta_sort``
     ALSO clusters rows by (table, bucket, meta_cols..., id) so the
-    pushed predicate prunes row groups (:func:`_lsh_sort_of`)."""
-    if meta_sort and not meta_cols:
-        raise ValueError(
-            "lsh_vindex_build: meta_sort=True needs meta_cols — there "
-            "is nothing to cluster by"
-        )
-    meta = _lsh_meta(
-        fingerprint, dim, planes, tables, id_col, meta_cols, meta_sort
+    pushed predicate prunes row groups (:func:`_sort_of`)."""
+    meta = _build_meta(
+        "lsh", fingerprint, id_col, meta_cols, meta_sort,
+        dim=dim, planes=planes, tables=tables,
     )
     rows = _lsh_rows(emb, dim, planes, tables, id_col, vec_col, meta_cols)
     ddir = _write_delta_dir(
-        _cluster(rows, "table", "bucket"), path, _lsh_sort_of(meta)
+        _cluster(rows, "table", "bucket"), path, _sort_of(meta)
     )
     spark = emb.sparkSession
     n_rows, stats = _count_and_stats(spark, ddir, id_col)
@@ -875,52 +809,12 @@ def lsh_vindex_append(
     keep = tuple(pm0.get("meta_cols", ()))
     rows = _lsh_rows(emb_batch, dim, planes, tables, id_col, vec_col, keep)
     ddir = _write_delta_dir(
-        rows.repartition(4, "table", "bucket"), path, _lsh_sort_of(pm0)
+        rows.repartition(4, "table", "bucket"), path, _sort_of(pm0)
     )
     n_new, stats = _count_and_stats(spark, ddir, id_col)
     return _append_commit(
-        spark, path, ddir, stats, n_new,
-        lambda pm: _carry_meta(pm, fingerprint, _LSH_KEYS),
+        spark, path, ddir, stats, n_new, fingerprint,
         batch_id=batch_id, stream_id=stream_id,
-    )
-
-
-def lsh_vindex_delete(
-    spark,
-    deleted_ids: DataFrame,
-    path: str,
-    fingerprint: str = "",
-    id_col: str = "vec_id",
-) -> int:
-    """Erasure through the shared pruned kernel: it prunes on manifest
-    id-range stats directly, so the caller passes bare ids — no
-    embeddings needed to re-bucket the deleted vectors, which is
-    exactly the shape a GDPR request arrives in."""
-    pm = _current_manifest(path)
-    if pm.get("family") != "lsh":
-        raise ValueError(
-            f"snapshot index at {path}: family is {pm.get('family')}, "
-            "expected lsh"
-        )
-    return _delete_pruned(
-        spark, deleted_ids, path, id_col, ("table", "bucket"),
-        _lsh_sort_of(pm),
-        lambda pmm: _carry_meta(pmm, fingerprint, _LSH_KEYS),
-    )
-
-
-def lsh_vindex_compact(spark, path: str, fingerprint: str = "") -> int:
-    """Rewrite the append chain into one clustered dir (config and
-    pointers carry forward; pre-compaction versions stay readable
-    until vacuum)."""
-    pm = _current_manifest(path)
-    return _rewrite_with_retry(
-        spark, path,
-        lambda cur, meta: _cluster(cur, "table", "bucket"),
-        "compact",
-        lambda pmm, cur: _carry_meta(pmm, fingerprint, _LSH_KEYS),
-        sort=_lsh_sort_of(pm),
-        id_col=pm.get("id_col", "vec_id"),
     )
 
 
@@ -955,31 +849,6 @@ def lsh_vindex_probe(
 # sidecar — every version resolves the exact quantizer its rows were
 # assigned against, so time travel pins the quantizer and RECLUSTER is
 # just another rewrite commit (no history reset, no swap window).
-
-_IVF_SORT = ("cell", "vec_id")
-
-
-def _ivf_sort_of(pm: dict) -> tuple[str, ...]:
-    """The IVF family's delta-dir sort key, resolved from the
-    manifest: ``meta_sort`` (opt-in at build) clusters rows by
-    (cell, meta_cols..., id) instead of (cell, id), so a filtered
-    probe's metadata predicate prunes ROW GROUPS via parquet min/max
-    stats — measured in tools/meta_sort_smoke.py: label-homogeneous
-    row groups admit ~1/|labels| of the groups a scattered layout
-    reads. Every rewrite verb resolves the sort HERE so compaction,
-    erasure and recluster preserve the layout the build chose.
-    Multi-column ordering is the DECLARATION order by contract
-    (measured in SCALE.md r12 #3: the first meta column is the only
-    reliable pruner — the second's runs shrink by the first's
-    cardinality below row-group size — and for conjunctive probes
-    high-cardinality-first prunes ~2×; which column dominates the
-    filter workload is not inferable at build time, so declare
-    ``meta_cols`` in expected-filter order)."""
-    if pm.get("meta_sort") and pm.get("meta_cols"):
-        return ("cell", *pm["meta_cols"], pm.get("id_col", "vec_id"))
-    return _IVF_SORT
-_IVF_KEYS = ("n_cells",)
-
 
 def _ivf_fit_ints_from_dir(
     spark, ddir: str, qdir: str, id_col: str, vec_col: str
@@ -1041,15 +910,13 @@ def ivf_vindex_build(
     cell-pruned scan); recorded on the manifest so appends keep the
     row schema without the caller restating it. ``meta_sort`` ALSO
     clusters rows by (cell, meta_cols..., id) so the pushed predicate
-    prunes row groups, not just rows (:func:`_ivf_sort_of`) — the
+    prunes row groups, not just rows (:func:`_sort_of`) — the
     layout choice for indexes whose probes are routinely filtered."""
     from uts_spark.functions.similarity import _ivf_assign, _ivf_centroids
 
-    if meta_sort and not meta_cols:
-        raise ValueError(
-            "ivf_vindex_build: meta_sort=True needs meta_cols — there "
-            "is nothing to cluster by"
-        )
+    meta = _build_meta(
+        "ivf", fingerprint, id_col, meta_cols, meta_sort, n_cells=n_cells
+    )
     spark = emb.sparkSession
     cents = _ivf_centroids(centroid_src or emb, n_cells, id_col, vec_col)
     qdir = _write_quant_dir(cents, path)
@@ -1057,15 +924,7 @@ def ivf_vindex_build(
         emb, _read_pq(spark, qdir), id_col, vec_col,
         keep_cols=tuple(meta_cols),
     )
-    meta = {
-        "family": "ivf", "fingerprint": fingerprint, "n_cells": n_cells,
-        "id_col": id_col,
-        **({"meta_cols": list(meta_cols)} if meta_cols else {}),
-        **({"meta_sort": True} if meta_sort else {}),
-    }
-    ddir = _write_delta_dir(
-        _cluster(rows, "cell"), path, _ivf_sort_of(meta)
-    )
+    ddir = _write_delta_dir(_cluster(rows, "cell"), path, _sort_of(meta))
     n_rows, stats = _count_and_stats(spark, ddir, id_col)
     fit = _ivf_fit_ints_from_dir(spark, ddir, qdir, id_col, vec_col)
     meta.update({
@@ -1130,7 +989,7 @@ def ivf_vindex_append(
                 keep_cols=tuple(pm.get("meta_cols", ())),
             )
             ddir = _write_delta_dir(
-                rows.repartition(4, "cell"), path, _ivf_sort_of(pm)
+                rows.repartition(4, "cell"), path, _sort_of(pm)
             )
             n_new, stats = _count_and_stats(spark, ddir, id_col)
             fit = (
@@ -1139,7 +998,7 @@ def ivf_vindex_append(
                 else None
             )
             encoded_against = qdir
-        meta = _carry_meta(pm, fingerprint, _IVF_KEYS)
+        meta = _carry_meta(pm, fingerprint)
         if record_fit and fit is not None:
             # the tick's drift stat, ON the committed manifest (exact
             # ints against the quantizer this delta was encoded with)
@@ -1163,39 +1022,6 @@ def ivf_vindex_append(
     raise last  # type: ignore[misc]
 
 
-def ivf_vindex_delete(
-    spark,
-    deleted_ids: DataFrame,
-    path: str,
-    fingerprint: str = "",
-    id_col: str = "vec_id",
-) -> int:
-    """Erasure through the shared pruned kernel; the quantizer pointer
-    carries forward untouched (centroids hold no per-vector state)."""
-    pm = _current_manifest(path)
-    if pm.get("family") != "ivf":
-        raise ValueError(
-            f"snapshot index at {path}: family is {pm.get('family')}, "
-            "expected ivf"
-        )
-    return _delete_pruned(
-        spark, deleted_ids, path, id_col, ("cell",), _ivf_sort_of(pm),
-        lambda pmm: _carry_meta(pmm, fingerprint, _IVF_KEYS),
-    )
-
-
-def ivf_vindex_compact(spark, path: str, fingerprint: str = "") -> int:
-    pm = _current_manifest(path)
-    return _rewrite_with_retry(
-        spark, path,
-        lambda cur, meta: _cluster(cur, "cell"),
-        "compact",
-        lambda pmm, cur: _carry_meta(pmm, fingerprint, _IVF_KEYS),
-        sort=_ivf_sort_of(pm),
-        id_col=pm.get("id_col", "vec_id"),
-    )
-
-
 def ivf_vindex_recluster(
     spark,
     path: str,
@@ -1217,7 +1043,7 @@ def ivf_vindex_recluster(
             cur.select(id_col, vec_col), pm["n_cells"], id_col, vec_col
         )
         qdir = _write_quant_dir(cents, path)
-        meta = _carry_meta(pm, fingerprint, _IVF_KEYS)
+        meta = _carry_meta(pm, fingerprint)
         meta["centroids_dir"] = qdir
         meta["aux_dirs"] = [qdir]
         return meta
@@ -1242,9 +1068,7 @@ def ivf_vindex_recluster(
         )
 
     return _rewrite_with_retry(
-        spark, path, make_rows, "recluster", meta_fn,
-        sort=_ivf_sort_of(_current_manifest(path)), id_col=id_col,
-        amend_fn=amend_fn,
+        spark, path, make_rows, "recluster", meta_fn, amend_fn=amend_fn
     )
 
 
@@ -1359,9 +1183,6 @@ def ivf_vindex_probe(
 # the codebook of their version — which is exactly what a pinned probe
 # resolves.
 
-_IVFPQ_KEYS = ("n_cells", "dim", "m_sub", "n_cent")
-
-
 def _ivfpq_rows(emb, cents, cexp, dim, m_sub, id_col, vec_col,
                 keep_cols=()):
     from uts_spark.functions.similarity import _ivf_assign, _ivfpq_codes
@@ -1442,8 +1263,8 @@ def ivfpq_vindex_build(
     beside the codes (manifest-recorded; probes push ``where`` into
     the cell-pruned scan — filtered ANN BEFORE ADC scoring).
     ``meta_sort`` ALSO clusters rows by (cell, meta_cols..., id) so
-    the pushed predicate prunes row groups (:func:`_ivf_sort_of` —
-    the IVF layout resolver is shared: both families key on cell)."""
+    the pushed predicate prunes row groups (:func:`_sort_of` — the
+    same layout as IVF: both families key on cell)."""
     from uts_spark.functions.similarity import (
         _ivf_centroids,
         _pq_codebook_exp,
@@ -1454,11 +1275,10 @@ def ivfpq_vindex_build(
             f"ivfpq_vindex_build: dim ({dim}) must be divisible by "
             f"m_sub ({m_sub})"
         )
-    if meta_sort and not meta_cols:
-        raise ValueError(
-            "ivfpq_vindex_build: meta_sort=True needs meta_cols — "
-            "there is nothing to cluster by"
-        )
+    meta = _build_meta(
+        "ivfpq", fingerprint, id_col, meta_cols, meta_sort,
+        n_cells=n_cells, dim=dim, m_sub=m_sub, n_cent=n_cent,
+    )
     spark = emb.sparkSession
     src = centroid_src if centroid_src is not None else emb
     cdir = _write_quant_dir(
@@ -1472,18 +1292,11 @@ def ivfpq_vindex_build(
     rows = _ivfpq_rows(
         emb, cents, cexp, dim, m_sub, id_col, vec_col, meta_cols
     )
-    meta = {
-        "family": "ivfpq", "fingerprint": fingerprint,
-        "n_cells": n_cells, "dim": dim, "m_sub": m_sub, "n_cent": n_cent,
-        "id_col": id_col,
+    meta.update({
         "centroids_dir": cdir, "codebook_dir": bdir,
         "aux_dirs": [cdir, bdir],
-        **({"meta_cols": list(meta_cols)} if meta_cols else {}),
-        **({"meta_sort": True} if meta_sort else {}),
-    }
-    ddir = _write_delta_dir(
-        _cluster(rows, "cell"), path, _ivf_sort_of(meta)
-    )
+    })
+    ddir = _write_delta_dir(_cluster(rows, "cell"), path, _sort_of(meta))
     n_rows, stats = _count_and_stats(spark, ddir, id_col)
     meta.update({
         "dist_ref": list(
@@ -1546,7 +1359,7 @@ def ivfpq_vindex_append(
                 id_col, vec_col, tuple(pm.get("meta_cols", ())),
             )
             ddir = _write_delta_dir(
-                rows.repartition(4, "cell"), path, _ivf_sort_of(pm)
+                rows.repartition(4, "cell"), path, _sort_of(pm)
             )
             n_new, stats = _count_and_stats(spark, ddir, id_col)
             dist = (
@@ -1558,7 +1371,7 @@ def ivfpq_vindex_append(
                 else None
             )
             encoded_against = ptr
-        meta = _carry_meta(pm, fingerprint, _IVFPQ_KEYS)
+        meta = _carry_meta(pm, fingerprint)
         if record_dist and dist is not None:
             meta["dist_sum"], meta["dist_n"] = dist
         if batch_id is not None:
@@ -1578,44 +1391,6 @@ def ivfpq_vindex_append(
         except VersionConflictError as e:
             last = e
     raise last  # type: ignore[misc]
-
-
-def ivfpq_vindex_delete(
-    spark,
-    deleted_ids: DataFrame,
-    path: str,
-    fingerprint: str = "",
-    id_col: str = "vec_id",
-) -> int:
-    """Erasure through the shared pruned kernel — the privacy-critical
-    family: a deleted vector's PQ code array IS a compressed copy of
-    its embedding, and it rides in the data rows, so the left-anti
-    rewrite removes it with them. The codebook sidecar holds no
-    per-vector state and carries forward. Earlier versions remain
-    readable until vacuum — erase-then-vacuum completes the GDPR
-    sequence, including the code arrays."""
-    pm = _current_manifest(path)
-    if pm.get("family") != "ivfpq":
-        raise ValueError(
-            f"snapshot index at {path}: family is {pm.get('family')}, "
-            "expected ivfpq"
-        )
-    return _delete_pruned(
-        spark, deleted_ids, path, id_col, ("cell",), _ivf_sort_of(pm),
-        lambda pmm: _carry_meta(pmm, fingerprint, _IVFPQ_KEYS),
-    )
-
-
-def ivfpq_vindex_compact(spark, path: str, fingerprint: str = "") -> int:
-    pm = _current_manifest(path)
-    return _rewrite_with_retry(
-        spark, path,
-        lambda cur, meta: _cluster(cur, "cell"),
-        "compact",
-        lambda pmm, cur: _carry_meta(pmm, fingerprint, _IVFPQ_KEYS),
-        sort=_ivf_sort_of(pm),
-        id_col=pm.get("id_col", "vec_id"),
-    )
 
 
 def ivfpq_vindex_recluster(
@@ -1647,7 +1422,7 @@ def ivfpq_vindex_recluster(
             ),
             path,
         )
-        meta = _carry_meta(pm, fingerprint, _IVFPQ_KEYS)
+        meta = _carry_meta(pm, fingerprint)
         meta["centroids_dir"] = cdir
         meta["codebook_dir"] = bdir
         meta["aux_dirs"] = [cdir, bdir]
@@ -1672,9 +1447,7 @@ def ivfpq_vindex_recluster(
         )
 
     return _rewrite_with_retry(
-        spark, path, make_rows, "recluster", meta_fn,
-        sort=_ivf_sort_of(_current_manifest(path)), id_col=id_col,
-        amend_fn=amend_fn,
+        spark, path, make_rows, "recluster", meta_fn, amend_fn=amend_fn
     )
 
 
@@ -1789,29 +1562,6 @@ def ivfpq_vindex_probe(
 # remain on disk until materialize+vacuum, the same two-step contract
 # as every erasure path here; run the CoW verb when bytes must go now).
 
-_FAMILY_LAYOUT = {
-    "minhash": (("band", "grp"), _SORT, ("n", "k", "bands", "n_grps"), "id"),
-    "lsh": (("table", "bucket"), _LSH_SORT, _LSH_KEYS, "vec_id"),
-    "ivf": (("cell",), _IVF_SORT, _IVF_KEYS, "vec_id"),
-    "ivfpq": (("cell",), _IVF_SORT, _IVFPQ_KEYS, "vec_id"),
-}
-
-
-def _layout_of(pm: dict):
-    fam = pm.get("family")
-    if fam not in _FAMILY_LAYOUT:
-        raise ValueError(
-            f"snapshot index: unknown family {fam!r} — cannot route"
-        )
-    repart, sort, keys, default_id = _FAMILY_LAYOUT[fam]
-    # meta_sort layouts survive rewrites — resolve from the manifest
-    sort = {
-        "ivf": _ivf_sort_of, "ivfpq": _ivf_sort_of,
-        "lsh": _lsh_sort_of, "minhash": _mh_sort_of,
-    }[fam](pm)
-    return repart, sort, keys, pm.get("id_col", default_id)
-
-
 def _stats_admitting(spark, pm: dict, idf: DataFrame, idc: str,
                      dirs: list[str] | None = None) -> list[str]:
     """The dirs of ``pm`` (or the given subset) whose recorded id-range
@@ -1856,7 +1606,7 @@ def vindex_delete_mor(
         if not versions:
             raise ValueError(f"snapshot index at {path}: nothing to delete")
         pm = versions[max(versions)]
-        _, _, keys, idc = _layout_of(pm)
+        _, _, idc = _layout_of(pm)
         idf = (
             deleted_ids.toDF(idc)
             if len(deleted_ids.columns) == 1
@@ -1873,13 +1623,11 @@ def vindex_delete_mor(
         if n_masked == 0:
             return pm["version"]
         if dvdir is None:
-            import uuid
-
             dvdir = os.path.join(
                 path, "data", f"dv-{uuid.uuid4().hex[:12]}"
             )
             idf.coalesce(1).write.mode("errorifexists").parquet(dvdir)
-        meta = _carry_meta(pm, fingerprint, keys)
+        meta = _carry_meta(pm, fingerprint)
         meta["dir_stats"] = pm.get("dir_stats", {})
         meta["dv"] = pm.get("dv", []) + [
             {"dir": dvdir, "key": idc, "scope": dirs, "n_masked": n_masked}
@@ -1914,7 +1662,7 @@ def vindex_materialize_dvs(
         recs = pm.get("dv", [])
         if not recs:
             return pm["version"]
-        repart, sort, keys, idc = _layout_of(pm)
+        repart, sort, idc = _layout_of(pm)
         dirs = _manifest_dirs(pm)
         stats = pm.get("dir_stats", {})
         touched_set: set[str] = set()
@@ -1928,7 +1676,7 @@ def vindex_materialize_dvs(
             )
         touched = [d for d in dirs if d in touched_set]
         untouched = [d for d in dirs if d not in touched_set]
-        meta = _carry_meta(pm, fingerprint, keys)
+        meta = _carry_meta(pm, fingerprint)
         meta["materialized_dvs"] = len(recs)
         meta["pruned_dirs"] = len(untouched)
         new_dirs = list(untouched)
@@ -2004,7 +1752,7 @@ def vindex_read_rows_for_ids(
     from uts_spark.sources.versioned import _read_dirs_masked
 
     pm = _manifest_at(path, version)
-    _, _, _, idc = _layout_of(pm)
+    _, _, idc = _layout_of(pm)
     idf = (
         ids.toDF(idc) if len(ids.columns) == 1 else ids.select(idc)
     ).distinct()
@@ -2013,76 +1761,6 @@ def vindex_read_rows_for_ids(
         return read_version(spark, path, pm["version"]).limit(0)
     return _read_dirs_masked(spark, pm, use).join(
         F.broadcast(idf), idc, "left_semi"
-    )
-
-
-def vindex_delete_auto(
-    spark, deleted_ids: DataFrame, path: str, fingerprint: str = "",
-    mode: str = "cow",
-) -> int:
-    """Family-dispatching erasure: read the index's family off its
-    CURRENT manifest and route to the right delete verb with the
-    manifest's own config — the building block of a GDPR FAN-OUT,
-    where one takedown request must reach every index that ever saw
-    the ids (a dedup service and a vector service typically share the
-    corpus; forgetting in one but not the other is a compliance
-    failure the caller shouldn't have to prevent by hand). All four
-    routes go through the shared pruned copy-on-write kernel, so the
-    fan-out's total cost is the sum of touched dirs across indexes,
-    never the sum of index sizes. ``mode="mor"`` routes every family
-    through :func:`vindex_delete_mor` instead — O(ids) takedown
-    commits, rewrite deferred to materialize/compact."""
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"mode {mode!r} not supported (cow | mor)")
-    if mode == "mor":
-        return vindex_delete_mor(
-            spark, deleted_ids, path, fingerprint=fingerprint
-        )
-    pm = _current_manifest(path)
-    fam = pm.get("family")
-    if fam == "minhash":
-        return minhash_vindex_delete(
-            spark, deleted_ids, path, fingerprint=fingerprint,
-            n=pm["n"], k=pm["k"], bands=pm["bands"], n_grps=pm["n_grps"],
-        )
-    idc = pm.get("id_col", "vec_id")
-    if fam == "lsh":
-        return lsh_vindex_delete(
-            spark, deleted_ids, path, fingerprint=fingerprint, id_col=idc
-        )
-    if fam == "ivf":
-        return ivf_vindex_delete(
-            spark, deleted_ids, path, fingerprint=fingerprint, id_col=idc
-        )
-    if fam == "ivfpq":
-        return ivfpq_vindex_delete(
-            spark, deleted_ids, path, fingerprint=fingerprint, id_col=idc
-        )
-    raise ValueError(
-        f"snapshot index at {path}: unknown family {fam!r} — cannot "
-        "route the erasure"
-    )
-
-
-def vindex_compact_auto(spark, path: str, fingerprint: str = "") -> int:
-    """Family-dispatching compaction (the OPTIMIZE verb behind the
-    trigger below)."""
-    pm = _current_manifest(path)
-    fam = pm.get("family")
-    if fam == "minhash":
-        return minhash_vindex_compact(
-            spark, path, fingerprint=fingerprint,
-            n=pm["n"], k=pm["k"], bands=pm["bands"], n_grps=pm["n_grps"],
-        )
-    if fam == "lsh":
-        return lsh_vindex_compact(spark, path, fingerprint=fingerprint)
-    if fam == "ivf":
-        return ivf_vindex_compact(spark, path, fingerprint=fingerprint)
-    if fam == "ivfpq":
-        return ivfpq_vindex_compact(spark, path, fingerprint=fingerprint)
-    raise ValueError(
-        f"snapshot index at {path}: unknown family {fam!r} — cannot "
-        "route the compaction"
     )
 
 
@@ -2129,7 +1807,7 @@ def vindex_maybe_compact(
         max_dirs = _MAX_DIRS_DEFAULT.get(pm.get("family"), 16)
     if len(_manifest_dirs(pm)) <= max_dirs:
         return None
-    return vindex_compact_auto(spark, path, fingerprint=fingerprint)
+    return vindex_compact(spark, path, fingerprint=fingerprint)
 
 
 def minhash_vindex_cap_hot_buckets(
@@ -2177,15 +1855,9 @@ def minhash_vindex_cap_hot_buckets(
         state["hot"] = hot
         qrows = cur.join(F.broadcast(hot), ["band", "bucket"], "left_semi")
         qdir = _write_delta_dir(
-            _cluster(qrows, "band", "grp"), path, _mh_sort_of(pmm)
+            _cluster(qrows, "band", "grp"), path, _sort_of(pmm)
         )
-        meta = _mh_carry(
-            _config_meta(
-                fingerprint, pmm["n"], pmm["k"], pmm["bands"],
-                pmm["n_grps"],
-            ),
-            pmm,
-        )
+        meta = _carry_meta(pmm, fingerprint)
         meta["hot_buckets"] = hot.count()
         meta["quarantine_dir"] = qdir
         meta["aux_dirs"] = list(pmm.get("aux_dirs", [])) + [qdir]
@@ -2198,9 +1870,7 @@ def minhash_vindex_cap_hot_buckets(
             "band", "grp",
         )
 
-    v = _rewrite_with_retry(
-        spark, path, make_rows, "cap", meta_fn, sort=_mh_sort_of(pm)
-    )
+    v = _rewrite_with_retry(spark, path, make_rows, "cap", meta_fn)
     versions = {m["version"]: m for m in list_versions(path)}
     return versions[versions[v]["parent"]]["n_rows"] - versions[v]["n_rows"]
 
@@ -2243,7 +1913,9 @@ def minhash_vindex_ingest_tick(
         cap = HOT_BUCKET_CAP
     if skew_milli is None:
         skew_milli = SKEW_MILLI
-    _check_config(path, n=n, k=k, bands=bands, n_grps=n_grps)
+    _check_family_config(
+        path, "minhash", n=n, k=k, bands=bands, n_grps=n_grps
+    )
 
     before = {m["version"]: m for m in list_versions(path)}
     if not before:
@@ -2269,17 +1941,12 @@ def minhash_vindex_ingest_tick(
         rows.select("id", "band", "bucket"), live
     )
     ddir = _write_delta_dir(
-        rows.repartition(4, "band", "grp"), path, _mh_sort_of(pm)
+        rows.repartition(4, "band", "grp"), path, _sort_of(pm)
     )
     n_new, stats = _count_and_stats(spark, ddir)
-
-    def meta_fn(pmm):
-        meta = _mh_carry(_config_meta(fingerprint, n, k, bands, n_grps), pmm)
-        meta["coll_sum"], meta["coll_rown"] = coll, row_n
-        return meta
-
     v = _append_commit(
-        spark, path, ddir, stats, n_new, meta_fn,
+        spark, path, ddir, stats, n_new, fingerprint,
+        record={"coll_sum": coll, "coll_rown": row_n},
         batch_id=batch_id, stream_id=stream_id,
     )
     versions = {m["version"]: m for m in list_versions(path)}

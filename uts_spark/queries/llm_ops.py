@@ -4673,7 +4673,7 @@ def similarity_ann_ivf_version_probe(spark, sf_dir):
     version 0's manifest does not list, so the result equals the
     never-appended index: oracle = the frozen-base-centroid recompute
     with candidate membership restricted to base. Erasure is a
-    copy-on-write version of its own (ivf_vindex_delete); earlier
+    copy-on-write version of its own (vindex_delete); earlier
     versions stay readable until vacuum."""
     from uts_spark.functions.vindex import (
         ivf_vindex_append,
@@ -4912,7 +4912,7 @@ def similarity_ann_ivfpq_append_probe(spark, sf_dir):
 # document; these give the similarity service the same right-to-be-
 # forgotten: build the index over the FULL corpus (quantizers frozen
 # from it), erase the rem-7 batch by bare id through the pruned
-# copy-on-write kernel (vindex._delete_pruned — the erased-id frame
+# copy-on-write kernel (vindex.vindex_delete — the erased-id frame
 # stays distributed, VERDICT r7 #2), and probe. Each
 # oracle is the family's recompute SQL with quantizer pools pinned to
 # the BUILD corpus and candidate membership restricted to survivors —
@@ -4973,7 +4973,7 @@ def similarity_ann_ivfpq_version_probe(spark, sf_dir):
 def similarity_ann_lsh_delete_probe(spark, sf_dir):
     """LSH-index ERASURE round trip: build the (table, bucket) index
     over the full corpus, delete the rem-7 vectors by bare id
-    (functions/vindex.lsh_vindex_delete — manifest id-range stats pick
+    (functions/vindex.vindex_delete — manifest id-range stats pick
     the dirs the erasure can touch, a left-anti rewrite of those dirs
     commits the next version), then probe. Deleted vectors must be
     GONE from every anchor's neighbor list while surviving pairs are
@@ -4983,8 +4983,8 @@ def similarity_ann_lsh_delete_probe(spark, sf_dir):
     the manifest's fingerprint chain like every service tick."""
     from uts_spark.functions.vindex import (
         lsh_vindex_build,
-        lsh_vindex_delete,
         lsh_vindex_probe,
+        vindex_delete,
     )
 
     e = table(spark, sf_dir, "embeddings")
@@ -4997,7 +4997,7 @@ def similarity_ann_lsh_delete_probe(spark, sf_dir):
             e, path, dim=EMB_DIM, fingerprint=f,
             planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
         )),
-        (_emb_frame_fingerprint(base), lambda f: lsh_vindex_delete(
+        (_emb_frame_fingerprint(base), lambda f: vindex_delete(
             spark, b_del.select("vec_id"), path, fingerprint=f
         )),
     ])
@@ -5014,7 +5014,7 @@ def similarity_ann_lsh_delete_probe(spark, sf_dir):
 def similarity_ann_ivf_delete_probe(spark, sf_dir):
     """IVF-index ERASURE round trip: build the snapshot IVF index over
     the full corpus (centroids frozen from it in a manifest sidecar),
-    delete the rem-7 vectors by bare id (vindex.ivf_vindex_delete —
+    delete the rem-7 vectors by bare id (vindex.vindex_delete —
     the pruned copy-on-write kernel; the centroid
     pointer carries forward untouched), then probe with the frozen
     centroids. Oracle = the frozen-quantizer recompute with the
@@ -5023,8 +5023,8 @@ def similarity_ann_ivf_delete_probe(spark, sf_dir):
     append lane's (base-frozen centroids, full membership)."""
     from uts_spark.functions.vindex import (
         ivf_vindex_build,
-        ivf_vindex_delete,
         ivf_vindex_probe,
+        vindex_delete,
     )
 
     e = table(spark, sf_dir, "embeddings")
@@ -5034,7 +5034,7 @@ def similarity_ann_ivf_delete_probe(spark, sf_dir):
     path = ivf_index_path(sf_dir, fp_full, n_cells=8) + "_ivfdel"
     _vidx_chain(path, [
         (fp_full, lambda f: ivf_vindex_build(e, path, fingerprint=f, n_cells=8)),
-        (_emb_frame_fingerprint(base), lambda f: ivf_vindex_delete(
+        (_emb_frame_fingerprint(base), lambda f: vindex_delete(
             spark, b_del.select("vec_id"), path, fingerprint=f
         )),
     ])
@@ -5051,15 +5051,15 @@ def similarity_ann_ivfpq_delete_probe(spark, sf_dir):
     deleted document's PQ code array IS a compressed copy of its
     embedding, reconstructible until erased. Build over the full
     corpus (coarse centroids AND PQ codebook frozen from it), delete
-    the rem-7 vectors by bare id (functions/vindex.ivfpq_vindex_delete
+    the rem-7 vectors by bare id (functions/vindex.vindex_delete
     — codes ride in the same rows and vanish with them; the codebook
     holds no per-document state and carries forward), probe with both
     frozen quantizers. Oracle = the composed IVF-PQ recompute with
     unrestricted quantizer pools and survivor-only candidacy."""
     from uts_spark.functions.vindex import (
         ivfpq_vindex_build,
-        ivfpq_vindex_delete,
         ivfpq_vindex_probe,
+        vindex_delete,
     )
 
     e = table(spark, sf_dir, "embeddings")
@@ -5072,7 +5072,7 @@ def similarity_ann_ivfpq_delete_probe(spark, sf_dir):
             e, path, dim=EMB_DIM, fingerprint=f,
             n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
         )),
-        (_emb_frame_fingerprint(base), lambda f: ivfpq_vindex_delete(
+        (_emb_frame_fingerprint(base), lambda f: vindex_delete(
             spark, b_del.select("vec_id"), path, fingerprint=f
         )),
     ])
@@ -5909,7 +5909,7 @@ def dedup_minhash_index_delete_probe(spark, sf_dir):
     """Dedup-as-a-service ERASURE round trip (the GDPR verb — an index
     that can only grow keeps matching against data the corpus no
     longer holds): build the band index over old + batch-1 docs,
-    DELETE batch-1 by BARE ids (functions/vindex.minhash_vindex_delete:
+    DELETE batch-1 by BARE ids (functions/vindex.vindex_delete:
     the manifest's per-dir id-range stats pick the dirs to rewrite
     copy-on-write, the ids never reach the driver), then probe
     batch-2. The content near-dup pairs between batch-2 and batch-1
@@ -5919,8 +5919,8 @@ def dedup_minhash_index_delete_probe(spark, sf_dir):
     Idempotent via the fingerprint chain like the append lane."""
     from uts_spark.functions.vindex import (
         minhash_vindex_build,
-        minhash_vindex_delete,
         minhash_vindex_probe,
+        vindex_delete,
     )
 
     docs, base, b1, b2 = _midx_batches(spark, sf_dir)
@@ -5932,8 +5932,8 @@ def dedup_minhash_index_delete_probe(spark, sf_dir):
         (fp_full, lambda f: minhash_vindex_build(
             full, "text", "doc_id", path, fingerprint=f, **cfg
         )),
-        (fp_del, lambda f: minhash_vindex_delete(
-            spark, b1.select("doc_id"), path, fingerprint=f, **cfg
+        (fp_del, lambda f: vindex_delete(
+            spark, b1.select("doc_id"), path, fingerprint=f
         )),
     ])
     return minhash_vindex_probe(
@@ -6067,7 +6067,7 @@ def dedup_minhash_index_compact_version_probe(spark, sf_dir):
     a compaction that renamed every data file under a pinned reader):
     build over base (v0), fold batch-1 in via the batch-id-keyed
     append (v1), then COMPACT the two-dir chain into one clustered dir
-    (functions/vindex.minhash_vindex_compact — a CAS rewrite commit,
+    (functions/vindex.vindex_compact — a CAS rewrite commit,
     v2). The probe pins the version the compaction committed (the
     chain's last): row-identical to an unpinned probe of the compacted
     index (oracle = recompute with old = base+batch1). Compaction
@@ -6077,8 +6077,8 @@ def dedup_minhash_index_compact_version_probe(spark, sf_dir):
     from uts_spark.functions.vindex import (
         minhash_vindex_append,
         minhash_vindex_build,
-        minhash_vindex_compact,
         minhash_vindex_probe,
+        vindex_compact,
     )
     from uts_spark.sources.versioned import current_version
 
@@ -6094,8 +6094,8 @@ def dedup_minhash_index_compact_version_probe(spark, sf_dir):
         (fp1, lambda f: minhash_vindex_append(
             b1, "text", "doc_id", path, fingerprint=f, batch_id=0, **cfg
         )),
-        (fp1 + ":compacted", lambda f: minhash_vindex_compact(
-            spark, path, fingerprint=f, **cfg
+        (fp1 + ":compacted", lambda f: vindex_compact(
+            spark, path, fingerprint=f
         )),
     ])
     return minhash_vindex_probe(
@@ -6132,9 +6132,9 @@ def dedup_minhash_vindex_lifecycle_probe(spark, sf_dir):
     from uts_spark.functions.vindex import (
         minhash_vindex_append,
         minhash_vindex_build,
-        minhash_vindex_compact,
-        minhash_vindex_delete,
         minhash_vindex_probe,
+        vindex_compact,
+        vindex_delete,
     )
 
     docs, base, b1, b2 = _midx_batches(spark, sf_dir)
@@ -6156,10 +6156,10 @@ def dedup_minhash_vindex_lifecycle_probe(spark, sf_dir):
         lambda f: minhash_vindex_append(
             b1, "text", "doc_id", path, fingerprint=f, **cfg
         ),
-        lambda f: minhash_vindex_delete(
-            spark, deleted, path, fingerprint=f, **cfg
+        lambda f: vindex_delete(
+            spark, deleted, path, fingerprint=f
         ),
-        lambda f: minhash_vindex_compact(spark, path, fingerprint=f, **cfg),
+        lambda f: vindex_compact(spark, path, fingerprint=f),
     ])))
 
     return minhash_vindex_probe(
@@ -6213,9 +6213,9 @@ def similarity_ann_lsh_vindex_lifecycle_probe(spark, sf_dir):
     from uts_spark.functions.vindex import (
         lsh_vindex_append,
         lsh_vindex_build,
-        lsh_vindex_compact,
-        lsh_vindex_delete,
         lsh_vindex_probe,
+        vindex_compact,
+        vindex_delete,
     )
 
     e = table(spark, sf_dir, "embeddings")
@@ -6230,8 +6230,8 @@ def similarity_ann_lsh_vindex_lifecycle_probe(spark, sf_dir):
     _vidx_chain(path, list(zip(_vidx_stages(fp0), [
         lambda f: lsh_vindex_build(base, path, fingerprint=f, **cfg),
         lambda f: lsh_vindex_append(batch, path, fingerprint=f, **cfg),
-        lambda f: lsh_vindex_delete(spark, deleted, path, fingerprint=f),
-        lambda f: lsh_vindex_compact(spark, path, fingerprint=f),
+        lambda f: vindex_delete(spark, deleted, path, fingerprint=f),
+        lambda f: vindex_compact(spark, path, fingerprint=f),
     ])))
 
     anchors = e.filter(F.col("vec_id") < 5)
@@ -6257,9 +6257,9 @@ def similarity_ann_ivf_vindex_lifecycle_probe(spark, sf_dir):
     from uts_spark.functions.vindex import (
         ivf_vindex_append,
         ivf_vindex_build,
-        ivf_vindex_compact,
-        ivf_vindex_delete,
         ivf_vindex_probe,
+        vindex_compact,
+        vindex_delete,
     )
 
     e = table(spark, sf_dir, "embeddings")
@@ -6273,8 +6273,8 @@ def similarity_ann_ivf_vindex_lifecycle_probe(spark, sf_dir):
     _vidx_chain(path, list(zip(_vidx_stages(fp0), [
         lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8),
         lambda f: ivf_vindex_append(batch, path, fingerprint=f),
-        lambda f: ivf_vindex_delete(spark, deleted, path, fingerprint=f),
-        lambda f: ivf_vindex_compact(spark, path, fingerprint=f),
+        lambda f: vindex_delete(spark, deleted, path, fingerprint=f),
+        lambda f: vindex_compact(spark, path, fingerprint=f),
     ])))
 
     anchors = e.filter(F.col("vec_id") < 5)
@@ -6647,9 +6647,9 @@ def similarity_ann_ivfpq_vindex_lifecycle_probe(spark, sf_dir):
     from uts_spark.functions.vindex import (
         ivfpq_vindex_append,
         ivfpq_vindex_build,
-        ivfpq_vindex_compact,
-        ivfpq_vindex_delete,
         ivfpq_vindex_probe,
+        vindex_compact,
+        vindex_delete,
     )
 
     e = table(spark, sf_dir, "embeddings")
@@ -6666,8 +6666,8 @@ def similarity_ann_ivfpq_vindex_lifecycle_probe(spark, sf_dir):
             n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
         ),
         lambda f: ivfpq_vindex_append(batch, path, fingerprint=f),
-        lambda f: ivfpq_vindex_delete(spark, deleted, path, fingerprint=f),
-        lambda f: ivfpq_vindex_compact(spark, path, fingerprint=f),
+        lambda f: vindex_delete(spark, deleted, path, fingerprint=f),
+        lambda f: vindex_compact(spark, path, fingerprint=f),
     ])))
 
     anchors = e.filter(F.col("vec_id") < 5)
@@ -6685,8 +6685,8 @@ def _ensure_ivf_vindex_recluster_chain(spark, sf_dir) -> tuple[str, int]:
     from uts_spark.functions.vindex import (
         ivf_vindex_append,
         ivf_vindex_build,
-        ivf_vindex_delete,
         ivf_vindex_recluster,
+        vindex_delete,
     )
 
     e = table(spark, sf_dir, "embeddings")
@@ -6700,7 +6700,7 @@ def _ensure_ivf_vindex_recluster_chain(spark, sf_dir) -> tuple[str, int]:
     _vidx_chain(path, [
         (fp0, lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8)),
         (fp0 + ":a", lambda f: ivf_vindex_append(batch, path, fingerprint=f)),
-        (fp0 + ":a:d", lambda f: ivf_vindex_delete(
+        (fp0 + ":a:d", lambda f: vindex_delete(
             spark, deleted, path, fingerprint=f
         )),
         (fp0 + ":a:d:r", lambda f: ivf_vindex_recluster(
@@ -6781,8 +6781,8 @@ def similarity_ann_ivf_migrate_probe(spark, sf_dir):
     from uts_spark.functions.vindex import (
         ivf_vindex_append,
         ivf_vindex_build,
-        ivf_vindex_compact,
         ivf_vindex_probe,
+        vindex_compact,
     )
 
     e = table(spark, sf_dir, "embeddings")
@@ -6794,7 +6794,7 @@ def similarity_ann_ivf_migrate_probe(spark, sf_dir):
     _vidx_chain(path, [
         (fp0, lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8)),
         (fp1, lambda f: ivf_vindex_append(batch, path, fingerprint=f)),
-        (fp1 + ":c", lambda f: ivf_vindex_compact(spark, path, fingerprint=f)),
+        (fp1 + ":c", lambda f: vindex_compact(spark, path, fingerprint=f)),
     ])
     anchors = e.filter(F.col("vec_id") < 5)
     return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
@@ -6809,8 +6809,10 @@ def similarity_ann_ivf_migrate_probe(spark, sf_dir):
 def similarity_ann_protocol_facade_probe(spark, sf_dir):
     """The INDEX FACADE lane (round-10 #2, the marker-retirement
     decision made code): the full IVF lifecycle — build, append,
-    bare-id delete, compact, probe — driven through
-    functions/index_protocol.py, which has one commit protocol. The
+    bare-id delete, compact, probe — driven through the facade
+    (functions/index_protocol.py: build, append, probe) and the
+    family-generic erase and compact it defers to (vindex_delete /
+    vindex_compact), one commit protocol throughout. The
     choice was measured, not asserted: the same matched suite ran on
     both protocols for all four families (SCALE.md round 9c); snapshot
     won or tied every maintenance lane, so the marker verbs were
@@ -6823,10 +6825,10 @@ def similarity_ann_protocol_facade_probe(spark, sf_dir):
     from uts_spark.functions.index_protocol import (
         index_append,
         index_build,
-        index_compact,
-        index_delete,
         index_probe,
     )
+    from uts_spark.functions.vindex import vindex_compact, vindex_delete
+
     e = table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
@@ -6838,8 +6840,8 @@ def similarity_ann_protocol_facade_probe(spark, sf_dir):
     _vidx_chain(path, list(zip(_vidx_stages(fp0), [
         lambda f: index_build(base, "ivf", path, fingerprint=f, n_cells=8),
         lambda f: index_append(batch, path, fingerprint=f),
-        lambda f: index_delete(spark, deleted, path, fingerprint=f),
-        lambda f: index_compact(spark, path, fingerprint=f),
+        lambda f: vindex_delete(spark, deleted, path, fingerprint=f),
+        lambda f: vindex_compact(spark, path, fingerprint=f),
     ])))
 
     anchors = e.filter(F.col("vec_id") < 5)
@@ -6885,7 +6887,7 @@ _GDPR_REM = 4  # fan-out erasure slice: id % 10 == 4 (docs AND vectors)
 def index_gdpr_erasure_fanout(spark, sf_dir):
     """Cross-family GDPR FAN-OUT: one takedown request (id % 10 == 4)
     erased from ALL FOUR snapshot index families through the
-    family-dispatching verb (vindex.vindex_delete_auto — each index's
+    family-generic verb (vindex.vindex_delete — each index's
     manifest says what it is; the caller hands over bare ids). The
     result is the COMPLIANCE ACCOUNTING a fan-out must produce: per
     family, the surviving row count and the number of surviving rows
@@ -6914,7 +6916,7 @@ def index_gdpr_erasure_fanout(spark, sf_dir):
         lsh_vindex_build,
         minhash_vindex_build,
         vindex_config,
-        vindex_delete_auto,
+        vindex_delete,
     )
     from uts_spark.sources.versioned import (
         delete_rows,
@@ -6986,7 +6988,7 @@ def index_gdpr_erasure_fanout(spark, sf_dir):
     for fam, (path, build_fn, ids, _idc) in indexes.items():
         fresh, fp_done = ensure(path, build_fn, fp_d if fam == "minhash" else fp_e)
         if fresh:
-            vindex_delete_auto(spark, ids, path, fingerprint=fp_done)
+            vindex_delete(spark, ids, path, fingerprint=fp_done)
 
     # ... and every versioned DATA table holding the ids
     tables = {

@@ -1396,65 +1396,35 @@ GROUP BY d.doc_id
 """
 
 
-def _bpe_byte_pretoken_tokens(pts_df, merges=None, vocab_ids=None):
+def _bpe_byte_pretoken_tokens(pts_df, merges=None):
     """(pt, n_tok, idsum) under a byte-level merge table (default: the
     shipped 512-merge English-seed table; the round-9 mix-trained
     fertility A/B passes its own): Arrow-batched lowest-rank-first
     apply over a distinct-pretoken frame — the byte-lane sibling of
-    _bpe_pretrained_word_tokens."""
-    from uts_spark.functions.bpe_pretrained import _ALL_BYTES, ids_for
-
+    _bpe_pretrained_word_tokens. Vocab ids follow the standard
+    base-bytes-then-merge-outputs construction (``ids_for``), so the
+    int kernel's final ids sum to idsum directly (optimization r12)."""
     if merges is None:
         merges = pretrained_byte_merges()
-    # int-kernel precondition (optimization r12): the caller's vocab
-    # ids follow the standard base-bytes-then-merge-outputs
-    # construction, so idsum = sum(final int ids) directly. Every
-    # current caller's do (the shipped and mix-trained tables both use
-    # ids_for); a non-standard id map falls back to the string kernel.
-    if vocab_ids is None or vocab_ids == ids_for(merges, _ALL_BYTES):
 
-        def apply_batches(batches):
-            import pandas as pd
+    def apply_batches(batches):
+        import pandas as pd
 
-            from uts_spark.functions.bpe_pretrained import (
-                _ALL_BYTES,
-                apply_int_ids,
-                int_pair_table,
-            )
+        from uts_spark.functions.bpe_pretrained import (
+            _ALL_BYTES,
+            apply_int_ids,
+            int_pair_table,
+        )
 
-            pair = int_pair_table(merges, _ALL_BYTES)  # once per task
-            for pdf in batches:
-                pts = pdf["pt"].tolist()
-                n_tok, idsum = [], []
-                for pt in pts:
-                    seg = apply_int_ids(
-                        [b + 1 for b in pt.encode("utf-8")], pair
-                    )
-                    n_tok.append(len(seg))
-                    idsum.append(sum(seg))
-                yield pd.DataFrame(
-                    {"pt": pts, "n_tok": n_tok, "idsum": idsum}
-                )
-
-    else:
-        ranks = {p: r for r, p in enumerate(merges)}
-        ids = vocab_ids
-
-        def apply_batches(batches):
-            import pandas as pd
-
-            from uts_spark.functions.bpe_pretrained import bpe_apply_bytes
-
-            for pdf in batches:
-                pts = pdf["pt"].tolist()
-                n_tok, idsum = [], []
-                for pt in pts:
-                    toks = bpe_apply_bytes(pt, ranks)
-                    n_tok.append(len(toks))
-                    idsum.append(sum(ids[t] for t in toks))
-                yield pd.DataFrame(
-                    {"pt": pts, "n_tok": n_tok, "idsum": idsum}
-                )
+        pair = int_pair_table(merges, _ALL_BYTES)  # once per task
+        for pdf in batches:
+            pts = pdf["pt"].tolist()
+            n_tok, idsum = [], []
+            for pt in pts:
+                seg = apply_int_ids([b + 1 for b in pt.encode("utf-8")], pair)
+                n_tok.append(len(seg))
+                idsum.append(sum(seg))
+            yield pd.DataFrame({"pt": pts, "n_tok": n_tok, "idsum": idsum})
 
     return pts_df.mapInPandas(
         apply_batches, "pt string, n_tok long, idsum long"

@@ -1674,12 +1674,6 @@ def _mix_merges():
     return mix_trained_byte_merges(_MIX_TRAIN_SAMPLE)
 
 
-def _mix_vocab_ids():
-    from uts_spark.functions.bpe_pretrained import mix_trained_byte_vocab_ids
-
-    return mix_trained_byte_vocab_ids(_MIX_TRAIN_SAMPLE)
-
-
 def _duck_bpe_fertility_ab() -> str:
     from uts_spark.functions.bpe_pretrained import (
         byte_merge_patterns_sql,
@@ -1761,7 +1755,7 @@ def text_bpe_fertility_mix_trained(spark, sf_dir):
         "pt", F.col("n_tok").alias("ta")
     )
     pm = _bpe_byte_pretoken_tokens(
-        distinct_pts, merges=_mix_merges(), vocab_ids=_mix_vocab_ids()
+        distinct_pts, merges=_mix_merges()
     ).select("pt", F.col("n_tok").alias("tm"))
     doc = (
         dpts.join(pa, "pt")
@@ -1890,9 +1884,7 @@ def _duck_pipeline_v6(patterns_sql=None, budget=_V6_BUDGET) -> str:
     """
 
 
-def _pipeline_v6_frame(
-    spark, sf_dir, merges=None, vocab_ids=None, budget=_V6_BUDGET
-):
+def _pipeline_v6_frame(spark, sf_dir, merges=None, budget=_V6_BUDGET):
     """Shared v6 machinery (gates -> route -> byte-tokenize -> one
     global prefix sum -> per-language shards), parameterized by the
     byte merge table and shard budget so the ASCII-table lane and the
@@ -1933,9 +1925,7 @@ def _pipeline_v6_frame(
     toks = (
         dpts.join(
             _bpe_byte_pretoken_tokens(
-                dpts.select("pt").distinct(),
-                merges=merges,
-                vocab_ids=vocab_ids,
+                dpts.select("pt").distinct(), merges=merges
             ),
             "pt",
         )
@@ -2037,7 +2027,6 @@ def pipeline_training_prep_v6_mix(spark, sf_dir):
         spark,
         sf_dir,
         merges=_mix_merges(),
-        vocab_ids=_mix_vocab_ids(),
         budget=_V6_MIX_BUDGET,
     )
 

@@ -1805,7 +1805,7 @@ def delete_rows(
     dirs carry into the new manifest by reference and only the touched
     dirs rewrite through the left-anti join — cost ∝ touched data,
     exactly the snapshot-index families' erasure shape
-    (functions/vindex._delete_pruned), now on the data table too.
+    (functions/vindex.vindex_delete), now on the data table too.
     Without stats (or with stats for a different column) it falls back
     to the table-grain copy-on-write rewrite.
 
@@ -1821,7 +1821,8 @@ def delete_rows(
 
     Earlier versions remain readable until vacuum — erase-then-vacuum
     is the complete GDPR sequence, and the index fan-out
-    (functions/vindex.vindex_delete_auto) composes with this so
+    (functions/index_protocol.erase_everywhere over
+    functions/vindex.vindex_delete) composes with this so
     indexes and the data copies they were built from forget
     together."""
     from pyspark.sql import functions as F
