@@ -63,6 +63,14 @@ round-over-round totals are window-proof without the reader having to
 fish both calibrations out of two artifacts (round 11's raw 1.48x
 total was almost exactly its 1.477x calibration-window ratio).
 Addition-only: every pre-existing key is unchanged.
+
+Codegen attribution: the detail artifact carries, per lane, the
+whole-stage classes compiled and their compile ms in the cold pass
+(``codegen_cold``) and summed over every warm sample (``codegen_warm``),
+read from Spark's CodegenMetrics count and CodeGenerator's compile
+timer. ``codegen_warm_classes`` above 0 means the codegen cache
+(``uts_spark.session.CODEGEN_CACHE_ENTRIES``) no longer holds the lane
+set and warm samples pay Janino compiles. The summary line is unchanged.
 """
 
 from __future__ import annotations
@@ -121,6 +129,18 @@ def _calib_spark(spark) -> float:
     return round(best, 4)
 
 
+def _codegen(spark) -> tuple[int, int]:
+    """(classes compiled, compile ns) so far in this JVM: Spark's
+    CodegenMetrics compilation count and CodeGenerator's compile timer."""
+    jvm = spark._jvm
+    return (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount(),
+        jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        .compileTime(),
+    )
+
+
 def _window(samples: list[float]) -> list[float]:
     """The retained window: the RETAIN fastest samples (contention is
     one-sided additive noise — the fast tail is the signal)."""
@@ -172,17 +192,26 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     calib_spark = _calib_spark(spark)
 
-    def run(name: str) -> float:
+    # per lane and phase: classes compiled and their compile ms
+    codegen: dict[str, dict[str, dict]] = {"cold": {}, "warm": {}}
+
+    def run(name: str, phase: str = "warm") -> float:
+        n0, ns0 = _codegen(spark)
         t0 = time.time()
         QUERIES[name](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-        return time.time() - t0
+        wall = time.time() - t0
+        n1, ns1 = _codegen(spark)
+        acc = codegen[phase].setdefault(name, {"classes": 0, "compile_ms": 0.0})
+        acc["classes"] += n1 - n0
+        acc["compile_ms"] = round(acc["compile_ms"] + (ns1 - ns0) / 1e6, 1)
+        return wall
 
     # pass 1 (cold): pays JVM codegen + parquet footer first-touch
     cold: dict[str, float] = {}
     for name in HEADLINE:
-        cold[name] = round(run(name), 3)
+        cold[name] = round(run(name, "cold"), 3)
 
     # warm passes (interleaved so one lane's co-tenant spike doesn't
     # poison a whole pass of a single lane)
@@ -223,6 +252,11 @@ def main() -> None:
         "queries_cold": cold,
         "samples": {n: [round(x, 3) for x in s] for n, s in samples.items()},
         "extra_runs": extra_runs,
+        "codegen_cold": codegen["cold"],
+        "codegen_warm": codegen["warm"],
+        "codegen_warm_classes": sum(
+            c["classes"] for c in codegen["warm"].values()
+        ),
         "lanes_over_trigger": over,
         "retain": RETAIN,
         "spread_trigger": SPREAD_TRIGGER,

@@ -137,8 +137,10 @@ def test_fingerprint_stability_and_collision(spark):
         ],
         "doc_id long, text string",
     )
-    fps = {r["doc_id"]: r["fp"] for r in
-           df.select("doc_id", fingerprint(F.col("text")).alias("fp")).collect()}
+    toks = df.select("doc_id", "text", tokens(F.col("text")).alias("toks"))
+    fps = {r["doc_id"]: r["fp"] for r in toks.select(
+        "doc_id", fingerprint(F.col("text"), F.col("toks")).alias("fp")
+    ).collect()}
     assert fps[1] == fps[2]
     assert fps[1] != fps[3]
 

@@ -272,6 +272,18 @@ def test_substring_dup_rate_joins_on_hash_not_text(spark, sf_dir):
     assert seg, "expected shuffle on shingle-hash column"
 
 
+def test_shingle_arrays_tokenize_once(spark):
+    # word_ngrams' lambda is interpreted with no common-subexpression
+    # elimination: an inline token expression would re-run the regex
+    # tokenizer once per n-gram, so the tokens are projected first
+    from uts_spark.functions.dedup import doc_shingle_arrays_portable
+
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    arrays = doc_shingle_arrays_portable(df, "text", "doc_id")
+    p = arrays._jdf.queryExecution().optimizedPlan().toString()
+    assert p.count("regexp_extract_all") == 1
+
+
 def test_edit_distance_is_equi_join_not_cartesian(spark, sf_dir):
     # prefix blocking must compile to a hash/merge equi-join on blk;
     # a nested-loop would be the quadratic doc x doc disaster

@@ -145,10 +145,13 @@ def bloom_contamination(
     def sh(df):
         return df.select(
             F.col(id_col).alias("doc_id"),
+            tokens(F.col(text_col)).alias("__toks"),
+        ).select(
+            "doc_id",
             F.explode(
                 F.array_distinct(
                     F.transform(
-                        word_ngrams(tokens(F.col(text_col)), n),
+                        word_ngrams(F.col("__toks"), n),
                         lambda s: hash64(s),
                     )
                 )

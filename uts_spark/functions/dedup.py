@@ -247,8 +247,9 @@ def doc_shingle_arrays_portable(
     fast lane when no external oracle needs to replay the hashes."""
     spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism, id_col)
     base = spread.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(word_ngrams(tokens(F.col(text_col)), n)).alias("__g"),
+        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__t")
+    ).select(
+        "id", F.array_distinct(word_ngrams(F.col("__t"), n)).alias("__g")
     )
     md5s = base.select(
         "id", F.transform(F.col("__g"), lambda g: F.md5(g)).alias("__m")
@@ -402,14 +403,6 @@ def minhash_lsh_pairs(
         sig = minhash_signatures(df, text_col, id_col, n, k, arrays=arrays).cache()
 
     cand = minhash_band_candidates(sig, k, bands)
-    if checkpoint:
-        # the candidate set feeds BOTH the signature-estimate join and
-        # the exact-Jaccard verify below — materialize the (tiny,
-        # collision-bounded) pair list once so the banding explode +
-        # bucket self-join + distinct runs once, not per consumer
-        # (optimization r11; the lazy checkpoint=False path keeps the
-        # full plan for the plan-shape tests)
-        cand = cand.localCheckpoint(eager=True)
 
     # estimated + exact Jaccard in ONE pass over the candidate pairs
     # (optimization r11): signature and shingle columns pre-join on the

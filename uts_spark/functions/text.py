@@ -458,7 +458,12 @@ def duck_bpeish_count(expr: str) -> str:
 
 def word_ngrams(toks: Column, n: int) -> Column:
     """Word n-gram shingles joined by a single space; [] if fewer than n
-    tokens."""
+    tokens.
+
+    ``toks`` must be a column reference (project the token array first):
+    the n-gram lambda is interpreted without common-subexpression
+    elimination, so an inline ``tokens(...)`` expression would re-run the
+    regex tokenizer once per n-gram, O(T^2) per document."""
     return F.when(
         F.size(toks) >= n,
         F.transform(
@@ -468,11 +473,13 @@ def word_ngrams(toks: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def fingerprint(col: Column, n: int = 5) -> Column:
+def fingerprint(col: Column, toks: Column, n: int = 5) -> Column:
     """Document fingerprint: min 64-bit hash over word n-gram shingles
     (one-permutation minhash); short docs hash the whole text. Two docs
-    sharing a fingerprint share at least one shingle."""
-    shingles = word_ngrams(tokens(col), n)
+    sharing a fingerprint share at least one shingle. ``toks`` is the
+    column reference of ``tokens(col)``, projected first (see
+    :func:`word_ngrams`)."""
+    shingles = word_ngrams(toks, n)
     return F.when(
         F.size(shingles) > 0,
         F.array_min(F.transform(shingles, lambda s: hash64(s))),
@@ -1041,8 +1048,10 @@ def substring_dup_rate(df, text_col: str, id_col: str, n: int = 8):
     """
     from uts_spark.functions.hashing import hash64
 
-    sh = word_ngrams(tokens(F.col(text_col)), n)
+    sh = word_ngrams(F.col("__toks"), n)
     ex = df.select(
+        F.col(id_col), tokens(F.col(text_col)).alias("__toks")
+    ).select(
         F.col(id_col),
         F.explode(F.transform(sh, lambda s: hash64(s))).alias("sh"),
     )

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import threading
 
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 
 from uts_spark.functions import multimodal as mm
 from uts_spark.functions.clustering import cluster_assignment
@@ -54,6 +54,7 @@ from uts_spark.functions.text import (
     quality_score,
     repetition_metrics,
     token_count,
+    tokens,
 )
 from uts_spark.operators.distributed_rank import ranked_cumsum
 from uts_spark.registry import demo, query, table
@@ -218,7 +219,9 @@ def text_fingerprint(spark, sf_dir):
     """Document fingerprint: min md5-hash over 5-gram shingles (one-
     permutation minhash) — portable across engines bit-for-bit."""
     docs = table(spark, sf_dir, "documents")
-    return docs.select("doc_id", fingerprint(F.col("text"), 5).alias("fp"))
+    return docs.select(
+        "doc_id", "text", tokens(F.col("text")).alias("toks")
+    ).select("doc_id", fingerprint(F.col("text"), F.col("toks"), 5).alias("fp"))
 
 
 # ===========================================================================
@@ -1407,13 +1410,21 @@ def _emb_frame_fingerprint(df) -> str:
     """Content fingerprint of an arbitrary (vec_id, embedding) frame —
     the IVF append lane fingerprints corpus subsets (base, base+batch),
     the same per-frame keying as the dedup index's chain."""
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.pmod(F.xxhash64("vec_id", "embedding"), F.lit(1 << 32))
-        ).alias("h"),
-    ).first()
-    return f"{row['n']}_{(row['h'] or 0):x}"
+    return _emb_frame_fingerprints(df)[-1]
+
+
+def _emb_frame_fingerprints(df, *subsets: Column) -> list[str]:
+    """:func:`_emb_frame_fingerprint` of ``df.filter(p)`` for each
+    predicate ``p`` in ``subsets``, then of ``df`` itself, from ONE
+    aggregate job (a conditional count and sum per subset). The strings
+    are byte-identical to separate calls, so existing manifest chains
+    still match."""
+    h = F.pmod(F.xxhash64("vec_id", "embedding"), F.lit(1 << 32))
+    aggs = []
+    for p in subsets:
+        aggs += [F.count(F.when(p, F.lit(1))), F.sum(F.when(p, h))]
+    row = df.select(*aggs, F.count(F.lit(1)), F.sum(h)).first()
+    return [f"{row[i]}_{(row[i + 1] or 0):x}" for i in range(0, len(row), 2)]
 
 
 def _emb_fingerprint(spark, sf_dir: str) -> str:
@@ -3768,8 +3779,8 @@ def text_inverted_index(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     toks = F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0))
-    dt = docs.select(
-        "doc_id", F.explode(word_ngrams(toks, 2)).alias("term")
+    dt = docs.select("doc_id", toks.alias("toks")).select(
+        "doc_id", F.explode(word_ngrams(F.col("toks"), 2)).alias("term")
     ).distinct()
     return (
         dt.groupBy("term")
@@ -4501,15 +4512,15 @@ def similarity_ann_lsh_append_probe(spark, sf_dir):
     )
 
     e = table(spark, sf_dir, "embeddings")
-    base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+    keep = F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+    base = e.filter(keep)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0 = _emb_frame_fingerprint(base)
+    fp0, fp1 = _emb_frame_fingerprints(e, keep)
     cfg = dict(dim=EMB_DIM, planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES)
     path = ann_index_path(sf_dir, fp0) + "_svc"
     _vidx_chain(path, [
         (fp0, lambda f: lsh_vindex_build(base, path, fingerprint=f, **cfg)),
-        (_emb_frame_fingerprint(e),
-         lambda f: lsh_vindex_append(batch, path, fingerprint=f, **cfg)),
+        (fp1, lambda f: lsh_vindex_append(batch, path, fingerprint=f, **cfg)),
     ])
     anchors = e.filter(F.col("vec_id") < 5)
     return lsh_vindex_probe(spark, path, anchors, k=10)
@@ -4606,14 +4617,15 @@ def similarity_ann_lsh_version_probe(spark, sf_dir):
     )
 
     e = table(spark, sf_dir, "embeddings")
-    base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+    keep = F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+    base = e.filter(keep)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0 = _emb_frame_fingerprint(base)
+    fp0, fp1 = _emb_frame_fingerprints(e, keep)
     cfg = dict(dim=EMB_DIM, planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES)
     path = ann_index_path(sf_dir, fp0) + "_vver"
     _vidx_chain(path, [
         (fp0, lambda f: lsh_vindex_build(base, path, fingerprint=f, **cfg)),
-        (_emb_frame_fingerprint(e), lambda f: lsh_vindex_append(
+        (fp1, lambda f: lsh_vindex_append(
             batch, path, fingerprint=f, batch_id=0, **cfg
         )),
     ])
@@ -4645,14 +4657,14 @@ def similarity_ann_ivf_append_probe(spark, sf_dir):
     )
 
     e = table(spark, sf_dir, "embeddings")
-    base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+    keep = F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+    base = e.filter(keep)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0 = _emb_frame_fingerprint(base)
+    fp0, fp1 = _emb_frame_fingerprints(e, keep)
     path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_svc"
     _vidx_chain(path, [
         (fp0, lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8)),
-        (_emb_frame_fingerprint(e),
-         lambda f: ivf_vindex_append(batch, path, fingerprint=f)),
+        (fp1, lambda f: ivf_vindex_append(batch, path, fingerprint=f)),
     ])
     anchors = e.filter(F.col("vec_id") < 5)
     return ivf_vindex_probe(spark, path, anchors, k=10, n_probe=3)
@@ -4682,13 +4694,14 @@ def similarity_ann_ivf_version_probe(spark, sf_dir):
     )
 
     e = table(spark, sf_dir, "embeddings")
-    base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+    keep = F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+    base = e.filter(keep)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0 = _emb_frame_fingerprint(base)
+    fp0, fp1 = _emb_frame_fingerprints(e, keep)
     path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_vver"
     _vidx_chain(path, [
         (fp0, lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8)),
-        (_emb_frame_fingerprint(e), lambda f: ivf_vindex_append(
+        (fp1, lambda f: ivf_vindex_append(
             batch, path, fingerprint=f, batch_id=0
         )),
     ])
@@ -4890,17 +4903,17 @@ def similarity_ann_ivfpq_append_probe(spark, sf_dir):
     )
 
     e = table(spark, sf_dir, "embeddings")
-    base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+    keep = F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+    base = e.filter(keep)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0 = _emb_frame_fingerprint(base)
+    fp0, fp1 = _emb_frame_fingerprints(e, keep)
     path = _ivfpq_index_path(sf_dir, fp0) + "_svc"
     _vidx_chain(path, [
         (fp0, lambda f: ivfpq_vindex_build(
             base, path, dim=EMB_DIM, fingerprint=f,
             n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
         )),
-        (_emb_frame_fingerprint(e),
-         lambda f: ivfpq_vindex_append(batch, path, fingerprint=f)),
+        (fp1, lambda f: ivfpq_vindex_append(batch, path, fingerprint=f)),
     ])
     anchors = e.filter(F.col("vec_id") < 5)
     return ivfpq_vindex_probe(spark, path, anchors, k=10, n_probe=3, rerank=40)
@@ -4947,16 +4960,17 @@ def similarity_ann_ivfpq_version_probe(spark, sf_dir):
     )
 
     e = table(spark, sf_dir, "embeddings")
-    base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+    keep = F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+    base = e.filter(keep)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0 = _emb_frame_fingerprint(base)
+    fp0, fp1 = _emb_frame_fingerprints(e, keep)
     path = _ivfpq_index_path(sf_dir, fp0) + "_vver"
     _vidx_chain(path, [
         (fp0, lambda f: ivfpq_vindex_build(
             base, path, dim=EMB_DIM, fingerprint=f,
             n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
         )),
-        (_emb_frame_fingerprint(e), lambda f: ivfpq_vindex_append(
+        (fp1, lambda f: ivfpq_vindex_append(
             batch, path, fingerprint=f, batch_id=0
         )),
     ])
@@ -4989,15 +5003,16 @@ def similarity_ann_lsh_delete_probe(spark, sf_dir):
 
     e = table(spark, sf_dir, "embeddings")
     b_del = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
-    fp_full = _emb_frame_fingerprint(e)
+    fp_base, fp_full = _emb_frame_fingerprints(
+        e, F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+    )
     path = ann_index_path(sf_dir, fp_full) + "_lshdel"
     _vidx_chain(path, [
         (fp_full, lambda f: lsh_vindex_build(
             e, path, dim=EMB_DIM, fingerprint=f,
             planes=_ANN_IDX_PLANES, tables=_ANN_IDX_TABLES,
         )),
-        (_emb_frame_fingerprint(base), lambda f: vindex_delete(
+        (fp_base, lambda f: vindex_delete(
             spark, b_del.select("vec_id"), path, fingerprint=f
         )),
     ])
@@ -5029,12 +5044,13 @@ def similarity_ann_ivf_delete_probe(spark, sf_dir):
 
     e = table(spark, sf_dir, "embeddings")
     b_del = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
-    fp_full = _emb_frame_fingerprint(e)
+    fp_base, fp_full = _emb_frame_fingerprints(
+        e, F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+    )
     path = ivf_index_path(sf_dir, fp_full, n_cells=8) + "_ivfdel"
     _vidx_chain(path, [
         (fp_full, lambda f: ivf_vindex_build(e, path, fingerprint=f, n_cells=8)),
-        (_emb_frame_fingerprint(base), lambda f: vindex_delete(
+        (fp_base, lambda f: vindex_delete(
             spark, b_del.select("vec_id"), path, fingerprint=f
         )),
     ])
@@ -5064,15 +5080,16 @@ def similarity_ann_ivfpq_delete_probe(spark, sf_dir):
 
     e = table(spark, sf_dir, "embeddings")
     b_del = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
-    fp_full = _emb_frame_fingerprint(e)
+    fp_base, fp_full = _emb_frame_fingerprints(
+        e, F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+    )
     path = _ivfpq_index_path(sf_dir, fp_full) + "_del"
     _vidx_chain(path, [
         (fp_full, lambda f: ivfpq_vindex_build(
             e, path, dim=EMB_DIM, fingerprint=f,
             n_cells=8, m_sub=_PQ_M, n_cent=_PQ_C,
         )),
-        (_emb_frame_fingerprint(base), lambda f: vindex_delete(
+        (fp_base, lambda f: vindex_delete(
             spark, b_del.select("vec_id"), path, fingerprint=f
         )),
     ])
@@ -6786,10 +6803,10 @@ def similarity_ann_ivf_migrate_probe(spark, sf_dir):
     )
 
     e = table(spark, sf_dir, "embeddings")
-    base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+    keep = F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+    base = e.filter(keep)
     batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-    fp0 = _emb_frame_fingerprint(base)
-    fp1 = _emb_frame_fingerprint(e)
+    fp0, fp1 = _emb_frame_fingerprints(e, keep)
     path = ivf_index_path(sf_dir, fp0, n_cells=8) + "_migrate"
     _vidx_chain(path, [
         (fp0, lambda f: ivf_vindex_build(base, path, fingerprint=f, n_cells=8)),

@@ -2201,15 +2201,15 @@ def _stream_ann_ingest(suffix: str):
         from uts_spark.queries.llm_ops import (
             _IVF_APP_MOD,
             _IVF_APP_REM,
-            _emb_frame_fingerprint,
+            _emb_frame_fingerprints,
             ivf_index_path,
         )
 
         e = table(spark, sf_dir, "embeddings")
-        base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+        keep = F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+        base = e.filter(keep)
         batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        fp0 = _emb_frame_fingerprint(base)
-        fp1 = _emb_frame_fingerprint(e)
+        fp0, fp1 = _emb_frame_fingerprints(e, keep)
         fp_ing = fp0 + ":ingesting"
         path = ivf_index_path(sf_dir, fp0, n_cells=8) + suffix
 
@@ -3284,14 +3284,15 @@ def _register_facade_tick_lanes():
             _IVF_APP_MOD,
             _IVF_APP_REM,
             EMB_DIM,
-            _emb_frame_fingerprint,
+            _emb_frame_fingerprints,
             ann_index_path,
         )
 
         e = table(spark, sf_dir, "embeddings")
-        base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+        keep = F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+        base = e.filter(keep)
         batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
+        fp0, fp1 = _emb_frame_fingerprints(e, keep)
         fp_ing = fp0 + ":ingesting"
         path = ann_index_path(sf_dir, fp0) + "_factick"
 
@@ -3367,14 +3368,15 @@ def _register_facade_tick_lanes():
             _PQ_C,
             _PQ_M,
             EMB_DIM,
-            _emb_frame_fingerprint,
+            _emb_frame_fingerprints,
             _warehouse_dir,
         )
 
         e = table(spark, sf_dir, "embeddings")
-        base = e.filter(F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM)
+        keep = F.col("vec_id") % _IVF_APP_MOD != _IVF_APP_REM
+        base = e.filter(keep)
         batch = e.filter(F.col("vec_id") % _IVF_APP_MOD == _IVF_APP_REM)
-        fp0, fp1 = _emb_frame_fingerprint(base), _emb_frame_fingerprint(e)
+        fp0, fp1 = _emb_frame_fingerprints(e, keep)
         fp_ing = fp0 + ":ingesting"
         tag = os.path.basename(sf_dir.rstrip("/")) or "default"
         path = os.path.join(

@@ -10,6 +10,11 @@ the master. Key choices:
   fixed zone makes Spark and the DuckDB oracle agree bit-for-bit.
 - Arrow enabled — every pandas interchange (the few places we drop to
   ``applyInPandas``) goes through Arrow batches, not pickled rows.
+- Whole-stage codegen cache sized to the engine's working set
+  (:data:`CODEGEN_CACHE_ENTRIES`) — Spark's default of 100 compiled
+  classes is smaller than one pass of a recurring lane set, so the LRU
+  cycles and every pass recompiles (Janino) and re-JITs what it just
+  evicted.
 """
 
 from __future__ import annotations
@@ -17,6 +22,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries of Spark's compiled-class LRU cache (static conf
+# ``spark.sql.codegen.cache.maxEntries``, default 100), keyed by the
+# generated source. Distinct classes per working set, measured as the
+# CodegenMetrics compilation count on a fresh session: the perfbench
+# ``pipeline`` cold pass 164, the ``tsq`` cold pass 105, one pass of
+# bench.py's 47 headline lanes at sf0.1 1046. The headline pass is the
+# largest set that recurs; this fits it with about 2x headroom.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def get_spark(
@@ -40,6 +54,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -48,7 +63,10 @@ def get_spark(
 
 def configure_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable conf to a session we did not create (the
-    driver hands us one). Only dynamic confs — never restarts the JVM."""
+    driver hands us one). Only dynamic confs — never restarts the JVM.
+    Static confs stay as that session's creator set them: such a session
+    (the ``__spark_entry__`` driver's, for one) keeps its own codegen
+    cache size, not :data:`CODEGEN_CACHE_ENTRIES`."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     return spark
