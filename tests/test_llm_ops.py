@@ -2148,13 +2148,14 @@ def test_ivf_vindex_append_reencodes_after_recluster(
     centroids; when its CAS commit loses to a racing RECLUSTER, the
     staged delta is coded against a dead quantizer and must NOT land —
     the retry detects the moved pointer and RE-ENCODES. Injected race:
-    a commit_version wrapper fires a real recluster once, just before
-    the append's first commit attempt."""
+    a wrapper of the commit seam fires a real recluster once, just
+    before the append's first commit attempt."""
     import uts_spark.functions.vindex as vx
+    import uts_spark.sources.versioned as V
     from uts_spark.functions.similarity import _ivf_assign
     from uts_spark.sources.versioned import (
+        _commit as real_commit,
         _manifest_dirs,
-        commit_version as real_commit,
         list_versions,
         read_version,
     )
@@ -2166,13 +2167,13 @@ def test_ivf_vindex_append_reencodes_after_recluster(
 
     fired = {"n": 0}
 
-    def racing_commit(p, dirs, op, parent, n_rows, meta=None):
-        if op == "append" and fired["n"] == 0:
+    def racing_commit(p, rec, branch=None):
+        if rec["operation"] == "append" and fired["n"] == 0:
             fired["n"] = 1
             vx.ivf_vindex_recluster(spark, p, fingerprint="f0:r")
-        return real_commit(p, dirs, op, parent, n_rows, meta)
+        return real_commit(p, rec, branch)
 
-    monkeypatch.setattr(vx, "commit_version", racing_commit)
+    monkeypatch.setattr(V, "_commit", racing_commit)
     vx.ivf_vindex_append(batch, path, fingerprint="f0:r:a")
     monkeypatch.undo()
 

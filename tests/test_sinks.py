@@ -1200,7 +1200,7 @@ def test_versioned_wap_branch_conflicts_and_retention(spark, tmp_path):
 
     from uts_spark.sources.versioned import (
         VersionConflictError,
-        _branch_commit,
+        _commit,
         append_snapshot,
         create_branch,
         delete_rows,
@@ -1245,7 +1245,7 @@ def test_versioned_wap_branch_conflicts_and_retention(spark, tmp_path):
     # branch-head CAS: second writer of the same seq loses loudly
     create_branch(path, "race")
     with _pytest.raises(VersionConflictError, match="already committed"):
-        _branch_commit(path, "race", {"seq": 0, "base": 0})
+        _commit(path, {"seq": 0, "base": 0}, branch="race")
 
     # retention: vacuum keeps every branch-referenced dir
     write_to_branch(
@@ -2328,11 +2328,11 @@ def test_versioned_dv_mor_conflict_retry(spark, tmp_path, monkeypatch):
     )
     V.write_snapshot(mk(0, 300), path, stats_col="k")
 
-    real_commit = V.commit_version
+    real_commit = V._commit
     state = {"raced": False}
     racer_ids = spark.range(50, 70).selectExpr("id AS k")
 
-    def racing_commit(path_, dirs, op, expected_parent, n_rows, meta=None):
+    def racing_commit(path_, rec, branch=None):
         if not state["raced"]:
             state["raced"] = True
             import uuid
@@ -2340,16 +2340,19 @@ def test_versioned_dv_mor_conflict_retry(spark, tmp_path, monkeypatch):
             rdir = f"{path_}/data/dv-racer-{uuid.uuid4().hex[:8]}"
             racer_ids.coalesce(1).write.parquet(rdir)
             # the racer lands an OVERLAPPING 20-key vector first
-            real_commit(
-                path_, dirs, "delete_mor", expected_parent, 280,
-                {"dv": [{"dir": rdir, "key": "k", "scope": list(dirs),
-                         "n_masked": 20}],
-                 **{k: meta[k] for k in ("stats_col", "dir_stats",
-                                         "dir_rows") if k in (meta or {})}},
-            )
-        return real_commit(path_, dirs, op, expected_parent, n_rows, meta)
+            dirs = rec["data_dirs"]
+            real_commit(path_, {
+                "version": rec["version"], "parent": rec["parent"],
+                "operation": "delete_mor", "n_rows": 280,
+                "data_dirs": dirs,
+                "dv": [{"dir": rdir, "key": "k", "scope": list(dirs),
+                        "n_masked": 20}],
+                **{k: rec[k] for k in ("stats_col", "dir_stats",
+                                       "dir_rows") if k in rec},
+            })
+        return real_commit(path_, rec, branch)
 
-    monkeypatch.setattr(V, "commit_version", racing_commit)
+    monkeypatch.setattr(V, "_commit", racing_commit)
     # our takedown targets 50..100; the racer already masked 50..70,
     # so the retry's recount must see 30 still-visible victims
     V.delete_rows_mor(spark, path, spark.range(50, 100).selectExpr("id AS k"), "k")
@@ -3470,6 +3473,60 @@ def test_join_versioned_plan_shapes(spark, tmp_path):
         )
     # without the refusal flag the join still runs correctly
     assert V.join_versioned(spark, pca, pcb, "k").count() == 9_000_000
+
+
+def test_join_versioned_shapes_agree_by_rows(spark, tmp_path):
+    """The broadcast and the shuffle plan of join_versioned return the
+    same rows, not just the same count: random keys with duplicates on
+    both sides, the probe side a two-dir table carrying a deletion
+    vector, both checked against the join computed in Python."""
+    import random
+    import re
+
+    import uts_spark.sources.versioned as V
+
+    rnd = random.Random(7)
+    a_rows = [(rnd.randrange(40), i) for i in range(300)]
+    b_rows = [(rnd.randrange(40), f"b{i}") for i in range(60)]
+    pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
+    V.write_snapshot(
+        spark.createDataFrame(a_rows[:150], "k int, x int"), pa,
+        stats_col="k",
+    )
+    V.append_snapshot(spark.createDataFrame(a_rows[150:], "k int, x int"), pa)
+    V.delete_rows_mor(
+        spark, pa, spark.createDataFrame([(3,), (11,)], "k int"), "k"
+    )
+    V.write_snapshot(spark.createDataFrame(b_rows, "k int, y string"), pb)
+    pm = V.list_versions(pa)[-1]
+    assert len(V._manifest_dirs(pm)) == 2 and len(pm["dv"]) == 1
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("k", "x", "y").collect())
+
+    want = sorted(
+        (k, x, y) for k, x in a_rows if k not in (3, 11)
+        for kb, y in b_rows if kb == k
+    )
+    def inner_join(df):
+        # the deletion vector masks through a broadcast LEFT ANTI join
+        # in both shapes; the shape under test is the INNER join's
+        s = df._jdf.queryExecution().executedPlan().toString()
+        return re.findall(r"(\w+Join) \[[^\]]*\], \[[^\]]*\], Inner", s)
+
+    bj = V.join_versioned(spark, pa, pb, "k")
+    assert inner_join(bj) == ["BroadcastHashJoin"]
+    got_b = rows(bj)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        sj = V.join_versioned(spark, pa, pb, "k", broadcast_rows=10)
+        assert inner_join(sj) == ["SortMergeJoin"]
+        got_s = rows(sj)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert len(want) > 300  # duplicate keys on both sides fan out
+    assert got_b == got_s == want
 
 
 def test_catalog_retention_policy(spark, tmp_path):

@@ -1044,12 +1044,15 @@ def _ivf_centroids(
 def _ivf_assign(
     emb: DataFrame, cents: DataFrame, id_col: str, vec_col: str,
     keep_cols: tuple[str, ...] = (),
+    keep_sim: bool = False,
 ) -> DataFrame:
     """(id, vec, [metadata...], cell): argmax-cosine assignment against
     the centroid table (tie-break: centroid id) — shared by build and
     append. ``keep_cols`` carries metadata columns into the stored
     index rows, the input that lets a probe push a predicate into the
-    cell-pruned scan (filtered ANN at the index layer)."""
+    cell-pruned scan (filtered ANN at the index layer). ``keep_sim``
+    also keeps the winning cosine as ``__sim`` (the drift monitor's
+    fit, recorded on the write job)."""
     wc = Window.partitionBy(id_col).orderBy(F.desc("__sim"), F.asc("cent_id"))
     return (
         emb.select(id_col, vec_col, *keep_cols)
@@ -1057,7 +1060,10 @@ def _ivf_assign(
         .withColumn("__sim", cosine_stable(vec_col, "__cv"))
         .withColumn("__r", F.row_number().over(wc))
         .filter(F.col("__r") == 1)
-        .select(id_col, vec_col, *keep_cols, F.col("cent_id").alias("cell"))
+        .select(
+            id_col, vec_col, *keep_cols, F.col("cent_id").alias("cell"),
+            *(["__sim"] if keep_sim else []),
+        )
     )
 
 

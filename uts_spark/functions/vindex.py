@@ -16,11 +16,12 @@ conditional PUT on object storage), which gives:
   no torn ticks, no version-pinned file-census sidecar needed;
 - **multi-writer safety by OPTIMISTIC CONCURRENCY**: two concurrent
   ticks race the same next-version manifest; exactly one lands, the
-  loser gets :class:`~uts_spark.sources.versioned.VersionConflictError`
-  and retries — an APPEND retries with its already-written delta files
-  (file adds commute; the data job never reruns), a REWRITE (delete /
-  compact / recluster) recomputes against the new current. No lock is
-  ever held.
+  loser retries in the table's one commit loop
+  (:func:`~uts_spark.sources.versioned._cas_commit`; every verb here is
+  an ``attempt`` closure) — an APPEND retries with its already-written
+  delta files (file adds commute; the data job never reruns), a
+  REWRITE (delete / compact / recluster) recomputes against the new
+  current. No lock is ever held.
 
 Every commit that builds no rows is FAMILY-GENERIC, driven by the
 current manifest through one family table (``_FAMILY_LAYOUT``:
@@ -50,9 +51,9 @@ Append-vs-recluster concurrency (the new hazard the quantizer pointer
 introduces): an append encodes its batch against the CURRENT manifest's
 frozen quantizer; if its CAS commit loses to a racer's RECLUSTER, the
 already-written delta is encoded against a dead quantizer and must NOT
-be committed — the retry loop compares the quantizer pointer and
-RE-ENCODES when it moved (pointer-equal conflicts retry manifest-only,
-the cheap path). Pinned by
+be committed — ``_append_commit``'s re-encode hook compares the
+quantizer pointer and RE-ENCODES when it moved (pointer-equal
+conflicts retry manifest-only, the cheap path). Pinned by
 tests/test_llm_ops.py::test_ivf_vindex_append_reencodes_after_recluster.
 
 Cost shapes (the 100 TB contract):
@@ -95,7 +96,7 @@ from uts_spark.functions.dedup import (
     minhash_signatures_portable,
 )
 from uts_spark.sources.versioned import (
-    VersionConflictError,
+    _cas_commit,
     _manifest_dirs,
     _write_delta_dir,
     commit_version,
@@ -229,7 +230,7 @@ def _count_and_stats(spark, ddir: str, id_col: str = "id") -> tuple[int, list[in
 
 
 def _batch_key(
-    versions: dict, batch_id: int, stream_id: str | None = None
+    manifests, batch_id: int, stream_id: str | None = None
 ) -> str:
     """The EXACTLY-ONCE commit key for a streamed micro-batch append.
 
@@ -248,11 +249,14 @@ def _batch_key(
       ``e{epoch}b{batch_id}`` where the epoch is the last non-append
       version (ADVICE r8); a reused batch_id after a rewrite cannot alias,
       but a replay ACROSS a rewrite re-appends (callers replaying
-      through rewrites must pass a stream_id)."""
+      through rewrites must pass a stream_id).
+
+    ``manifests`` is the chain (any iterable of manifests)."""
     if stream_id is not None:
         return f"s{stream_id}b{batch_id}"
     epoch = max(
-        (v for v, m in versions.items() if m.get("operation") != "append"),
+        (m["version"] for m in manifests
+         if m.get("operation") != "append"),
         default=0,
     )
     return f"e{epoch}b{batch_id}"
@@ -271,48 +275,46 @@ def _batch_committed(versions: dict, key: str) -> int | None:
 
 
 def _append_commit(
-    spark, path: str, ddir: str, stats: list[int], n_new: int,
-    fingerprint: str, record: dict | None = None,
-    batch_id: int | None = None, stream_id: str | None = None,
-    max_retries: int = 5,
+    path: str, fingerprint: str, encode, batch_id: int | None = None,
+    stream_id: str | None = None, quantizer=lambda pm: None,
 ) -> int:
-    """Fast-append commit loop: manifest = parent dirs + the (already
-    written) delta dir, the parent's state carried (``_carry_meta``)
-    plus this commit's own ``record`` (the skew tick's collision
-    ints). File adds commute, so a conflict retries the manifest only;
-    the data job never reruns. ``batch_id`` makes the commit
-    EXACTLY-ONCE per (epoch, batch_id): a replayed micro-batch whose
-    key already sits on a committed manifest returns that version
-    untouched (the Iceberg streaming-sink idempotent-commit shape)."""
-    last: Exception | None = None
-    for _ in range(max_retries):
-        versions = {m["version"]: m for m in list_versions(path)}
-        parent = max(versions) if versions else None
-        pm = versions[parent] if parent is not None else {}
-        meta = {**_carry_meta(pm, fingerprint), **(record or {})}
-        if batch_id is not None:
-            key = _batch_key(versions, batch_id, stream_id)
-            done = _batch_committed(versions, key)
-            if done is not None:
-                return done
-            meta["batch_key"] = key
+    """Fast-append commit: manifest = parent dirs + the batch's delta
+    dir, the parent's state carried (``_carry_meta``) plus this
+    commit's own record (the ticks' monitor ints). ``encode(pm)``
+    writes the delta against manifest ``pm`` and returns ``(ddir,
+    n_new, stats, record)``. File adds commute, so a conflict retries
+    the manifest only and the data job never reruns — unless
+    ``quantizer(pm)``, the frozen quantizer pointer the rows are coded
+    against, MOVED (a racer's recluster landed): a delta encoded
+    against a dead quantizer must not land, so the retry re-encodes
+    against the new one (module docstring). ``batch_id`` makes the
+    commit EXACTLY-ONCE per (epoch, batch_id): a replayed micro-batch
+    whose key already sits on a committed manifest returns that
+    version before any encode runs (the Iceberg streaming-sink
+    idempotent-commit shape)."""
+    enc: dict = {}
+
+    def attempt(pm):
+        q = quantizer(pm)
+        if "out" not in enc or enc["q"] != q:
+            enc["q"], enc["out"] = q, encode(pm)
+        ddir, n_new, stats, record = enc["out"]
+        meta = {**_carry_meta(pm, fingerprint), **record}
         meta["dir_stats"] = {**pm.get("dir_stats", {}), ddir: stats}
         if pm.get("dv"):
             # outstanding deletion vectors carry unchanged: the new
             # dir is outside every vector's scope (vindex_delete_mor)
             meta["dv"] = pm["dv"]
-        try:
-            return commit_version(
-                path,
-                (_manifest_dirs(pm) if pm else []) + [ddir],
-                "append",
-                parent,
-                pm.get("n_rows", 0) + n_new,
-                meta,
-            )
-        except VersionConflictError as e:
-            last = e
-    raise last  # type: ignore[misc]
+        return (
+            _manifest_dirs(pm) + [ddir], "append",
+            pm.get("n_rows", 0) + n_new, meta,
+        )
+
+    return _cas_commit(
+        path, attempt,
+        batch_key=None if batch_id is None
+        else lambda chain: _batch_key(chain, batch_id, stream_id),
+    )
 
 
 def vindex_delete(
@@ -341,19 +343,15 @@ def vindex_delete(
     is the complete GDPR sequence."""
     from uts_spark.sources.versioned import _dir_footer_meta
 
-    last: Exception | None = None
-    for _ in range(5):
-        versions = {m["version"]: m for m in list_versions(path)}
-        parent = max(versions) if versions else None
-        if parent is None:
+    def attempt(pm):
+        if not pm:
             raise ValueError(f"snapshot index at {path}: nothing to delete")
-        pm = versions[parent]
         if pm.get("dv"):
             # outstanding merge-on-read vectors: the touched-dir scan
             # below reads raw dirs, so fold the vectors first (itself
             # pruned) and erase against a vector-free manifest
             vindex_materialize_dvs(spark, path)
-            continue
+            return vindex_delete(spark, deleted_ids, path, fingerprint)
         repart, sort, idc = _layout_of(pm)
         idf = (
             deleted_ids.toDF(idc)
@@ -365,7 +363,7 @@ def vindex_delete(
         touched = _stats_admitting(spark, pm, idf, idc)
         untouched = [d for d in dirs if d not in set(touched)]
         if not touched:
-            return parent  # nothing to erase — current version stands
+            return pm["version"]  # nothing to erase — current stands
 
         kept = (
             _read_pq(spark, *touched)
@@ -382,32 +380,24 @@ def vindex_delete(
             n_touched = sum(m[0] for m in metas)
         else:
             n_touched = _read_pq(spark, *touched).count()
-        n_rows = pm["n_rows"] - n_touched + n_kept
         meta = _carry_meta(pm, fingerprint)
         meta["dir_stats"] = {
             **{d: stats[d] for d in untouched if d in stats},
             ddir: kept_stats,
         }
         meta["pruned_dirs"] = len(untouched)
-        try:
-            return commit_version(
-                path,
-                untouched + [ddir],
-                "delete",
-                parent,
-                n_rows,
-                meta,
-            )
-        except VersionConflictError as e:
-            last = e
-    raise last  # type: ignore[misc]
+        return (
+            untouched + [ddir], "delete",
+            pm["n_rows"] - n_touched + n_kept, meta,
+        )
+
+    return _cas_commit(path, attempt)
 
 
 def _rewrite_with_retry(
-    spark, path: str, make_rows, operation: str, meta_fn,
-    amend_fn=None, max_retries: int = 5,
+    spark, path: str, make_rows, operation: str, meta_fn, amend_fn=None,
 ) -> int:
-    """Shared rewrite commit loop (compact / recluster / cap): compute
+    """Shared rewrite commit (compact / recluster / cap): compute
     the new row set AGAINST the current version, write it to a fresh
     delta dir in the manifest's layout, CAS-commit; on conflict,
     RECOMPUTE against the new current (a rewrite does not commute with
@@ -417,18 +407,15 @@ def _rewrite_with_retry(
     loop, after ``make_rows``'s source is resolved. ``amend_fn(meta,
     ddir)`` runs after the delta write, for metadata derived from the
     WRITTEN rows (the drift loop's refreshed fit reference)."""
-    last: Exception | None = None
-    for _ in range(max_retries):
-        versions = {m["version"]: m for m in list_versions(path)}
-        parent = max(versions) if versions else None
-        if parent is None:
+
+    def attempt(pm):
+        if not pm:
             raise ValueError(f"snapshot index at {path}: nothing to rewrite")
-        pm = versions[parent]
         _, sort, idc = _layout_of(pm)
-        cur = read_version(spark, path, parent)  # masked: outstanding
-        # deletion vectors apply here, so every rewrite (compact /
-        # recluster) MATERIALIZES them — the committed meta stays
-        # vector-free by construction (_carry_meta never copies dv)
+        cur = read_version(spark, path, pm["version"])  # masked:
+        # outstanding deletion vectors apply here, so every rewrite
+        # (compact / recluster) MATERIALIZES them — the committed meta
+        # stays vector-free by construction (_carry_meta never copies dv)
         meta = meta_fn(pm, cur)
         rows = make_rows(cur, meta)
         ddir = _write_delta_dir(rows, path, sort)
@@ -436,13 +423,9 @@ def _rewrite_with_retry(
         meta["dir_stats"] = {ddir: rw_stats}
         if amend_fn is not None:
             amend_fn(meta, ddir)
-        try:
-            return commit_version(
-                path, [ddir], operation, parent, n_rows, meta
-            )
-        except VersionConflictError as e:
-            last = e
-    raise last  # type: ignore[misc]
+        return [ddir], operation, n_rows, meta
+
+    return _cas_commit(path, attempt)
 
 
 def vindex_compact(spark, path: str, fingerprint: str = "") -> int:
@@ -471,24 +454,17 @@ def vindex_seal(path: str, fingerprint: str) -> int:
     non-append commit, so it also opens a new exactly-once epoch —
     a fresh stream restarting at batch 0 after a sealed generation
     can never alias the prior generation's commits.)"""
-    last: Exception | None = None
-    for _ in range(5):
-        versions = {m["version"]: m for m in list_versions(path)}
-        if not versions:
+
+    def attempt(pm):
+        if not pm:
             raise ValueError(f"snapshot index at {path}: nothing to seal")
-        pm = versions[max(versions)]
         meta = _carry_meta(pm, fingerprint)
         meta["dir_stats"] = pm.get("dir_stats", {})
         if pm.get("dv"):
             meta["dv"] = pm["dv"]  # a seal folds nothing
-        try:
-            return commit_version(
-                path, _manifest_dirs(pm), "seal", pm["version"],
-                pm["n_rows"], meta,
-            )
-        except VersionConflictError as e:
-            last = e
-    raise last  # type: ignore[misc]
+        return _manifest_dirs(pm), "seal", pm["n_rows"], meta
+
+    return _cas_commit(path, attempt)
 
 
 def _cluster(df: DataFrame, *cols: str) -> DataFrame:
@@ -671,25 +647,18 @@ def minhash_vindex_append(
     _check_family_config(
         path, "minhash", n=n, k=k, bands=bands, n_grps=n_grps
     )
-    spark = batch.sparkSession
-    if batch_id is not None:
-        versions = {m["version"]: m for m in list_versions(path)}
-        done = _batch_committed(
-            versions, _batch_key(versions, batch_id, stream_id)
+
+    def encode(pm):
+        rows = _rows(
+            batch, text_col, id_col, n, k, bands, n_grps,
+            tuple(pm.get("meta_cols", ())),
         )
-        if done is not None:
-            return done
-    pm0 = _current_manifest(path)
-    keep = tuple(pm0.get("meta_cols", ()))
-    rows = _rows(batch, text_col, id_col, n, k, bands, n_grps, keep)
-    ddir = _write_delta_dir(
-        rows.repartition(4, "band", "grp"), path, _sort_of(pm0)
-    )
-    n_new, stats = _count_and_stats(spark, ddir)
-    return _append_commit(
-        spark, path, ddir, stats, n_new, fingerprint,
-        batch_id=batch_id, stream_id=stream_id,
-    )
+        ddir = _write_delta_dir(
+            rows.repartition(4, "band", "grp"), path, _sort_of(pm)
+        )
+        return ddir, *_count_and_stats(batch.sparkSession, ddir), {}
+
+    return _append_commit(path, fingerprint, encode, batch_id, stream_id)
 
 
 def minhash_vindex_probe(
@@ -795,27 +764,22 @@ def lsh_vindex_append(
     no re-encode hazard on conflict (contrast the IVF families).
     ``batch_id`` makes the commit exactly-once per (epoch, batch_id)."""
     _check_family_config(path, "lsh", dim=dim, planes=planes, tables=tables)
-    spark = emb_batch.sparkSession
-    if batch_id is not None:
-        versions = {m["version"]: m for m in list_versions(path)}
-        done = _batch_committed(
-            versions, _batch_key(versions, batch_id, stream_id)
+
+    def encode(pm):
+        # the manifest's meta_cols define the row schema — the caller
+        # never restates them (same contract as the IVF append)
+        rows = _lsh_rows(
+            emb_batch, dim, planes, tables, id_col, vec_col,
+            tuple(pm.get("meta_cols", ())),
         )
-        if done is not None:
-            return done
-    # the manifest's meta_cols define the row schema — the caller
-    # never restates them (same contract as the IVF append)
-    pm0 = _current_manifest(path)
-    keep = tuple(pm0.get("meta_cols", ()))
-    rows = _lsh_rows(emb_batch, dim, planes, tables, id_col, vec_col, keep)
-    ddir = _write_delta_dir(
-        rows.repartition(4, "table", "bucket"), path, _sort_of(pm0)
-    )
-    n_new, stats = _count_and_stats(spark, ddir, id_col)
-    return _append_commit(
-        spark, path, ddir, stats, n_new, fingerprint,
-        batch_id=batch_id, stream_id=stream_id,
-    )
+        ddir = _write_delta_dir(
+            rows.repartition(4, "table", "bucket"), path, _sort_of(pm)
+        )
+        return (
+            ddir, *_count_and_stats(emb_batch.sparkSession, ddir, id_col), {}
+        )
+
+    return _append_commit(path, fingerprint, encode, batch_id, stream_id)
 
 
 def lsh_vindex_probe(
@@ -850,38 +814,44 @@ def lsh_vindex_probe(
 # assigned against, so time travel pins the quantizer and RECLUSTER is
 # just another rewrite commit (no history reset, no swap window).
 
-def _ivf_fit_ints_from_dir(
-    spark, ddir: str, qdir: str, id_col: str, vec_col: str
-) -> tuple[int, int]:
-    """(snapped fit sum, row count) of a WRITTEN delta dir against its
-    encoding quantizer — the drift monitor's exact integers, computed
-    as a byproduct of the rows already on disk: a stored row's fit IS
-    the cosine to its assigned cell's centroid (the argmax the
-    assignment just took), so one broadcast join to the n_cells
-    centroid table replaces the full |rows| x n_cells scoring pass
-    (same snap grid as similarity.ivf_fit_stat — the two monitors'
-    integers are interchangeable)."""
-    from uts_spark.functions.similarity import FIT_SCALE, cosine_stable
+def _observe_fit(rows: DataFrame):
+    """Record the drift monitor's exact integers — (snapped fit sum,
+    row count) — on the job that WRITES ``rows``
+    (``_ivf_assign(..., keep_sim=True)`` output): a stored row's fit IS
+    the winning cosine its assignment just took (same expression, same
+    snap grid as similarity.ivf_fit_stat — the two monitors' integers
+    are interchangeable), so no job reads the delta back. Returns
+    (rows without ``__sim``, a getter to call after the write)."""
+    from pyspark.sql import Observation
 
-    cents = _read_pq(spark, qdir).select(
-        F.col("cent_id").alias("cell"), "__cv"
-    )
-    row = (
-        _read_pq(spark, ddir)
-        .join(F.broadcast(cents), "cell")
-        .agg(
-            F.sum(
-                F.floor(
-                    cosine_stable(vec_col, "__cv")
-                    * F.lit(FIT_SCALE)
-                    + F.lit(0.5)
-                ).cast("long")
-            ).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .first()
-    )
-    return int(row["s"] or 0), int(row["n"])
+    from uts_spark.functions.similarity import FIT_SCALE
+
+    obs = Observation()
+    out = rows.observe(
+        obs,
+        F.sum(
+            F.floor(F.col("__sim") * F.lit(FIT_SCALE) + F.lit(0.5))
+            .cast("long")
+        ).alias("s"),
+        F.count(F.lit(1)).alias("n"),
+    ).drop("__sim")
+    return out, lambda: (int(obs.get["s"] or 0), int(obs.get["n"]))
+
+
+def _quantizer(family: str, path: str):
+    """The append's re-encode hook for an ANN family: the manifest's
+    frozen quantizer pointers (a delta is only valid against the
+    quantizer it was encoded with), after checking the family."""
+
+    def pointer(pm: dict):
+        if pm.get("family") != family:
+            raise ValueError(
+                f"snapshot index at {path}: family is {pm.get('family')}, "
+                f"expected {family}"
+            )
+        return pm["centroids_dir"], pm.get("codebook_dir")
+
+    return pointer
 
 
 def ivf_vindex_build(
@@ -920,16 +890,15 @@ def ivf_vindex_build(
     spark = emb.sparkSession
     cents = _ivf_centroids(centroid_src or emb, n_cells, id_col, vec_col)
     qdir = _write_quant_dir(cents, path)
-    rows = _ivf_assign(
+    rows, fit = _observe_fit(_ivf_assign(
         emb, _read_pq(spark, qdir), id_col, vec_col,
-        keep_cols=tuple(meta_cols),
-    )
+        keep_cols=tuple(meta_cols), keep_sim=True,
+    ))
     ddir = _write_delta_dir(_cluster(rows, "cell"), path, _sort_of(meta))
     n_rows, stats = _count_and_stats(spark, ddir, id_col)
-    fit = _ivf_fit_ints_from_dir(spark, ddir, qdir, id_col, vec_col)
     meta.update({
         "centroids_dir": qdir, "aux_dirs": [qdir],
-        "fit_ref": list(fit),
+        "fit_ref": list(fit()),
         "dir_stats": {ddir: stats},
     })
     return commit_version(path, [ddir], "build", None, n_rows, meta)
@@ -944,7 +913,6 @@ def ivf_vindex_append(
     batch_id: int | None = None,
     stream_id: str | None = None,
     record_fit: bool = False,
-    max_retries: int = 5,
 ) -> int:
     """Fast append with the QUANTIZER-POINTER conflict rule: assign the
     batch against the CURRENT manifest's frozen centroids and CAS-commit
@@ -955,71 +923,34 @@ def ivf_vindex_append(
     incomparable cells in one version — RE-ENCODE against the new
     quantizer and retry. Batch-sized either way. ``batch_id`` makes
     the commit exactly-once per (epoch, batch_id) — a replayed
-    micro-batch returns the committed version without re-assigning."""
+    micro-batch returns the committed version without re-assigning.
+    ``record_fit`` commits the batch's drift stat (``fit_sum``/
+    ``fit_n``, exact ints against the quantizer this delta was encoded
+    with) on the same manifest."""
     from uts_spark.functions.similarity import _ivf_assign
 
     spark = emb_batch.sparkSession
-    encoded_against: str | None = None
-    ddir: str | None = None
-    stats: list[int] = []
-    n_new = 0
-    last: Exception | None = None
-    for _ in range(max_retries):
-        versions = {m["version"]: m for m in list_versions(path)}
-        if not versions:
-            raise ValueError(
-                f"snapshot index at {path}: no committed versions"
-            )
-        pm = versions[max(versions)]
-        if pm.get("family") != "ivf":
-            raise ValueError(
-                f"snapshot index at {path}: family is {pm.get('family')}, "
-                "expected ivf"
-            )
-        if batch_id is not None:
-            key = _batch_key(versions, batch_id, stream_id)
-            done = _batch_committed(versions, key)
-            if done is not None:
-                return done
-        qdir = pm["centroids_dir"]
-        if qdir != encoded_against:
-            cents = _read_pq(spark, qdir)
-            rows = _ivf_assign(
-                emb_batch, cents, id_col, vec_col,
-                keep_cols=tuple(pm.get("meta_cols", ())),
-            )
-            ddir = _write_delta_dir(
-                rows.repartition(4, "cell"), path, _sort_of(pm)
-            )
-            n_new, stats = _count_and_stats(spark, ddir, id_col)
-            fit = (
-                _ivf_fit_ints_from_dir(spark, ddir, qdir, id_col, vec_col)
-                if record_fit
-                else None
-            )
-            encoded_against = qdir
-        meta = _carry_meta(pm, fingerprint)
-        if record_fit and fit is not None:
-            # the tick's drift stat, ON the committed manifest (exact
-            # ints against the quantizer this delta was encoded with)
-            meta["fit_sum"], meta["fit_n"] = fit
-        if batch_id is not None:
-            meta["batch_key"] = key
-        meta["dir_stats"] = {**pm.get("dir_stats", {}), ddir: stats}
-        if pm.get("dv"):
-            meta["dv"] = pm["dv"]  # appended dir is outside every scope
-        try:
-            return commit_version(
-                path,
-                _manifest_dirs(pm) + [ddir],
-                "append",
-                pm["version"],
-                pm.get("n_rows", 0) + n_new,
-                meta,
-            )
-        except VersionConflictError as e:
-            last = e
-    raise last  # type: ignore[misc]
+
+    def encode(pm):
+        rows = _ivf_assign(
+            emb_batch, _read_pq(spark, pm["centroids_dir"]), id_col,
+            vec_col, keep_cols=tuple(pm.get("meta_cols", ())),
+            keep_sim=record_fit,
+        )
+        if record_fit:
+            rows, fit = _observe_fit(rows)
+        ddir = _write_delta_dir(
+            rows.repartition(4, "cell"), path, _sort_of(pm)
+        )
+        return (
+            ddir, *_count_and_stats(spark, ddir, id_col),
+            dict(zip(("fit_sum", "fit_n"), fit())) if record_fit else {},
+        )
+
+    return _append_commit(
+        path, fingerprint, encode, batch_id, stream_id,
+        quantizer=_quantizer("ivf", path),
+    )
 
 
 def ivf_vindex_recluster(
@@ -1048,24 +979,23 @@ def ivf_vindex_recluster(
         meta["aux_dirs"] = [qdir]
         return meta
 
+    fit: dict = {}
+
     def make_rows(cur, meta):
         # meta_cols ride in the stored rows — re-assignment must carry
         # them or the rewrite would narrow the filtered-ANN schema
         keep = tuple(meta.get("meta_cols", ()))
         cents = _read_pq(spark, meta["centroids_dir"])
-        return _ivf_assign(
+        rows, fit["get"] = _observe_fit(_ivf_assign(
             cur.select(id_col, vec_col, *keep), cents, id_col, vec_col,
-            keep_cols=keep,
-        ).transform(lambda d: _cluster(d, "cell"))
+            keep_cols=keep, keep_sim=True,
+        ))
+        return _cluster(rows, "cell")
 
     def amend_fn(meta, ddir):
         # the drift reference RESETS to the re-clustered corpus fit,
-        # computed from the rewritten rows, on the same manifest
-        meta["fit_ref"] = list(
-            _ivf_fit_ints_from_dir(
-                spark, ddir, meta["centroids_dir"], id_col, vec_col
-            )
-        )
+        # recorded by the rewrite job, on the same manifest
+        meta["fit_ref"] = list(fit["get"]())
 
     return _rewrite_with_retry(
         spark, path, make_rows, "recluster", meta_fn, amend_fn=amend_fn
@@ -1113,7 +1043,7 @@ def ivf_vindex_ingest_tick(
         recluster_milli = RECLUSTER_MILLI
     before = {m["version"]: m for m in list_versions(path)}
     replay_hit = _batch_committed(
-        before, _batch_key(before, batch_id, stream_id)
+        before, _batch_key(before.values(), batch_id, stream_id)
     )
 
     v = ivf_vindex_append(
@@ -1318,7 +1248,6 @@ def ivfpq_vindex_append(
     batch_id: int | None = None,
     stream_id: str | None = None,
     record_dist: bool = False,
-    max_retries: int = 5,
 ) -> int:
     """Fast append under the quantizer-pointer conflict rule (see
     ivf_vindex_append) — here BOTH pointers must match: a racer's
@@ -1328,69 +1257,28 @@ def ivfpq_vindex_append(
     retry otherwise. ``batch_id`` makes the commit exactly-once per
     (epoch, batch_id)."""
     spark = emb_batch.sparkSession
-    encoded_against: tuple[str, str] | None = None
-    ddir: str | None = None
-    stats: list[int] = []
-    n_new = 0
-    last: Exception | None = None
-    for _ in range(max_retries):
-        versions = {m["version"]: m for m in list_versions(path)}
-        if not versions:
-            raise ValueError(
-                f"snapshot index at {path}: no committed versions"
+
+    def encode(pm):
+        rows = _ivfpq_rows(
+            emb_batch, _read_pq(spark, pm["centroids_dir"]),
+            _read_pq(spark, pm["codebook_dir"]), pm["dim"], pm["m_sub"],
+            id_col, vec_col, tuple(pm.get("meta_cols", ())),
+        )
+        ddir = _write_delta_dir(
+            rows.repartition(4, "cell"), path, _sort_of(pm)
+        )
+        record = {}
+        if record_dist:
+            record["dist_sum"], record["dist_n"] = _ivfpq_dist_ints_from_dir(
+                spark, ddir, pm["codebook_dir"], pm["dim"], pm["m_sub"],
+                id_col, vec_col,
             )
-        pm = versions[max(versions)]
-        if pm.get("family") != "ivfpq":
-            raise ValueError(
-                f"snapshot index at {path}: family is {pm.get('family')}, "
-                "expected ivfpq"
-            )
-        if batch_id is not None:
-            key = _batch_key(versions, batch_id, stream_id)
-            done = _batch_committed(versions, key)
-            if done is not None:
-                return done
-        ptr = (pm["centroids_dir"], pm["codebook_dir"])
-        if ptr != encoded_against:
-            cents = _read_pq(spark, ptr[0])
-            cexp = _read_pq(spark, ptr[1])
-            rows = _ivfpq_rows(
-                emb_batch, cents, cexp, pm["dim"], pm["m_sub"],
-                id_col, vec_col, tuple(pm.get("meta_cols", ())),
-            )
-            ddir = _write_delta_dir(
-                rows.repartition(4, "cell"), path, _sort_of(pm)
-            )
-            n_new, stats = _count_and_stats(spark, ddir, id_col)
-            dist = (
-                _ivfpq_dist_ints_from_dir(
-                    spark, ddir, ptr[1], pm["dim"], pm["m_sub"],
-                    id_col, vec_col,
-                )
-                if record_dist
-                else None
-            )
-            encoded_against = ptr
-        meta = _carry_meta(pm, fingerprint)
-        if record_dist and dist is not None:
-            meta["dist_sum"], meta["dist_n"] = dist
-        if batch_id is not None:
-            meta["batch_key"] = key
-        meta["dir_stats"] = {**pm.get("dir_stats", {}), ddir: stats}
-        if pm.get("dv"):
-            meta["dv"] = pm["dv"]  # appended dir is outside every scope
-        try:
-            return commit_version(
-                path,
-                _manifest_dirs(pm) + [ddir],
-                "append",
-                pm["version"],
-                pm.get("n_rows", 0) + n_new,
-                meta,
-            )
-        except VersionConflictError as e:
-            last = e
-    raise last  # type: ignore[misc]
+        return ddir, *_count_and_stats(spark, ddir, id_col), record
+
+    return _append_commit(
+        path, fingerprint, encode, batch_id, stream_id,
+        quantizer=_quantizer("ivfpq", path),
+    )
 
 
 def ivfpq_vindex_recluster(
@@ -1479,7 +1367,7 @@ def ivfpq_vindex_ingest_tick(
     if not before:
         raise ValueError(f"snapshot index at {path}: no committed versions")
     replay_hit = _batch_committed(
-        before, _batch_key(before, batch_id, stream_id)
+        before, _batch_key(before.values(), batch_id, stream_id)
     )
 
     v = ivfpq_vindex_append(
@@ -1585,7 +1473,6 @@ def _stats_admitting(spark, pm: dict, idf: DataFrame, idc: str,
 
 def vindex_delete_mor(
     spark, deleted_ids: DataFrame, path: str, fingerprint: str = "",
-    max_retries: int = 5,
 ) -> int:
     """MERGE-ON-READ erasure for any snapshot-index family (module
     comment above): commit the deleted ids as a deletion vector —
@@ -1599,13 +1486,11 @@ def vindex_delete_mor(
     takedowns stay exact), like the data-table verb."""
     from uts_spark.sources.versioned import _read_dirs_masked
 
-    dvdir: str | None = None
-    last: Exception | None = None
-    for _ in range(max_retries):
-        versions = {m["version"]: m for m in list_versions(path)}
-        if not versions:
+    memo: dict = {}
+
+    def attempt(pm):
+        if not pm:
             raise ValueError(f"snapshot index at {path}: nothing to delete")
-        pm = versions[max(versions)]
         _, _, idc = _layout_of(pm)
         idf = (
             deleted_ids.toDF(idc)
@@ -1622,29 +1507,25 @@ def vindex_delete_mor(
         ).count()
         if n_masked == 0:
             return pm["version"]
-        if dvdir is None:
-            dvdir = os.path.join(
+        if "dvdir" not in memo:
+            memo["dvdir"] = os.path.join(
                 path, "data", f"dv-{uuid.uuid4().hex[:12]}"
             )
-            idf.coalesce(1).write.mode("errorifexists").parquet(dvdir)
+            idf.coalesce(1).write.mode("errorifexists").parquet(
+                memo["dvdir"]
+            )
         meta = _carry_meta(pm, fingerprint)
         meta["dir_stats"] = pm.get("dir_stats", {})
-        meta["dv"] = pm.get("dv", []) + [
-            {"dir": dvdir, "key": idc, "scope": dirs, "n_masked": n_masked}
-        ]
-        try:
-            return commit_version(
-                path, dirs, "delete_mor", pm["version"],
-                pm["n_rows"] - n_masked, meta,
-            )
-        except VersionConflictError as e:
-            last = e
-    raise last  # type: ignore[misc]
+        meta["dv"] = pm.get("dv", []) + [{
+            "dir": memo["dvdir"], "key": idc, "scope": dirs,
+            "n_masked": n_masked,
+        }]
+        return dirs, "delete_mor", pm["n_rows"] - n_masked, meta
+
+    return _cas_commit(path, attempt)
 
 
-def vindex_materialize_dvs(
-    spark, path: str, fingerprint: str = "", max_retries: int = 5
-) -> int:
+def vindex_materialize_dvs(spark, path: str, fingerprint: str = "") -> int:
     """Fold the index's outstanding deletion vectors into the data —
     rewrite ONLY the dirs some vector scopes AND whose id-range stats
     admit at least one of its keys (family repart/sort preserved, so
@@ -1653,12 +1534,9 @@ def vindex_materialize_dvs(
     (probes saw the masked state all along)."""
     from uts_spark.sources.versioned import _read_dirs_masked
 
-    last: Exception | None = None
-    for _ in range(max_retries):
-        versions = {m["version"]: m for m in list_versions(path)}
-        if not versions:
+    def attempt(pm):
+        if not pm:
             raise ValueError(f"snapshot index at {path}: no versions")
-        pm = versions[max(versions)]
         recs = pm.get("dv", [])
         if not recs:
             return pm["version"]
@@ -1691,14 +1569,9 @@ def vindex_materialize_dvs(
             _, kstats = _count_and_stats(spark, ddir, idc)
             new_dirs.append(ddir)
             meta["dir_stats"][ddir] = kstats
-        try:
-            return commit_version(
-                path, new_dirs, "materialize_dv", pm["version"],
-                pm["n_rows"], meta,
-            )
-        except VersionConflictError as e:
-            last = e
-    raise last  # type: ignore[misc]
+        return new_dirs, "materialize_dv", pm["n_rows"], meta
+
+    return _cas_commit(path, attempt)
 
 
 # Measured per-family vector-count knees (tools/vindex_dv_smoke.py,
@@ -1921,7 +1794,7 @@ def minhash_vindex_ingest_tick(
     if not before:
         raise ValueError(f"snapshot index at {path}: no committed versions")
     replay_hit = _batch_committed(
-        before, _batch_key(before, batch_id, stream_id)
+        before, _batch_key(before.values(), batch_id, stream_id)
     )
     if replay_hit is not None:
         m = before[replay_hit]
@@ -1943,11 +1816,12 @@ def minhash_vindex_ingest_tick(
     ddir = _write_delta_dir(
         rows.repartition(4, "band", "grp"), path, _sort_of(pm)
     )
-    n_new, stats = _count_and_stats(spark, ddir)
+    delta = (
+        ddir, *_count_and_stats(spark, ddir),
+        {"coll_sum": coll, "coll_rown": row_n},
+    )
     v = _append_commit(
-        spark, path, ddir, stats, n_new, fingerprint,
-        record={"coll_sum": coll, "coll_rown": row_n},
-        batch_id=batch_id, stream_id=stream_id,
+        path, fingerprint, lambda pm: delta, batch_id, stream_id
     )
     versions = {m["version"]: m for m in list_versions(path)}
     ref = versions[v].get("coll_ref")
