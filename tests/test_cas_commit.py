@@ -261,23 +261,40 @@ def test_refused_narrowing_append_writes_no_dir(spark, tmp_path):
     retyped = _rows(spark, 10, 20).selectExpr(
         "k", "CAST(v AS STRING) AS v"
     )
-    with pytest.raises(ValueError, match="drops column"):
-        V.append_snapshot(dropped, path)
-    with pytest.raises(ValueError, match="changes type"):
-        V.append_snapshot(retyped, path)
-    with pytest.raises(ValueError, match="narrowing"):
-        V.write_to_branch(dropped, path, "b")
-    with pytest.raises(ValueError, match="narrowing"):
-        V.write_to_branch(retyped, path, "b")
+    for write in (
+        lambda df: V.append_snapshot(df, path),
+        lambda df: V.write_to_branch(df, path, "b"),
+    ):
+        with pytest.raises(ValueError, match="drops column") as drop:
+            write(dropped)
+        assert "changes type" not in str(drop.value)
+        with pytest.raises(ValueError, match="changes type") as retype:
+            write(retyped)
+        assert "drops column" not in str(retype.value)
     assert sorted(os.listdir(data)) == before
 
 
-def test_ivf_fit_observed_on_write_equals_read_back(spark, tmp_path):
+def test_ivf_fit_observed_on_write_equals_read_back(
+    spark, tmp_path, monkeypatch
+):
     """The drift integers the build, a record_fit append and a
     recluster record on their write jobs (an Observation) equal, to
     the integer, the read-back computation over the rows on disk: each
-    stored row's cosine to its cell's centroid, snapped."""
+    stored row's cosine to its cell's centroid, snapped. The
+    observation sits above every exchange of the written frame, in the
+    write's result stage, where a re-run task cannot count twice."""
     from uts_spark.functions.similarity import FIT_SCALE, cosine_stable
+
+    plans = []
+    write = vx._write_delta_dir
+
+    def spy(df, *args, **kwargs):
+        plans.append(
+            df._jdf.queryExecution().executedPlan().toString().splitlines()
+        )
+        return write(df, *args, **kwargs)
+
+    monkeypatch.setattr(vx, "_write_delta_dir", spy)
 
     def read_back(m, ddirs):
         cents = spark.read.parquet(m["centroids_dir"]).select(
@@ -309,3 +326,25 @@ def test_ivf_fit_observed_on_write_equals_read_back(spark, tmp_path):
     assert app["fit_n"] == 30
     assert rec["fit_ref"] == read_back(rec, rec["data_dirs"])
     assert rec["fit_ref"][1] == 110
+    assert len(plans) == 3
+    for lines in plans:
+        observed = [i for i, ln in enumerate(lines) if "CollectMetrics" in ln]
+        shuffles = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+        assert observed and shuffles and observed[0] < min(shuffles)
+
+
+def test_append_to_unbuilt_index_names_the_path(spark, tmp_path):
+    """Every family's append to a path with no committed versions is
+    refused with an error that names the path, and writes nothing."""
+    path = str(tmp_path / "unbuilt")
+    docs = spark.createDataFrame([(1, "a b c d e")], "doc_id INT, text STRING")
+    emb = _emb(spark, 0, 4)
+    for append in (
+        lambda: vx.minhash_vindex_append(docs, "text", "doc_id", path),
+        lambda: vx.lsh_vindex_append(emb, path, dim=8),
+        lambda: vx.ivf_vindex_append(emb, path),
+        lambda: vx.ivfpq_vindex_append(emb, path),
+    ):
+        with pytest.raises(ValueError, match=re.escape(f"{path}: no committed versions")):
+            append()
+    assert not os.path.exists(os.path.join(path, "data"))

@@ -295,6 +295,8 @@ def _append_commit(
     enc: dict = {}
 
     def attempt(pm):
+        if not pm:
+            raise ValueError(f"snapshot index at {path}: no committed versions")
         q = quantizer(pm)
         if "out" not in enc or enc["q"] != q:
             enc["q"], enc["out"] = q, encode(pm)
@@ -820,8 +822,13 @@ def _observe_fit(rows: DataFrame):
     (``_ivf_assign(..., keep_sim=True)`` output): a stored row's fit IS
     the winning cosine its assignment just took (same expression, same
     snap grid as similarity.ivf_fit_stat — the two monitors' integers
-    are interchangeable), so no job reads the delta back. Returns
-    (rows without ``__sim``, a getter to call after the write)."""
+    are interchangeable), so no job reads the delta back. Apply it
+    AFTER the write's shuffle, to the frame handed to the writer: the
+    observation then sits in the result stage, whose accumulator
+    updates Spark applies once per partition; in a shuffle-map stage a
+    re-run task (speculation, fetch failure) would count its rows
+    twice. Returns (rows without ``__sim``, a getter to call after the
+    write)."""
     from pyspark.sql import Observation
 
     from uts_spark.functions.similarity import FIT_SCALE
@@ -890,11 +897,11 @@ def ivf_vindex_build(
     spark = emb.sparkSession
     cents = _ivf_centroids(centroid_src or emb, n_cells, id_col, vec_col)
     qdir = _write_quant_dir(cents, path)
-    rows, fit = _observe_fit(_ivf_assign(
+    rows, fit = _observe_fit(_cluster(_ivf_assign(
         emb, _read_pq(spark, qdir), id_col, vec_col,
         keep_cols=tuple(meta_cols), keep_sim=True,
-    ))
-    ddir = _write_delta_dir(_cluster(rows, "cell"), path, _sort_of(meta))
+    ), "cell"))
+    ddir = _write_delta_dir(rows, path, _sort_of(meta))
     n_rows, stats = _count_and_stats(spark, ddir, id_col)
     meta.update({
         "centroids_dir": qdir, "aux_dirs": [qdir],
@@ -936,12 +943,10 @@ def ivf_vindex_append(
             emb_batch, _read_pq(spark, pm["centroids_dir"]), id_col,
             vec_col, keep_cols=tuple(pm.get("meta_cols", ())),
             keep_sim=record_fit,
-        )
+        ).repartition(4, "cell")
         if record_fit:
             rows, fit = _observe_fit(rows)
-        ddir = _write_delta_dir(
-            rows.repartition(4, "cell"), path, _sort_of(pm)
-        )
+        ddir = _write_delta_dir(rows, path, _sort_of(pm))
         return (
             ddir, *_count_and_stats(spark, ddir, id_col),
             dict(zip(("fit_sum", "fit_n"), fit())) if record_fit else {},
@@ -986,11 +991,11 @@ def ivf_vindex_recluster(
         # them or the rewrite would narrow the filtered-ANN schema
         keep = tuple(meta.get("meta_cols", ()))
         cents = _read_pq(spark, meta["centroids_dir"])
-        rows, fit["get"] = _observe_fit(_ivf_assign(
+        rows, fit["get"] = _observe_fit(_cluster(_ivf_assign(
             cur.select(id_col, vec_col, *keep), cents, id_col, vec_col,
             keep_cols=keep, keep_sim=True,
-        ))
-        return _cluster(rows, "cell")
+        ), "cell"))
+        return rows
 
     def amend_fn(meta, ddir):
         # the drift reference RESETS to the re-clustered corpus fit,

@@ -1243,12 +1243,16 @@ def _widen_schema(
         c for c in old_fields
         if c in new_fields and new_fields[c] != old_fields[c]
     ]
-    if dropped or changed:
+    faults = ([f"drops column(s) {dropped}"] if dropped else []) + (
+        [f"changes type of "
+         f"{ {c: (old_fields[c], new_fields[c]) for c in changed} }"]
+        if changed else []
+    )
+    if faults:
         raise err(
-            f"{label}: delta drops column(s) {dropped} / changes type of "
-            f"{ {c: (old_fields[c], new_fields[c]) for c in changed} } — "
-            "narrowing appends are refused (schema evolution only ADDS "
-            "columns); rewrite via write_snapshot to narrow deliberately"
+            f"{label}: delta {' and '.join(faults)} — narrowing appends "
+            "are refused (schema evolution only ADDS columns); rewrite "
+            "via write_snapshot to narrow deliberately"
         )
     added = [c for c in new_fields if c not in old_fields]
     merged = {**old_fields, **{c: new_fields[c] for c in added}}
